@@ -5,7 +5,10 @@ extracted ``textLength`` is below 250 chars, relax the pruning settings
 (setSkipLevel) and re-run. The SAX event stream is independent of the
 settings, so we tokenize ONCE and replay the event list per pass — a
 deliberate improvement over the reference, which re-tokenizes each pass
-(observable behavior is identical).
+(observable behavior is identical). A pass's ``textLength`` is its
+candidate node's ``info_text_length``, so the article (title, nextPage,
+text/html) is serialized only on the final pass; the reference builds
+and discards it on every pass.
 """
 
 from __future__ import annotations
@@ -35,21 +38,29 @@ def process(
     Adds ``skipLevel`` (the pass that produced the result) and
     ``error: False`` to the reference's fields.
     """
-    readable = Readability(settings)
-    events = tokenize(data)
+    return run_skip_levels(Readability(settings), tokenize(data), skip_level=skip_level)
 
+
+def run_skip_levels(
+    readable: Readability,
+    events: list[tuple],
+    type_: str | None = None,
+    skip_level: int = 0,
+) -> dict:
+    """The skip-level loop (lib/process.ts:22-29) over a tokenized event
+    list; ``type_`` as in ``Readability.get_article``."""
     while True:
         if skip_level != 0:
             readable.set_skip_level(skip_level)
         readable.onreset()
         replay(events, readable)
-        article = readable.get_article()
-        used_level = skip_level
+        node = readable._get_candidate_node()
         skip_level += 1
-        if article.get("textLength", 0) >= 250 or skip_level >= 4:
+        if node.info_text_length >= 250 or skip_level >= 4:
             break
 
-    article["skipLevel"] = used_level
+    article = readable.get_article(type_, node)
+    article["skipLevel"] = skip_level - 1
     article["error"] = False
     return article
 

@@ -69,6 +69,19 @@ def js_parse_int(s: str) -> int | None:
     return int(m.group(1))
 
 
+_ASCII_LOWER = str.maketrans(
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
+)
+
+
+def ascii_lower(s: str) -> str:
+    """Lowercase A-Z only — the case folding of a JS ``/i`` regex without
+    the ``u`` flag (str.lower() also maps e.g. U+212A KELVIN SIGN to k)."""
+    if s.isascii():
+        return s.lower()
+    return s.translate(_ASCII_LOWER)
+
+
 def collapse_ws(s: str) -> str:
     """s.replace(/\\s+/g, " ") with JS whitespace semantics."""
     return RE_WHITESPACE.sub(" ", s)

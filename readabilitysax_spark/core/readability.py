@@ -27,14 +27,14 @@ from __future__ import annotations
 import re
 
 from .element import HEADER_TAGS, Element
-from .jsstr import collapse_ws, js_len, js_parse_int, js_trim
+from .jsstr import ascii_lower, collapse_ws, js_len, js_parse_int, js_trim
 from .urls import (
-    RE_CLOSING,
     RE_PROTOCOL,
     URLInfo,
     convert_links,
     get_base_url,
     parse_page_url,
+    strip_closing,
 )
 
 # ---- tag sets (readability-sax.ts:18-68) ----
@@ -55,17 +55,20 @@ DIV_TO_P_ELEMENTS = ("a", "blockquote", "dl", "img", "ol", "p", "pre", "table", 
 OKAY_IF_EMPTY = ("audio", "embed", "iframe", "img", "object", "video")
 
 # ---- regex battery (readability-sax.ts:70-99); JS → Python notes:
-#  .test() == .search(); anchors $ → \Z; \d ASCII
+#  .test() == .search(); anchors $ → \Z; \d ASCII; /i → re.I | re.ASCII,
+#  because a JS /i without the u flag folds ASCII letters only (Python's
+#  re.I alone also folds e.g. ſ to s and ı to i)
 re_videos = re.compile(r"http://(?:www\.)?(?:youtube|vimeo)\.com")
-re_nextLink = re.compile(r"[>»]|continue|next|weiter(?:[^|]|\Z)", re.I)
-re_previousLink = re.compile(r"[<«]|earl|new|old|prev", re.I)
+re_nextLink = re.compile(r"[>»]|continue|next|weiter(?:[^|]|\Z)", re.I | re.ASCII)
+re_previousLink = re.compile(r"[<«]|earl|new|old|prev", re.I | re.ASCII)
 re_extraneous = re.compile(
-    r"all|archive|comment|discuss|e-?mail|login|print|reply|share|sign|single", re.I
+    r"all|archive|comment|discuss|e-?mail|login|print|reply|share|sign|single",
+    re.I | re.ASCII,
 )
-re_pages = re.compile(r"pag(?:e|ing|inat)", re.I)
+re_pages = re.compile(r"pag(?:e|ing|inat)", re.I | re.ASCII)
 re_pagenum = re.compile(r"p[ag]{0,2}(?:e|ing|ination)?[=/]\d{1,2}", re.I | re.ASCII)
 re_safe = re.compile(r"article-body|hentry|instapaper_body")
-re_final = re.compile(r"first|last", re.I)
+re_final = re.compile(r"first|last", re.I | re.ASCII)
 re_positive = re.compile(
     r"article|blog|body|content|entry|main|news|pag(?:e|ination)|post|story|text"
 )
@@ -83,7 +86,23 @@ re_okMaybeItsACandidate = re.compile(r"and|article|body|column|main|shadow")
 re_sentence = re.compile(r"\. |\.\Z")
 re_digits = re.compile(r"\d", re.ASCII)
 re_domain = re.compile(r"/([^/]+)")
-re_imgUrl = re.compile(r"\.(gif|jpe?g|png|webp)\Z", re.I)
+re_imgUrl = re.compile(r"\.(gif|jpe?g|png|webp)\Z", re.I | re.ASCII)
+
+
+def _lowercase_twin(rx: re.Pattern) -> re.Pattern:
+    """Case-sensitive copy of an all-lowercase ``re.I | re.ASCII`` regex:
+    ``twin.search(ascii_lower(s))`` matches exactly when ``rx.search(s)``
+    does, and a case-sensitive alternation scans several times faster."""
+    return re.compile(rx.pattern, rx.flags & ~re.I)
+
+
+# _scan_link runs these on strings it lowercases once each
+_re_nextLink_lc = _lowercase_twin(re_nextLink)
+_re_previousLink_lc = _lowercase_twin(re_previousLink)
+_re_extraneous_lc = _lowercase_twin(re_extraneous)
+_re_pages_lc = _lowercase_twin(re_pages)
+_re_pagenum_lc = _lowercase_twin(re_pagenum)
+_re_final_lc = _lowercase_twin(re_final)
 
 # getTitle internals (readability-sax.ts:650-666)
 _re_title_separator = re.compile(r" [|-] ")
@@ -167,7 +186,7 @@ class Readability:
         href = element.attributes.get("href")
         if not href:
             return
-        href = RE_CLOSING.sub("", href, count=1)
+        href = strip_closing(href)
 
         if href in self._settings["linksToSkip"]:
             return
@@ -180,33 +199,40 @@ class Readability:
         if self._url is not None and match.group(1) != self._url.domain:
             return
 
-        text = element.to_string()
-        if js_len(text) > 25 or re_extraneous.search(text):
-            return
+        # the href-only test first: every test before scoring is pure
         if not re_digits.search(href.replace(self._base_url, "", 1)):
+            return
+        text = element.to_string()
+        if js_len(text) > 25:
+            return
+        text_lc = ascii_lower(text)
+        if _re_extraneous_lc.search(text_lc):
             return
 
         score = 0
         link_data = text + element.element_data
+        # element_data is lowercased already (onattribute)
+        link_lc = text_lc + element.element_data
 
-        if re_nextLink.search(link_data):
+        if _re_nextLink_lc.search(link_lc):
             score += 50
-        if re_pages.search(link_data):
+        if _re_pages_lc.search(link_lc):
             score += 25
 
-        if re_final.search(link_data) and not re_nextLink.search(text):
+        if _re_final_lc.search(link_lc) and not _re_nextLink_lc.search(text_lc):
             existing = self._scanned_links.get(href)
-            if not (existing is not None and re_nextLink.search(existing[1])):
+            if not (existing is not None and _re_nextLink_lc.search(ascii_lower(existing[1]))):
                 score -= 65
 
-        if re_negative.search(link_data) or re_extraneous.search(link_data):
+        if re_negative.search(link_data) or _re_extraneous_lc.search(link_lc):
             score -= 50
-        if re_previousLink.search(link_data):
+        if _re_previousLink_lc.search(link_lc):
             score -= 200
 
-        if re_pagenum.search(href) or re_pages.search(href):
+        href_lc = ascii_lower(href)
+        if _re_pagenum_lc.search(href_lc) or _re_pages_lc.search(href_lc):
             score += 25
-        if re_extraneous.search(href):
+        if _re_extraneous_lc.search(href_lc):
             score -= 15
 
         current = element
@@ -219,7 +245,7 @@ class Readability:
             ed = current.element_data
             if ed == "":
                 continue
-            if pos_match and re_pages.search(ed):
+            if pos_match and _re_pages_lc.search(ed):
                 score += 25
                 if neg_match:
                     pos_match = False
@@ -330,6 +356,7 @@ class Readability:
             return
         if (
             settings["stripUnlikelyCandidates"]
+            and element.element_data
             and re_unlikelyCandidates.search(element.element_data)
             and not re_okMaybeItsACandidate.search(element.element_data)
         ):
@@ -515,8 +542,10 @@ class Readability:
             node = self._get_candidate_node()
         return _re_three_newlines.sub("", js_trim(node.get_formatted_text()))
 
-    def get_article(self, type_: str | None = None) -> dict:
-        element = self._get_candidate_node()
+    def get_article(self, type_: str | None = None, node: Element | None = None) -> dict:
+        """The ArticleResult of the current pass; ``node`` is this pass's
+        ``_get_candidate_node()`` when the caller already has it."""
+        element = node if node is not None else self._get_candidate_node()
 
         result = {
             "title": self._header_title if len(self._header_title) > 0 else self.get_title(),

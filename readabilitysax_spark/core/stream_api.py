@@ -13,9 +13,10 @@
 
 from __future__ import annotations
 
+from .api import extract, run_skip_levels
 from .element import Element
 from .readability import Readability
-from .tokenizer import replay, tokenize
+from .tokenizer import tokenize
 
 
 class ChunkedExtractor:
@@ -31,8 +32,6 @@ class ChunkedExtractor:
         self._chunks.append(bytes(chunk))
 
     def finish(self, type_: str = "text") -> dict:
-        from .api import extract
-
         data = b"".join(self._chunks)
         settings = dict(self._settings)
         url = settings.pop("pageURL", None)
@@ -59,21 +58,7 @@ def extract_from_events(events: list[tuple], settings: dict | None = None,
                         type_: str = "text") -> dict:
     """Run the scorer over an externally-produced event stream
     (the DOMasSAX pattern: events are the canonical interface)."""
-    readable = Readability(settings or {})
-    skip_level = 0
-    while True:
-        if skip_level != 0:
-            readable.set_skip_level(skip_level)
-        readable.onreset()
-        replay(events, readable)
-        article = readable.get_article(type_)
-        used = skip_level
-        skip_level += 1
-        if article.get("textLength", 0) >= 250 or skip_level >= 4:
-            break
-    article["skipLevel"] = used
-    article["error"] = False
-    return article
+    return run_skip_levels(Readability(settings or {}), events, type_)
 
 
 __all__ = ["ChunkedExtractor", "get_events", "extract_from_events", "tokenize"]

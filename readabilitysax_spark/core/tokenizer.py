@@ -9,8 +9,12 @@ context), emitting exactly the callback sequence the reference's
 
     (OPEN, name) (ATTR, name, value) (TEXT, text) (CLOSE, name)
 
-Design: a scanning tokenizer (``str.find``/regex jumps, no per-character
-Python loop) that emits into a flat event list. The event stream is
+Design: a scanning tokenizer (regex jumps, no per-character Python
+loop) that emits into a flat event list. One compiled search finds the
+next ``<`` and, for the dominant shapes — an open tag whose attributes
+are all whitespace-separated ``name="value"`` pairs, or a bare
+``</name>`` — matches the whole tag; every other ``<`` goes through an
+exact port of htmlparser2's tag states. The event stream is
 independent of Readability settings, so the ≤4-pass skip-level loop
 (lib/process.ts:22-29) tokenizes once and replays the list per pass.
 
@@ -49,6 +53,8 @@ _INTEGRATION = frozenset((
     "mi", "mo", "mn", "ms", "mtext", "annotation-xml", "foreignObject",
     "desc", "title",
 ))
+# the foreign-context flag each of these tags pushes (True: foreign)
+_FOREIGN_FLAG = {**dict.fromkeys(_INTEGRATION, False), **dict.fromkeys(_FOREIGN, True)}
 
 _FORM_TAGS = frozenset(("input", "option", "optgroup", "select", "button", "datalist", "textarea"))
 _P_TAG = frozenset(("p",))
@@ -98,6 +104,20 @@ _RE_ATTR_FAST = re.compile(
     r"(\"[^\"]*\"|'[^']*')"
 )
 
+# One search per tag: "<" followed, optionally, by a simple open tag
+# (groups 1-2: name, then ws-separated name="v"/name='v' pairs, then
+# optional ws and ">") or a simple close tag (group 3: "</name>"). The
+# name classes are those of the state loop; the quantifiers are
+# possessive so the attribute block cannot backtrack into a name. A
+# bare "<" match falls through to the state loop.
+_RE_TAG = re.compile(
+    r"<(?:([a-zA-Z][^\t\n\f\r />]*+)"
+    r"((?:[\t\n\f\r ]++[^\t\n\f\r =/>]++=(?:\"[^\"]*+\"|'[^']*+'))*+)"
+    r"[\t\n\f\r ]*+>"
+    r"|/([a-zA-Z][^\t\n\f\r >]*+)>)?"
+)
+_RE_ATTR_PAIR = re.compile(r"([^\t\n\f\r =/>]++)=(\"[^\"]*+\"|'[^']*+')")
+
 _SPECIAL_TAGS = ("script", "style", "title", "textarea")
 # "</name" followed by > or whitespace terminates rawtext content
 _SPECIAL_END = {
@@ -143,84 +163,100 @@ def tokenize(html: str) -> list[tuple]:
                 ev_append((CLOSE, stack.pop()))
         if name not in VOID_ELEMENTS:
             stack.append(name)
-            if name in _FOREIGN:
-                foreign.append(True)
-            elif name in _INTEGRATION:
-                foreign.append(False)
+            flag = _FOREIGN_FLAG.get(name)
+            if flag is not None:
+                foreign.append(flag)
         ev_append((OPEN, name))
 
     def emit_explicit_close(name: str) -> None:
         # Parser.onclosetag
-        if name in _FOREIGN or name in _INTEGRATION:
+        if name in _FOREIGN_FLAG:
             if foreign:
                 foreign.pop()
-        if name not in VOID_ELEMENTS:
-            if stack and stack[-1] == name:
-                pos = len(stack) - 1  # fast path: well-formed close
-            else:
-                pos = -1
-                for idx in range(len(stack) - 1, -1, -1):
-                    if stack[idx] == name:
-                        pos = idx
-                        break
-            if pos != -1:
-                for _ in range(len(stack) - pos):
-                    ev_append((CLOSE, stack.pop()))
-            elif name == "p":
-                # implicit <p></p>
-                emit_open("p")
-                if stack and stack[-1] == "p":
-                    ev_append((CLOSE, stack.pop()))
-        elif name == "br":
-            ev_append((OPEN, "br"))
-            ev_append((CLOSE, "br"))
+        if name in VOID_ELEMENTS:
+            if name == "br":
+                ev_append((OPEN, "br"))
+                ev_append((CLOSE, "br"))
+        elif stack and stack[-1] == name:
+            ev_append((CLOSE, stack.pop()))
+        elif name in stack:
+            # close everything above the innermost open `name`, then it
+            while True:
+                top = stack.pop()
+                ev_append((CLOSE, top))
+                if top == name:
+                    break
+        elif name == "p":
+            # implicit <p></p>
+            emit_open("p")
+            if stack and stack[-1] == "p":
+                ev_append((CLOSE, stack.pop()))
+
+    html_find = html.find
+
+    def rawtext(name: str, start: int) -> int:
+        """Content of a script/style/title/textarea up to its end tag,
+        then the close; returns the scan position after the end tag."""
+        emit = emit_text if name in _RCDATA else emit_raw_text
+        m2 = _SPECIAL_END[name].search(html, start)
+        if m2 is None:
+            # EOF inside rawtext: trailing content is text
+            emit(start, n)
+            return n
+        emit(start, m2.start())
+        emit_explicit_close(name)
+        # AfterClosingTagName: consume to '>'
+        gt = html_find(">", m2.end())
+        return (gt + 1) if gt >= 0 else n
 
     i = 0    # scan position
     sec = 0  # current text section start
-    html_find = html.find  # bound once: the scan loop's hottest call
+    tag_search = _RE_TAG.search
 
-    while i < n:
-        lt = html_find("<", i)
-        if lt < 0:
+    while True:
+        m = tag_search(html, i)
+        if m is None:
             break
-        nxt = html[lt + 1] if lt + 1 < n else ""
+        lt = m.start()
+        if lt > sec:
+            emit_text(sec, lt)
 
+        name = m[1]
+        if name is not None:
+            # ---- simple open tag ----
+            name = name.lower()
+            emit_open(name)
+            attrs = m[2]
+            if attrs:
+                for attr_name, quoted in _RE_ATTR_PAIR.findall(attrs):
+                    if len(quoted) > 2:
+                        value = decode_attribute_value(quoted[1:-1])
+                        if value:
+                            ev_append((ATTR, attr_name.lower(), value))
+            i = sec = m.end()
+            if name in VOID_ELEMENTS:
+                ev_append((CLOSE, name))
+            elif name in _SPECIAL_END:
+                i = sec = rawtext(name, i)
+            continue
+        name = m[3]
+        if name is not None:
+            # ---- simple close tag ----
+            emit_explicit_close(name.lower())
+            i = sec = m.end()
+            continue
+
+        nxt = html[lt + 1] if lt + 1 < n else ""
         if nxt in _ASCII_ALPHA:
             # ---- open tag ----
-            if lt > sec:
-                emit_text(sec, lt)
             m = _RE_TAG_NAME.match(html, lt + 1)
             name_end = m.end()
             if name_end >= n:
                 # EOF inside tag name: tag ignored entirely
                 i = sec = n
                 break
-            raw_name = m.group()
-            name = raw_name.lower()
+            name = m.group().lower()
             emit_open(name)
-
-            # fast path: attribute-less tag (the common case in prose)
-            if html[name_end] == ">":
-                if name in VOID_ELEMENTS:
-                    ev_append((CLOSE, name))
-                i = sec = name_end + 1
-                if name in _SPECIAL_END:
-                    m2 = _SPECIAL_END[name].search(html, i)
-                    if m2 is None:
-                        if name in _RCDATA:
-                            emit_text(i, n)
-                        else:
-                            emit_raw_text(i, n)
-                        i = sec = n
-                        break
-                    if name in _RCDATA:
-                        emit_text(i, m2.start())
-                    else:
-                        emit_raw_text(i, m2.start())
-                    emit_explicit_close(name)
-                    gt = html_find(">", m2.end())
-                    i = sec = (gt + 1) if gt >= 0 else n
-                continue
 
             # ---- attribute loop ----
             p = name_end
@@ -301,14 +337,10 @@ def tokenize(html: str) -> list[tuple]:
                             value = decode_attribute_value(value_raw)
                             if value:
                                 ev_append((ATTR, attr_name, value))
-                        elif attr_name:
-                            pass  # empty value: Readability ignores
                         p = vend
                 else:
                     # valueless attribute: value "" — Readability ignores
                     continue
-            else:
-                pass
 
             if not tag_ok:
                 # EOF mid-tag: opentagend never fires; no void close.
@@ -316,50 +348,20 @@ def tokenize(html: str) -> list[tuple]:
                 i = sec = n
                 break
 
-            effective_self_close = self_closing and (bool(foreign) and foreign[-1])
-            if self_closing:
-                pass  # isSpecial reset happens implicitly below
-            if effective_self_close:
-                # Parser.closeCurrentTag
-                if name in VOID_ELEMENTS:
-                    ev_append((CLOSE, name))
-                elif stack and stack[-1] == name:
-                    ev_append((CLOSE, name))
-                    stack.pop()
-            else:
-                if name in VOID_ELEMENTS:
-                    ev_append((CLOSE, name))
+            if name in VOID_ELEMENTS:
+                ev_append((CLOSE, name))
+            elif self_closing and foreign and foreign[-1] and stack and stack[-1] == name:
+                # "/>" closes only in foreign content (Parser.closeCurrentTag)
+                ev_append((CLOSE, stack.pop()))
 
             i = sec = p
 
             # ---- rawtext content ----
-            if (
-                name in _SPECIAL_END
-                and not self_closing
-                and not effective_self_close
-            ):
-                m2 = _SPECIAL_END[name].search(html, p)
-                if m2 is None:
-                    # EOF inside rawtext: trailing content is text
-                    if name in _RCDATA:
-                        emit_text(p, n)
-                    else:
-                        emit_raw_text(p, n)
-                    i = sec = n
-                    break
-                if name in _RCDATA:
-                    emit_text(p, m2.start())
-                else:
-                    emit_raw_text(p, m2.start())
-                emit_explicit_close(name)
-                # AfterClosingTagName: consume to '>'
-                gt = html_find(">", m2.end())
-                i = sec = (gt + 1) if gt >= 0 else n
+            if name in _SPECIAL_END and not self_closing:
+                i = sec = rawtext(name, p)
 
         elif nxt == "/":
             # ---- closing tag ----
-            if lt > sec:
-                emit_text(sec, lt)
             p = _RE_WS.match(html, lt + 2).end()
             if p >= n:
                 # "</" (+ws) at EOF: falls through as text from '<'
@@ -389,8 +391,6 @@ def tokenize(html: str) -> list[tuple]:
                 i = sec = gt + 1
 
         elif nxt == "!":
-            if lt > sec:
-                emit_text(sec, lt)
             if html.startswith("--", lt + 2):
                 # comment; "--" of opener may overlap with "-->"
                 end = html.find("-->", lt + 2)
@@ -408,8 +408,6 @@ def tokenize(html: str) -> list[tuple]:
                 i = sec = gt + 1
 
         elif nxt == "?":
-            if lt > sec:
-                emit_text(sec, lt)
             gt = html_find(">", lt + 2)
             if gt < 0:
                 emit_raw_text(lt + 2, n)
@@ -420,8 +418,6 @@ def tokenize(html: str) -> list[tuple]:
         else:
             # '<' is text (also '<' at EOF): section break, '<' starts
             # the next text section
-            if lt > sec:
-                emit_text(sec, lt)
             sec = lt
             i = lt + 1
 

@@ -29,6 +29,15 @@ RE_CLEAN_PATHS = re.compile(r"/\.(?!\.)|/[^/]*/\.\.")
 RE_CLOSING = re.compile(r"/?(?:#.*)?\Z")
 
 
+def strip_closing(s: str) -> str:
+    """``RE_CLOSING.sub("", s, count=1)``: drop a trailing ``/`` and any
+    ``#`` fragment. Without a ``#`` only one trailing ``/`` can match,
+    which string ops find without the regex trying every position."""
+    if "#" in s:
+        return RE_CLOSING.sub("", s, count=1)
+    return s[:-1] if s.endswith("/") else s
+
+
 class URLInfo:
     __slots__ = ("protocol", "domain", "path", "full")
 
@@ -46,7 +55,7 @@ def parse_page_url(page_url: str) -> URLInfo:
         protocol=parts[0] if parts else "",
         domain=parts[1] if len(parts) > 1 else "",
         path=parts[2:-1],
-        full=RE_CLOSING.sub("", page_url, count=1),
+        full=strip_closing(page_url),
     )
 
 

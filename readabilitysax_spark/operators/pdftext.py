@@ -444,17 +444,21 @@ def _balanced_dict(data: bytes, start: int) -> bytes | None:
     return data[start:j]
 
 
+# a PDF name ends at whitespace or a delimiter: ( ) < > [ ] { } / %
+# (ISO 32000 §7.2.2, §7.3.5)
+_NAME_END = rb"(?=[\s/<>\[\](){}%]|$)"
+
+
 def _dict_value(body: bytes, key: bytes,
                 objs: dict[int, tuple[bytes, bytes | None]]) -> bytes | None:
     """Value of ``/key`` in ``body``: an inline ``<<…>>`` dict slice, or
     the referenced object's body for the ``N 0 R`` form.
 
-    The key match is name-boundary-anchored (a PDF name ends at
-    whitespace or a delimiter, ISO 32000 §7.3.5) and the scan continues
-    past non-parsing occurrences — round-5 ADVICE: a preceding
+    The key match is name-boundary-anchored (``_NAME_END``) and the
+    scan continues past non-parsing occurrences — round-5 ADVICE: a preceding
     ``/ResourcesAlt`` key must neither shadow a real ``/Resources``
     later in the dict nor abort the lookup."""
-    for m in re.finditer(rb"/" + key + rb"(?=[\s/<>\[\]()%]|$)", body):
+    for m in re.finditer(rb"/" + key + _NAME_END, body):
         at = m.end()
         while at < len(body) and body[at:at + 1] in b" \t\r\n":
             at += 1

@@ -202,12 +202,17 @@ def ivf_assign(
     staged ONCE (``_vnorm`` projection) and shared by every centroid's
     cosine — the n_lists-fold norm recomputation plus the per-row
     re-aggregation of each constant centroid's norm dominated the
-    assignment pass (see the cosine_lit block comment)."""
-    staged = embeddings.withColumn("_vnorm", _norm(F.col(vec_col)))
+    assignment pass (see the cosine_lit block comment). The staged name
+    is one the caller's frame does not have, so no caller column is
+    overwritten or dropped."""
+    norm_col = "_vnorm"
+    while norm_col in embeddings.columns:
+        norm_col = "_" + norm_col
+    staged = embeddings.withColumn(norm_col, _norm(F.col(vec_col)))
     structs = []
     for i, c in enumerate(centroids):
         sim = cosine_lit(
-            F.col(vec_col), [float(v) for v in c], a_norm=F.col("_vnorm")
+            F.col(vec_col), [float(v) for v in c], a_norm=F.col(norm_col)
         )
         structs.append(
             F.struct(
@@ -216,7 +221,7 @@ def ivf_assign(
             )
         )
     best = F.array_max(F.array(*structs))
-    return staged.withColumn("list_id", best["list_id"]).drop("_vnorm")
+    return staged.withColumn("list_id", best["list_id"]).drop(norm_col)
 
 
 def train_centroids_deterministic(

@@ -249,6 +249,24 @@ def test_ivf_prebuilt_full_probe_equals_brute_force(spark):
     assert [r.cosine for r in part] == sorted((r.cosine for r in part), reverse=True)
 
 
+def test_ivf_assign_keeps_caller_vnorm_column(spark):
+    """ivf_assign stages the row norm under a name the caller's frame
+    does not use: a caller column named _vnorm survives unchanged and
+    the assignment is the same as without it."""
+    from readabilitysax_spark.operators.similarity import ivf_assign
+
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 2.0]), (2, [3.0, 1.0]), (3, [-1.0, 4.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    centroids = [[1.0, 0.0], [0.0, 1.0]]
+    plain = {r.vec_id: r.list_id for r in ivf_assign(emb, centroids).collect()}
+    clash = emb.withColumn("_vnorm", F.lit("caller"))
+    out = ivf_assign(clash, centroids)
+    assert out.columns == ["vec_id", "embedding", "_vnorm", "list_id"]
+    got = out.collect()
+    assert {r.vec_id: r.list_id for r in got} == plain == {0: 0, 1: 1, 2: 0, 3: 1}
+    assert {r._vnorm for r in got} == {"caller"}
+
+
 def test_embedding_near_dup_bucket_cap(spark):
     """Same cap semantics on the embedding-space near-dup join."""
     from pyspark.sql import functions as F

@@ -563,3 +563,16 @@ def test_dict_value_key_is_name_boundary_anchored():
     # a non-parsing first occurrence must not stop the scan
     weird = b"<</Resources junk /Resources 7 0 R>>"
     assert P._dict_value(weird, b"Resources", objs) == objs[7][0]
+
+
+def test_name_end_includes_braces():
+    """{ and } are PDF delimiters too (ISO 32000 §7.2.2): a key directly
+    followed by a brace ends there; a longer name still does not match."""
+    import re
+
+    from readabilitysax_spark.operators import pdftext as P
+
+    key = re.compile(rb"/Resources" + P._NAME_END)
+    assert key.search(b"/Resources{") is not None
+    assert key.search(b"/Resources}") is not None
+    assert key.search(b"/ResourcesAlt{") is None
