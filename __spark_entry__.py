@@ -30,10 +30,10 @@ from readabilitysax_spark.operators import (
 )
 from readabilitysax_spark.operators.extract import (
     extract_articles,
-    extract_articles_from_documents,
-    extract_outlinks_from_documents,
+    extract_outlinks,
 )
 from readabilitysax_spark.sources.pages import (
+    page_url_col,
     read_documents,
     read_pages_meta,
     spread_small_scan,
@@ -46,12 +46,12 @@ _ARTICLE_COLS = [
 
 
 def _articles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # page synthesis fused into the extraction pass (round 6): one
-    # Python runner per task instead of two, html never crosses the
-    # JVM boundary — values identical to
+    # extraction over the documents table builds each page inside the
+    # extraction batch loop: one Python runner per task, html never
+    # crosses the JVM boundary — values identical to
     # extract_articles(read_pages(...)) (see the operator docstring)
     docs = read_documents(spark, sf_dir)
-    return extract_articles_from_documents(docs).select(*_ARTICLE_COLS)
+    return extract_articles(docs).select(*_ARTICLE_COLS)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -70,7 +70,7 @@ def _q_extract_articles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_extract_articles_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2 output path (getHTML serialization) end-to-end."""
     docs = read_documents(spark, sf_dir)
-    arts = extract_articles_from_documents(docs, output_type="html")
+    arts = extract_articles(docs, output_type="html")
     return arts.select("url", "title", F.col("text").alias("html_out"))
 
 
@@ -78,7 +78,7 @@ def _q_extract_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lang rides THROUGH the UDF (passthrough) — no url-keyed join of
     # two billion-row sides at scale
     docs = read_documents(spark, sf_dir)
-    arts = extract_articles_from_documents(docs, passthrough=("lang",))
+    arts = extract_articles(docs, passthrough=("lang",))
     return (
         arts.groupBy("lang")
         .agg(
@@ -96,10 +96,7 @@ def _q_extract_skip_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     skip levels 1→3 inside the Spark UDF (lib/process.ts:22-29)."""
     docs = read_documents(spark, sf_dir)
     tiny_pages = docs.select(
-        F.concat(
-            F.lit("http://"), F.col("source"),
-            F.lit(".example/articles/doc-"), F.col("doc_id"),
-        ).alias("url"),
+        page_url_col().alias("url"),
         F.encode(
             F.concat(
                 F.lit("<div class='content'><p>"),
@@ -285,14 +282,14 @@ def _q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link-graph pass: every <a href> per page, resolved with the
     reference's own URL semantics (same vectorized map shape as
-    extraction — zero shuffle). Synthesis fused (round 6)."""
-    return extract_outlinks_from_documents(read_documents(spark, sf_dir))
+    extraction — zero shuffle), pages built in the same batch loop."""
+    return extract_outlinks(read_documents(spark, sf_dir))
 
 
 def _q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-degree rollup over the outlink table: links/pages per target
     domain (one shuffle on the domain key)."""
-    links = extract_outlinks_from_documents(read_documents(spark, sf_dir))
+    links = extract_outlinks(read_documents(spark, sf_dir))
     domain = F.regexp_extract("href", "^[a-z]+://([^/]+)", 1)
     return (
         links.withColumn("target_domain", domain)
@@ -383,7 +380,7 @@ def _q_extraction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from — the eval closes the loop on the byte-identical invariant
     at token level, end-to-end through the UDF."""
     docs = read_documents(spark, sf_dir).withColumn("gold_text", F.col("text"))
-    arts = extract_articles_from_documents(docs, passthrough=("gold_text",))
+    arts = extract_articles(docs, passthrough=("gold_text",))
     return textstats.token_set_prf(
         arts, "text", "gold_text", id_col="url"
     ).orderBy("url")
@@ -728,7 +725,7 @@ def _q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     downscale), frame/sample extraction, and PDF text extraction
     (round 4: real content-stream parse with zlib /FlateDecode, the
     "PDF/layout parse" leg of the north rule's extraction family) —
-    joined on media_id. One query slot instead of four because the
+    one row per media_id. One query slot instead of four because the
     driver's correctness gate checks at most 50 queries (r03 cut
     exactly the 3 tail media queries); every stage's values are still
     hash-checked column-by-column. Image/audio/frame outputs are
@@ -739,18 +736,13 @@ def _q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the DuckDB oracle predicts the extracted text — down to its
     md5 — from the documents table alone.
 
-    At 100 TB the four stages run over one synth/scan of the media
-    table (shared input, Arrow-batched map passes, all zero-shuffle).
-
-    Round 6: the four stages are FUSED into one ``mapInArrow`` pass
-    (``multimodal.media_audit``) — the r5 shape synthesized the asset
-    table once per stage (4 Python crossings) and paid three media_id
-    sort-merge joins solely to re-pack per-asset rows into one audit
-    row; the fused pass is zero-join/zero-shuffle and row-for-row
-    identical to the staged join (values, column order, null pattern —
-    pinned by tests/test_operators.py::
-    test_media_audit_matches_stage_joins; the per-stage operators stay
-    the public API).
+    The four stages run in ONE ``mapInArrow`` pass
+    (``multimodal.media_audit``): each asset is synthesized and run
+    through every stage's per-row function in the same batch loop —
+    zero-join, zero-shuffle, one Python crossing per task. Column
+    order and types are pinned by tests/test_operators.py::
+    test_media_audit_schema, each stage's values by the per-row
+    analytic tests there and by this query's oracle.
     """
     docs = read_documents(spark, sf_dir)
     return multimodal.media_audit(docs, max_side=32, every_n=100)

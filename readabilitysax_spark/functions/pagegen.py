@@ -28,13 +28,19 @@ from __future__ import annotations
 
 MIN_CONTENT = 260
 
+# url = URL_PREFIX + source + URL_SUFFIX + doc_id
+URL_PREFIX = "http://"
+URL_SUFFIX = ".example/articles/doc-"
+# warc_ts = WARC_EPOCH + doc_id seconds (2020-01-01T00:00:00Z)
+WARC_EPOCH = 1_577_836_800
+
 
 def n_paragraphs(text_len: int) -> int:
     return (MIN_CONTENT + text_len - 1) // text_len
 
 
 def page_url(source: str, doc_id: int) -> str:
-    return f"http://{source}.example/articles/doc-{doc_id}"
+    return f"{URL_PREFIX}{source}{URL_SUFFIX}{doc_id}"
 
 
 def title4(text: str) -> str:
@@ -114,4 +120,4 @@ def synth_page(doc_id: int, text: str, source: str) -> tuple[str, str]:
 
 def synth_warc_ts(doc_id: int) -> int:
     """Deterministic warc timestamp: 2020-01-01 + doc_id seconds (unix)."""
-    return 1_577_836_800 + int(doc_id)
+    return WARC_EPOCH + int(doc_id)

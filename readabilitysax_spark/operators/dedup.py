@@ -813,33 +813,3 @@ def simhash_near_dup_pairs(
         .select("doc_a", "doc_b", "hamming")
     )
 
-
-def materialize_bucketed_features(
-    features: DataFrame,
-    table_name: str,
-    n_buckets: int = 64,
-    key: str = "doc_id",
-) -> DataFrame:
-    """Materialize a doc-level feature table BUCKETED by ``key`` —
-    Spark's sort-merge-bucket (SMB) layout: ``bucketBy`` + ``sortBy``
-    into a catalog table, so every later equi-join or aggregation on
-    ``key`` between co-bucketed tables runs WITHOUT an Exchange (the
-    scan itself satisfies the join's distribution requirement).
-
-    This is the 100 TB shape for the dedup-feature table the Jaccard/
-    clustering chain reuses across queries: pay ONE clustered write,
-    then candidate-pair verification, cluster iteration, and
-    cross-snapshot joins all read shuffle-free on their hot key. The
-    sandbox analog of writing the Iceberg table with a bucket
-    partition transform. Plan behavior pinned in
-    tests/test_plans.py::test_bucketed_feature_join_has_no_exchange.
-    """
-    spark = features.sparkSession
-    (
-        features.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-    return spark.table(table_name)

@@ -1,9 +1,17 @@
-"""The extraction operator: pages → articles, as ONE vectorized Arrow UDF.
+"""The extraction operators: pages → articles and pages → outlinks,
+each ONE vectorized Arrow UDF.
 
 The whole readabilitySAX dataflow (SURVEY.md §2.2-2.3, rows S1-S24 /
 O1-O5) runs inside ``mapInArrow`` over (url, html) batches — Spark
 never sees the element tree, only the input scan and the output
 articles. No per-row Python UDFs anywhere (north_rule).
+
+Input kind is read from the frame's columns: a table with an ``html``
+column is a pages table and is read as it is; any other table is a
+documents table (doc_id, text, source), and each page is built by
+``synth_page`` inside the same batch loop that extracts it, so the
+html never crosses the JVM↔Python boundary (one Python runner per
+task instead of a synthesis runner feeding an extraction runner).
 
 Scale design:
 * **Skew defusal** — page size is heavy-tailed (a 100 MB page among
@@ -32,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.api import extract
+from ..sources.pages import synth_batch_pages
 
 ARTICLES_DDL = (
     "url string, title string, text string, text_length bigint, "
@@ -58,6 +67,22 @@ ARTICLES_ARROW_SCHEMA = pa.schema(
 # flush output batches beyond this many article-text bytes
 _OUT_BYTE_BUDGET = 32 << 20
 _OUT_ROW_BUDGET = 1024
+
+
+def _source_columns(df: DataFrame) -> list[str]:
+    """The columns a page is read from: (url, html) of a pages table,
+    or (doc_id, text, source) of a documents table."""
+    if "html" in df.columns:
+        return ["url", "html"]
+    return ["doc_id", "text", "source"]
+
+
+def _batch_pages(batch: pa.RecordBatch) -> tuple[list, list]:
+    """(urls, htmls) of one input batch: a pages batch as it is, a
+    documents batch through ``synth_batch_pages``."""
+    if "html" in batch.schema.names:
+        return batch.column("url").to_pylist(), batch.column("html").to_pylist()
+    return synth_batch_pages(batch)
 
 
 def _make_extract_fn(
@@ -88,8 +113,7 @@ def _make_extract_fn(
             return batch
 
         for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
+            urls, htmls = _batch_pages(batch)
             # redirect semantics (get-url.ts:79-85): when the table
             # carries a post-redirect final URL, IT drives base-URL /
             # next-page resolution while the request url stays the key
@@ -100,6 +124,10 @@ def _make_extract_fn(
             extras = {name: batch.column(name).to_pylist() for name in passthrough}
             for row_idx, (url, html) in enumerate(zip(urls, htmls)):
                 html = html or b""
+                n_bytes = (
+                    len(html) if isinstance(html, bytes)
+                    else len(html.encode("utf-8"))
+                )
                 art = extract(
                     html, url=resolves[row_idx] or url,
                     type_=output_type, settings=settings,
@@ -113,14 +141,14 @@ def _make_extract_fn(
                 cols["next_page"].append(art.get("nextPage", ""))
                 cols["skip_level"].append(int(art.get("skipLevel", -1)))
                 cols["error"].append(bool(art.get("error", False)))
-                cols["html_bytes"].append(len(html))
+                cols["html_bytes"].append(n_bytes)
                 cols["partition_id"].append(pid)
                 cols["wall_ms"].append(
                     int((time.perf_counter() - t0) * 1000)
                 )
                 for name in passthrough:
                     cols[name].append(extras[name][row_idx])
-                pending_bytes += len(text) + len(html) // 16
+                pending_bytes += len(text) + n_bytes // 16
                 if (
                     pending_bytes >= _OUT_BYTE_BUDGET
                     or len(cols["url"]) >= _OUT_ROW_BUDGET
@@ -132,12 +160,15 @@ def _make_extract_fn(
     return extract_batches
 
 
-def salted_repartition(pages: DataFrame, num_partitions: int) -> DataFrame:
-    """Spread by url hash × size bucket to defuse page-size/host skew."""
-    return pages.repartition(
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Spread by key hash × size bucket to defuse page-size/host skew.
+    A documents table salts on (doc_id, text): its page grows with its
+    text."""
+    key, body = _source_columns(df)[:2]
+    return df.repartition(
         num_partitions,
-        F.xxhash64("url"),
-        F.floor(F.log2(F.length(F.col("html")) + F.lit(2.0))),
+        F.xxhash64(key),
+        F.floor(F.log2(F.length(F.col(body)) + F.lit(2.0))),
     )
 
 
@@ -149,11 +180,17 @@ def extract_articles(
     passthrough: tuple[str, ...] = (),
     resolve_url_col: str | None = None,
 ) -> DataFrame:
-    """pages(url, html, ...) → articles DataFrame.
+    """pages(url, html, ...) or documents(doc_id, text, source, ...) →
+    articles DataFrame.
 
-    Column pruning: only (url, html) plus requested ``passthrough``
-    columns are selected, so Catalyst pushes the projection into the
-    scan (check `.explain`: ReadSchema contains just those columns).
+    A documents table has its pages synthesized in the extraction batch
+    loop (see the module docstring); the result is identical to
+    ``extract_articles(synthesize_pages(documents))``.
+
+    Column pruning: only the page columns plus requested
+    ``passthrough`` columns are selected, so Catalyst pushes the
+    projection into the scan (check `.explain`: ReadSchema contains
+    just those columns).
 
     ``passthrough`` rides narrow columns (lang, warc_ts, ...) through
     the UDF so downstream rollups need NO join back to the pages
@@ -165,36 +202,18 @@ def extract_articles(
     updates pageURL on redirects, lib/get-url.ts:79-85) while the
     request ``url`` remains the output key.
     """
-    from pyspark.sql.pandas.types import to_arrow_type
-
     clash = set(passthrough) & set(ARTICLES_ARROW_SCHEMA.names)
     if clash:
         raise ValueError(
             f"passthrough columns collide with article columns: {sorted(clash)}"
         )
-    extra_src = (
-        [resolve_url_col]
-        if resolve_url_col and resolve_url_col not in passthrough else []
+    extra_src = [resolve_url_col] if resolve_url_col else []
+    src = pages.select(
+        *dict.fromkeys([*_source_columns(pages), *extra_src, *passthrough])
     )
-    src = pages.select("url", "html", *extra_src, *passthrough)
     if num_partitions:
         src = salted_repartition(src, num_partitions)
-
-    out_schema = ARTICLES_ARROW_SCHEMA
-    ddl = ARTICLES_DDL
-    if passthrough:
-        extra_fields = [
-            pa.field(f.name, to_arrow_type(f.dataType))
-            for f in pages.schema.fields
-            if f.name in passthrough
-        ]
-        out_schema = pa.schema(list(ARTICLES_ARROW_SCHEMA) + extra_fields)
-        extra_ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in pages.schema.fields
-            if f.name in passthrough
-        )
-        ddl = f"{ARTICLES_DDL}, {extra_ddl}"
+    out_schema, ddl = _passthrough_schema(pages, passthrough)
     return src.mapInArrow(
         _make_extract_fn(
             settings, output_type, out_schema, passthrough, resolve_url_col
@@ -204,106 +223,25 @@ def extract_articles(
 
 
 def _passthrough_schema(
-    df: DataFrame, passthrough: tuple[str, ...], base_schema: pa.Schema,
-    base_ddl: str,
+    df: DataFrame, passthrough: tuple[str, ...]
 ) -> tuple[pa.Schema, str]:
-    """(arrow schema, ddl) for a base articles schema + passthrough
-    columns taken from ``df``'s schema (shared by the pages-input and
-    fused documents-input extraction operators)."""
+    """(arrow schema, ddl) of the articles columns plus the passthrough
+    columns, typed from ``df``'s schema."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     if not passthrough:
-        return base_schema, base_ddl
-    extra_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType))
-        for f in df.schema.fields
-        if f.name in passthrough
-    ]
-    extra_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in passthrough
-    )
+        return ARTICLES_ARROW_SCHEMA, ARTICLES_DDL
+    extra = [f for f in df.schema.fields if f.name in passthrough]
     return (
-        pa.schema(list(base_schema) + extra_fields),
-        f"{base_ddl}, {extra_ddl}",
+        pa.schema(
+            list(ARTICLES_ARROW_SCHEMA)
+            + [pa.field(f.name, to_arrow_type(f.dataType)) for f in extra]
+        ),
+        ", ".join(
+            [ARTICLES_DDL]
+            + [f"{f.name} {f.dataType.simpleString()}" for f in extra]
+        ),
     )
-
-
-def extract_articles_from_documents(
-    documents: DataFrame,
-    output_type: str = "text",
-    settings: dict | None = None,
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """documents(doc_id, text, source, …) → articles, page synthesis
-    FUSED into the extraction pass (round 6).
-
-    ``synthesize_pages`` → ``extract_articles`` chains two mapInArrow
-    stages: although they pipeline inside one task (no shuffle), every
-    task runs TWO concurrent Python runners — double the worker pool
-    (the first extraction query forked ~2×cores workers), double the
-    per-task worker handshakes, and the html payload crosses
-    JVM→Python→JVM→Python instead of being consumed where it is built
-    (guide §4.1: control how many times columns cross the boundary).
-    This operator synthesizes each page and extracts it in the SAME
-    batch loop — the html string never leaves the Python worker.
-    Values are identical to extract_articles(synthesize_pages(docs))
-    by construction: the same ``synth_page`` output feeds the same
-    extraction row loop (``_make_extract_fn``), only ``html_bytes``
-    — an unexposed lineage column — counts UTF-16-ish str length
-    instead of UTF-8 bytes, which no declared query selects.
-
-    The pages-table operator ``extract_articles`` stays the production
-    entry point (a real crawl reads pages from storage); this fused
-    form is the sandbox-scan analog, and at 100 TB it is what a
-    fused scan+extract over an in-worker decompressor would look like.
-    """
-    clash = set(passthrough) & set(ARTICLES_ARROW_SCHEMA.names)
-    if clash:
-        raise ValueError(
-            f"passthrough columns collide with article columns: {sorted(clash)}"
-        )
-    out_schema, ddl = _passthrough_schema(
-        documents, passthrough, ARTICLES_ARROW_SCHEMA, ARTICLES_DDL
-    )
-    inner = _make_extract_fn(settings, output_type, out_schema, passthrough, None)
-    pages_schema = pa.schema(
-        [pa.field("url", pa.string()), pa.field("html", pa.string())]
-        + [
-            f for f in out_schema
-            if f.name in passthrough
-        ]
-    )
-
-    def fused(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..functions.pagegen import synth_page
-
-        def synthesized() -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                doc_ids = batch.column("doc_id").to_pylist()
-                texts = batch.column("text").to_pylist()
-                sources = batch.column("source").to_pylist()
-                urls: list[str] = []
-                htmls: list[str] = []
-                for doc_id, text, source in zip(doc_ids, texts, sources):
-                    url, html = synth_page(doc_id, text, source)
-                    urls.append(url)
-                    htmls.append(html)
-                arrays = [pa.array(urls, pa.string()),
-                          pa.array(htmls, pa.string())]
-                for f in pages_schema:
-                    if f.name in ("url", "html"):
-                        continue
-                    arrays.append(batch.column(f.name))
-                yield pa.RecordBatch.from_arrays(arrays, schema=pages_schema)
-
-        yield from inner(synthesized())
-
-    src_cols = ["doc_id", "text", "source"] + [
-        c for c in passthrough if c not in ("doc_id", "text", "source")
-    ]
-    return documents.select(*src_cols).mapInArrow(fused, ddl)
 
 
 # ---- outlink extraction (the web-graph pass over the same pages scan) ----
@@ -399,82 +337,27 @@ def collect_outlinks(
 
 def _outlink_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        o_url: list[str] = []
-        o_pos: list[int] = []
-        o_href: list[str] = []
-        o_text: list[str] = []
-        for url, html in zip(urls, htmls):
+        rows: list[tuple[str, int, str, str]] = []
+        for url, html in zip(*_batch_pages(batch)):
             try:
                 links = collect_outlinks(html or b"", url)
             except Exception:
                 links = []  # one hostile page never kills the batch
-            for pos, href, text in links:
-                o_url.append(url)
-                o_pos.append(pos)
-                o_href.append(href)
-                o_text.append(text)
+            rows.extend((url, pos, href, text) for pos, href, text in links)
+        cols = list(zip(*rows)) or [()] * len(_OUTLINKS_ARROW_SCHEMA)
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(o_url, pa.string()),
-                pa.array(o_pos, pa.int32()),
-                pa.array(o_href, pa.string()),
-                pa.array(o_text, pa.string()),
-            ],
+            [pa.array(c, f.type) for c, f in zip(cols, _OUTLINKS_ARROW_SCHEMA)],
             schema=_OUTLINKS_ARROW_SCHEMA,
         )
 
 
 def extract_outlinks(pages: DataFrame) -> DataFrame:
-    """pages(url, html, ...) → (url, link_pos, href, anchor_text): the
-    link-graph pass every Common-Crawl pipeline runs beside content
-    extraction. Same vectorized-map shape as ``extract_articles``:
-    column-pruned (url, html) scan, Arrow batches, zero shuffle —
-    link-graph rollups (in-degree, per-domain) aggregate downstream."""
-    return pages.select("url", "html").mapInArrow(_outlink_batches, OUTLINKS_DDL)
-
-
-def extract_outlinks_from_documents(documents: DataFrame) -> DataFrame:
-    """documents → outlinks with page synthesis fused into the same
-    batch loop — the outlink analog of
-    ``extract_articles_from_documents`` (see its docstring for why:
-    one Python runner per task instead of two, html never crosses the
-    boundary). Values identical to
-    ``extract_outlinks(synthesize_pages(docs))`` by construction."""
-
-    def fused(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..functions.pagegen import synth_page
-
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            sources = batch.column("source").to_pylist()
-            o_url: list[str] = []
-            o_pos: list[int] = []
-            o_href: list[str] = []
-            o_text: list[str] = []
-            for doc_id, text, source in zip(doc_ids, texts, sources):
-                url, html = synth_page(doc_id, text, source)
-                try:
-                    links = collect_outlinks(html, url)
-                except Exception:
-                    links = []  # one hostile page never kills the batch
-                for pos, href, anchor in links:
-                    o_url.append(url)
-                    o_pos.append(pos)
-                    o_href.append(href)
-                    o_text.append(anchor)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o_url, pa.string()),
-                    pa.array(o_pos, pa.int32()),
-                    pa.array(o_href, pa.string()),
-                    pa.array(o_text, pa.string()),
-                ],
-                schema=_OUTLINKS_ARROW_SCHEMA,
-            )
-
-    return documents.select("doc_id", "text", "source").mapInArrow(
-        fused, OUTLINKS_DDL
+    """pages(url, html, ...) or documents(doc_id, text, source, ...) →
+    (url, link_pos, href, anchor_text): the link-graph pass every
+    Common-Crawl pipeline runs beside content extraction. Same
+    vectorized-map shape and input rule as ``extract_articles``:
+    column-pruned scan, Arrow batches, zero shuffle — link-graph
+    rollups (in-degree, per-domain) aggregate downstream."""
+    return pages.select(*_source_columns(pages)).mapInArrow(
+        _outlink_batches, OUTLINKS_DDL
     )

@@ -1,5 +1,6 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary +
-typed metadata, processed by Arrow-batched ``mapInPandas`` stages.
+"""Multimodal column plumbing: image/audio/video/PDF assets as opaque
+binary + typed metadata, audited in ONE Arrow-batched ``mapInArrow``
+pass (``media_audit``).
 
 The decode step is REAL for two modalities, pure stdlib (no PIL/ffmpeg
 in this container):
@@ -12,8 +13,11 @@ in this container):
   parsed, but frame decode needs a codec stack this container lacks,
   so ``decode_ok`` is False for video by design (documented stub).
 
+Every stage is a per-row function of the asset (``synth_asset``,
+``decode_media``, ``resize_asset``, ``sample_asset_frames``), so the
+stages are testable without Spark and the Spark pass is one loop.
 Spark-side design is the real point at 100 TB: binary payloads stay in
-one Arrow-batched pass, the feature output prunes the payload column so
+one Arrow-batched pass, the output prunes the payload column so
 downstream stages never shuffle the heavy bytes, and media blobs being
 large/size-skewed reuse the same salted-repartition story as HTML
 extraction (operators/extract.py).
@@ -28,17 +32,11 @@ import wave
 import zlib
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-MEDIA_DDL = "media_id bigint, media_type string, payload binary"
-FEATURES_DDL = (
-    "media_id bigint, media_type string, n_bytes bigint, sha1 string, "
-    "decode_ok boolean, width int, height int, bit_depth int, "
-    "color_type int, sample_rate int, n_channels int, n_samples bigint, "
-    "duration_s double, container_brand string"
-)
+from ..sources.pdfgen import synth_doc_pdf
+from .pdftext import extract_text_from_pdf
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _EMPTY = {
@@ -116,36 +114,6 @@ def decode_media(media_type: str, payload: bytes) -> tuple[bool, dict]:
     return False, (f if f else dict(_EMPTY))
 
 
-def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for mid, mtype, payload in zip(
-            pdf["media_id"], pdf["media_type"], pdf["payload"]
-        ):
-            payload = bytes(payload or b"")
-            ok, feats = decode_media(mtype, payload)
-            rows.append({
-                "media_id": mid,
-                "media_type": mtype,
-                "n_bytes": len(payload),
-                "sha1": hashlib.sha1(payload).hexdigest(),
-                "decode_ok": ok,
-                **feats,
-            })
-        yield pd.DataFrame(rows)
-
-
-def extract_media_features(media: DataFrame) -> DataFrame:
-    """media(media_id, media_type, payload) → fixed-width features.
-
-    Arrow-batched mapInPandas; the payload column is pruned out of the
-    result, so downstream stages never re-shuffle the heavy bytes.
-    """
-    return media.select("media_id", "media_type", "payload").mapInPandas(
-        _feature_batches, FEATURES_DDL
-    )
-
-
 # ---- deterministic synthesis (test fixture; real, decodable bytes) ----
 #
 # Sized so every decoded feature is an analytic function of doc_id and
@@ -156,21 +124,27 @@ def extract_media_features(media: DataFrame) -> DataFrame:
 #        → n_bytes = 44 + 2*frames (stdlib wave header is 44 bytes)
 #   mp4: 16-byte ftyp('isom') box + utf-8 text → n_bytes = 16 + len(text)
 
-def synth_png(doc_id: int) -> bytes:
-    width = 1 + doc_id % 64
-    height = 1 + doc_id % 48
+def _encode_gray_png(width: int, height: int, rows: list[bytes]) -> bytes:
+    """8-bit grayscale PNG, filter-0 scanlines, stored IDAT (zlib level
+    0) so the size is analytic: n_bytes = 68 + height*(1+width)."""
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
 
     def chunk(tag: bytes, body: bytes) -> bytes:
         return (struct.pack(">I", len(body)) + tag + body
                 + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
 
-    raw = b"".join(
-        b"\x00" + bytes((doc_id + x + y) % 256 for x in range(width))
+    raw = b"".join(b"\x00" + r for r in rows)
+    return (_PNG_SIG + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(raw, 0)) + chunk(b"IEND", b""))
+
+
+def synth_png(doc_id: int) -> bytes:
+    width = 1 + doc_id % 64
+    height = 1 + doc_id % 48
+    return _encode_gray_png(width, height, [
+        bytes((doc_id + x + y) % 256 for x in range(width))
         for y in range(height)
-    )
-    idat = zlib.compress(raw, 0)  # stored blocks → size is analytic
-    return _PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
+    ])
 
 
 def synth_wav(doc_id: int) -> bytes:
@@ -195,35 +169,18 @@ def synth_mp4(doc_id: int, text: str) -> bytes:
     return struct.pack(">I", 16) + b"ftypisom" + struct.pack(">I", doc_id & 0xFFFFFFFF) + body
 
 
-def _synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            doc_id = int(doc_id)
-            kind = doc_id % 3
-            if kind == 0:
-                mtype, payload = "image/png", synth_png(doc_id)
-            elif kind == 1:
-                mtype, payload = "audio/wav", synth_wav(doc_id)
-            else:
-                mtype, payload = "video/mp4", synth_mp4(doc_id, text)
-            rows.append(
-                {"media_id": doc_id, "media_type": mtype, "payload": payload}
-            )
-        yield pd.DataFrame(rows)
+def synth_asset(doc_id: int, text: str) -> tuple[str, bytes]:
+    """(media_type, payload) of one documents row: the modality rotates
+    by doc_id % 3 over png, wav and mp4."""
+    kind = doc_id % 3
+    if kind == 0:
+        return "image/png", synth_png(doc_id)
+    if kind == 1:
+        return "audio/wav", synth_wav(doc_id)
+    return "video/mp4", synth_mp4(doc_id, text)
 
 
-def synth_media_from_documents(documents: DataFrame) -> DataFrame:
-    """Deterministic REAL media blobs from documents: valid PNG (IHDR +
-    stored-IDAT), valid WAV (stdlib wave), and an ftyp-prefixed opaque
-    video blob — every decoded feature is an analytic function of
-    doc_id, so the end-to-end decode is oracle-checkable."""
-    return documents.select("doc_id", "text").mapInPandas(
-        _synth_batches, MEDIA_DDL
-    )
-
-
-# ---- resize / frame-sample stages (brief: multimodal transform ops) ----
+# ---- per-row stages: resize / frame-sample / the audit row ----
 
 def decode_png_pixels(payload: bytes) -> tuple[int, int, list[bytes]] | None:
     """Decode an 8-bit grayscale PNG with filter-0 scanlines (the shape
@@ -279,255 +236,137 @@ def resize_png(payload: bytes, max_side: int) -> bytes | None:
             bytes(rows[y * h // nh][x * w // nw] for x in range(nw))
             for y in range(nh)
         ]
-    ihdr = struct.pack(">IIBBBBB", nw, nh, 8, 0, 0, 0, 0)
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (struct.pack(">I", len(body)) + tag + body
-                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
-
-    raw = b"".join(b"\x00" + r for r in out_rows)
-    return (_PNG_SIG + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw, 0)) + chunk(b"IEND", b""))
+    return _encode_gray_png(nw, nh, out_rows)
 
 
-RESIZE_DDL = (
-    "media_id bigint, resize_ok boolean, width int, height int, "
-    "new_width int, new_height int, n_bytes bigint"
-)
+def resize_asset(
+    media_type: str, payload: bytes, max_side: int
+) -> tuple[bool | None, int | None, int | None, int | None]:
+    """(resize_ok, new_width, new_height, resized_bytes) of one asset:
+    png rows are downscaled by ``resize_png``; every other modality has
+    no resize stage and gets all NULLs."""
+    if media_type != "image/png":
+        return None, None, None, None
+    resized = resize_png(payload, max_side)
+    if resized is None:
+        return False, None, None, None
+    meta = decode_png(resized)
+    return True, meta["width"], meta["height"], len(resized)
 
 
-def resize_images(media: DataFrame, max_side: int = 32) -> DataFrame:
-    """image/png rows → real nearest-neighbor downscale; output keeps
-    only metadata + resized size (payload pruned from the result, same
-    heavy-bytes policy as feature extraction)."""
+def sample_asset_frames(
+    media_type: str, payload: bytes, every_n: int
+) -> tuple[bool, int, int]:
+    """(frames_ok, n_frames, frame_bytes) of one asset.
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload or b"")
-                meta = decode_png(payload)
-                resized = resize_png(payload, max_side)
-                if meta is None or resized is None:
-                    rows.append({
-                        "media_id": mid, "resize_ok": False, "width": None,
-                        "height": None, "new_width": None,
-                        "new_height": None, "n_bytes": None,
-                    })
-                    continue
-                new_meta = decode_png(resized)
-                rows.append({
-                    "media_id": mid, "resize_ok": True,
-                    "width": meta["width"], "height": meta["height"],
-                    "new_width": new_meta["width"],
-                    "new_height": new_meta["height"],
-                    "n_bytes": len(resized),
-                })
-            yield pd.DataFrame(rows)
-
-    return (
-        media.where(F.col("media_type") == "image/png")
-        .select("media_id", "payload")
-        .mapInPandas(batches, RESIZE_DDL)
-    )
-
-
-FRAMES_DDL = (
-    "media_id bigint, media_type string, frames_ok boolean, "
-    "n_frames int, frame_bytes bigint"
-)
-
-
-def sample_frames(media: DataFrame, every_n: int = 100) -> DataFrame:
-    """Frame/sample extraction stage.
-
-    * audio/wav — REAL: every ``every_n``-th PCM sample re-packed
-      (stdlib wave), n_frames = ceil(samples / every_n).
+    * audio/wav — REAL: every ``every_n``-th 16-bit mono PCM sample,
+      n_frames = ceil(samples / every_n).
     * image/png — the image is its own single frame.
     * video/mp4 — STUB: real frame decode needs a codec stack this
-      container lacks; clearly marked, frames_ok=False.
-    The Spark plumbing (Arrow batches, payload pruned from output,
-    typed schema) is real for all three.
+      container lacks, so frames_ok is False.
     """
+    if media_type == "audio/wav":
+        feats = decode_wav(payload)
+        if feats is not None:
+            n = -(-feats["n_samples"] // every_n)
+            return True, n, 2 * n
+    elif media_type == "image/png" and decode_png(payload) is not None:
+        return True, 1, len(payload)
+    return False, 0, 0
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, mtype, payload in zip(
-                pdf["media_id"], pdf["media_type"], pdf["payload"]
-            ):
-                payload = bytes(payload or b"")
-                ok, n, fb = False, 0, 0
-                if mtype == "audio/wav":
-                    feats = decode_wav(payload)
-                    if feats is not None:
-                        n = -(-feats["n_samples"] // every_n)
-                        fb = n * 2  # 16-bit mono samples
-                        ok = True
-                elif mtype == "image/png":
-                    if decode_png(payload) is not None:
-                        n, fb, ok = 1, len(payload), True
-                else:
-                    # video frame decode: intentionally unimplemented
-                    # (no codec stack); plumbing verified, compute stub
-                    ok = False
-                rows.append({
-                    "media_id": mid, "media_type": mtype, "frames_ok": ok,
-                    "n_frames": n, "frame_bytes": fb,
-                })
-            yield pd.DataFrame(rows)
 
-    return media.select("media_id", "media_type", "payload").mapInPandas(
-        batches, FRAMES_DDL
+def audit_row(doc_id: int, text: str, max_side: int, every_n: int) -> dict:
+    """The ``media_audit`` row of one documents row: its synthesized
+    asset decoded, resized and frame-sampled, and its synthesized PDF
+    (``pdfgen.synth_doc_pdf``) text-extracted. The pdf text md5 is
+    hashlib.md5 over UTF-8 bytes — the same function as the JVM
+    ``md5(text)``."""
+    media_type, payload = synth_asset(doc_id, text)
+    decode_ok, feats = decode_media(media_type, payload)
+    resize_ok, new_w, new_h, resized_bytes = resize_asset(
+        media_type, payload, max_side
     )
+    frames_ok, n_frames, frame_bytes = sample_asset_frames(
+        media_type, payload, every_n
+    )
+    try:
+        pdf_text, n_pages = extract_text_from_pdf(synth_doc_pdf(doc_id, text))
+        pdf_ok = True
+    except Exception:  # one hostile PDF is an error row, not a failed task
+        pdf_text, n_pages, pdf_ok = "", 0, False
+    return {
+        "media_id": doc_id,
+        "media_type": media_type,
+        "n_bytes": len(payload),
+        "decode_ok": decode_ok,
+        "width": feats["width"],
+        "height": feats["height"],
+        "sample_rate": feats["sample_rate"],
+        "n_samples": feats["n_samples"],
+        "duration_s": feats["duration_s"],
+        "resize_ok": resize_ok,
+        "new_width": new_w,
+        "new_height": new_h,
+        "resized_bytes": resized_bytes,
+        "frames_ok": frames_ok,
+        "n_frames": n_frames,
+        "frame_bytes": frame_bytes,
+        "pdf_ok": pdf_ok,
+        "n_pdf_pages": n_pages,
+        "pdf_text_len": len(pdf_text),
+        "pdf_text_md5": hashlib.md5(pdf_text.encode("utf-8")).hexdigest(),
+    }
 
 
-# ---- fused media audit (one pass over the synthesized assets) ----
-
-MEDIA_AUDIT_DDL = (
-    "media_id bigint, media_type string, n_bytes bigint, decode_ok boolean, "
-    "width int, height int, sample_rate int, n_samples bigint, "
-    "duration_s double, resize_ok boolean, new_width int, new_height int, "
-    "resized_bytes bigint, frames_ok boolean, n_frames int, "
-    "frame_bytes bigint, pdf_ok boolean, n_pdf_pages int, pdf_text_len int, "
-    "pdf_text_md5 string"
-)
+MEDIA_AUDIT_SCHEMA = pa.schema([
+    pa.field("media_id", pa.int64()),
+    pa.field("media_type", pa.string()),
+    pa.field("n_bytes", pa.int64()),
+    pa.field("decode_ok", pa.bool_()),
+    pa.field("width", pa.int32()),
+    pa.field("height", pa.int32()),
+    pa.field("sample_rate", pa.int32()),
+    pa.field("n_samples", pa.int64()),
+    pa.field("duration_s", pa.float64()),
+    pa.field("resize_ok", pa.bool_()),
+    pa.field("new_width", pa.int32()),
+    pa.field("new_height", pa.int32()),
+    pa.field("resized_bytes", pa.int64()),
+    pa.field("frames_ok", pa.bool_()),
+    pa.field("n_frames", pa.int32()),
+    pa.field("frame_bytes", pa.int64()),
+    pa.field("pdf_ok", pa.bool_()),
+    pa.field("n_pdf_pages", pa.int32()),
+    pa.field("pdf_text_len", pa.int32()),
+    pa.field("pdf_text_md5", pa.string()),
+])
 
 
 def media_audit(
     documents: DataFrame, max_side: int = 32, every_n: int = 100
 ) -> DataFrame:
-    """ONE-pass media audit: synthesize each doc's asset and run the
-    feature / resize / frame-sample / PDF-text stages on it inside a
-    single ``mapInArrow`` batch loop — row-for-row identical (values,
-    column order, null pattern) to the 4-stage composition
-
-        extract_media_features(synth) LEFT JOIN resize_images(synth)
-        LEFT JOIN sample_frames(synth) LEFT JOIN extract_pdf_text(pdfs)
-
-    on media_id (pinned by tests/test_operators.py::
-    test_media_audit_matches_stage_joins). The per-stage operators
-    above remain the public API; this is the audit-query plan shape:
-    the staged form synthesized the asset table FOUR times (one
-    mapInPandas per stage) and paid three media_id shuffles just to
-    re-pack per-asset rows the map pass already had — the fused pass is
-    zero-shuffle, zero-join, one Python crossing (guide §4.1/§2.4), and
-    at 100 TB it is the same "every decision is per-asset → never
-    shuffle the bytes" layout the module docstring already mandates.
-    Non-png rows carry NULL resize columns exactly like the left-join
-    miss; the pdf text md5 is hashlib.md5 over UTF-8 bytes — the same
-    function as the JVM ``md5(text)``.
-    """
-    import pyarrow as pa
-
-    from .pdftext import extract_text_from_pdf
+    """documents(doc_id, text, …) → one ``audit_row`` per document, in
+    ONE ``mapInArrow`` pass: each doc's asset is synthesized and run
+    through the feature / resize / frame-sample / PDF-text stages in
+    the same batch loop. Zero-shuffle, zero-join, one Python crossing
+    (guide §4.1/§2.4) — at 100 TB the "every decision is per-asset →
+    never shuffle the bytes" layout the module docstring mandates.
+    Non-png rows carry NULL resize columns."""
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     def audit_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..sources.pdfgen import synth_pdf, synth_pdf_objstm
-
-        schema = pa.schema([
-            pa.field("media_id", pa.int64()),
-            pa.field("media_type", pa.string()),
-            pa.field("n_bytes", pa.int64()),
-            pa.field("decode_ok", pa.bool_()),
-            pa.field("width", pa.int32()),
-            pa.field("height", pa.int32()),
-            pa.field("sample_rate", pa.int32()),
-            pa.field("n_samples", pa.int64()),
-            pa.field("duration_s", pa.float64()),
-            pa.field("resize_ok", pa.bool_()),
-            pa.field("new_width", pa.int32()),
-            pa.field("new_height", pa.int32()),
-            pa.field("resized_bytes", pa.int64()),
-            pa.field("frames_ok", pa.bool_()),
-            pa.field("n_frames", pa.int32()),
-            pa.field("frame_bytes", pa.int64()),
-            pa.field("pdf_ok", pa.bool_()),
-            pa.field("n_pdf_pages", pa.int32()),
-            pa.field("pdf_text_len", pa.int32()),
-            pa.field("pdf_text_md5", pa.string()),
-        ])
         for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            cols: dict[str, list] = {f.name: [] for f in schema}
-            for doc_id, text in zip(ids, texts):
-                doc_id = int(doc_id)
-                kind = doc_id % 3
-                if kind == 0:
-                    mtype, payload = "image/png", synth_png(doc_id)
-                elif kind == 1:
-                    mtype, payload = "audio/wav", synth_wav(doc_id)
-                else:
-                    mtype, payload = "video/mp4", synth_mp4(doc_id, text)
-                ok, feats = decode_media(mtype, payload)
-                cols["media_id"].append(doc_id)
-                cols["media_type"].append(mtype)
-                cols["n_bytes"].append(len(payload))
-                cols["decode_ok"].append(ok)
-                cols["width"].append(feats["width"])
-                cols["height"].append(feats["height"])
-                cols["sample_rate"].append(feats["sample_rate"])
-                cols["n_samples"].append(feats["n_samples"])
-                cols["duration_s"].append(feats["duration_s"])
-                # resize stage: png rows only (left-join miss -> NULLs)
-                if mtype == "image/png":
-                    meta = decode_png(payload)
-                    resized = resize_png(payload, max_side)
-                    if meta is None or resized is None:
-                        cols["resize_ok"].append(False)
-                        cols["new_width"].append(None)
-                        cols["new_height"].append(None)
-                        cols["resized_bytes"].append(None)
-                    else:
-                        new_meta = decode_png(resized)
-                        cols["resize_ok"].append(True)
-                        cols["new_width"].append(new_meta["width"])
-                        cols["new_height"].append(new_meta["height"])
-                        cols["resized_bytes"].append(len(resized))
-                else:
-                    cols["resize_ok"].append(None)
-                    cols["new_width"].append(None)
-                    cols["new_height"].append(None)
-                    cols["resized_bytes"].append(None)
-                # frame/sample stage (sample_frames semantics verbatim)
-                f_ok, n, fb = False, 0, 0
-                if mtype == "audio/wav":
-                    wfeats = decode_wav(payload)
-                    if wfeats is not None:
-                        n = -(-wfeats["n_samples"] // every_n)
-                        fb = n * 2
-                        f_ok = True
-                elif mtype == "image/png":
-                    if decode_png(payload) is not None:
-                        n, fb, f_ok = 1, len(payload), True
-                cols["frames_ok"].append(f_ok)
-                cols["n_frames"].append(n)
-                cols["frame_bytes"].append(fb)
-                # PDF stage (synthesize_pdfs producer rotation verbatim)
-                if doc_id % 4 == 3:
-                    pdf = synth_pdf_objstm(doc_id, text)
-                else:
-                    pdf = synth_pdf(
-                        doc_id, text,
-                        columns=2 if doc_id % 4 == 2 else 1,
-                        cid=doc_id % 4 == 1,
+            yield pa.RecordBatch.from_pylist(
+                [
+                    audit_row(int(doc_id), text, max_side, every_n)
+                    for doc_id, text in zip(
+                        batch.column("doc_id").to_pylist(),
+                        batch.column("text").to_pylist(),
                     )
-                try:
-                    pdf_text, np_ = extract_text_from_pdf(pdf)
-                    p_ok = True
-                except Exception:
-                    pdf_text, np_, p_ok = "", 0, False
-                cols["pdf_ok"].append(p_ok)
-                cols["n_pdf_pages"].append(np_)
-                cols["pdf_text_len"].append(len(pdf_text))
-                cols["pdf_text_md5"].append(
-                    hashlib.md5(pdf_text.encode("utf-8")).hexdigest()
-                )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in schema], schema=schema
+                ],
+                schema=MEDIA_AUDIT_SCHEMA,
             )
 
     return documents.select("doc_id", "text").mapInArrow(
-        audit_batches, MEDIA_AUDIT_DDL
+        audit_batches, from_arrow_schema(MEDIA_AUDIT_SCHEMA)
     )

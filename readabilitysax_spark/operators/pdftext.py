@@ -802,22 +802,12 @@ def synthesize_pdfs(documents: DataFrame) -> DataFrame:
     """documents(doc_id, text, …) → (doc_id, pdf binary), deterministic
     (sources/pdfgen.py) — the PDF analog of ``synthesize_pages``.
 
-    Producer variety rotates by doc_id so the downstream extractor is
-    hash-exercised on every decode path at driver time: doc_id%4==1 →
-    Type0/Identity-H CID font with a ToUnicode CMap (2-byte codes ≠
-    codepoints), doc_id%4==2 → two-column row-major-drawn layout,
-    doc_id%4==3 → PDF 1.5-style /ObjStm document (page/font dicts in a
-    compressed object stream; content filters rotate through
-    ASCIIHex / ASCII85+Flate), else the simple single-column form.
-    Extracted text is IDENTICAL across all four
+    Producer variety rotates by doc_id (``pdfgen.synth_doc_pdf``) so
+    the downstream extractor is hash-exercised on every decode path at
+    driver time; extracted text is IDENTICAL across all producers
     (``expected_pdf_text``), so the oracle SQL is unchanged — the
     variety only widens what a hash match proves."""
-    from ..sources.pdfgen import synth_pdf, synth_pdf_objstm
-
-    def make(i: int, t: str) -> bytes:
-        if i % 4 == 3:
-            return synth_pdf_objstm(i, t)
-        return synth_pdf(i, t, columns=2 if i % 4 == 2 else 1, cid=i % 4 == 1)
+    from ..sources.pdfgen import synth_doc_pdf
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -827,7 +817,7 @@ def synthesize_pdfs(documents: DataFrame) -> DataFrame:
                 [
                     pa.array(ids, pa.int64()),
                     pa.array(
-                        [make(i, t) for i, t in zip(ids, texts)],
+                        [synth_doc_pdf(i, t) for i, t in zip(ids, texts)],
                         pa.binary(),
                     ),
                 ],

@@ -15,10 +15,16 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.pagegen import synth_page, synth_warc_ts
+from ..functions.pagegen import (
+    URL_PREFIX,
+    URL_SUFFIX,
+    WARC_EPOCH,
+    synth_page,
+    synth_warc_ts,
+)
 
 PAGES_ARROW_SCHEMA = pa.schema(
     [
@@ -33,27 +39,36 @@ PAGES_ARROW_SCHEMA = pa.schema(
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
+def synth_batch_pages(batch: pa.RecordBatch) -> tuple[list[str], list[str]]:
+    """(urls, htmls) of one documents batch, ``synth_page`` per row —
+    the one place a worker turns documents rows into pages."""
+    urls: list[str] = []
+    htmls: list[str] = []
+    for doc_id, text, source in zip(
+        batch.column("doc_id").to_pylist(),
+        batch.column("text").to_pylist(),
+        batch.column("source").to_pylist(),
+    ):
+        url, html = synth_page(doc_id, text, source)
+        urls.append(url)
+        htmls.append(html)
+    return urls, htmls
+
+
 def _synth_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     for batch in batches:
-        doc_ids = batch.column("doc_id").to_pylist()
-        texts = batch.column("text").to_pylist()
-        sources = batch.column("source").to_pylist()
-        langs = batch.column("lang").to_pylist()
-        urls: list[str] = []
-        htmls: list[bytes] = []
-        ts: list[int] = []
-        for doc_id, text, source in zip(doc_ids, texts, sources):
-            url, html = synth_page(doc_id, text, source)
-            urls.append(url)
-            htmls.append(html.encode("utf-8"))
-            ts.append(synth_warc_ts(doc_id) * 1_000_000)
+        urls, htmls = synth_batch_pages(batch)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(urls, pa.string()),
-                pa.array(ts, pa.timestamp("us")),
-                pa.array(htmls, pa.binary()),
-                pa.array(texts, pa.string()),
-                pa.array(langs, pa.string()),
+                pa.array(
+                    [synth_warc_ts(d) * 1_000_000
+                     for d in batch.column("doc_id").to_pylist()],
+                    pa.timestamp("us"),
+                ),
+                pa.array([h.encode("utf-8") for h in htmls], pa.binary()),
+                batch.column("text").cast(pa.string()),
+                batch.column("lang").cast(pa.string()),
             ],
             schema=PAGES_ARROW_SCHEMA,
         )
@@ -136,15 +151,21 @@ def read_pages_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = read_documents(spark, sf_dir)
     return docs.select(
-        F.concat(
-            F.lit("http://"), F.col("source"),
-            F.lit(".example/articles/doc-"), F.col("doc_id").cast("string"),
-        ).alias("url"),
-        F.timestamp_seconds(F.lit(1_577_836_800) + F.col("doc_id")).alias(
+        page_url_col().alias("url"),
+        F.timestamp_seconds(F.lit(WARC_EPOCH) + F.col("doc_id")).alias(
             "warc_ts"
         ),
         F.col("text"),
         F.col("lang"),
+    )
+
+
+def page_url_col() -> Column:
+    """``pagegen.page_url(source, doc_id)`` as a JVM expression over a
+    documents row."""
+    return F.concat(
+        F.lit(URL_PREFIX), F.col("source"),
+        F.lit(URL_SUFFIX), F.col("doc_id").cast("string"),
     )
 
 

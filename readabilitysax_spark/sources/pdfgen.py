@@ -342,6 +342,19 @@ def synth_pdf_objstm(doc_id: int, text: str) -> bytes:
     return bytes(out)
 
 
+def synth_doc_pdf(doc_id: int, text: str) -> bytes:
+    """The PDF of one documents row. The producer rotates by doc_id so
+    every decode path is exercised: doc_id%4==1 → Type0/Identity-H CID
+    font with a ToUnicode CMap, ==2 → two-column layout, ==3 → /ObjStm
+    document, else the simple single-column form. Extracted text is
+    the same for all four (``expected_pdf_text``)."""
+    if doc_id % 4 == 3:
+        return synth_pdf_objstm(doc_id, text)
+    return synth_pdf(
+        doc_id, text, columns=2 if doc_id % 4 == 2 else 1, cid=doc_id % 4 == 1
+    )
+
+
 def expected_pdf_text(text: str) -> str:
     """The extraction the synthesized PDF must round-trip to: words in
     8-word lines joined by newlines, pages joined by newlines (i.e.

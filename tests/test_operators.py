@@ -51,75 +51,99 @@ def test_lsh_topk_subset_of_brute_force_ranking(spark):
         assert abs(cos - r.cosine) < 1e-5
 
 
-def test_media_features_real_decode(spark):
-    """End-to-end: synthesized valid PNG/WAV decode to real dimensions
-    through the Arrow-batched mapInPandas stage."""
-    from readabilitysax_spark.operators.multimodal import (
-        extract_media_features,
-        synth_media_from_documents,
-    )
-    docs = spark.read.parquet(f"{SF_TINY}/documents.parquet").limit(21)
-    feats = extract_media_features(synth_media_from_documents(docs)).collect()
-    assert len(feats) == 21
-    for f in feats:
-        assert len(f.sha1) == 40
-        mid = f.media_id
-        if f.media_type == "image/png":
-            assert f.decode_ok
-            assert f.width == 1 + mid % 64 and f.height == 1 + mid % 48
-            assert f.bit_depth == 8 and f.color_type == 0
-        elif f.media_type == "audio/wav":
-            assert f.decode_ok
-            assert f.sample_rate == 8000 + (mid % 5) * 1000
-            assert f.n_samples == 400 + mid % 100
-            assert abs(f.duration_s - f.n_samples / f.sample_rate) < 1e-6
+_MEDIA_TEXTS = [
+    "the quick brown fox jumps over the lazy dog",
+    "漢字 文書 解析 器 の 試験",
+    "café au lait réchauffé " * 7 + "fin",
+    "a",
+    " ".join(f"w{i}" for i in range(93)),
+]
+
+
+def _media_docs(n: int = 60) -> list[tuple[int, str]]:
+    """(doc_id, text) over every png/wav/mp4 and pdf-producer rotation."""
+    return [(d, _MEDIA_TEXTS[d % len(_MEDIA_TEXTS)]) for d in range(n)]
+
+
+def test_media_features_real_decode():
+    """Synthesized PNG/WAV assets decode to their analytic features;
+    video is a container-level stub."""
+    from readabilitysax_spark.operators.multimodal import decode_media, synth_asset
+
+    for d, text in _media_docs():
+        media_type, payload = synth_asset(d, text)
+        ok, f = decode_media(media_type, payload)
+        if d % 3 == 0:
+            assert media_type == "image/png" and ok
+            assert (f["width"], f["height"]) == (1 + d % 64, 1 + d % 48)
+            assert (f["bit_depth"], f["color_type"]) == (8, 0)
+            assert len(payload) == 68 + f["height"] * (1 + f["width"])
+        elif d % 3 == 1:
+            assert media_type == "audio/wav" and ok
+            assert f["sample_rate"] == 8000 + (d % 5) * 1000
+            assert f["n_samples"] == 400 + d % 100
+            assert f["duration_s"] == round(f["n_samples"] / f["sample_rate"], 6)
+            assert len(payload) == 44 + 2 * f["n_samples"]
         else:
-            assert not f.decode_ok  # video decode is a documented stub
-            assert f.container_brand == "isom"
+            assert media_type == "video/mp4"
+            assert not ok  # video decode is a documented stub
+            assert f["container_brand"] == "isom"
+            assert f["width"] is None and f["sample_rate"] is None
+            assert len(payload) == 16 + len(text.encode("utf-8"))
 
 
-def test_media_audit_matches_stage_joins(spark):
-    """The fused one-pass media_audit must be row-for-row identical
-    (values, column order, null pattern) to the staged composition it
-    replaced in the media_pipeline query: features LEFT JOIN resize
-    LEFT JOIN frames LEFT JOIN pdf-text on media_id."""
-    from pyspark.sql import functions as F
+def test_audit_row_analytic_values():
+    """Every media_audit column of one row against its analytic value
+    (the same laws the media_pipeline DuckDB oracle encodes)."""
+    import hashlib
 
-    from readabilitysax_spark.operators import multimodal, pdftext
+    from readabilitysax_spark.operators.multimodal import (
+        MEDIA_AUDIT_SCHEMA,
+        audit_row,
+    )
+    from readabilitysax_spark.sources.pdfgen import expected_pdf_text
 
-    docs = spark.read.parquet(f"{SF_TINY}/documents.parquet").limit(40)
-    media = multimodal.synth_media_from_documents(docs)
-    feats = multimodal.extract_media_features(media).select(
-        "media_id", "media_type", "n_bytes", "decode_ok", "width",
-        "height", "sample_rate", "n_samples", "duration_s",
+    for d, text in _media_docs():
+        row = audit_row(d, text, max_side=32, every_n=100)
+        assert list(row) == MEDIA_AUDIT_SCHEMA.names
+        w, h = 1 + d % 64, 1 + d % 48
+        m = max(w, h)
+        nw, nh = (w, h) if m <= 32 else (max(1, w * 32 // m), max(1, h * 32 // m))
+        frames = 400 + d % 100
+        rate = 8000 + (d % 5) * 1000
+        if d % 3 == 0:
+            media = ("image/png", 68 + h * (1 + w), True, w, h, None, None, None,
+                     True, nw, nh, 68 + nh * (1 + nw), True, 1, 68 + h * (1 + w))
+        elif d % 3 == 1:
+            n = -(-frames // 100)
+            media = ("audio/wav", 44 + 2 * frames, True, None, None, rate,
+                     frames, round(frames / rate, 6), None, None, None, None,
+                     True, n, 2 * n)
+        else:
+            media = ("video/mp4", 16 + len(text.encode("utf-8")), False, None,
+                     None, None, None, None, None, None, None, None, False, 0, 0)
+        pdf_text = expected_pdf_text(text)
+        n_words = len(text.split(" "))
+        assert tuple(row.values()) == (
+            d, *media, True, -(-n_words // 40), len(pdf_text),
+            hashlib.md5(pdf_text.encode("utf-8")).hexdigest(),
+        ), d
+
+
+def test_media_audit_schema(spark):
+    """The one-pass audit keeps the column order and types of the
+    staged feature/resize/frames/pdf join it replaced."""
+    from readabilitysax_spark.operators.multimodal import media_audit
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    assert media_audit(docs).schema.simpleString() == (
+        "struct<media_id:bigint,media_type:string,n_bytes:bigint,"
+        "decode_ok:boolean,width:int,height:int,sample_rate:int,"
+        "n_samples:bigint,duration_s:double,resize_ok:boolean,new_width:int,"
+        "new_height:int,resized_bytes:bigint,frames_ok:boolean,n_frames:int,"
+        "frame_bytes:bigint,pdf_ok:boolean,n_pdf_pages:int,pdf_text_len:int,"
+        "pdf_text_md5:string>"
     )
-    resized = multimodal.resize_images(media, max_side=32).select(
-        "media_id", "resize_ok", "new_width", "new_height",
-        F.col("n_bytes").alias("resized_bytes"),
-    )
-    frames = multimodal.sample_frames(media, every_n=100).select(
-        "media_id", "frames_ok", "n_frames", "frame_bytes",
-    )
-    pdfs = pdftext.extract_pdf_text(pdftext.synthesize_pdfs(docs)).select(
-        F.col("doc_id").alias("media_id"),
-        F.col("ok").alias("pdf_ok"),
-        F.col("n_pages").alias("n_pdf_pages"),
-        F.col("n_chars").alias("pdf_text_len"),
-        F.md5("text").alias("pdf_text_md5"),
-    )
-    staged = (
-        feats.join(resized, "media_id", "left")
-        .join(frames, "media_id", "left")
-        .join(pdfs, "media_id", "left")
-    )
-    fused = multimodal.media_audit(docs, max_side=32, every_n=100)
-    assert fused.columns == staged.columns
-    assert [f.dataType for f in fused.schema.fields] == [
-        f.dataType for f in staged.schema.fields
-    ]
-    a = sorted(tuple(r) for r in fused.collect())
-    b = sorted(tuple(r) for r in staged.collect())
-    assert a == b
 
 
 def test_media_decoders_reject_garbage():
@@ -486,8 +510,7 @@ def test_all_doc_operators_survive_hostile_docs(spark):
         lambda: corpus.domain_stats(
             df.selectExpr("concat('http://', source, '.example/d/', doc_id) AS url",
                           "text AS html", "lang"), size_col="html"),
-        lambda: multimodal.extract_media_features(
-            multimodal.synth_media_from_documents(df)),
+        lambda: multimodal.media_audit(df),
         lambda: curation.redact_pii(df),
         lambda: curation.decontaminate(df, df.limit(2)),
         lambda: dedup.remove_duplicate_spans(df),
@@ -616,7 +639,7 @@ def test_winnowing_guarantee_and_edges(spark):
     assert not (sels[1] & sels[3])      # unrelated docs don't collide
 
 
-def test_media_resize_real_pixels(spark):
+def test_media_resize_real_pixels():
     """Resize is a REAL pixel operation: the resized payload decodes,
     dimensions follow nearest-neighbor law, garbage is rejected."""
     from readabilitysax_spark.operators import multimodal as mm
@@ -630,29 +653,31 @@ def test_media_resize_real_pixels(spark):
     assert px is not None and len(px[2]) == 1 and len(px[2][0]) == 8
     assert mm.resize_png(b"garbage", 8) is None
 
-    docs = spark.read.parquet(f"{SF_TINY}/documents.parquet").limit(30)
-    media = mm.synth_media_from_documents(docs)
-    rows = mm.resize_images(media, max_side=16).collect()
-    assert rows and all(r.resize_ok for r in rows)
-    for r in rows:
-        assert max(r.new_width, r.new_height) <= 16
-        assert r.n_bytes == 68 + r.new_height * (1 + r.new_width)
+    for d, text in _media_docs():
+        media_type, payload = mm.synth_asset(d, text)
+        ok, nw, nh, n_bytes = mm.resize_asset(media_type, payload, max_side=16)
+        if media_type != "image/png":
+            assert (ok, nw, nh, n_bytes) == (None, None, None, None)
+            continue
+        assert ok and max(nw, nh) <= 16
+        assert n_bytes == 68 + nh * (1 + nw)
+        assert (nw, nh) == mm.decode_png_pixels(mm.resize_png(payload, 16))[:2]
+    assert mm.resize_asset("image/png", b"garbage", 16) == (False, None, None, None)
 
 
-def test_media_frames_stage(spark):
+def test_media_frames_stage():
     from readabilitysax_spark.operators import multimodal as mm
 
-    docs = spark.read.parquet(f"{SF_TINY}/documents.parquet").limit(30)
-    media = mm.synth_media_from_documents(docs)
-    rows = {r.media_id: r for r in mm.sample_frames(media, every_n=50).collect()}
-    for mid, r in rows.items():
-        if r.media_type == "audio/wav":
-            n = 400 + mid % 100
-            assert r.frames_ok and r.n_frames == -(-n // 50)
-        elif r.media_type == "image/png":
-            assert r.frames_ok and r.n_frames == 1
+    for d, text in _media_docs():
+        media_type, payload = mm.synth_asset(d, text)
+        ok, n, frame_bytes = mm.sample_asset_frames(media_type, payload, every_n=50)
+        if media_type == "audio/wav":
+            assert ok and n == -(-(400 + d % 100) // 50) and frame_bytes == 2 * n
+        elif media_type == "image/png":
+            assert ok and n == 1 and frame_bytes == len(payload)
         else:
-            assert not r.frames_ok and r.n_frames == 0  # codec stub
+            assert (ok, n, frame_bytes) == (False, 0, 0)  # codec stub
+    assert mm.sample_asset_frames("audio/wav", b"RIFF", 50) == (False, 0, 0)
 
 
 def test_remove_duplicate_spans_planted(spark):

@@ -345,44 +345,58 @@ def test_read_pages_meta_matches_pages(spark):
 
 
 def test_fused_extract_matches_staged(spark):
-    """extract_articles_from_documents (synthesis fused into the
+    """extract_articles over a documents table (pages built in the
     extraction batch loop) must be row-for-row identical to
     extract_articles(synthesize_pages(docs)) on every article column,
-    including passthrough; same for the fused outlinks pass."""
-    from readabilitysax_spark.operators.extract import (
-        extract_articles,
-        extract_articles_from_documents,
-        extract_outlinks,
-        extract_outlinks_from_documents,
-    )
+    including html_bytes and passthrough, in text and html modes; same
+    for extract_outlinks."""
+    from readabilitysax_spark.operators.extract import extract_outlinks
     from readabilitysax_spark.sources.pages import read_documents, synthesize_pages
 
     docs = read_documents(spark, SF_TINY).where(F.col("doc_id") < 60)
+    pages = synthesize_pages(docs)
     cols = ["url", "title", "text", "text_length", "score", "next_page",
-            "skip_level", "error", "lang"]
-    staged = extract_articles(
-        synthesize_pages(docs), passthrough=("lang",)
-    ).select(*cols)
-    fused = extract_articles_from_documents(
-        docs, passthrough=("lang",)
-    ).select(*cols)
-    assert sorted(map(tuple, fused.collect())) == sorted(
-        map(tuple, staged.collect())
+            "skip_level", "error", "html_bytes", "lang"]
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    for mode in ("text", "html"):
+        fused = extract_articles(docs, output_type=mode, passthrough=("lang",))
+        staged = extract_articles(pages, output_type=mode, passthrough=("lang",))
+        assert fused.schema == staged.schema
+        assert rows(fused.select(*cols)) == rows(staged.select(*cols))
+    assert rows(extract_outlinks(docs)) == rows(extract_outlinks(pages))
+
+
+def test_html_bytes_counts_utf8_bytes_on_both_sources(spark):
+    """html_bytes is the page's UTF-8 byte length whether the page is
+    read from a pages table (binary html) or built from a documents row
+    (str html) — partition_metrics sums it. Non-ASCII texts make the
+    byte count differ from the code-point count."""
+    from readabilitysax_spark.functions.pagegen import synth_page
+    from readabilitysax_spark.operators.metrics import partition_metrics
+    from readabilitysax_spark.sources.pages import synthesize_pages
+
+    from .test_oracle_fuzz import _texts
+
+    texts = [t for t in _texts() if not t.isascii()]
+    assert len(texts) >= 3  # CJK, accented, Arabic, Cyrillic
+    docs = spark.createDataFrame(
+        [(i, t, f"src{i}", "xx") for i, t in enumerate(texts)],
+        "doc_id long, text string, source string, lang string",
     )
-    staged_html = extract_articles(
-        synthesize_pages(docs), output_type="html"
-    ).select("url", "text")
-    fused_html = extract_articles_from_documents(
-        docs, output_type="html"
-    ).select("url", "text")
-    assert sorted(map(tuple, fused_html.collect())) == sorted(
-        map(tuple, staged_html.collect())
-    )
-    s_links = extract_outlinks(synthesize_pages(docs))
-    f_links = extract_outlinks_from_documents(docs)
-    assert sorted(map(tuple, f_links.collect())) == sorted(
-        map(tuple, s_links.collect())
-    )
+    want = {}
+    for i, t in enumerate(texts):
+        url, html = synth_page(i, t, f"src{i}")
+        want[url] = len(html.encode("utf-8"))
+        assert want[url] > len(html)
+    for src in (docs, synthesize_pages(docs)):
+        arts = extract_articles(src)
+        got = {r["url"]: r["html_bytes"] for r in arts.collect()}
+        assert got == want
+        total = partition_metrics(arts, "r").agg(F.sum("html_bytes")).first()[0]
+        assert total == sum(want.values())
 
 
 def test_aqe_skew_join_splits_hot_jaccard_bucket(spark):
@@ -470,37 +484,3 @@ def test_ivf_search_panel_matches_per_query_search(spark):
             ).collect():
                 loop.add((qid, p, r["vec_id"], r["cosine"]))
     assert panel == loop
-
-
-def test_bucketed_feature_join_has_no_exchange(spark, tmp_path):
-    """100 TB shape: the dedup-feature table materialized with
-    bucketBy(doc_id)+sortBy (SMB layout) must join on doc_id with NO
-    Exchange on the bucketed side — the clustered write pays the
-    shuffle once and every downstream verify/cluster/incremental join
-    reads it shuffle-free."""
-    from readabilitysax_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF_TINY}/documents.parquet")
-    feats = docs.selectExpr("doc_id", "md5(text) as h", "length(text) as n")
-    old_warehouse = spark.conf.get("spark.sql.warehouse.dir", None)
-    try:
-        tbl = dedup.materialize_bucketed_features(
-            feats, "feat_smb_test", n_buckets=4
-        )
-        pairs = docs.selectExpr("doc_id", "lang")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = tbl.join(pairs, "doc_id")
-        plan = _plan(joined)
-        # the bucketed side must contribute NO Exchange; the probe side
-        # shuffles to match the bucketing (one Exchange total)
-        assert plan.count("Exchange hashpartitioning") <= 1, plan
-        assert "SortMergeJoin" in plan, plan
-        # self-join of the bucketed table: zero Exchanges anywhere
-        self_joined = tbl.alias("a").join(
-            spark.table("feat_smb_test").alias("b"), "doc_id"
-        )
-        plan2 = _plan(self_joined)
-        assert "Exchange hashpartitioning" not in plan2, plan2
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS feat_smb_test")
