@@ -8,6 +8,10 @@ Public API:
     from readabilitysax_spark import read_pages, run_pipeline  # pipeline
 """
 
+from . import zipimport_cache
+
+zipimport_cache.install()  # per-task cost of Spark's Python workers
+
 from .core.api import extract, process
 from .core.stream_api import ChunkedExtractor, extract_from_events
 

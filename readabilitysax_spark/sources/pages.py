@@ -81,12 +81,29 @@ def synthesize_pages(documents: DataFrame) -> DataFrame:
     )
 
 
-# split-count probe cache: (applicationId, key, parallelism) → n.
+# split-count probe cache: (applicationId, key, parallelism, layout) → n.
 # ``df.rdd.getNumPartitions()`` converts the whole logical plan to an
 # RDD on the driver (no job, but tens of ms of py4j + planning) and the
 # answer is a pure function of the file layout — every query paid it
 # once per source read. Metadata only; never caches data or results.
 _SPLIT_COUNT_CACHE: dict[tuple, int] = {}
+
+
+def _layout_fingerprint(spark: SparkSession, df: DataFrame) -> tuple[int, int]:
+    """(file count, newest modification time in ms) of ``df``'s input
+    files: a path rewritten with another layout gets a new cache key."""
+    files = df.inputFiles()
+    if not files:
+        return 0, 0
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.Path(files[0]).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+    newest = max(
+        fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(f)).getModificationTime()
+        for f in files
+    )
+    return len(files), newest
 
 
 def spread_small_scan(
@@ -105,11 +122,14 @@ def spread_small_scan(
 
     ``cache_key``: pass a stable source identifier (e.g. the parquet
     path) to memoize the split-count probe per session — sound because
-    the count depends only on the file layout and session parallelism.
+    the count depends only on the file layout and session parallelism,
+    and the key carries a fingerprint of the layout (file count and
+    newest file mtime), so a rewritten path is probed again.
     """
     parallelism = spark.sparkContext.defaultParallelism
     key = (
-        (spark.sparkContext.applicationId, cache_key, parallelism)
+        (spark.sparkContext.applicationId, cache_key, parallelism,
+         _layout_fingerprint(spark, df))
         if cache_key else None
     )
     n = _SPLIT_COUNT_CACHE.get(key) if key else None

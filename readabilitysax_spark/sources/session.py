@@ -64,7 +64,9 @@ def build_session(
 
 def _warm_batches(batches):
     # runs in the Python worker: importing this module pulls in pyspark
-    # + the core extraction stack, and one tiny extract() warms the
+    # + the core extraction stack (the package import also installs
+    # zipimport_cache, which spares every later task of this worker the
+    # pyspark.zip re-reads), and one tiny extract() warms the
     # tokenizer/entity regex caches — the per-worker one-time costs
     # every later Arrow task would otherwise pay inside its own wall
     from readabilitysax_spark.core.api import extract
@@ -88,7 +90,7 @@ def warm_python_workers(spark: SparkSession) -> None:
     """
     n = spark.sparkContext.defaultParallelism
     (
-        spark.range(n).repartition(n)
+        spark.range(0, n, 1, n)
         .mapInArrow(_warm_batches, "id long")
         .write.format("noop").mode("overwrite").save()
     )

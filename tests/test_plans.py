@@ -296,6 +296,26 @@ def test_spread_small_scan_guard(spark):
     assert spread_small_scan(spark, wide) is wide
 
 
+def test_spread_small_scan_follows_rewritten_layout(spark, tmp_path):
+    """The memoized split count is keyed on the input layout too: a path
+    rewritten within one session with another split layout is probed
+    again instead of reusing the old layout's decision."""
+    from readabilitysax_spark.sources.pages import spread_small_scan
+
+    par = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "docs.parquet")
+    docs = spark.read.parquet(f"{SF_TINY}/documents.parquet")
+    layouts = [docs.coalesce(1), docs.repartition(8 * par), docs.coalesce(1)]
+    for layout in layouts:
+        layout.write.mode("overwrite").parquet(path)
+        scan = spark.read.parquet(path)
+        spread = spread_small_scan(spark, scan, cache_key=path)
+        if scan.rdd.getNumPartitions() < par:
+            assert spread.rdd.getNumPartitions() == par
+        else:
+            assert spread is scan
+
+
 def test_ivf_recall_no_query_time_assign(spark):
     """The recall panel must reuse the prebuilt index: no array_max
     centroid-assignment expression anywhere in the plan (that's the
