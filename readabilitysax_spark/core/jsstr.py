@@ -33,8 +33,6 @@ RE_COMMAS = re.compile(f",[{_JS_WS},]*")
 
 _RE_PARSEINT = re.compile(f"^[{_JS_WS}]*([+-]?[0-9]+)")
 
-_BMP_MAX = "￿"
-
 
 _JS_WS_SET = frozenset(_JS_WS)
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import word_ngrams
+
 # conservative, engine-portable patterns (Java regex ∩ RE2). Scope is
 # deliberately narrow so both engines agree span-for-span: the phone
 # pattern only matches the +CC NNN NNN[N] NNN[N] international shape —
@@ -66,15 +68,8 @@ def _ngram_hash_table(
     word array gets its OWN projection (same staging as
     dedup.shingle_table: inlining the split inside the per-position
     lambda re-evaluates it per n-gram — O(words²) per doc)."""
-    w = F.col("_w")
-    grams = F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(w, i, n))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     staged = df.select(*keep, F.split(F.col(text_col), " ").alias("_w"))
+    grams = word_ngrams(F.col("_w"), n, F.md5)
     return staged.select(*keep, grams.alias("grams"))
 
 

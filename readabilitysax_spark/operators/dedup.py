@@ -15,6 +15,13 @@ codegen and scale with executors:
 * ngram jaccard:  exact pairwise Jaccard over shingle sets, restricted
                   to LSH candidate pairs (never all-pairs at scale)
 
+The LSH band join is written once, and every operator calls it: the
+signature arithmetic (``_minhash_columns``), the
+``"<band>|<minhash>"`` band table (``_band_table``), the bucket-width
+cap and its audit (``drop_wide_buckets``/``wide_buckets``, also used by
+``similarity.embedding_near_dup_pairs``) and the capped ``doc_a <
+doc_b`` self-join (``_band_pairs``, which the simhash pairs share).
+
 Scale notes: every shuffle here keys on a hash (uniform by
 construction, no skew salting needed); the band join is self-balancing
 because bucket sizes are bounded by near-dup cluster sizes; at 10^12
@@ -23,6 +30,8 @@ docs the LSH band count/width trade recall for shuffle volume.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -30,39 +39,23 @@ DEFAULT_NUM_HASHES = 8
 DEFAULT_SHINGLE_WORDS = 3
 
 
-def _words(text_col: str = "text") -> Column:
-    return F.split(F.col(text_col), " ")
-
-
-def _has_shingles(text_col: str = "text", k: int = DEFAULT_SHINGLE_WORDS) -> Column:
-    """Cheap predicate equivalent to "this doc has a non-NULL minhash
-    signature": a doc shingles iff it has ≥ k words. Filtering the
-    DOCUMENTS side with this instead of ``where(minhash_0 IS NOT NULL)``
-    after signature computation matters for the plan: Catalyst pushes a
-    post-signature null filter below the repartition Exchange into the
-    scan stage and INLINES the whole shingle→md5→min expression tree
-    into the Filter condition (with ``split`` re-inlined per slice —
-    the O(words²) form the staged projection exists to avoid), so the
-    full signature pipeline would run an extra time, single-core,
-    before the shuffle (measured: ~2× the whole query at sf0.1). This
-    one-split predicate pushes down for free instead (guide §2.4/§1 —
-    keep expensive expressions out of pushed-down filters)."""
-    return F.size(F.split(F.col(text_col), " ")) >= k
-
-
-def shingles(text_col: str = "text", k: int = DEFAULT_SHINGLE_WORDS) -> Column:
-    """Word k-gram shingles as an array<string> column (JVM transform).
+def word_ngrams(
+    words: Column, k: int, gram: Callable[[Column], Column] = lambda s: s
+) -> Column:
+    """Word k-grams of the array<string> column ``words``, each passed
+    through ``gram`` (identity: the shingle strings; ``F.md5``: their
+    hashes), as an array<string> column (JVM transform).
 
     Docs shorter than ``k`` words yield an EMPTY array — guarded with
     CASE WHEN because ``sequence(1, 0)`` would otherwise produce the
     descending [1, 0] and ``slice(start=0)`` throws, killing the task
-    on any short document."""
-    w = _words(text_col)
+    on any short document. A ``split`` expression passed as ``words``
+    is re-evaluated per position (see ``shingle_table``)."""
     return F.when(
-        F.size(w) >= k,
+        F.size(words) >= k,
         F.transform(
-            F.sequence(F.lit(1), F.size(w) - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(w, i, k)),
+            F.sequence(F.lit(1), F.size(words) - (k - 1)),
+            lambda i: gram(F.concat_ws(" ", F.slice(words, i, k))),
         ),
     ).otherwise(F.array().cast("array<string>"))
 
@@ -79,18 +72,10 @@ def shingle_table(
     tree. Inlining the split inside ``slice(w, i, k)`` re-evaluates it
     per shingle position (O(words²) per doc — measured 3-4× slower on
     sf0.1); this staging is THE hot-loop fix for the whole minhash
-    family. Same empty-array guard as ``shingles``."""
-    w = F.col("_w")
-    gram = F.when(
-        F.size(w) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(w, i, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    family."""
     return documents.select(
         id_col, F.split(F.col(text_col), " ").alias("_w")
-    ).select(id_col, gram.alias("sh"))
+    ).select(id_col, word_ngrams(F.col("_w"), k).alias("sh"))
 
 
 def exact_duplicates(documents: DataFrame) -> DataFrame:
@@ -105,6 +90,34 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
         .withColumn("keeper_id", F.min("doc_id").over(w))
         .withColumn("is_dup", F.col("doc_id") != F.col("keeper_id"))
         .select("doc_id", "text_hash", "group_size", "keeper_id", "is_dup")
+    )
+
+
+def _minhash_columns(
+    set_col: str, num_hashes: int
+) -> tuple[list[Column], list[Column]]:
+    """The signature arithmetic as two projections, the second selected
+    over the first: digests ``_d{d}`` = md5(f"{d}:" + shingle) over the
+    array column ``set_col``, one per four hashes, then ``minhash_i`` =
+    min of the (i mod 4)-th 8-hex-char window of ``_d{i//4}``."""
+
+    def digest_col(d: int) -> Column:
+        # NB: the lambda must stay single-arg — pyspark passes
+        # (element, index) to two-arg lambdas, which would clobber the salt
+        salt = F.lit(f"{d}:")
+        return F.transform(
+            F.col(set_col), lambda s: F.md5(F.concat(salt, s))
+        ).alias(f"_d{d}")
+
+    def window_min(i: int) -> Column:
+        off = 1 + 8 * (i % 4)
+        return F.array_min(
+            F.transform(F.col(f"_d{i // 4}"), lambda h: F.substring(h, off, 8))
+        ).alias(f"minhash_{i}")
+
+    return (
+        [digest_col(d) for d in range((num_hashes + 3) // 4)],
+        [window_min(i) for i in range(num_hashes)],
     )
 
 
@@ -128,26 +141,96 @@ def minhash_signatures(
     digest is computed once per shingle, and the plan stays MAP-ONLY
     (no shuffle for the signature table).
     """
+    digests, mins = _minhash_columns("sh", num_hashes)
     df = shingle_table(documents, "text", shingle_words)
-    n_digests = (num_hashes + 3) // 4
+    return df.select("doc_id", *digests).select("doc_id", *mins)
 
-    def digest_col(d: int) -> Column:
-        # NB: the lambda must stay single-arg — pyspark passes
-        # (element, index) to two-arg lambdas, which would clobber the salt
-        salt = F.lit(f"{d}:")
-        return F.transform(
-            F.col("sh"), lambda s: F.md5(F.concat(salt, s))
-        ).alias(f"_d{d}")
 
-    df = df.select("doc_id", *[digest_col(d) for d in range(n_digests)])
+def _shingled_signatures(
+    documents: DataFrame, num_hashes: int, shingle_words: int
+) -> DataFrame:
+    """``minhash_signatures`` of the docs that have one. Shingle-less
+    docs (< k words) have NULL signatures, which would all collide into
+    one bucket (the oracle's UNPIVOT drops NULL cells).
 
-    def window_min(i: int) -> Column:
-        off = 1 + 8 * (i % 4)
-        return F.array_min(
-            F.transform(F.col(f"_d{i // 4}"), lambda h: F.substring(h, off, 8))
-        ).alias(f"minhash_{i}")
+    They are excluded by the cheap word-count predicate "≥ k words" on
+    the DOCUMENTS side, not by ``where(minhash_0 IS NOT NULL)`` after
+    signature computation, and that matters for the plan: Catalyst
+    pushes a post-signature null filter below the repartition Exchange
+    into the scan stage and INLINES the whole shingle→md5→min
+    expression tree into the Filter condition (with ``split``
+    re-inlined per slice — the O(words²) form the staged projection
+    exists to avoid), so the full signature pipeline would run an extra
+    time, single-core, before the shuffle (measured: ~2× the whole
+    query at sf0.1). The one-split predicate pushes down for free
+    instead (guide §2.4/§1 — keep expensive expressions out of
+    pushed-down filters)."""
+    return minhash_signatures(
+        documents.where(F.size(F.split(F.col("text"), " ")) >= shingle_words),
+        num_hashes, shingle_words,
+    )
 
-    return df.select("doc_id", *[window_min(i) for i in range(num_hashes)])
+
+def _band_table(sigs: DataFrame, num_hashes: int) -> DataFrame:
+    """(doc_id, bucket): one row per doc and band, bucket =
+    ``"<band>|<minhash_band>"`` (each signature position is one band,
+    r=1). ``sigs`` must hold no NULL signature: concat_ws drops NULLs,
+    so every shingle-less doc would share the bare band-index bucket."""
+    return sigs.select(
+        "doc_id",
+        F.explode(
+            F.array(*[
+                F.concat_ws("|", F.lit(str(k)), F.col(f"minhash_{k}"))
+                for k in range(num_hashes)
+            ])
+        ).alias("bucket"),
+    )
+
+
+def wide_buckets(bands: DataFrame, max_bucket_size: int) -> DataFrame:
+    """(bucket, count) of the buckets of ``bands`` wider than
+    ``max_bucket_size`` — exactly what ``drop_wide_buckets`` removes at
+    the same cap, so an audit over the same band table reports what a
+    capped pair join skipped (no-silent-caps rule)."""
+    return bands.groupBy("bucket").count().where(F.col("count") > max_bucket_size)
+
+
+def drop_wide_buckets(bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """``bands`` without its buckets wider than ``max_bucket_size``
+    (``None``: uncapped). A degenerate bucket (a boilerplate shingle
+    shared by millions of docs, a constant-vector cluster) would make
+    the within-bucket pair join quadratic in that bucket alone. The
+    wide-bucket set is small, so it is broadcast into a left-anti join."""
+    if max_bucket_size is None:
+        return bands
+    wide = wide_buckets(bands, max_bucket_size)
+    return bands.join(F.broadcast(wide.select("bucket")), "bucket", "left_anti")
+
+
+def _band_pairs(
+    bands: DataFrame, max_bucket_size: int | None, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Distinct (doc_a, doc_b, <c>_a, <c>_b for c in ``carry``) with
+    doc_a < doc_b, over docs sharing at least one bucket of ``bands``
+    (doc_id, bucket, *carry) once ``drop_wide_buckets`` has applied the
+    cap. ``carry`` rides per-doc columns through the self-join, so no
+    caller joins them back onto the pairs."""
+    bands = drop_wide_buckets(bands, max_bucket_size)
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+        )
+        .distinct()
+    )
 
 
 def minhash_lsh_buckets(
@@ -157,15 +240,7 @@ def minhash_lsh_buckets(
 ) -> DataFrame:
     """LSH buckets with >1 member: (band, band_hash, n_docs, min_doc_id,
     max_doc_id). Each signature position is one band (r=1)."""
-    # shingle-less docs (< k words) have NULL signatures — excluded, or
-    # they'd all collide into one null bucket (matches the oracle's
-    # UNPIVOT, which drops NULL cells). The exclusion is a cheap
-    # word-count pre-filter, NOT a post-signature null filter — see
-    # _has_shingles for why (pushed-down filter inlining).
-    sigs = minhash_signatures(
-        documents.where(_has_shingles("text", shingle_words)),
-        num_hashes, shingle_words,
-    )
+    sigs = _shingled_signatures(documents, num_hashes, shingle_words)
     bands = sigs.select(
         "doc_id",
         F.explode(
@@ -189,89 +264,19 @@ def minhash_lsh_buckets(
     )
 
 
-def minhash_candidate_pairs(
-    documents: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_words: int = DEFAULT_SHINGLE_WORDS,
-    max_bucket_size: int | None = 10_000,
-) -> DataFrame:
-    """Distinct candidate near-dup pairs (doc_a < doc_b) via band join.
-
-    ``max_bucket_size`` caps the self-join width: a degenerate bucket
-    (boilerplate shingle shared by millions of docs) would otherwise
-    produce O(n²) pairs in that bucket alone. Buckets wider than the
-    cap are dropped from pair generation — audit what would be dropped
-    with ``oversize_lsh_buckets`` (no-silent-caps rule)."""
-    # NULL signatures (shingle-less short docs) excluded: concat_ws
-    # silently drops NULLs, which would bucket every short doc together.
-    # Exclusion via the cheap _has_shingles pre-filter (see its
-    # docstring: a post-signature null filter gets pushed down with the
-    # whole signature expression inlined). The SIGNATURE table (1
-    # row/doc, num_hashes cols) is what gets materialized — it feeds
-    # the cap aggregation and BOTH sides of the self-join, which would
-    # otherwise recompute the shingle→md5 pipeline 3×. Checkpointing
-    # the signatures instead of the exploded band table writes
-    # num_hashes× less data for the same reuse (the band explode is a
-    # cheap post-scan projection); at 10^12 docs this is "persist the
-    # signature table to storage once", the standard MinHash deployment
-    # layout. (localCheckpoint = in-session analog.)
-    sigs = minhash_signatures(
-        documents.where(_has_shingles("text", shingle_words)),
-        num_hashes, shingle_words,
-    ).localCheckpoint()
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.concat_ws("|", F.lit(str(k)), F.col(f"minhash_{k}"))
-                for k in range(num_hashes)
-            ])
-        ).alias("bucket"),
-    )
-    if max_bucket_size is not None:
-        wide = (
-            bands.groupBy("bucket").count()
-            .where(F.col("count") > max_bucket_size)
-        )
-        bands = bands.join(
-            F.broadcast(wide.select("bucket")), "bucket", "left_anti"
-        )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
 def oversize_lsh_buckets(
     documents: DataFrame,
     max_bucket_size: int,
     num_hashes: int = DEFAULT_NUM_HASHES,
     shingle_words: int = DEFAULT_SHINGLE_WORDS,
 ) -> DataFrame:
-    """(bucket, count) band-buckets that ``minhash_candidate_pairs``
-    skips at the same cap — run/log this before a capped dedup pass.
-
-    Mirrors the pairs function's NULL-signature filter exactly: without
-    it, shingle-less short docs (NULL minhashes → concat_ws collapsing
-    to the bare band index) surface as oversize buckets that pair
-    generation never creates, over-reporting the audit."""
-    sigs = minhash_signatures(
-        documents.where(_has_shingles("text", shingle_words)),
-        num_hashes, shingle_words,
-    )
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.concat_ws("|", F.lit(str(k)), F.col(f"minhash_{k}"))
-                for k in range(num_hashes)
-            ])
-        ).alias("bucket"),
-    )
-    return bands.groupBy("bucket").count().where(F.col("count") > max_bucket_size)
+    """(bucket, count) band-buckets that ``ngram_jaccard_pairs`` (and so
+    ``near_dup_clusters``) skips at the same cap — run/log this before
+    a capped dedup pass. Same band table as the pairs, shingle-less
+    docs excluded, so the audit reports no bucket that pair generation
+    never creates."""
+    sigs = _shingled_signatures(documents, num_hashes, shingle_words)
+    return wide_buckets(_band_table(sigs, num_hashes), max_bucket_size)
 
 
 def ngram_jaccard_pairs(
@@ -284,8 +289,10 @@ def ngram_jaccard_pairs(
     """Exact shingle-set Jaccard for LSH candidate pairs only.
 
     (doc_a, doc_b, jaccard) — the expensive all-pairs product is
-    avoided by the LSH pre-filter (band semantics and ``max_bucket_size``
-    cap identical to ``minhash_candidate_pairs``).
+    avoided by the LSH pre-filter: docs sharing a ``_band_table``
+    bucket, buckets wider than ``max_bucket_size`` dropped (audit them
+    with ``oversize_lsh_buckets``). At ``threshold=0.0`` the pairs are
+    every candidate pair of the band join.
 
     ONE combined pass (round-3 VERDICT item 5): the distinct shingle set
     and the minhash signature are derived from a single scan→shingle
@@ -295,7 +302,10 @@ def ngram_jaccard_pairs(
     ran the scan→split→shingle pipeline twice (once for signatures, once
     for Jaccard sets) and materialized two tables. At 10^12 docs this is
     "persist ONE doc-level dedup-feature table", which the clustering
-    chain then reuses for candidates AND exact verification.
+    chain then reuses for candidates AND exact verification. The
+    checkpoint feeds the cap aggregation and BOTH sides of the
+    self-join, which would otherwise recompute the shingle→md5 pipeline
+    3×.
 
     The verify stage intersects HASHED shingle sets, not the raw
     strings: each distinct shingle is replaced by the top 60 bits of the
@@ -311,27 +321,11 @@ def ngram_jaccard_pairs(
     5.0 s → 2.45 s at sf0.1; the checkpointed feature table also drops
     the raw-string column entirely).
     """
-    n_digests = (num_hashes + 3) // 4
     sets = shingle_table(documents, "text", shingle_words).select(
         "doc_id", F.array_distinct("sh").alias("sset")
     )
-
-    def digest_col(d: int) -> Column:
-        salt = F.lit(f"{d}:")  # single-arg lambda: see minhash_signatures
-        return F.transform(
-            F.col("sset"), lambda s: F.md5(F.concat(salt, s))
-        ).alias(f"_d{d}")
-
-    digs = sets.select(
-        "doc_id", "sset", *[digest_col(d) for d in range(n_digests)]
-    )
-
-    def window_min(i: int) -> Column:
-        off = 1 + 8 * (i % 4)
-        return F.array_min(
-            F.transform(F.col(f"_d{i // 4}"), lambda h: F.substring(h, off, 8))
-        ).alias(f"minhash_{i}")
-
+    digests, mins = _minhash_columns("sset", num_hashes)
+    digs = sets.select("doc_id", "sset", *digests)
     # hashed shingle set for the verify stage: top 60 bits of the d=0
     # digest (md5 of distinct inputs → distinct outputs w.h.p.; the
     # array_distinct guards the 15-hex truncation, P(collide) ≈ 1e-15
@@ -342,40 +336,14 @@ def ngram_jaccard_pairs(
             lambda h: F.conv(F.substring(h, 1, 15), 16, 10).cast("long"),
         )
     ).alias("hset")
-    combined = digs.select(
-        "doc_id", hset, *[window_min(i) for i in range(num_hashes)]
-    ).localCheckpoint()
+    combined = digs.select("doc_id", hset, *mins).localCheckpoint()
 
-    # band self-join over the combined table — NULL signatures
-    # (shingle-less docs) excluded exactly as in minhash_candidate_pairs
-    bands = combined.where(F.col("minhash_0").isNotNull()).select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.concat_ws("|", F.lit(str(k)), F.col(f"minhash_{k}"))
-                for k in range(num_hashes)
-            ])
-        ).alias("bucket"),
+    # NULL signatures (shingle-less docs) are filtered AFTER the
+    # checkpoint, where the filter cannot inline the signature pipeline
+    bands = _band_table(
+        combined.where(F.col("minhash_0").isNotNull()), num_hashes
     )
-    if max_bucket_size is not None:
-        wide = (
-            bands.groupBy("bucket").count()
-            .where(F.col("count") > max_bucket_size)
-        )
-        bands = bands.join(
-            F.broadcast(wide.select("bucket")), "bucket", "left_anti"
-        )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    pairs = _band_pairs(bands, max_bucket_size)
     sets_df = combined.select("doc_id", "hset")
     return (
         pairs.join(sets_df.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("hset", "set_a"), "doc_a")
@@ -627,27 +595,12 @@ def incremental_dedup(
         .select("doc_id", (F.col("_hit").isNotNull()).alias("exact_dup"))
     )
 
-    def band_table(docs: DataFrame) -> DataFrame:
-        # cheap pre-filter, not a post-signature null filter — see
-        # _has_shingles (pushed-down filter inlining)
-        sigs = minhash_signatures(
-            docs.where(_has_shingles("text", shingle_words)),
-            num_hashes, shingle_words,
-        )
-        return sigs.select(
-            "doc_id",
-            F.explode(
-                F.array(*[
-                    F.concat_ws("|", F.lit(str(k)), F.col(f"minhash_{k}"))
-                    for k in range(num_hashes)
-                ])
-            ).alias("bucket"),
-        )
-
+    new_sigs = _shingled_signatures(new_docs, num_hashes, shingle_words)
+    old_sigs = _shingled_signatures(old_docs, num_hashes, shingle_words)
     near = (
-        band_table(new_docs)
+        _band_table(new_sigs, num_hashes)
         .join(
-            band_table(old_docs).select(
+            _band_table(old_sigs, num_hashes).select(
                 F.col("bucket"), F.col("doc_id").alias("old_id")
             ),
             "bucket",
@@ -774,7 +727,7 @@ def simhash_near_dup_pairs(
     # without this the word-explode + 64-vote aggregation pipeline runs
     # 4× (the r05 plan had 4 full scans / 28 HashAggregates; measured
     # ~2.4× the whole query at sf0.1). Same persist-the-feature-table
-    # layout as minhash_candidate_pairs; at 10^12 docs the fingerprint
+    # layout as ngram_jaccard_pairs; at 10^12 docs the fingerprint
     # table is written to storage once per snapshot.
     sh = simhash(documents, bits).localCheckpoint()
     # (x >> s) & mask is shift-mode agnostic (mask strips sign-extension)
@@ -788,28 +741,12 @@ def simhash_near_dup_pairs(
             for i in range(n_bands)
         ])).alias("bucket"),
     )
-    if max_bucket_size is not None:
-        wide = bands.groupBy("bucket").count().where(F.col("count") > max_bucket_size)
-        bands = bands.join(F.broadcast(wide.select("bucket")), "bucket", "left_anti")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
+    pairs = _band_pairs(bands, max_bucket_size, carry=("simhash",))
     return (
         pairs.withColumn(
             "hamming",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int"),
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int"),
         )
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-

@@ -20,6 +20,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import drop_wide_buckets, wide_buckets
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -442,9 +444,7 @@ def embedding_near_dup_pairs(
     operator's wall. Same persist-the-feature-table layout as the
     minhash/simhash pair generators."""
     b = lsh_bucket_ids(embeddings, dim, n_planes, seed, vec_col).localCheckpoint()
-    if max_bucket_size is not None:
-        wide = b.groupBy("bucket").count().where(F.col("count") > max_bucket_size)
-        b = b.join(F.broadcast(wide.select("bucket")), "bucket", "left_anti")
+    b = drop_wide_buckets(b, max_bucket_size)
     left = b.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"), "bucket"
     )
@@ -471,7 +471,7 @@ def oversize_buckets(
     """(bucket, count) rows that ``embedding_near_dup_pairs`` will skip
     at the same cap — the audit/logging side of the no-silent-caps rule."""
     b = lsh_bucket_ids(embeddings, dim, n_planes, seed, vec_col)
-    return b.groupBy("bucket").count().where(F.col("count") > max_bucket_size)
+    return wide_buckets(b, max_bucket_size)
 
 
 # ---- DuckDB-oracle SQL helpers (mirror the exact Spark arithmetic) ----

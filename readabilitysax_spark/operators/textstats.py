@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import word_ngrams
+
 # tiny per-language stopword evidence sets (n-gram heuristic langid);
 # deterministic and SQL-portable (the oracle replicates the same lists)
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -175,15 +177,7 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     per-doc rollup), uniform keys.
     """
     words = F.split("text", " ")
-    # guarded: sequence(1, 0) is the DESCENDING [1, 0] in Spark and
-    # slice(start=0) throws — single-word docs must yield no bigrams
-    bigrams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - 1),
-            lambda i: F.concat_ws(" ", F.slice(words, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = word_ngrams(words, 2)
     exploded = documents.select(
         "doc_id", F.explode(bigrams).alias("bigram")
     )

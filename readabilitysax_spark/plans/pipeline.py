@@ -45,11 +45,6 @@ from ..operators.extract import extract_articles
 from ..operators.metrics import partition_metrics
 from ..sources.pages import spread_small_scan
 
-CHECKPOINT_DDL = (
-    "run_id string, bucket int, status string, n_rows bigint, "
-    "n_bytes bigint, wall_sec double, committed_at timestamp"
-)
-
 _STAGE_MARKER = "_STAGED_OK"
 
 

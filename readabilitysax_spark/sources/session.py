@@ -37,17 +37,14 @@ def build_session(
     # this floor alone; the effect exists at ANY cluster size — a 5 MB
     # compute-bound stage on 1000 cores would coalesce to 5 tasks).
     # Coalescing itself stays ON (essential against small-partition
-    # floods at 100 TB); only the minimum size is lowered, and it is
-    # env-tunable: raise it (e.g. back to 1m-8m) for IO-bound ETL
-    # where task-launch overhead dominates per-partition work.
-    min_coalesced = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k")
+    # floods at 100 TB); only the minimum size is lowered.
     return (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                min_coalesced)
+                "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -211,6 +211,17 @@ def test_ivf_topk_recall(spark):
         assert abs(cos - r.cosine) < 1e-5
 
 
+def _same_text_docs(spark, n: int):
+    from pyspark.sql import functions as F
+
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.lit(
+            "the same boilerplate nav text repeated on every single page"
+        ).alias("text"),
+    )
+
+
 def test_lsh_bucket_cap_bounds_pair_join(spark):
     """A degenerate cluster (1k identical docs → one mega-bucket per
     band) must not go quadratic: with a cap the pair join skips the
@@ -219,24 +230,17 @@ def test_lsh_bucket_cap_bounds_pair_join(spark):
     from pyspark.sql import functions as F
 
     from readabilitysax_spark.operators.dedup import (
-        minhash_candidate_pairs,
+        ngram_jaccard_pairs,
         oversize_lsh_buckets,
     )
 
-    docs = spark.range(1000).select(
-        F.col("id").alias("doc_id"),
-        F.lit(
-            "the same boilerplate nav text repeated on every single page"
-        ).alias("text"),
-    )
-    capped = minhash_candidate_pairs(docs, max_bucket_size=50)
+    docs = _same_text_docs(spark, 1000)
+    capped = ngram_jaccard_pairs(docs, max_bucket_size=50)
     assert capped.count() == 0  # all buckets oversize → no pairs, no blowup
     audit = oversize_lsh_buckets(docs, max_bucket_size=50).collect()
     assert audit and all(r["count"] == 1000 for r in audit)
     # uncapped on a small slice still finds the dups (cap is the only gate)
-    some = minhash_candidate_pairs(
-        docs.limit(20), max_bucket_size=None
-    ).count()
+    some = ngram_jaccard_pairs(docs.limit(20), max_bucket_size=None).count()
     assert some == 20 * 19 / 2
     # shingle-less short docs (NULL signatures) must not surface as
     # phantom oversize buckets — the audit applies the pairs function's
@@ -245,6 +249,48 @@ def test_lsh_bucket_cap_bounds_pair_join(spark):
         F.col("id").alias("doc_id"), F.lit("tiny doc").alias("text")
     )
     assert oversize_lsh_buckets(shorties, max_bucket_size=10).count() == 0
+
+
+def test_simhash_bucket_cap_bounds_pair_join(spark):
+    """Same cap on the simhash band join: identical fingerprints fill
+    one bucket per band."""
+    from readabilitysax_spark.operators.dedup import simhash_near_dup_pairs
+
+    docs = _same_text_docs(spark, 200)
+    assert simhash_near_dup_pairs(docs, max_bucket_size=50).count() == 0
+    uncapped = simhash_near_dup_pairs(docs.limit(20), max_bucket_size=None)
+    assert uncapped.count() == 20 * 19 / 2
+
+
+def test_lsh_bucket_cap_keeps_pairs_below_cap(spark):
+    """The cap drops only the wide buckets: boilerplate docs above the
+    cap vanish from the pairs and appear in the audit, while planted
+    near-duplicate pairs in narrow buckets come through untouched."""
+    from readabilitysax_spark.operators.dedup import (
+        minhash_signatures,
+        ngram_jaccard_pairs,
+        oversize_lsh_buckets,
+    )
+
+    planted = {
+        (1000, 1001): "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima",
+        (1002, 1003): "mango nectar olive papaya quince raisin satsuma tangelo ugli vanilla wolfberry yuzu",
+        (1004, 1005): "anvil bolt chisel drill easel file gauge hammer iron jack knife ladder",
+    }
+    rows = []
+    for (a, b), text in planted.items():
+        rows += [(a, text), (b, text.rsplit(" ", 1)[0] + " zebra")]
+    near = spark.createDataFrame(rows, "doc_id long, text string")
+    boiler = _same_text_docs(spark, 60)
+    docs = boiler.unionByName(near)
+
+    pairs = ngram_jaccard_pairs(docs, max_bucket_size=10).collect()
+    assert {(r.doc_a, r.doc_b) for r in pairs} == set(planted)
+    sig = minhash_signatures(boiler.limit(1)).head()
+    boiler_buckets = {f"{k}|{sig[f'minhash_{k}']}" for k in range(8)}
+    audit = oversize_lsh_buckets(docs, max_bucket_size=10).collect()
+    assert {r.bucket for r in audit} == boiler_buckets
+    assert all(r["count"] == 60 for r in audit)
 
 
 def test_ivf_prebuilt_full_probe_equals_brute_force(spark):
@@ -494,7 +540,6 @@ def test_all_doc_operators_survive_hostile_docs(spark):
         lambda: dedup.exact_duplicates(df),
         lambda: dedup.minhash_signatures(df),
         lambda: dedup.minhash_lsh_buckets(df),
-        lambda: dedup.minhash_candidate_pairs(df),
         lambda: dedup.ngram_jaccard_pairs(df),
         lambda: dedup.simhash(df, bits=16),
         lambda: dedup.simhash(df, bits=64),
