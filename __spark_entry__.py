@@ -441,11 +441,17 @@ def _read_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_vec(emb: DataFrame) -> list[float]:
+    """The similarity queries' query vector: the embedding of vec_id 0
+    (held out of the searched corpus)."""
+    row = emb.where(F.col("vec_id") == 0).select("embedding").head()
+    return [float(v) for v in row[0]]
+
+
 def _q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read_embeddings(spark, sf_dir)
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
     return similarity.brute_force_topk(
-        emb.where(F.col("vec_id") != 0), [float(v) for v in qvec], k=10
+        emb.where(F.col("vec_id") != 0), _query_vec(emb), k=10
     )
 
 
@@ -455,19 +461,17 @@ _LSH_PROBE_RADIUS = 1
 
 def _q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read_embeddings(spark, sf_dir)
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
-    dim = len(qvec)
+    qvec = _query_vec(emb)
     return similarity.lsh_bucket_topk(
-        emb.where(F.col("vec_id") != 0), [float(v) for v in qvec], dim=dim,
+        emb.where(F.col("vec_id") != 0), qvec, dim=len(qvec),
         k=10, n_planes=_LSH_N_PLANES, probe_radius=_LSH_PROBE_RADIUS,
     )
 
 
 def _q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read_embeddings(spark, sf_dir)
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
     return similarity.ivf_topk(
-        emb.where(F.col("vec_id") != 0), [float(v) for v in qvec],
+        emb.where(F.col("vec_id") != 0), _query_vec(emb),
         n_lists=8, n_probe=2, k=10,
     )
 
@@ -501,11 +505,10 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
 
 
 def _q_similarity_ivf_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read_embeddings(spark, sf_dir)
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
+    qvec = _query_vec(_read_embeddings(spark, sf_dir))
     centroids, assigned = _ivf_index(spark, sf_dir)
     return similarity.ivf_search(
-        assigned, centroids, [float(v) for v in qvec], n_probe=2, k=10
+        assigned, centroids, qvec, n_probe=2, k=10
     )
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import word_ngrams
+from .dedup import shingle_table
 
 # conservative, engine-portable patterns (Java regex ∩ RE2). Scope is
 # deliberately narrow so both engines agree span-for-span: the phone
@@ -60,28 +60,16 @@ def redact_pii(
     )
 
 
-def _ngram_hash_table(
-    df: DataFrame, text_col: str, n: int, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """(keep..., grams): md5 hashes of word n-grams — hashing keeps
-    the broadcast set small and the comparison fixed-width. The split
-    word array gets its OWN projection (same staging as
-    dedup.shingle_table: inlining the split inside the per-position
-    lambda re-evaluates it per n-gram — O(words²) per doc)."""
-    staged = df.select(*keep, F.split(F.col(text_col), " ").alias("_w"))
-    grams = word_ngrams(F.col("_w"), n, F.md5)
-    return staged.select(*keep, grams.alias("grams"))
-
-
 def benchmark_ngrams(
     benchmark: DataFrame, text_col: str = "text", n: int = 8
 ) -> DataFrame:
     """Distinct n-gram hash set of an eval/benchmark suite — the tiny
     side of the decontamination join (built once per benchmark,
     broadcast to every executor)."""
-    # explode_OUTER + null filter, not plain explode: Catalyst's
-    # InferFiltersFromGenerate adds `size(grams) > 0 AND
-    # isnotnull(grams)` under a non-outer explode and pushes it below
+    # md5 hashes of the n-grams keep the broadcast set small and the
+    # comparison fixed-width. explode_OUTER + null filter, not plain
+    # explode: Catalyst's InferFiltersFromGenerate adds `size(grams) > 0
+    # AND isnotnull(grams)` under a non-outer explode and pushes it below
     # the repartition Exchange into the scan stage with the WHOLE
     # md5-n-gram transform inlined (split re-evaluated per slice — the
     # O(words²) form), so the gram pipeline would run 2 extra times,
@@ -89,7 +77,8 @@ def benchmark_ngrams(
     # at sf0.1). The outer generate admits no such inference; the
     # post-generate null filter is value-identical and cheap.
     return (
-        _ngram_hash_table(benchmark, text_col, n)
+        shingle_table(benchmark, text_col, n, keep=(), gram=F.md5)
+        .withColumnRenamed("sh", "grams")
         .select(F.explode_outer("grams").alias("gram"))
         .where(F.col("gram").isNotNull())
         .distinct()
@@ -116,9 +105,12 @@ def decontaminate(
     grams = benchmark_ngrams(benchmark, text_col, n)
     # explode_outer + null filter: same InferFiltersFromGenerate
     # pushdown-inlining story as benchmark_ngrams (see comment there)
-    doc_grams = _ngram_hash_table(documents, text_col, n, keep=(id_col,)).select(
-        F.col(id_col), F.explode_outer("grams").alias("gram")
-    ).where(F.col("gram").isNotNull())
+    doc_grams = (
+        shingle_table(documents, text_col, n, keep=(id_col,), gram=F.md5)
+        .withColumnRenamed("sh", "grams")
+        .select(F.col(id_col), F.explode_outer("grams").alias("gram"))
+        .where(F.col("gram").isNotNull())
+    )
     return (
         doc_grams.join(F.broadcast(grams), "gram")
         .groupBy(id_col)

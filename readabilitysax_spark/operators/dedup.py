@@ -39,43 +39,43 @@ DEFAULT_NUM_HASHES = 8
 DEFAULT_SHINGLE_WORDS = 3
 
 
-def word_ngrams(
-    words: Column, k: int, gram: Callable[[Column], Column] = lambda s: s
-) -> Column:
-    """Word k-grams of the array<string> column ``words``, each passed
-    through ``gram`` (identity: the shingle strings; ``F.md5``: their
-    hashes), as an array<string> column (JVM transform).
-
-    Docs shorter than ``k`` words yield an EMPTY array — guarded with
-    CASE WHEN because ``sequence(1, 0)`` would otherwise produce the
-    descending [1, 0] and ``slice(start=0)`` throws, killing the task
-    on any short document. A ``split`` expression passed as ``words``
-    is re-evaluated per position (see ``shingle_table``)."""
-    return F.when(
-        F.size(words) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - (k - 1)),
-            lambda i: gram(F.concat_ws(" ", F.slice(words, i, k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def shingle_table(
     documents: DataFrame,
     text_col: str = "text",
     k: int = DEFAULT_SHINGLE_WORDS,
-    id_col: str = "doc_id",
+    keep: tuple[str, ...] = ("doc_id",),
+    gram: Callable[[Column], Column] = lambda s: s,
 ) -> DataFrame:
-    """(id, sh): shingle arrays via a TWO-STAGE projection — the split
-    word array is materialized in its own Project so the per-position
-    lambda references a cheap column, not the ``split`` expression
-    tree. Inlining the split inside ``slice(w, i, k)`` re-evaluates it
-    per shingle position (O(words²) per doc — measured 3-4× slower on
-    sf0.1); this staging is THE hot-loop fix for the whole minhash
-    family."""
+    """(keep..., sh): the word k-grams of ``text_col``, each passed
+    through ``gram`` (identity: the shingle strings; ``F.md5``: their
+    hashes), as an array<string> column (JVM transform). Every
+    word-n-gram operator reads it: minhash shingles, decontamination
+    n-gram hashes and the repetition bigrams.
+
+    TWO-STAGE projection: the split word array is materialized in its
+    own Project so the per-position lambda references a cheap column,
+    not the ``split`` expression tree. Inlining the split inside
+    ``slice(w, i, k)`` re-evaluates it per position (O(words²) per doc
+    — measured 3-4× slower on sf0.1). Explode ``sh`` with
+    ``explode_outer`` + a null filter, not ``explode``: under a plain
+    explode Catalyst's InferFiltersFromGenerate infers ``size(sh) > 0``
+    and pushes it below the staging, inlining the split again.
+
+    Docs shorter than ``k`` words yield an EMPTY array — guarded with
+    CASE WHEN because ``sequence(1, 0)`` would otherwise produce the
+    descending [1, 0] and ``slice(start=0)`` throws, killing the task
+    on any short document."""
+    w = F.col("_w")
+    grams = F.when(
+        F.size(w) >= k,
+        F.transform(
+            F.sequence(F.lit(1), F.size(w) - (k - 1)),
+            lambda i: gram(F.concat_ws(" ", F.slice(w, i, k))),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
     return documents.select(
-        id_col, F.split(F.col(text_col), " ").alias("_w")
-    ).select(id_col, word_ngrams(F.col("_w"), k).alias("sh"))
+        *keep, F.split(F.col(text_col), " ").alias("_w")
+    ).select(*keep, grams.alias("sh"))
 
 
 def exact_duplicates(documents: DataFrame) -> DataFrame:

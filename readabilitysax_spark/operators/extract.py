@@ -13,6 +13,11 @@ documents table (doc_id, text, source), and each page is built by
 html never crosses the JVM↔Python boundary (one Python runner per
 task instead of a synthesis runner feeding an extraction runner).
 
+Each operator declares its output once, as the Arrow schema its
+batches are built with (``ARTICLES_ARROW_SCHEMA`` plus the typed
+passthrough columns, ``_OUTLINKS_ARROW_SCHEMA``); the Spark schema
+handed to ``mapInArrow`` is derived from it by ``from_arrow_schema``.
+
 Scale design:
 * **Skew defusal** — page size is heavy-tailed (a 100 MB page among
   4 KB pages stalls a task). ``salted_repartition`` spreads rows by
@@ -38,15 +43,10 @@ import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from ..core.api import extract
 from ..sources.pages import synth_batch_pages
-
-ARTICLES_DDL = (
-    "url string, title string, text string, text_length bigint, "
-    "score double, next_page string, skip_level int, error boolean, "
-    "html_bytes bigint, partition_id int, wall_ms bigint"
-)
 
 ARTICLES_ARROW_SCHEMA = pa.schema(
     [
@@ -213,40 +213,28 @@ def extract_articles(
     )
     if num_partitions:
         src = salted_repartition(src, num_partitions)
-    out_schema, ddl = _passthrough_schema(pages, passthrough)
+    out_schema = _passthrough_schema(pages, passthrough)
     return src.mapInArrow(
         _make_extract_fn(
             settings, output_type, out_schema, passthrough, resolve_url_col
         ),
-        ddl,
+        # to_arrow_type zones a TIMESTAMP passthrough in UTC: only a
+        # TIMESTAMP_NTZ one is zone-less, and it maps back to NTZ
+        from_arrow_schema(out_schema, prefer_timestamp_ntz=True),
     )
 
 
-def _passthrough_schema(
-    df: DataFrame, passthrough: tuple[str, ...]
-) -> tuple[pa.Schema, str]:
-    """(arrow schema, ddl) of the articles columns plus the passthrough
-    columns, typed from ``df``'s schema."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    if not passthrough:
-        return ARTICLES_ARROW_SCHEMA, ARTICLES_DDL
+def _passthrough_schema(df: DataFrame, passthrough: tuple[str, ...]) -> pa.Schema:
+    """The articles Arrow schema plus the passthrough columns, typed
+    from ``df``'s schema."""
     extra = [f for f in df.schema.fields if f.name in passthrough]
-    return (
-        pa.schema(
-            list(ARTICLES_ARROW_SCHEMA)
-            + [pa.field(f.name, to_arrow_type(f.dataType)) for f in extra]
-        ),
-        ", ".join(
-            [ARTICLES_DDL]
-            + [f"{f.name} {f.dataType.simpleString()}" for f in extra]
-        ),
+    return pa.schema(
+        list(ARTICLES_ARROW_SCHEMA)
+        + [pa.field(f.name, to_arrow_type(f.dataType)) for f in extra]
     )
 
 
 # ---- outlink extraction (the web-graph pass over the same pages scan) ----
-
-OUTLINKS_DDL = "url string, link_pos int, href string, anchor_text string"
 
 _OUTLINKS_ARROW_SCHEMA = pa.schema(
     [
@@ -359,5 +347,5 @@ def extract_outlinks(pages: DataFrame) -> DataFrame:
     column-pruned scan, Arrow batches, zero shuffle — link-graph
     rollups (in-degree, per-domain) aggregate downstream."""
     return pages.select(*_source_columns(pages)).mapInArrow(
-        _outlink_batches, OUTLINKS_DDL
+        _outlink_batches, from_arrow_schema(_OUTLINKS_ARROW_SCHEMA)
     )

@@ -34,14 +34,13 @@ sub-objects (hostile-input bound; real producers pack tens to
 hundreds), and any one FlateDecode stream inflates to at most 256 MB
 (hostile-input bound: a KB-sized deflate bomb is treated as
 undecodable instead of filling the Arrow worker; legitimate
-text-bearing streams are orders of magnitude smaller). The Spark surface is the point here: schema, Arrow
-batching, error-row semantics and partitioning all match
-``operators/extract.py``.
+text-bearing streams are orders of magnitude smaller).
 
-Spark shape: ``extract_pdf_text`` is a zero-shuffle ``mapInArrow``
-projection, same as HTML extraction — at 100 TB it is map-only with
-the scan pruned to (doc_id, pdf); malformed documents yield an error
-row (``ok=false``), never an exception (the get-url.ts:33-44 pattern).
+Spark shape: this module is pure Python and has no Spark operator of
+its own. ``multimodal.media_audit`` runs ``extract_text_from_pdf`` per
+row inside its one zero-shuffle ``mapInArrow`` pass, where a malformed
+document becomes an error row (``pdf_ok=false``), never an exception
+(the get-url.ts:33-44 pattern).
 """
 
 from __future__ import annotations
@@ -49,9 +48,6 @@ from __future__ import annotations
 import re
 import zlib
 from collections.abc import Iterator
-
-import pyarrow as pa
-from pyspark.sql import DataFrame
 
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n")
@@ -215,13 +211,6 @@ def _expand_object_streams(objs: dict[int, tuple[bytes, bytes | None]]) -> None:
             )
             if 0 <= first + off <= end <= len(data):
                 objs.setdefault(sub_oid, (data[first + off:end], None))
-
-
-def _decode_string(tok: bytes) -> str:
-    """PDF literal string body (without outer parens) → latin-1 text
-    (the no-font-info default; kept as the unit-testable grammar
-    surface — show-time decoding goes through ``_decode_shown``)."""
-    return _unescape_literal(tok).decode("latin-1")
 
 
 def _unescape_literal(tok: bytes) -> bytes:
@@ -741,91 +730,3 @@ def _assemble_page(segments: list[tuple[float, float, int, str]]) -> list[str]:
         segs = sorted(lines[(col, yv)])
         out.append("".join(t for _, t in segs))
     return out
-
-
-PDF_TEXT_DDL = (
-    "doc_id long, text string, n_pages int, n_chars int, ok boolean"
-)
-_PDF_TEXT_SCHEMA = pa.schema(
-    [
-        pa.field("doc_id", pa.int64()),
-        pa.field("text", pa.string()),
-        pa.field("n_pages", pa.int32()),
-        pa.field("n_chars", pa.int32()),
-        pa.field("ok", pa.bool_()),
-    ]
-)
-
-
-def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        ids = batch.column("doc_id").to_pylist()
-        pdfs = batch.column("pdf").to_pylist()
-        texts, npages, nchars, oks = [], [], [], []
-        for data in pdfs:
-            try:
-                text, np_ = extract_text_from_pdf(data or b"")
-                texts.append(text)
-                npages.append(np_)
-                nchars.append(len(text))
-                oks.append(True)
-            except Exception:  # error row, never an exception upward
-                texts.append("")
-                npages.append(0)
-                nchars.append(0)
-                oks.append(False)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(ids, pa.int64()),
-                pa.array(texts, pa.string()),
-                pa.array(npages, pa.int32()),
-                pa.array(nchars, pa.int32()),
-                pa.array(oks, pa.bool_()),
-            ],
-            schema=_PDF_TEXT_SCHEMA,
-        )
-
-
-def extract_pdf_text(pdfs: DataFrame) -> DataFrame:
-    """pdfs(doc_id, pdf binary) → (doc_id, text, n_pages, n_chars, ok).
-
-    Zero-shuffle ``mapInArrow`` projection — identical Spark shape to
-    HTML extraction (``operators/extract.py``): map-only at any scale,
-    scan pruned to the two input columns, error rows instead of task
-    failures."""
-    return pdfs.select("doc_id", "pdf").mapInArrow(
-        _extract_batches, PDF_TEXT_DDL
-    )
-
-
-def synthesize_pdfs(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, text, …) → (doc_id, pdf binary), deterministic
-    (sources/pdfgen.py) — the PDF analog of ``synthesize_pages``.
-
-    Producer variety rotates by doc_id (``pdfgen.synth_doc_pdf``) so
-    the downstream extractor is hash-exercised on every decode path at
-    driver time; extracted text is IDENTICAL across all producers
-    (``expected_pdf_text``), so the oracle SQL is unchanged — the
-    variety only widens what a hash match proves."""
-    from ..sources.pdfgen import synth_doc_pdf
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(
-                        [synth_doc_pdf(i, t) for i, t in zip(ids, texts)],
-                        pa.binary(),
-                    ),
-                ],
-                schema=pa.schema(
-                    [pa.field("doc_id", pa.int64()), pa.field("pdf", pa.binary())]
-                ),
-            )
-
-    return documents.select("doc_id", "text").mapInArrow(
-        gen, "doc_id long, pdf binary"
-    )

@@ -90,7 +90,9 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_id, cosine) — exact top-k, deterministic tiebreak on id."""
+    """(vec_id, cosine) — exact top-k, deterministic tiebreak on id:
+    cosine rounded to 6 places, ranked (cosine desc, id). The ranked
+    top-k of the LSH and IVF searches too, over their probed rows."""
     q = [float(v) for v in query_vec]
     return (
         embeddings.select(
@@ -182,15 +184,9 @@ def lsh_bucket_topk(
     qbucket = query_bucket(query_vec, dim, n_planes, seed)
     probes = probe_buckets(qbucket, n_planes, probe_radius)
     bucketed = lsh_bucket_ids(embeddings, dim, n_planes, seed, vec_col)
-    q = [float(v) for v in query_vec]
-    return (
-        bucketed.where(F.col("bucket").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine_lit(F.col(vec_col), q), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+    return brute_force_topk(
+        bucketed.where(F.col("bucket").isin(probes)),
+        query_vec, k, id_col, vec_col,
     )
 
 
@@ -281,14 +277,18 @@ def build_ivf_index(
     return centroids, assigned
 
 
-def _cos_py(a: list[float], b: list[float]) -> float:
-    """Driver-side cosine for centroid ranking — shared by the
-    per-query and panel search paths so their probe-list selection can
-    never diverge."""
-    dot = sum(x * y for x, y in zip(a, b))
-    na = math.sqrt(sum(x * x for x in a))
-    nb = math.sqrt(sum(y * y for y in b))
-    return dot / (na * nb) if na and nb else 0.0
+def _probe_order(query_vec: list[float], centroids: list[list[float]]) -> list[int]:
+    """Centroid indices nearest-first by driver-side cosine, ties on the
+    index — shared by the per-query and panel search paths so their
+    probe-list selection can never diverge."""
+
+    def cos(b: list[float]) -> float:
+        dot = sum(x * y for x, y in zip(query_vec, b))
+        na = math.sqrt(sum(x * x for x in query_vec))
+        nb = math.sqrt(sum(y * y for y in b))
+        return dot / (na * nb) if na and nb else 0.0
+
+    return sorted(range(len(centroids)), key=lambda i: (-cos(centroids[i]), i))
 
 
 def ivf_search(
@@ -306,19 +306,10 @@ def ivf_search(
     lists. NO full-corpus assignment happens here — the only corpus
     scan is the probe-filtered one (partition-pruned when the index
     table is stored partitioned by ``list_id``)."""
-    probes = sorted(
-        range(len(centroids)),
-        key=lambda i: (-_cos_py(query_vec, centroids[i]), i),
-    )[:n_probe]
-    q = [float(v) for v in query_vec]
-    return (
-        assigned.where(F.col("list_id").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine_lit(F.col(vec_col), q), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+    probes = _probe_order(query_vec, centroids)[:n_probe]
+    return brute_force_topk(
+        assigned.where(F.col("list_id").isin(probes)),
+        query_vec, k, id_col, vec_col,
     )
 
 
@@ -352,11 +343,7 @@ def ivf_search_panel(
     max_probe = max(probe_levels)
     rows = []
     for qid, qv in queries.items():
-        order = sorted(
-            range(len(centroids)),
-            key=lambda i: (-_cos_py(qv, centroids[i]), i),
-        )
-        for rank, li in enumerate(order[:max_probe]):
+        for rank, li in enumerate(_probe_order(qv, centroids)[:max_probe]):
             rows.append((
                 int(qid), int(li),
                 [int(p) for p in probe_levels if rank < p],

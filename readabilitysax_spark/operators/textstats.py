@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import word_ngrams
+from .dedup import shingle_table
 
 # tiny per-language stopword evidence sets (n-gram heuristic langid);
 # deterministic and SQL-portable (the oracle replicates the same lists)
@@ -177,9 +177,11 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     per-doc rollup), uniform keys.
     """
     words = F.split("text", " ")
-    bigrams = word_ngrams(words, 2)
-    exploded = documents.select(
-        "doc_id", F.explode(bigrams).alias("bigram")
+    # explode_outer + null filter: see shingle_table
+    exploded = (
+        shingle_table(documents, "text", 2)
+        .select("doc_id", F.explode_outer("sh").alias("bigram"))
+        .where(F.col("bigram").isNotNull())
     )
     per_doc = (
         exploded.groupBy("doc_id", "bigram").count()

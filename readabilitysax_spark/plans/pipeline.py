@@ -65,21 +65,21 @@ def load_committed_buckets(
     instead of trusted. The verification is ONE metadata-weight job: a
     count grouped by the partition column reads parquet footers, not
     data pages — at 4096 buckets it is file-listing-bound, never a scan.
+    A checkpoint without the manifest columns commits no bucket, so every
+    bucket re-runs (safe: the article and metrics writes are
+    dynamic-overwrite).
     """
     try:
-        ckpt = spark.read.parquet(checkpoint_dir).where(F.col("status") == "done")
-        if "n_rows" in ckpt.columns:
-            rows = ckpt.groupBy("bucket").agg(
-                F.max_by("n_rows", "committed_at").alias("n_rows")
-            ).collect()
-            manifests = {r["bucket"]: r["n_rows"] for r in rows}
-        else:  # pre-manifest checkpoint layout: marker-only trust
-            manifests = {
-                r["bucket"]: None
-                for r in ckpt.select("bucket").distinct().collect()
-            }
-    except Exception:
+        rows = (
+            spark.read.parquet(checkpoint_dir)
+            .where(F.col("status") == "done")
+            .groupBy("bucket")
+            .agg(F.max_by("n_rows", "committed_at").alias("n_rows"))
+            .collect()
+        )
+    except Exception:  # no checkpoint yet, or one without a manifest
         return set()
+    manifests = {r["bucket"]: r["n_rows"] for r in rows}
     if articles_dir is None or not manifests:
         return set(manifests)
     try:
@@ -92,11 +92,7 @@ def load_committed_buckets(
         }
     except Exception:
         actual = {}
-    return {
-        b
-        for b, n in manifests.items()
-        if (n is None and b in actual) or actual.get(b, 0) == n
-    }
+    return {b for b, n in manifests.items() if actual.get(b, 0) == n}
 
 
 def stage_bucketed_pages(

@@ -17,6 +17,7 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions.pagegen import (
     URL_PREFIX,
@@ -35,8 +36,6 @@ PAGES_ARROW_SCHEMA = pa.schema(
         pa.field("lang", pa.string()),
     ]
 )
-
-PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 def synth_batch_pages(batch: pa.RecordBatch) -> tuple[list[str], list[str]]:
@@ -77,7 +76,7 @@ def _synth_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
 def synthesize_pages(documents: DataFrame) -> DataFrame:
     """documents(doc_id, text, lang, source, ...) → pages (deterministic)."""
     return documents.select("doc_id", "text", "source", "lang").mapInArrow(
-        _synth_batches, PAGES_DDL
+        _synth_batches, from_arrow_schema(PAGES_ARROW_SCHEMA)
     )
 
 

@@ -18,9 +18,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..operators.extract import extract_articles
-from ..sources.pages import PAGES_DDL
+from ..sources.pages import PAGES_ARROW_SCHEMA
 
 
 def read_pages_stream(
@@ -29,7 +30,7 @@ def read_pages_stream(
     max_files_per_trigger: int = 4,
 ) -> DataFrame:
     return (
-        spark.readStream.schema(PAGES_DDL)
+        spark.readStream.schema(from_arrow_schema(PAGES_ARROW_SCHEMA))
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )

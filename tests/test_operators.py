@@ -4,6 +4,7 @@ rows-only operators."""
 
 from __future__ import annotations
 
+import json
 import math
 
 from pyspark.sql import functions as F
@@ -143,6 +144,59 @@ def test_media_audit_schema(spark):
         "new_height:int,resized_bytes:bigint,frames_ok:boolean,n_frames:int,"
         "frame_bytes:bigint,pdf_ok:boolean,n_pdf_pages:int,pdf_text_len:int,"
         "pdf_text_md5:string>"
+    )
+
+
+def _schema_json(*fields: tuple[str, str]) -> str:
+    """``StructType.json()`` of all-nullable (name, type) fields."""
+    return json.dumps(
+        {"fields": [{"metadata": {}, "name": n, "nullable": True, "type": t}
+                    for n, t in fields],
+         "type": "struct"},
+        separators=(",", ":"),
+    )
+
+
+_ARTICLE_FIELDS = (
+    ("url", "string"), ("title", "string"), ("text", "string"),
+    ("text_length", "long"), ("score", "double"), ("next_page", "string"),
+    ("skip_level", "integer"), ("error", "boolean"), ("html_bytes", "long"),
+    ("partition_id", "integer"), ("wall_ms", "long"),
+)
+
+
+def test_arrow_operator_spark_schemas(spark):
+    """The Spark schema each Arrow operator derives from its Arrow
+    schema: names, types, order and nullability. Passthrough columns
+    follow the input's column order and keep their types, a
+    TIMESTAMP_NTZ one included."""
+    from readabilitysax_spark.operators.extract import (
+        extract_articles,
+        extract_outlinks,
+    )
+    from readabilitysax_spark.sources.pages import synthesize_pages
+
+    pages = spark.createDataFrame(
+        [], "url string, html binary, warc_ts timestamp, lang string, "
+        "seen timestamp_ntz",
+    )
+    docs = spark.createDataFrame(
+        [], "doc_id long, text string, source string, lang string"
+    )
+    assert extract_articles(pages).schema.json() == _schema_json(*_ARTICLE_FIELDS)
+    assert extract_articles(
+        pages, passthrough=("lang", "seen", "warc_ts")
+    ).schema.json() == _schema_json(
+        *_ARTICLE_FIELDS, ("warc_ts", "timestamp"), ("lang", "string"),
+        ("seen", "timestamp_ntz"),
+    )
+    assert extract_outlinks(docs).schema.json() == _schema_json(
+        ("url", "string"), ("link_pos", "integer"), ("href", "string"),
+        ("anchor_text", "string"),
+    )
+    assert synthesize_pages(docs).schema.json() == _schema_json(
+        ("url", "string"), ("warc_ts", "timestamp"), ("html", "binary"),
+        ("text", "string"), ("lang", "string"),
     )
 
 

@@ -1,4 +1,4 @@
-"""PDF text extraction: round-trip, grammar, hostile input, Spark shape.
+"""PDF text extraction: round-trip, grammar, hostile input.
 
 The "PDF/layout parse" leg of the extraction family (north rule). The
 generator (sources/pdfgen.py) and extractor (operators/pdftext.py) are
@@ -14,8 +14,8 @@ import zlib
 import pytest
 
 from readabilitysax_spark.operators.pdftext import (
+    _unescape_literal,
     extract_text_from_pdf,
-    _decode_string,
 )
 from readabilitysax_spark.sources.pdfgen import expected_pdf_text, synth_pdf
 
@@ -54,10 +54,11 @@ def test_flate_pages_really_compressed():
 
 
 def test_string_grammar():
-    assert _decode_string(rb"a\(b\)c\\d") == "a(b)c\\d"
-    assert _decode_string(rb"\101\102\60") == "AB0"
-    assert _decode_string(rb"x\ny\tz") == "x\ny\tz"
-    assert _decode_string(b"cont\\\nnext") == "contnext"  # line continuation
+    assert _unescape_literal(rb"a\(b\)c\\d").decode("latin-1") == "a(b)c\\d"
+    assert _unescape_literal(rb"\101\102\60").decode("latin-1") == "AB0"
+    assert _unescape_literal(rb"x\ny\tz").decode("latin-1") == "x\ny\tz"
+    # line continuation
+    assert _unescape_literal(b"cont\\\nnext").decode("latin-1") == "contnext"
 
 
 def test_hex_strings_and_td_linebreaks():
@@ -113,40 +114,6 @@ def test_stream_bytes_cannot_fake_objects():
         pytest.skip("no adversarial compression found in search budget")
     got, n_pages = extract_text_from_pdf(synth_pdf(1, text))
     assert got == expected_pdf_text(text) and n_pages == 2
-
-
-def test_spark_pdf_extraction_map_only(spark):
-    """Spark surface: synthesize → extract is a zero-shuffle Arrow map
-    (same plan class as HTML extraction) and round-trips sf0.001."""
-    from pyspark.sql import functions as F
-
-    from readabilitysax_spark.operators import pdftext
-    from readabilitysax_spark.sources.pages import read_documents
-
-    from .conftest import SF_TINY
-
-    docs = read_documents(spark, SF_TINY)
-    out = pdftext.extract_pdf_text(pdftext.synthesize_pdfs(docs))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    algo = [
-        ln for ln in plan.splitlines()
-        if "Exchange" in ln and "roundrobinpartitioning" not in ln.lower()
-    ]
-    assert not algo, plan
-    joined = out.alias("o").join(
-        docs.select("doc_id", F.col("text").alias("orig")), "doc_id"
-    )
-    bad = joined.where(
-        (~F.col("ok"))
-        | (F.col("text") != F.expr(
-            "array_join(transform("
-            "  sequence(0, int(ceil(size(split(orig, ' ')) / 8.0)) - 1),"
-            "  i -> array_join(slice(split(orig, ' '), i * 8 + 1, 8), ' ')"
-            "), '\\n')"
-        ))
-    ).count()
-    assert bad == 0
-    assert out.count() == docs.count()
 
 
 def test_pdf_round_trip_fuzz():
@@ -343,8 +310,8 @@ def test_split_contents_streams_share_state():
 def test_invalid_octal_escape_keeps_char():
     r"""\8 and \9 are not octal: the backslash drops, the digit stays
     (round-4 ADVICE — was a whole-document ValueError)."""
-    assert _decode_string(rb"a\8b\9c") == "a8b9c"
-    assert _decode_string(rb"\101\8") == "A8"
+    assert _unescape_literal(rb"a\8b\9c").decode("latin-1") == "a8b9c"
+    assert _unescape_literal(rb"\101\8").decode("latin-1") == "A8"
 
 
 def test_resources_inherited_from_parent():

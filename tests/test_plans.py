@@ -141,6 +141,57 @@ def test_gopher_quality_is_map_only(spark):
     assert not _algo_exchanges(plan)
 
 
+def test_media_audit_is_map_only(spark):
+    """The feature / resize / frame / PDF-text stages run in one
+    zero-shuffle Arrow map, scanning only (doc_id, text)."""
+    plan = _plan(entry.queries()["media_pipeline"](spark, SF_TINY))
+    assert not _algo_exchanges(plan)
+    assert plan.count("MapInArrow") == 1
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
+
+
+def _split_in_lambda(line: str) -> bool:
+    """True when a ``split(`` sits inside a lambda body of ``line``:
+    re-evaluated per array position instead of once per row."""
+    start = line.find("lambdafunction(")
+    while start >= 0:
+        depth, i = 0, start + len("lambdafunction")
+        while i < len(line):
+            depth += {"(": 1, ")": -1}.get(line[i], 0)
+            if depth == 0:
+                break
+            i += 1
+        if "split(" in line[start:i]:
+            return True
+        start = line.find("lambdafunction(", start + 1)
+    return False
+
+
+def test_word_ngram_split_is_staged(spark, monkeypatch):
+    """Every word-n-gram operator reads the split word array from its
+    own Project (dedup.shingle_table), including the plans of the
+    frames checkpointed while the query is built."""
+    from pyspark.sql import DataFrame
+
+    explain = lambda df: df._sc._jvm.PythonSQLUtils.explainString(  # noqa: E731
+        df._jdf.queryExecution(), "formatted"
+    )
+    plans = []
+    local_checkpoint = DataFrame.localCheckpoint
+
+    def recorded(self, *a, **k):
+        plans.append(explain(self))
+        return local_checkpoint(self, *a, **k)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recorded)
+    for name in ("repetition_stats", "decontamination",
+                 "dedup_ngram_jaccard", "training_corpus_curated"):
+        plans.clear()
+        plans.append(explain(entry.queries()[name](spark, SF_TINY)))
+        bad = [ln for p in plans for ln in p.splitlines() if _split_in_lambda(ln)]
+        assert not bad, (name, bad)
+
+
 def test_vocab_stats_partial_agg_and_topk(spark):
     """One word-keyed shuffle with map-side partial aggregation, top-k
     via TakeOrderedAndProject (never a full global sort), and the rank

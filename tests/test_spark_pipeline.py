@@ -133,6 +133,25 @@ def test_torn_write_detected_and_repaired(spark, pages, tmp_path):
     assert arts.groupBy("url").count().where("count > 1").count() == 0
 
 
+def test_manifestless_checkpoint_commits_nothing(spark, pages, tmp_path):
+    """A ``done`` row without the n_rows manifest is not trusted: no
+    bucket counts as committed, so a resume re-runs all of them."""
+    from readabilitysax_spark.plans.pipeline import load_committed_buckets
+
+    out = str(tmp_path / "out_nomanifest")
+    run_pipeline(spark, pages, out, run_id="a", n_buckets=2)
+    spark.createDataFrame(
+        [("old", 0, "done"), ("old", 1, "done")],
+        "run_id string, bucket int, status string",
+    ).write.mode("overwrite").parquet(f"{out}/checkpoints")
+    assert load_committed_buckets(spark, f"{out}/checkpoints") == set()
+    assert load_committed_buckets(
+        spark, f"{out}/checkpoints", f"{out}/articles"
+    ) == set()
+    r = run_pipeline(spark, pages, out, run_id="b", n_buckets=2)
+    assert r["buckets_done"] == 2 and r["buckets_skipped"] == 0
+
+
 def test_per_bucket_read_is_pruned(spark, pages, tmp_path):
     """Round-3 VERDICT weak item: the resume loop must NOT rescan the
     full input once per bucket. The bucket column is staged once
