@@ -36,7 +36,7 @@ from readabilitysax_spark.sources.pages import (
     page_url_col,
     read_documents,
     read_pages_meta,
-    spread_small_scan,
+    read_sf_table,
 )
 
 _ARTICLE_COLS = [
@@ -432,15 +432,6 @@ def _q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.winnowing_fingerprints(read_documents(spark, sf_dir))
 
 
-def _read_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread_small_scan: a one-row-group parquet file would pin the
-    # CPU-bound dot-product stages to a single core (see sources/pages)
-    path = f"{sf_dir}/embeddings.parquet"
-    return spread_small_scan(
-        spark, spark.read.parquet(path), cache_key=path
-    )
-
-
 def _query_vec(emb: DataFrame) -> list[float]:
     """The similarity queries' query vector: the embedding of vec_id 0
     (held out of the searched corpus)."""
@@ -449,7 +440,7 @@ def _query_vec(emb: DataFrame) -> list[float]:
 
 
 def _q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read_embeddings(spark, sf_dir)
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     return similarity.brute_force_topk(
         emb.where(F.col("vec_id") != 0), _query_vec(emb), k=10
     )
@@ -460,7 +451,7 @@ _LSH_PROBE_RADIUS = 1
 
 
 def _q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read_embeddings(spark, sf_dir)
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     qvec = _query_vec(emb)
     return similarity.lsh_bucket_topk(
         emb.where(F.col("vec_id") != 0), qvec, dim=len(qvec),
@@ -469,7 +460,7 @@ def _q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read_embeddings(spark, sf_dir)
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
         emb.where(F.col("vec_id") != 0), _query_vec(emb),
         n_lists=8, n_probe=2, k=10,
@@ -497,7 +488,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
         from readabilitysax_spark.sources.session import warm_python_workers
 
         warm_python_workers(spark)
-        emb = _read_embeddings(spark, sf_dir).where(F.col("vec_id") != 0)
+        emb = read_sf_table(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
         _IVF_INDEX_CACHE[key] = similarity.build_ivf_index(
             emb, n_lists=8, n_iter=_IVF_N_ITER
         )
@@ -505,7 +496,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
 
 
 def _q_similarity_ivf_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qvec = _query_vec(_read_embeddings(spark, sf_dir))
+    qvec = _query_vec(read_sf_table(spark, sf_dir, "embeddings"))
     centroids, assigned = _ivf_index(spark, sf_dir)
     return similarity.ivf_search(
         assigned, centroids, qvec, n_probe=2, k=10
@@ -539,7 +530,7 @@ def _q_similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit top-k — replacing the 12-subtree union whose
     driver wall was 20 s. Index build cost is priced separately in
     bench.py's ``ivf_index`` line."""
-    emb = _read_embeddings(spark, sf_dir).where(F.col("vec_id") != 0)
+    emb = read_sf_table(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
     centroids, assigned = _ivf_index(spark, sf_dir)
     qvecs = {
         int(r["vec_id"]): [float(v) for v in r["embedding"]]
@@ -665,7 +656,7 @@ def _q_training_corpus_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read_embeddings(spark, sf_dir)
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").head()[0])
     # testdata embeddings are near-orthogonal (max pairwise cosine ≈
     # 0.51), so the "near-dup" bar is scaled down to produce output
@@ -676,8 +667,7 @@ def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-telemetry shape: tumbling event-time window × type rollup
     with JSON prop extraction — the relational/streaming shell the
     reference lacks (SURVEY §2.4), expressed declaratively."""
-    path = f"{sf_dir}/events.parquet"
-    ev = spread_small_scan(spark, spark.read.parquet(path), cache_key=path)
+    ev = read_sf_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.date_trunc("hour", "ts").alias("hour"),
@@ -717,8 +707,7 @@ def _q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (window functions over events)."""
     from readabilitysax_spark.operators.sessionize import user_session_stats
 
-    path = f"{sf_dir}/events.parquet"
-    ev = spread_small_scan(spark, spark.read.parquet(path), cache_key=path)
+    ev = read_sf_table(spark, sf_dir, "events")
     return user_session_stats(ev, gap_minutes=30)
 
 
@@ -994,11 +983,11 @@ def oracle_sql() -> dict[str, str]:
     """
 
     q["dedup_minhash_lsh"] = f"""
-        WITH sigs AS ({_minhash_select(dedup.DEFAULT_NUM_HASHES)}),
+        WITH sigs AS ({_minhash_select(dedup.NUM_HASHES)}),
         bands AS (
             SELECT doc_id, band, band_hash FROM sigs
             UNPIVOT (band_hash FOR band IN ({
-                ", ".join(f"minhash_{k} AS '{k}'" for k in range(dedup.DEFAULT_NUM_HASHES))
+                ", ".join(f"minhash_{k} AS '{k}'" for k in range(dedup.NUM_HASHES))
             }))
         )
         SELECT CAST(band AS INT) AS band, band_hash,
@@ -1033,11 +1022,11 @@ def oracle_sql() -> dict[str, str]:
     """
 
     q["dedup_ngram_jaccard"] = f"""
-        WITH sigs AS ({_minhash_select(dedup.DEFAULT_NUM_HASHES)}),
+        WITH sigs AS ({_minhash_select(dedup.NUM_HASHES)}),
         bands AS (
             SELECT doc_id, band, band_hash FROM sigs
             UNPIVOT (band_hash FOR band IN ({
-                ", ".join(f"minhash_{k} AS '{k}'" for k in range(dedup.DEFAULT_NUM_HASHES))
+                ", ".join(f"minhash_{k} AS '{k}'" for k in range(dedup.NUM_HASHES))
             }))
         ),
         pairs AS (
@@ -1062,11 +1051,11 @@ def oracle_sql() -> dict[str, str]:
     # near-dup clusters: jaccard-pair edges (raw threshold, matching the
     # Spark filter-before-round) + recursive min-label reachability
     _jp = f"""
-        WITH sigs AS ({_minhash_select(dedup.DEFAULT_NUM_HASHES)}),
+        WITH sigs AS ({_minhash_select(dedup.NUM_HASHES)}),
         bandsj AS (
             SELECT doc_id, band, band_hash FROM sigs
             UNPIVOT (band_hash FOR band IN ({
-                ", ".join(f"minhash_{k} AS '{k}'" for k in range(dedup.DEFAULT_NUM_HASHES))
+                ", ".join(f"minhash_{k} AS '{k}'" for k in range(dedup.NUM_HASHES))
             }))
         ),
         cand AS (
@@ -1162,7 +1151,7 @@ def oracle_sql() -> dict[str, str]:
           ) GROUP BY doc_id
         )"""
 
-    _nh = dedup.DEFAULT_NUM_HASHES
+    _nh = dedup.NUM_HASHES
     _unpivot_cols = ", ".join(f"minhash_{k} AS '{k}'" for k in range(_nh))
     q["dedup_incremental"] = f"""
         WITH newd AS (
@@ -1925,7 +1914,9 @@ def oracle_sql() -> dict[str, str]:
         ORDER BY cosine DESC, vec_id LIMIT 10
     """
 
-    nd_bucket = similarity.bucket_sql_expr("v", dim=64, n_planes=8)
+    nd_bucket = similarity.bucket_sql_expr(
+        "v", dim=64, n_planes=similarity.NEAR_DUP_N_PLANES
+    )
     q["embedding_near_dup"] = f"""
         WITH b AS (
           SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import re
 
-from .entities import decode_attribute_value, decode_entity, split_text_entities
+from .entities import decode_attribute_value, split_text_entities
 
 OPEN, ATTR, TEXT, CLOSE = 0, 1, 2, 3
 

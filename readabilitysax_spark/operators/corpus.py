@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import TOKEN_RE
+from .textstats import token_count
 
 _HEX_SPAN = 16 ** 8  # first 8 md5 hex chars ≈ uniform in [0, 16^8)
 
@@ -30,11 +30,9 @@ def sample_threshold_hex(rate: float) -> str:
 def stratified_sample(
     documents: DataFrame,
     rates: dict[str, float],
-    key_col: str = "lang",
-    id_col: str = "doc_id",
     default_rate: float = 0.0,
 ) -> DataFrame:
-    """Deterministic per-stratum downsampling (training-mixture
+    """Deterministic per-``lang`` downsampling (training-mixture
     control: e.g. keep 100% en, 50% de, 10% everything else).
 
     Keep decision = md5 of the doc id under a per-stratum hex cutoff:
@@ -43,11 +41,11 @@ def stratified_sample(
     no sampling pass). Rates compose: re-running with a lower rate
     yields a strict subset (nested samples — the property you want for
     scaling-law subsets)."""
-    h = F.substring(F.md5(F.col(id_col).cast("string")), 1, 8)
+    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
     cutoff = F.lit(sample_threshold_hex(default_rate))
     for key, rate in sorted(rates.items()):
         cutoff = F.when(
-            F.col(key_col) == key, F.lit(sample_threshold_hex(rate))
+            F.col("lang") == key, F.lit(sample_threshold_hex(rate))
         ).otherwise(cutoff)
     return documents.where(h < cutoff)
 
@@ -71,16 +69,9 @@ def domain_stats(pages: DataFrame, size_col: str = "html") -> DataFrame:
     )
 
 
-def token_count(text_col: str = "text"):
-    """BPE-ish token count (shared regex with textstats.quality_stats)."""
-    return F.regexp_count(F.col(text_col), F.lit(TOKEN_RE))
-
-
 def pack_sequences(
     documents: DataFrame,
     budget: int = 2048,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_partitions: int = 32,
 ) -> DataFrame:
     """GPT-style packing layout: documents are concatenated in id order
@@ -106,8 +97,8 @@ def pack_sequences(
     test_plans) is NO ``Exchange SinglePartition`` anywhere.
     """
     toks = documents.select(
-        F.col(id_col), token_count(text_col).cast("bigint").alias("n_tokens")
-    ).repartitionByRange(num_partitions, id_col)
+        F.col("doc_id"), token_count().cast("bigint").alias("n_tokens")
+    ).repartitionByRange(num_partitions, "doc_id")
     # Materialize the range layout ONCE: repartitionByRange samples its
     # range bounds per job (seeded by RDD id), so without this the
     # totals-collect job and the window job can land rows in DIFFERENT
@@ -135,7 +126,7 @@ def pack_sequences(
         .agg(F.coalesce(F.sum("_t2"), F.lit(0)).cast("bigint").alias("_base"))
     )
 
-    w = Window.partitionBy("_part").orderBy(id_col)
+    w = Window.partitionBy("_part").orderBy("doc_id")
     return (
         toks.withColumn("_local", F.sum("n_tokens").over(w) - F.col("n_tokens"))
         .join(F.broadcast(offset_df), "_part")
@@ -150,7 +141,7 @@ def pack_sequences(
         .withColumn(
             "n_packs", (F.col("last_pack") - F.col("first_pack") + 1).cast("int")
         )
-        .select(id_col, "n_tokens", "start_offset", "first_pack",
+        .select("doc_id", "n_tokens", "start_offset", "first_pack",
                 "last_pack", "n_packs")
     )
 
@@ -158,15 +149,15 @@ def pack_sequences(
 _TRACKING_PARAM_RE = "^(utm_[^=]*|fbclid|gclid|ref|mc_cid|mc_eid)="
 
 
-def canonicalize_url(url_col: str = "url"):
-    """Canonical URL column: lowercase scheme+host, default ports and
+def canonicalize_url():
+    """Canonical form of the ``url`` column: lowercase scheme+host, default ports and
     fragments dropped, tracking params (utm_*/fbclid/gclid/ref/mc_*)
     removed, remaining query params sorted, trailing slashes stripped.
     Pure JVM expressions (regexp + array ops) so URL-level dedup —
     the pass that runs BEFORE content dedup in a crawl pipeline —
     stays in whole-stage codegen, and the same expressions are
     ANSI-portable for the oracle."""
-    u = F.col(url_col)
+    u = F.col("url")
     scheme = F.lower(F.regexp_extract(u, "^([A-Za-z]+)://", 1))
     raw_host = F.lower(F.regexp_extract(u, "^[A-Za-z]+://([^/?#]+)", 1))
     # default-port stripping is scheme-aware: :80 is only the default
@@ -194,17 +185,17 @@ def canonicalize_url(url_col: str = "url"):
     )
 
 
-def dedup_by_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
+def dedup_by_canonical_url(df: DataFrame) -> DataFrame:
     """(canonical_url, n_variants, keeper_url): URL-level duplicate
     groups; keeper = lexicographically-smallest raw variant. One
     shuffle on the canonical key."""
-    c = canonicalize_url(url_col).alias("canonical_url")
+    c = canonicalize_url().alias("canonical_url")
     return (
-        df.select(c, F.col(url_col))
+        df.select(c, F.col("url"))
         .groupBy("canonical_url")
         .agg(
             F.count("*").alias("n_variants"),
-            F.min(url_col).alias("keeper_url"),
+            F.min("url").alias("keeper_url"),
         )
         .orderBy("canonical_url")
     )
@@ -244,12 +235,12 @@ def vocab_stats(documents: DataFrame, top_k: int = 100) -> DataFrame:
 def cap_per_domain(
     documents: DataFrame,
     n: int = 10,
-    domain_col: str = "source",
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per-domain document cap (the FineWeb/Dolma "no domain dominates
-    the mix" rule): keep the ``n`` largest docs per domain, ranked by
-    n_chars descending with doc_id as the deterministic tiebreaker.
+    the mix" rule): keep the ``n`` largest docs per ``source`` domain,
+    ranked by n_chars descending with doc_id as the deterministic
+    tiebreaker.
     Returns (doc_id, domain, n_chars, rank_in_domain).
 
     Skew note: this is deliberately ONE declarative row_number window —
@@ -267,7 +258,7 @@ def cap_per_domain(
     )
     return (
         documents.select(
-            "doc_id", F.col(domain_col).alias("domain"), "n_chars",
+            "doc_id", F.col("source").alias("domain"), "n_chars",
             *keep,
         )
         .withColumn("rank_in_domain", F.row_number().over(w))
@@ -279,7 +270,6 @@ def sample_exact_k(
     documents: DataFrame,
     k: int,
     stratum_col: str = "lang",
-    id_col: str = "doc_id",
     keep: tuple[str, ...] = (),
     mark: bool = False,
 ) -> DataFrame:
@@ -298,9 +288,9 @@ def sample_exact_k(
     instead of filtering — the holdout/train split shape (note: the
     full window then runs without the WindowGroupLimit partial prune,
     which only fires for a filtering top-k)."""
-    h = F.substring(F.md5(F.col(id_col).cast("string")), 1, 16)
-    w = Window.partitionBy(stratum_col).orderBy(h, id_col)
-    ranked = documents.select(id_col, stratum_col, *keep).withColumn(
+    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 16)
+    w = Window.partitionBy(stratum_col).orderBy(h, "doc_id")
+    ranked = documents.select("doc_id", stratum_col, *keep).withColumn(
         "sample_rank", F.row_number().over(w)
     )
     if mark:

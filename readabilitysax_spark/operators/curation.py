@@ -32,17 +32,13 @@ RE_IPV4 = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 RE_PHONE = r"\+[0-9]{1,3}[ -][0-9]{3}[ -][0-9]{3,4}[ -][0-9]{3,4}"
 
 
-def redact_pii(
-    documents: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def redact_pii(documents: DataFrame) -> DataFrame:
     """(doc_id, clean_text, n_emails, n_ipv4, n_phones): PII spans
     replaced with typed placeholder tokens, per-kind counts kept for
     the curation audit trail. Map-only (redaction must touch every
     byte of a 100 TB corpus exactly once — any shuffle here doubles
     the most expensive pass of the pipeline)."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_emails = F.regexp_count(t, F.lit(RE_EMAIL))
     # order matters: emails first (an email's host part can contain
     # digit runs), then phones, then bare IPv4s
@@ -52,7 +48,7 @@ def redact_pii(
     n_ipv4 = F.regexp_count(cleaned, F.lit(RE_IPV4))
     cleaned = F.regexp_replace(cleaned, RE_IPV4, "<IP>")
     return documents.select(
-        F.col(id_col),
+        F.col("doc_id"),
         cleaned.alias("clean_text"),
         n_emails.cast("int").alias("n_emails"),
         n_ipv4.cast("int").alias("n_ipv4"),
@@ -60,9 +56,7 @@ def redact_pii(
     )
 
 
-def benchmark_ngrams(
-    benchmark: DataFrame, text_col: str = "text", n: int = 8
-) -> DataFrame:
+def benchmark_ngrams(benchmark: DataFrame, n: int = 8) -> DataFrame:
     """Distinct n-gram hash set of an eval/benchmark suite — the tiny
     side of the decontamination join (built once per benchmark,
     broadcast to every executor)."""
@@ -77,7 +71,7 @@ def benchmark_ngrams(
     # at sf0.1). The outer generate admits no such inference; the
     # post-generate null filter is value-identical and cheap.
     return (
-        shingle_table(benchmark, text_col, n, keep=(), gram=F.md5)
+        shingle_table(benchmark, n, keep=(), gram=F.md5)
         .withColumnRenamed("sh", "grams")
         .select(F.explode_outer("grams").alias("gram"))
         .where(F.col("gram").isNotNull())
@@ -85,13 +79,7 @@ def benchmark_ngrams(
     )
 
 
-def decontaminate(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-) -> DataFrame:
+def decontaminate(documents: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C / FineWeb
     procedure shape): flag every training doc sharing ≥1 word n-gram
     with the benchmark. Returns (doc_id, n_hits) for CONTAMINATED docs
@@ -102,27 +90,28 @@ def decontaminate(
     (doc_id, count) pairs for contaminated docs only — at 100 TB the
     shuffled volume is proportional to contamination, not corpus size.
     """
-    grams = benchmark_ngrams(benchmark, text_col, n)
+    grams = benchmark_ngrams(benchmark, n)
     # explode_outer + null filter: same InferFiltersFromGenerate
     # pushdown-inlining story as benchmark_ngrams (see comment there)
     doc_grams = (
-        shingle_table(documents, text_col, n, keep=(id_col,), gram=F.md5)
+        shingle_table(documents, n, gram=F.md5)
         .withColumnRenamed("sh", "grams")
-        .select(F.col(id_col), F.explode_outer("grams").alias("gram"))
+        .select(F.col("doc_id"), F.explode_outer("grams").alias("gram"))
         .where(F.col("gram").isNotNull())
     )
     return (
         doc_grams.join(F.broadcast(grams), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("n_hits"))
     )
 
 
-def url_host(url_col: str = "url"):
-    """Normalized host of a URL, for safety filters: case-insensitive
-    scheme match, host stops at ``/``, ``?`` or ``#`` (same character
-    class as ``corpus.canonicalize_url``), lowercased, userinfo
-    (``user@``) and ANY ``:port`` stripped, leading ``www.`` dropped.
+def url_host():
+    """Normalized host of the ``url`` column, for safety filters:
+    case-insensitive scheme match, host stops at ``/``, ``?`` or ``#``
+    (same character class as ``corpus.canonicalize_url``), lowercased,
+    userinfo (``user@``) and ANY ``:port`` stripped, leading ``www.``
+    dropped.
 
     A blocklist must normalize at least as aggressively as the
     canonicalizer: ``HTTP://EVIL.com``, ``http://evil.com?x``,
@@ -130,7 +119,7 @@ def url_host(url_col: str = "url"):
     ``evil.com`` here (ports are dropped unconditionally — for a
     fail-closed filter an alternate port is still the blocked host,
     unlike dedup canonicalization where origin identity matters)."""
-    raw = F.lower(F.regexp_extract(F.col(url_col), "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1))
+    raw = F.lower(F.regexp_extract(F.col("url"), "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1))
     # GREEDY strip: WHATWG treats everything before the LAST '@' as
     # userinfo, so 'http://a@b@evil.example/' serves from evil.example —
     # a non-greedy strip would leave 'b@evil.example' and fail open
@@ -139,18 +128,14 @@ def url_host(url_col: str = "url"):
     return F.regexp_replace(host, "^www\\.", "")
 
 
-def filter_blocklist(
-    pages: DataFrame,
-    blocked_domains: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
+def filter_blocklist(pages: DataFrame, blocked_domains: DataFrame) -> DataFrame:
     """Drop pages whose (normalized) domain is on a blocklist —
     broadcast anti-join, the fact table never shuffles. ``blocked_domains``
     is a one-column ``domain`` DataFrame (curation lists are tiny).
     Hosts are normalized by :func:`url_host`; blocklist entries are
     lowercased and www.-stripped the same way so the join key matches
     regardless of how the list was written."""
-    domain = url_host(url_col).alias("_domain")
+    domain = url_host().alias("_domain")
     blocked = blocked_domains.select(
         F.regexp_replace(F.lower("domain"), "^www\\.", "").alias("_domain")
     )

@@ -35,18 +35,26 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_NUM_HASHES = 8
-DEFAULT_SHINGLE_WORDS = 3
+# the minhash family's signature width and shingle length, shared by
+# every LSH operator and its audit so their band tables cannot diverge
+NUM_HASHES = 8
+SHINGLE_WORDS = 3
+# simhash near-dup pairs: fingerprint width, band count, Hamming bar
+SIMHASH_BITS = 64
+SIMHASH_BANDS = 4
+SIMHASH_MAX_HAMMING = 8
+# label-propagation rounds of near_dup_clusters (pointer doubling
+# converges in O(log diameter) rounds)
+CLUSTER_MAX_ITER = 20
 
 
 def shingle_table(
     documents: DataFrame,
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE_WORDS,
+    k: int = SHINGLE_WORDS,
     keep: tuple[str, ...] = ("doc_id",),
     gram: Callable[[Column], Column] = lambda s: s,
 ) -> DataFrame:
-    """(keep..., sh): the word k-grams of ``text_col``, each passed
+    """(keep..., sh): the word k-grams of ``text``, each passed
     through ``gram`` (identity: the shingle strings; ``F.md5``: their
     hashes), as an array<string> column (JVM transform). Every
     word-n-gram operator reads it: minhash shingles, decontamination
@@ -74,7 +82,7 @@ def shingle_table(
         ),
     ).otherwise(F.array().cast("array<string>"))
     return documents.select(
-        *keep, F.split(F.col(text_col), " ").alias("_w")
+        *keep, F.split(F.col("text"), " ").alias("_w")
     ).select(*keep, grams.alias("sh"))
 
 
@@ -123,8 +131,7 @@ def _minhash_columns(
 
 def minhash_signatures(
     documents: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_words: int = DEFAULT_SHINGLE_WORDS,
+    num_hashes: int = NUM_HASHES,
 ) -> DataFrame:
     """(doc_id, minhash_0..minhash_{k-1}) — minhash_i is the
     lexicographic min over shingles of the (i mod 4)-th 8-hex-char
@@ -142,13 +149,11 @@ def minhash_signatures(
     (no shuffle for the signature table).
     """
     digests, mins = _minhash_columns("sh", num_hashes)
-    df = shingle_table(documents, "text", shingle_words)
+    df = shingle_table(documents)
     return df.select("doc_id", *digests).select("doc_id", *mins)
 
 
-def _shingled_signatures(
-    documents: DataFrame, num_hashes: int, shingle_words: int
-) -> DataFrame:
+def _shingled_signatures(documents: DataFrame) -> DataFrame:
     """``minhash_signatures`` of the docs that have one. Shingle-less
     docs (< k words) have NULL signatures, which would all collide into
     one bucket (the oracle's UNPIVOT drops NULL cells).
@@ -166,12 +171,11 @@ def _shingled_signatures(
     instead (guide §2.4/§1 — keep expensive expressions out of
     pushed-down filters)."""
     return minhash_signatures(
-        documents.where(F.size(F.split(F.col("text"), " ")) >= shingle_words),
-        num_hashes, shingle_words,
+        documents.where(F.size(F.split(F.col("text"), " ")) >= SHINGLE_WORDS)
     )
 
 
-def _band_table(sigs: DataFrame, num_hashes: int) -> DataFrame:
+def _band_table(sigs: DataFrame) -> DataFrame:
     """(doc_id, bucket): one row per doc and band, bucket =
     ``"<band>|<minhash_band>"`` (each signature position is one band,
     r=1). ``sigs`` must hold no NULL signature: concat_ws drops NULLs,
@@ -181,7 +185,7 @@ def _band_table(sigs: DataFrame, num_hashes: int) -> DataFrame:
         F.explode(
             F.array(*[
                 F.concat_ws("|", F.lit(str(k)), F.col(f"minhash_{k}"))
-                for k in range(num_hashes)
+                for k in range(NUM_HASHES)
             ])
         ).alias("bucket"),
     )
@@ -233,14 +237,10 @@ def _band_pairs(
     )
 
 
-def minhash_lsh_buckets(
-    documents: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_words: int = DEFAULT_SHINGLE_WORDS,
-) -> DataFrame:
+def minhash_lsh_buckets(documents: DataFrame) -> DataFrame:
     """LSH buckets with >1 member: (band, band_hash, n_docs, min_doc_id,
     max_doc_id). Each signature position is one band (r=1)."""
-    sigs = _shingled_signatures(documents, num_hashes, shingle_words)
+    sigs = _shingled_signatures(documents)
     bands = sigs.select(
         "doc_id",
         F.explode(
@@ -249,7 +249,7 @@ def minhash_lsh_buckets(
                     F.lit(k).alias("band"),
                     F.col(f"minhash_{k}").alias("band_hash"),
                 )
-                for k in range(num_hashes)
+                for k in range(NUM_HASHES)
             ])
         ).alias("b"),
     ).select("doc_id", "b.band", "b.band_hash")
@@ -264,26 +264,18 @@ def minhash_lsh_buckets(
     )
 
 
-def oversize_lsh_buckets(
-    documents: DataFrame,
-    max_bucket_size: int,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_words: int = DEFAULT_SHINGLE_WORDS,
-) -> DataFrame:
+def oversize_lsh_buckets(documents: DataFrame, max_bucket_size: int) -> DataFrame:
     """(bucket, count) band-buckets that ``ngram_jaccard_pairs`` (and so
     ``near_dup_clusters``) skips at the same cap — run/log this before
     a capped dedup pass. Same band table as the pairs, shingle-less
     docs excluded, so the audit reports no bucket that pair generation
     never creates."""
-    sigs = _shingled_signatures(documents, num_hashes, shingle_words)
-    return wide_buckets(_band_table(sigs, num_hashes), max_bucket_size)
+    return wide_buckets(_band_table(_shingled_signatures(documents)), max_bucket_size)
 
 
 def ngram_jaccard_pairs(
     documents: DataFrame,
     threshold: float = 0.0,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_words: int = DEFAULT_SHINGLE_WORDS,
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for LSH candidate pairs only.
@@ -321,10 +313,10 @@ def ngram_jaccard_pairs(
     5.0 s → 2.45 s at sf0.1; the checkpointed feature table also drops
     the raw-string column entirely).
     """
-    sets = shingle_table(documents, "text", shingle_words).select(
+    sets = shingle_table(documents).select(
         "doc_id", F.array_distinct("sh").alias("sset")
     )
-    digests, mins = _minhash_columns("sset", num_hashes)
+    digests, mins = _minhash_columns("sset", NUM_HASHES)
     digs = sets.select("doc_id", "sset", *digests)
     # hashed shingle set for the verify stage: top 60 bits of the d=0
     # digest (md5 of distinct inputs → distinct outputs w.h.p.; the
@@ -340,9 +332,7 @@ def ngram_jaccard_pairs(
 
     # NULL signatures (shingle-less docs) are filtered AFTER the
     # checkpoint, where the filter cannot inline the signature pipeline
-    bands = _band_table(
-        combined.where(F.col("minhash_0").isNotNull()), num_hashes
-    )
+    bands = _band_table(combined.where(F.col("minhash_0").isNotNull()))
     pairs = _band_pairs(bands, max_bucket_size)
     sets_df = combined.select("doc_id", "hset")
     return (
@@ -371,13 +361,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def near_dup_clusters(
-    documents: DataFrame,
-    threshold: float = 0.4,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_words: int = DEFAULT_SHINGLE_WORDS,
-    max_iter: int = 20,
-) -> DataFrame:
+def near_dup_clusters(documents: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Connected components over near-dup pairs → canonical doc per
     cluster: (doc_id, cluster_id, cluster_size, is_canonical).
 
@@ -399,7 +383,7 @@ def near_dup_clusters(
     near-dup subgraph (∝ duplicate mass), not the corpus; singletons
     rejoin via one final left join.
     """
-    pairs = ngram_jaccard_pairs(documents, threshold, num_hashes, shingle_words)
+    pairs = ngram_jaccard_pairs(documents, threshold)
     # both directions from ONE pass over the pairs subtree: a
     # union(pairs, pairs.reversed) plans the band-join + verify-join
     # chain TWICE (no CSE across union branches); the explode keeps a
@@ -418,7 +402,7 @@ def near_dup_clusters(
         edges.select(F.col("src").alias("doc_id")).distinct()
         .withColumn("cluster_id", F.col("doc_id"))
     )
-    for _ in range(max_iter):
+    for _ in range(CLUSTER_MAX_ITER):
         neighbor_min = (
             edges.join(labels, edges["src"] == labels["doc_id"])
             .groupBy("dst")
@@ -468,12 +452,7 @@ def near_dup_clusters(
     )
 
 
-def remove_duplicate_spans(
-    documents: DataFrame,
-    span_words: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def remove_duplicate_spans(documents: DataFrame, span_words: int = 3) -> DataFrame:
     """C4-style span-level corpus dedup: chunk every document into
     consecutive ``span_words``-word spans, keep only the FIRST
     occurrence of each span corpus-wide (first = lowest (doc_id, pos)),
@@ -518,21 +497,21 @@ def remove_duplicate_spans(
     # (one phantom '' span) — without the guard every empty doc would
     # contend corpus-wide for the '' span and skew the audit counts
     # (round-3 ADVICE); an empty doc has n_spans = 0.
-    staged = documents.where(F.length(F.col(text_col)) > 0).select(
-        id_col, F.split(F.col(text_col), " ").alias("_w")
-    ).select(id_col, F.explode(span_structs).alias("s"))
-    spans = staged.select(id_col, F.col("s.pos").alias("pos"), F.col("s.span").alias("span"))
+    staged = documents.where(F.length(F.col("text")) > 0).select(
+        "doc_id", F.split(F.col("text"), " ").alias("_w")
+    ).select("doc_id", F.explode(span_structs).alias("s"))
+    spans = staged.select("doc_id", F.col("s.pos").alias("pos"), F.col("s.span").alias("span"))
     # winner per span = lowest (doc_id, pos); struct-min combines
     # map-side, and the winner rows are themselves the kept occurrences
     kept = (
         spans.groupBy("span")
-        .agg(F.min(F.struct(id_col, "pos")).alias("w"))
+        .agg(F.min(F.struct("doc_id", "pos")).alias("w"))
         .select(
-            F.col(f"w.{id_col}").alias(id_col),
+            F.col("w.doc_id").alias("doc_id"),
             F.col("w.pos").alias("pos"),
             "span",
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("int").alias("n_kept"),
             F.concat_ws(
@@ -547,16 +526,16 @@ def remove_duplicate_spans(
         )
     )
     totals = documents.select(
-        id_col,
+        "doc_id",
         F.when(
-            F.length(F.col(text_col)) > 0,
-            F.ceil(F.size(F.split(F.col(text_col), " ")) / F.lit(span_words)),
+            F.length(F.col("text")) > 0,
+            F.ceil(F.size(F.split(F.col("text"), " ")) / F.lit(span_words)),
         ).otherwise(F.lit(0)).cast("int").alias("n_spans"),
     )
     return (
-        totals.join(kept, id_col, "left")
+        totals.join(kept, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("clean_text", F.lit("")).alias("clean_text"),
             "n_spans",
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
@@ -566,12 +545,7 @@ def remove_duplicate_spans(
     )
 
 
-def incremental_dedup(
-    new_docs: DataFrame,
-    old_docs: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_words: int = DEFAULT_SHINGLE_WORDS,
-) -> DataFrame:
+def incremental_dedup(new_docs: DataFrame, old_docs: DataFrame) -> DataFrame:
     """Cross-snapshot dedup — the shape every recurring crawl runs:
     flag each NEW-snapshot doc against the EXISTING corpus without ever
     re-deduping the old corpus against itself.
@@ -595,12 +569,10 @@ def incremental_dedup(
         .select("doc_id", (F.col("_hit").isNotNull()).alias("exact_dup"))
     )
 
-    new_sigs = _shingled_signatures(new_docs, num_hashes, shingle_words)
-    old_sigs = _shingled_signatures(old_docs, num_hashes, shingle_words)
     near = (
-        _band_table(new_sigs, num_hashes)
+        _band_table(_shingled_signatures(new_docs))
         .join(
-            _band_table(old_sigs, num_hashes).select(
+            _band_table(_shingled_signatures(old_docs)).select(
                 F.col("bucket"), F.col("doc_id").alias("old_id")
             ),
             "bucket",
@@ -646,23 +618,12 @@ def simhash_sql_expr(word_expr: str, bits: int = 16) -> str:
     return bits_sum  # to be used inside: SELECT doc_id, <this> FROM ... exploded words w
 
 
-def simhash(documents: DataFrame, bits: int = 16) -> DataFrame:
-    """Spark-side simhash via the same arithmetic (JVM expressions).
-
-    ``bits=64`` is the production width (two's-complement MSB, signed
-    BIGINT); smaller widths keep the identical plan shape. One width =
-    the single-width projection of :func:`simhash_multi` (one source of
-    truth for the nibble/vote/weight arithmetic)."""
-    return simhash_multi(documents, (bits,)).withColumnRenamed(
-        f"simhash{bits}", "simhash"
-    )
-
-
 def simhash_multi(
     documents: DataFrame, widths: tuple[int, ...] = (16, 64)
 ) -> DataFrame:
     """Simhash fingerprints at several widths in ONE pass/shuffle:
-    (doc_id, simhash16, simhash64, ...).
+    (doc_id, simhash16, simhash64, ...). Width 64 is the production
+    width (two's-complement MSB, signed BIGINT).
 
     Bit position b is the same nibble test at every width (hex char
     b//4+1 of md5(word)), only the weights differ — so the per-doc
@@ -705,22 +666,19 @@ def simhash_multi(
 
 
 def simhash_near_dup_pairs(
-    documents: DataFrame,
-    bits: int = 64,
-    n_bands: int = 4,
-    max_hamming: int = 8,
-    max_bucket_size: int | None = 10_000,
+    documents: DataFrame, max_bucket_size: int | None = 10_000
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) — simhash near-dup pairs.
 
     The classic two-stage shape (Manku et al., WWW'07 pattern): band
-    the ``bits``-wide fingerprint into ``n_bands`` chunks, bucket-join
-    docs sharing any chunk (a pair within Hamming distance d < n_bands
-    shares ≥1 exact band by pigeonhole when d < n_bands), then filter
-    candidates by exact Hamming distance via bit_count(xor). Never
-    all-pairs; bucket width capped like the minhash band join.
+    the ``SIMHASH_BITS``-wide fingerprint into ``SIMHASH_BANDS`` chunks,
+    bucket-join docs sharing any chunk (a pair within Hamming distance
+    d < SIMHASH_BANDS shares ≥1 exact band by pigeonhole), then keep
+    candidates within ``SIMHASH_MAX_HAMMING`` by exact Hamming distance
+    via bit_count(xor). Never all-pairs; bucket width capped like the
+    minhash band join.
     """
-    band_width = bits // n_bands
+    band_width = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_width) - 1
     # Materialize the fingerprint table ONCE (1 row/doc): it feeds the
     # bucket-cap aggregation and BOTH sides of the band self-join —
@@ -729,7 +687,9 @@ def simhash_near_dup_pairs(
     # ~2.4× the whole query at sf0.1). Same persist-the-feature-table
     # layout as ngram_jaccard_pairs; at 10^12 docs the fingerprint
     # table is written to storage once per snapshot.
-    sh = simhash(documents, bits).localCheckpoint()
+    sh = simhash_multi(documents, (SIMHASH_BITS,)).withColumnRenamed(
+        f"simhash{SIMHASH_BITS}", "simhash"
+    ).localCheckpoint()
     # (x >> s) & mask is shift-mode agnostic (mask strips sign-extension)
     bands = sh.select(
         "doc_id", "simhash",
@@ -738,7 +698,7 @@ def simhash_near_dup_pairs(
                 ":", F.lit(str(i)),
                 F.shiftright("simhash", i * band_width).bitwiseAND(F.lit(mask)),
             )
-            for i in range(n_bands)
+            for i in range(SIMHASH_BANDS)
         ])).alias("bucket"),
     )
     pairs = _band_pairs(bands, max_bucket_size, carry=("simhash",))
@@ -747,6 +707,6 @@ def simhash_near_dup_pairs(
             "hamming",
             F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )

@@ -246,11 +246,7 @@ _OUTLINKS_ARROW_SCHEMA = pa.schema(
 )
 
 
-def collect_outlinks(
-    html: str | bytes,
-    url: str | None,
-    resolve_paths: bool = True,
-) -> list[tuple[int, str, str]]:
+def collect_outlinks(html: str | bytes, url: str | None) -> list[tuple[int, str, str]]:
     """All <a href> links of a page as (pos, resolved_href, anchor_text).
 
     Resolution mirrors the reference's attribute semantics exactly
@@ -309,7 +305,7 @@ def collect_outlinks(
             if v:
                 cur_href = (
                     v if RE_PROTOCOL.match(v)
-                    else convert_links(v, info, resolve_paths)
+                    else convert_links(v, info, True)
                 )
         elif op == TEXT and in_a:
             cur_text.append(e[1])

@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over the embeddings table (vec_id, embedding
+array<float>).
 
 * ``brute_force_topk`` — exact cosine top-k against a query vector:
   the dot product runs as JVM ``aggregate``/``zip_with`` expressions
@@ -21,6 +22,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import drop_wide_buckets, wide_buckets
+
+HYPERPLANE_SEED = 42
+# hyperplanes of the near-dup bucket join, shared with its audit
+NEAR_DUP_N_PLANES = 8
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -87,8 +92,6 @@ def brute_force_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, cosine) — exact top-k, deterministic tiebreak on id:
     cosine rounded to 6 places, ranked (cosine desc, id). The ranked
@@ -96,17 +99,17 @@ def brute_force_topk(
     q = [float(v) for v in query_vec]
     return (
         embeddings.select(
-            F.col(id_col),
-            F.round(cosine_lit(F.col(vec_col), q), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine_lit(F.col("embedding"), q), 6).alias("cosine"),
         )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes (LCG; no numpy RNG state)."""
-    state = seed & 0x7FFFFFFF
+    state = HYPERPLANE_SEED & 0x7FFFFFFF
     planes: list[list[float]] = []
     for _ in range(n_planes):
         row = []
@@ -118,29 +121,22 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket_ids(
-    embeddings: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def lsh_bucket_ids(embeddings: DataFrame, dim: int, n_planes: int) -> DataFrame:
     """Adds a ``bucket`` column: sign-bit signature against seeded planes."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     bucket: Column = F.lit(0)
     for i, plane in enumerate(planes):
         p = F.array(*[F.lit(v) for v in plane])
-        bit = F.when(_dot(F.col(vec_col), p) >= 0, 1).otherwise(0)
+        bit = F.when(_dot(F.col("embedding"), p) >= 0, 1).otherwise(0)
         bucket = bucket + bit * (1 << i)
     return embeddings.withColumn("bucket", bucket.cast("int"))
 
 
-def query_bucket(query_vec: list[float], dim: int, n_planes: int = 8,
-                 seed: int = 42) -> int:
+def query_bucket(query_vec: list[float], dim: int, n_planes: int) -> int:
     """Driver-side LSH bucket of a query vector (same planes as
     ``lsh_bucket_ids``; left-to-right float sum matches the JVM/DuckDB
     ``aggregate``/``list_dot_product`` evaluation order)."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     qbucket = 0
     for i, plane in enumerate(planes):
         dot = sum(float(a) * b for a, b in zip(query_vec, plane))
@@ -171,29 +167,24 @@ def lsh_bucket_topk(
     dim: int,
     k: int = 10,
     n_planes: int = 8,
-    seed: int = 42,
     probe_radius: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: rank only within the query's LSH bucket(s).
 
     At 10^12 rows the bucketed table is partitioned by ``bucket`` so
     the IN-list prunes to ``len(probes)`` partitions; the scan touches
     ~(probes / 2^n_planes) of the corpus."""
-    qbucket = query_bucket(query_vec, dim, n_planes, seed)
+    qbucket = query_bucket(query_vec, dim, n_planes)
     probes = probe_buckets(qbucket, n_planes, probe_radius)
-    bucketed = lsh_bucket_ids(embeddings, dim, n_planes, seed, vec_col)
+    bucketed = lsh_bucket_ids(embeddings, dim, n_planes)
     return brute_force_topk(
-        bucketed.where(F.col("bucket").isin(probes)),
-        query_vec, k, id_col, vec_col,
+        bucketed.where(F.col("bucket").isin(probes)), query_vec, k
     )
 
 
 def ivf_assign(
     embeddings: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF coarse quantization: adds ``list_id`` = argmax cosine over
     the centroid table (JVM struct-max, no UDF). The row's norm is
@@ -206,11 +197,11 @@ def ivf_assign(
     norm_col = "_vnorm"
     while norm_col in embeddings.columns:
         norm_col = "_" + norm_col
-    staged = embeddings.withColumn(norm_col, _norm(F.col(vec_col)))
+    staged = embeddings.withColumn(norm_col, _norm(F.col("embedding")))
     structs = []
     for i, c in enumerate(centroids):
         sim = cosine_lit(
-            F.col(vec_col), [float(v) for v in c], a_norm=F.col(norm_col)
+            F.col("embedding"), [float(v) for v in c], a_norm=F.col(norm_col)
         )
         structs.append(
             F.struct(
@@ -225,8 +216,6 @@ def ivf_assign(
 def train_centroids_deterministic(
     embeddings: DataFrame,
     n_lists: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_iter: int = 1,
 ) -> list[list[float]]:
     """Deterministic coarse quantizer: ``n_iter`` Lloyd steps from
@@ -237,17 +226,17 @@ def train_centroids_deterministic(
     centroid count is stable across steps and engines)."""
     cur = [
         [float(v) for v in r[0]]
-        for r in embeddings.orderBy(id_col).select(vec_col).head(n_lists)
+        for r in embeddings.orderBy("vec_id").select("embedding").head(n_lists)
     ]
     if not cur:
         raise ValueError("IVF training requires a non-empty embeddings table")
     dim = len(cur[0])
     avg_cols = [
-        F.avg(F.element_at(F.col(vec_col), i + 1).cast("double")).alias(f"c{i}")
+        F.avg(F.element_at(F.col("embedding"), i + 1).cast("double")).alias(f"c{i}")
         for i in range(dim)
     ]
     for _ in range(n_iter):
-        assigned = ivf_assign(embeddings, cur, vec_col)
+        assigned = ivf_assign(embeddings, cur)
         rows = assigned.groupBy("list_id").agg(*avg_cols).collect()
         by_list = {r["list_id"]: [r[f"c{i}"] for i in range(dim)] for r in rows}
         cur = [by_list.get(i, cur[i]) for i in range(len(cur))]
@@ -258,8 +247,6 @@ def build_ivf_index(
     embeddings: DataFrame,
     n_lists: int = 8,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[list[list[float]], DataFrame]:
     """OFFLINE index build — the expensive half of the IVF split
     (round-2 VERDICT item 1): trains centroids (``n_iter`` Lloyd
@@ -270,10 +257,8 @@ def build_ivf_index(
     ``assigned.write.partitionBy("list_id").parquet(...)`` so
     ``ivf_search`` gets partition pruning on the probe filter.
     """
-    centroids = train_centroids_deterministic(
-        embeddings, n_lists, id_col, vec_col, n_iter=n_iter
-    )
-    assigned = ivf_assign(embeddings, centroids, vec_col).localCheckpoint()
+    centroids = train_centroids_deterministic(embeddings, n_lists, n_iter)
+    assigned = ivf_assign(embeddings, centroids).localCheckpoint()
     return centroids, assigned
 
 
@@ -297,8 +282,6 @@ def ivf_search(
     query_vec: list[float],
     n_probe: int = 2,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """QUERY-TIME half of the IVF split: picks the ``n_probe`` nearest
     centroids driver-side (tiny loop over the broadcast centroid list),
@@ -308,8 +291,7 @@ def ivf_search(
     table is stored partitioned by ``list_id``)."""
     probes = _probe_order(query_vec, centroids)[:n_probe]
     return brute_force_topk(
-        assigned.where(F.col("list_id").isin(probes)),
-        query_vec, k, id_col, vec_col,
+        assigned.where(F.col("list_id").isin(probes)), query_vec, k
     )
 
 
@@ -319,8 +301,6 @@ def ivf_search_panel(
     queries: dict[int, list[float]],
     probe_levels: tuple[int, ...] = (1, 2, 4),
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Batched IVF search: a panel of queries × probe levels in ONE
     scan of the assignment table (round-4 VERDICT item 1 — the
@@ -364,23 +344,23 @@ def ivf_search_panel(
         .select(
             "query_id",
             "probe_levels",
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("qv")), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("cosine"),
         )
         .select(
             "query_id",
             F.explode("probe_levels").alias("n_probe"),
-            id_col,
+            "vec_id",
             "cosine",
         )
     )
     w = Window.partitionBy("query_id", "n_probe").orderBy(
-        F.col("cosine").desc(), F.col(id_col)
+        F.col("cosine").desc(), F.col("vec_id")
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
-        .select("query_id", "n_probe", id_col, "cosine")
+        .select("query_id", "n_probe", "vec_id", "cosine")
     )
 
 
@@ -390,8 +370,6 @@ def ivf_topk(
     n_lists: int = 8,
     n_probe: int = 2,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """One-shot train+assign+search (everything at query time) — keep
     for ad-hoc exploration; production queries should run against a
@@ -401,19 +379,15 @@ def ivf_topk(
     measured as a wash at sf0.1 — the wall is assignment compute and
     job overhead, not the re-scans — and would be wrong at corpus
     scale, so the one-shot path deliberately stays scan-per-job.)"""
-    centroids = train_centroids_deterministic(embeddings, n_lists, id_col, vec_col)
-    assigned = ivf_assign(embeddings, centroids, vec_col)
-    return ivf_search(assigned, centroids, query_vec, n_probe, k, id_col, vec_col)
+    centroids = train_centroids_deterministic(embeddings, n_lists)
+    assigned = ivf_assign(embeddings, centroids)
+    return ivf_search(assigned, centroids, query_vec, n_probe, k)
 
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
     dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """Cosine near-dup pairs within LSH buckets: (id_a, id_b, cosine).
@@ -426,17 +400,17 @@ def embedding_near_dup_pairs(
 
     The bucketed table is materialized once: it feeds the cap
     aggregation and BOTH sides of the self-join, and the bucket column
-    costs ``n_planes`` 64-dim dot products per row (interpreted
+    costs ``NEAR_DUP_N_PLANES`` 64-dim dot products per row (interpreted
     higher-order functions) — 3× recomputation was most of this
     operator's wall. Same persist-the-feature-table layout as the
     minhash/simhash pair generators."""
-    b = lsh_bucket_ids(embeddings, dim, n_planes, seed, vec_col).localCheckpoint()
+    b = lsh_bucket_ids(embeddings, dim, NEAR_DUP_N_PLANES).localCheckpoint()
     b = drop_wide_buckets(b, max_bucket_size)
     left = b.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"), "bucket"
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"), "bucket"
     )
     right = b.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"), "bucket"
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"), "bucket"
     )
     return (
         left.join(right, "bucket")
@@ -451,42 +425,36 @@ def oversize_buckets(
     embeddings: DataFrame,
     max_bucket_size: int,
     dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(bucket, count) rows that ``embedding_near_dup_pairs`` will skip
     at the same cap — the audit/logging side of the no-silent-caps rule."""
-    b = lsh_bucket_ids(embeddings, dim, n_planes, seed, vec_col)
+    b = lsh_bucket_ids(embeddings, dim, NEAR_DUP_N_PLANES)
     return wide_buckets(b, max_bucket_size)
 
 
 # ---- DuckDB-oracle SQL helpers (mirror the exact Spark arithmetic) ----
 
-def hyperplanes_sql_literals(dim: int, n_planes: int, seed: int = 42) -> list[str]:
+def hyperplanes_sql_literals(dim: int, n_planes: int) -> list[str]:
     """The seeded hyperplanes as DuckDB DOUBLE[] literals (full repr
     precision, so both engines compare the same doubles)."""
     return [
         "[" + ", ".join(repr(v) for v in plane) + "]"
-        for plane in _hyperplanes(dim, n_planes, seed)
+        for plane in _hyperplanes(dim, n_planes)
     ]
 
 
-def bucket_sql_expr(vec_expr: str, dim: int, n_planes: int, seed: int = 42) -> str:
+def bucket_sql_expr(vec_expr: str, dim: int, n_planes: int) -> str:
     """DuckDB expression computing the same LSH bucket as
     ``lsh_bucket_ids`` for a DOUBLE[]-typed ``vec_expr``."""
     terms = [
         f"(CASE WHEN list_dot_product({vec_expr}, {lit}) >= 0"
         f" THEN {1 << i} ELSE 0 END)"
-        for i, lit in enumerate(hyperplanes_sql_literals(dim, n_planes, seed))
+        for i, lit in enumerate(hyperplanes_sql_literals(dim, n_planes))
     ]
     return "(" + " + ".join(terms) + ")"
 
 
-def embedding_cluster_stats(
-    assigned: DataFrame,
-    id_col: str = "vec_id",
-) -> DataFrame:
+def embedding_cluster_stats(assigned: DataFrame) -> DataFrame:
     """(list_id, n_vecs, min_vec_id, max_vec_id) — cluster occupancy
     rollup over a prebuilt IVF assignment (``build_ivf_index``'s
     ``assigned`` output). The balance audit an ANN deployment runs
@@ -500,8 +468,8 @@ def embedding_cluster_stats(
         assigned.groupBy("list_id")
         .agg(
             F.count("*").cast("bigint").alias("n_vecs"),
-            F.min(id_col).alias("min_vec_id"),
-            F.max(id_col).alias("max_vec_id"),
+            F.min("vec_id").alias("min_vec_id"),
+            F.max("vec_id").alias("max_vec_id"),
         )
         .orderBy("list_id")
     )

@@ -26,9 +26,22 @@ STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
+def token_count() -> Column:
+    """BPE-ish token count of ``text`` (``TOKEN_RE`` matches)."""
+    return F.regexp_count(F.col("text"), F.lit(TOKEN_RE))
+
+
 def _marker_hits(words: Column, markers: tuple[str, ...]) -> Column:
     arr = F.array(*[F.lit(m) for m in markers])
     return F.size(F.array_intersect(F.array_distinct(words), arr))
+
+
+def _mean_word_len(words: Column) -> Column:
+    """Mean length of the ``words`` split from ``text``, by the
+    separator identity (chars - (words-1)) / words: exact for
+    single-space-separated text, and the arithmetic the oracle runs."""
+    n_words = F.size(words)
+    return (F.length("text") - (n_words - 1)) / n_words
 
 
 def language_id(documents: DataFrame) -> DataFrame:
@@ -64,12 +77,9 @@ def quality_stats(documents: DataFrame) -> DataFrame:
     """
     words = F.split("text", " ")
     n_words = F.size(words)
-    n_chars = F.length("text")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w)))
     n_digit_words = F.size(F.filter(words, lambda w: w.rlike("^[0-9]+$")))
-    n_tokens = F.regexp_count(F.col("text"), F.lit(TOKEN_RE))
-    avg_word_len = (n_chars - (n_words - 1)) / n_words
 
     stopword_ratio = F.round(n_stop / n_words, 6)
     digit_ratio = F.round(n_digit_words / n_words, 6)
@@ -82,8 +92,8 @@ def quality_stats(documents: DataFrame) -> DataFrame:
     return documents.select(
         "doc_id",
         n_words.cast("bigint").alias("n_words"),
-        n_tokens.cast("bigint").alias("n_tokens"),
-        F.round(avg_word_len, 6).alias("avg_word_len"),
+        token_count().cast("bigint").alias("n_tokens"),
+        F.round(_mean_word_len(words), 6).alias("avg_word_len"),
         stopword_ratio.alias("stopword_ratio"),
         digit_ratio.alias("digit_ratio"),
         quality.alias("quality_score"),
@@ -103,7 +113,7 @@ def fingerprints(documents: DataFrame) -> DataFrame:
     )
 
 
-def corpus_profile(documents: DataFrame, size_col: str = "n_chars") -> DataFrame:
+def corpus_profile(documents: DataFrame) -> DataFrame:
     """Distribution profile per language: (lang, n_docs, n_sources,
     total_chars, avg_chars, total_words, median_chars, p90_chars) —
     the corpus rollup + length-distribution behind curation thresholds
@@ -125,8 +135,8 @@ def corpus_profile(documents: DataFrame, size_col: str = "n_chars") -> DataFrame
             F.sum(F.length("text")).alias("total_chars"),
             F.round(F.avg(F.length("text")), 6).alias("avg_chars"),
             F.sum(F.size(words)).cast("bigint").alias("total_words"),
-            F.round(F.percentile(size_col, 0.5), 6).alias("median_chars"),
-            F.round(F.percentile(size_col, 0.9), 6).alias("p90_chars"),
+            F.round(F.percentile("n_chars", 0.5), 6).alias("median_chars"),
+            F.round(F.percentile("n_chars", 0.9), 6).alias("p90_chars"),
         )
         .orderBy("lang")
     )
@@ -179,7 +189,7 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     words = F.split("text", " ")
     # explode_outer + null filter: see shingle_table
     exploded = (
-        shingle_table(documents, "text", 2)
+        shingle_table(documents, 2)
         .select("doc_id", F.explode_outer("sh").alias("bigram"))
         .where(F.col("bigram").isNotNull())
     )
@@ -289,15 +299,12 @@ def gopher_quality_flags(documents: DataFrame) -> DataFrame:
     rides the same scan as extraction output). All JVM expressions, no
     UDFs; every term is replicated verbatim in the DuckDB oracle.
 
-    mean_word_len uses the separator identity (chars - (words-1)) /
-    words — exact for single-space-separated text, and the same
-    arithmetic the oracle runs, so engines agree to the bit.
+    mean_word_len is ``quality_stats``' avg_word_len (one shared
+    expression), so engines agree to the bit.
     """
     words = F.split("text", " ")
     n_words = F.size(words)
-    mean_word_len = F.round(
-        (F.length("text") - (n_words - 1)) / n_words, 6
-    )
+    mean_word_len = F.round(_mean_word_len(words), 6)
     # Gopher's rule is "contains at least one ALPHABETIC character" —
     # Unicode \p{L}, not an ASCII class: uppercase-only words (NASA, I)
     # and non-Latin scripts (Cyrillic, Greek, CJK) are alphabetic and
@@ -307,8 +314,7 @@ def gopher_quality_flags(documents: DataFrame) -> DataFrame:
     alpha_ratio = F.round(
         F.size(F.filter(words, lambda w: w.rlike("\\p{L}"))) / n_words, 6
     )
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.array_intersect(F.array_distinct(words), stop_arr))
+    n_stop = _marker_hits(words, STOPWORDS)
     ok_n_words = (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS)
     ok_word_len = (mean_word_len >= GOPHER_MIN_WORD_LEN) & (
         mean_word_len <= GOPHER_MAX_WORD_LEN

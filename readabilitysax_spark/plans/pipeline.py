@@ -34,8 +34,6 @@ a few TB; everything else is unchanged.
 
 from __future__ import annotations
 
-import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..operators.extract import extract_articles
 from ..operators.metrics import partition_metrics
-from ..sources.pages import spread_small_scan
+from ..sources.pages import hadoop_fs, spread_small_scan
 
 _STAGE_MARKER = "_STAGED_OK"
 
@@ -121,13 +119,16 @@ def stage_bucketed_pages(
     (catches shape changes, not content changes — callers that mutate
     content between resumes must pass a real token).
     """
-    marker = os.path.join(staging_dir, _STAGE_MARKER)
+    fs, marker = hadoop_fs(spark, f"{staging_dir}/{_STAGE_MARKER}")
     token = input_token or f"schema:{pages.schema.simpleString()}"
     want = f"n_buckets={n_buckets}\ninput={token}"
     staged_ok = False
-    if os.path.exists(marker):
-        with open(marker, encoding="utf-8") as f:
-            staged_ok = f.read().strip() == want
+    if fs.exists(marker):
+        stream = fs.open(marker)
+        try:
+            staged_ok = stream.readAllBytes().decode("utf-8").strip() == want
+        finally:
+            stream.close()
     if not staged_ok:
         (
             pages.withColumn("bucket", _bucket_col(n_buckets))
@@ -140,8 +141,11 @@ def stage_bucketed_pages(
             .partitionBy("bucket")
             .parquet(staging_dir)
         )
-        with open(marker, "w", encoding="utf-8") as f:
-            f.write(want)
+        stream = fs.create(marker, True)
+        try:
+            stream.write(bytearray(want.encode("utf-8")))
+        finally:
+            stream.close()
     return spark.read.parquet(staging_dir)
 
 
@@ -163,10 +167,10 @@ def run_pipeline(
     restages instead of reading stale staged pages.
     """
     run_id = run_id or f"run-{int(time.time())}"
-    articles_dir = os.path.join(output_dir, "articles")
-    metrics_dir = os.path.join(output_dir, "metrics")
-    checkpoint_dir = os.path.join(output_dir, "checkpoints")
-    staging_dir = os.path.join(output_dir, "staged_pages")
+    articles_dir = f"{output_dir}/articles"
+    metrics_dir = f"{output_dir}/metrics"
+    checkpoint_dir = f"{output_dir}/checkpoints"
+    staging_dir = f"{output_dir}/staged_pages"
 
     committed = load_committed_buckets(spark, checkpoint_dir, articles_dir)
     todo = [b for b in range(n_buckets) if b not in committed]
@@ -252,9 +256,10 @@ def run_pipeline(
         # every bucket committed: the staging copy is dead weight now
         # (resume will skip all buckets without touching it) — GC it.
         # Runs on all-skipped resumes too, so a crash BETWEEN the last
-        # checkpoint commit and this rmtree still gets cleaned up by
-        # the next invocation (rmtree on a missing dir is a no-op).
-        shutil.rmtree(staging_dir, ignore_errors=True)
+        # checkpoint commit and this delete still gets cleaned up by
+        # the next invocation (deleting a missing dir is a no-op).
+        fs, staging = hadoop_fs(spark, staging_dir)
+        fs.delete(staging, True)
 
     return {
         "run_id": run_id,

@@ -88,20 +88,22 @@ def synthesize_pages(documents: DataFrame) -> DataFrame:
 _SPLIT_COUNT_CACHE: dict[tuple, int] = {}
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` — a local path or any URI the
+    session's Hadoop configuration resolves (``file://``, object stores)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 def _layout_fingerprint(spark: SparkSession, df: DataFrame) -> tuple[int, int]:
     """(file count, newest modification time in ms) of ``df``'s input
     files: a path rewritten with another layout gets a new cache key."""
     files = df.inputFiles()
     if not files:
         return 0, 0
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(files[0]).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    newest = max(
-        fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(f)).getModificationTime()
-        for f in files
-    )
+    fs, _ = hadoop_fs(spark, files[0])
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    newest = max(fs.getFileStatus(path(f)).getModificationTime() for f in files)
     return len(files), newest
 
 
@@ -141,11 +143,16 @@ def spread_small_scan(
     return df
 
 
+def read_sf_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``<sf_dir>/<table>.parquet`` (documents, embeddings, events),
+    spread across the cores: a one-row-group file would pin every
+    CPU-bound stage downstream to one core (see ``spread_small_scan``)."""
+    path = f"{sf_dir}/{table}.parquet"
+    return spread_small_scan(spark, spark.read.parquet(path), cache_key=path)
+
+
 def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = f"{sf_dir}/documents.parquet"
-    return spread_small_scan(
-        spark, spark.read.parquet(path), cache_key=path
-    )
+    return read_sf_table(spark, sf_dir, "documents")
 
 
 def read_pages(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,14 +41,10 @@ def extract_articles_stream(pages_stream: DataFrame) -> DataFrame:
     return extract_articles(pages_stream, passthrough=("warc_ts", "lang"))
 
 
-def dedup_pages_stream(
-    pages_stream: DataFrame,
-    id_cols: tuple[str, ...] = ("url",),
-    event_time_col: str = "warc_ts",
-    watermark: str = "24 hours",
-) -> DataFrame:
-    """Ingest-side streaming dedup: re-crawled / re-delivered pages
-    within the watermark horizon are dropped exactly once.
+def dedup_pages_stream(pages_stream: DataFrame) -> DataFrame:
+    """Ingest-side streaming dedup: a page re-crawled / re-delivered
+    (same ``url``) within 24 hours of ``warc_ts`` is dropped exactly
+    once.
 
     ``dropDuplicatesWithinWatermark`` keeps per-key state only until
     the event-time watermark passes, so state is bounded by (crawl
@@ -57,8 +53,8 @@ def dedup_pages_stream(
     full-corpus dedup the batch operators (dedup.py) run downstream.
     """
     return pages_stream.withWatermark(
-        event_time_col, watermark
-    ).dropDuplicatesWithinWatermark(list(id_cols))
+        "warc_ts", "24 hours"
+    ).dropDuplicatesWithinWatermark(["url"])
 
 
 def windowed_lang_rollup(articles_stream: DataFrame) -> DataFrame:

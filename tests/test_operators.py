@@ -595,8 +595,7 @@ def test_all_doc_operators_survive_hostile_docs(spark):
         lambda: dedup.minhash_signatures(df),
         lambda: dedup.minhash_lsh_buckets(df),
         lambda: dedup.ngram_jaccard_pairs(df),
-        lambda: dedup.simhash(df, bits=16),
-        lambda: dedup.simhash(df, bits=64),
+        lambda: dedup.simhash_multi(df, widths=(16, 64)),
         lambda: dedup.simhash_near_dup_pairs(df),
         lambda: dedup.near_dup_clusters(df),
         lambda: textstats.language_id(df),

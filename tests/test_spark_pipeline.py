@@ -152,6 +152,20 @@ def test_manifestless_checkpoint_commits_nothing(spark, pages, tmp_path):
     assert r["buckets_done"] == 2 and r["buckets_skipped"] == 0
 
 
+def test_resume_on_uri_output_dir(spark, pages, tmp_path):
+    """The output dir may be a file:// URI, not only a local path: the
+    stage marker and the staging GC go through the session's Hadoop
+    FileSystem, so the run commits, collects its staging copy, and a
+    re-run skips every bucket."""
+    out = tmp_path / "out"
+    r1 = run_pipeline(spark, pages, out.as_uri(), run_id="a", n_buckets=2)
+    assert r1["buckets_done"] == 2
+    assert out.joinpath("articles").is_dir()
+    assert not out.joinpath("staged_pages").exists()
+    r2 = run_pipeline(spark, pages, out.as_uri(), run_id="b", n_buckets=2)
+    assert r2["buckets_done"] == 0 and r2["buckets_skipped"] == 2
+
+
 def test_per_bucket_read_is_pruned(spark, pages, tmp_path):
     """Round-3 VERDICT weak item: the resume loop must NOT rescan the
     full input once per bucket. The bucket column is staged once
