@@ -672,11 +672,18 @@ def simhash_near_dup_pairs(
 
     The classic two-stage shape (Manku et al., WWW'07 pattern): band
     the ``SIMHASH_BITS``-wide fingerprint into ``SIMHASH_BANDS`` chunks,
-    bucket-join docs sharing any chunk (a pair within Hamming distance
-    d < SIMHASH_BANDS shares ≥1 exact band by pigeonhole), then keep
-    candidates within ``SIMHASH_MAX_HAMMING`` by exact Hamming distance
-    via bit_count(xor). Never all-pairs; bucket width capped like the
+    bucket-join docs sharing any chunk, then keep candidates within
+    ``SIMHASH_MAX_HAMMING`` by exact Hamming distance via
+    bit_count(xor). Never all-pairs; bucket width capped like the
     minhash band join.
+
+    Contract: the output is exactly the pairs within
+    ``SIMHASH_MAX_HAMMING`` (8) that share at least one exact 16-bit
+    band (below the bucket cap). Recall is complete only up to Hamming
+    distance 3: a pair within d < ``SIMHASH_BANDS`` shares a band by
+    pigeonhole, while a pair at 4..8 is returned only when its differing
+    bits happen to leave one band equal. The DuckDB oracle bands the
+    same way.
     """
     band_width = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_width) - 1

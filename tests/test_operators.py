@@ -316,6 +316,61 @@ def test_simhash_bucket_cap_bounds_pair_join(spark):
     assert uncapped.count() == 20 * 19 / 2
 
 
+def test_simhash_pairs_recall_contract_by_brute_force(spark):
+    """Seeded families of edited documents, every pair checked in Python
+    against the fingerprints: all pairs within Hamming distance 3 come
+    back (pigeonhole over 4 bands), every returned pair is within 8 and
+    shares a 16-bit band, and a pair within 4..8 that shares no band
+    exists in the data and is not returned."""
+    import random
+
+    from readabilitysax_spark.operators.dedup import (
+        SIMHASH_BANDS,
+        SIMHASH_BITS,
+        SIMHASH_MAX_HAMMING,
+        simhash_multi,
+        simhash_near_dup_pairs,
+    )
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(300)]
+    rows = []
+    for family in range(40):
+        base = [rng.choice(vocab) for _ in range(40)]
+        rows.append((len(rows), " ".join(base)))
+        for edits in range(1, 7):
+            words = list(base)
+            for pos in rng.sample(range(len(words)), edits):
+                words[pos] = rng.choice(vocab)
+            rows.append((len(rows), " ".join(words)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    fp = {r.doc_id: r.simhash64
+          for r in simhash_multi(docs, (SIMHASH_BITS,)).collect()}
+    width = SIMHASH_BITS // SIMHASH_BANDS
+    mask = (1 << width) - 1
+
+    def distance(a, b):
+        return bin((fp[a] ^ fp[b]) & ((1 << SIMHASH_BITS) - 1)).count("1")
+
+    def shares_band(a, b):
+        return any((fp[a] >> (i * width)) & mask == (fp[b] >> (i * width)) & mask
+                   for i in range(SIMHASH_BANDS))
+
+    ids = sorted(fp)
+    pairs = [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
+    out = {(r.doc_a, r.doc_b): r.hamming
+           for r in simhash_near_dup_pairs(docs).collect()}
+    close = {p for p in pairs if distance(*p) < SIMHASH_BANDS}
+    missed = {p for p in pairs if SIMHASH_BANDS <= distance(*p) <= SIMHASH_MAX_HAMMING
+              and not shares_band(*p)}
+    assert close and close <= out.keys()
+    assert all(h == distance(*p) <= SIMHASH_MAX_HAMMING and shares_band(*p)
+               for p, h in out.items())
+    assert missed and not missed & out.keys()
+    assert out.keys() == {p for p in pairs if distance(*p) <= SIMHASH_MAX_HAMMING
+                          and shares_band(*p)}
+
+
 def test_lsh_bucket_cap_keeps_pairs_below_cap(spark):
     """The cap drops only the wide buckets: boilerplate docs above the
     cap vanish from the pairs and appear in the audit, while planted
