@@ -13,9 +13,9 @@ Scale rationale (100 TB / 1000-executor target, tested on local[N]):
   pyspark/py4j modules it imports from ``pyspark.zip``, which ships no
   bytecode, on every SparkContext (1.1-1.4 s of the worker warm-up on 4
   cores). When the daemon can import this package before any task runs,
-  it starts from the package's ``worker_daemon`` instead, which loads
-  that code from a per-user bytecode cache
-  (``zipimport_cache.install_bytecode_cache``).
+  it starts from the package's ``worker_daemon`` instead, which imports
+  pyspark and py4j from the installed packages when their source matches
+  the zips', using the bytecode already compiled there.
 """
 
 from __future__ import annotations
@@ -93,9 +93,9 @@ def build_session(
 def _warm_batches(batches):
     # runs in the Python worker: importing this module pulls in pyspark
     # + the core extraction stack (the package import also installs
-    # zipimport_cache, which spares every later task of this worker the
-    # pyspark.zip re-reads), and one tiny extract() warms the
-    # tokenizer/entity regex caches — the per-worker one-time costs
+    # zipimport_cache, which spares every later task of this worker
+    # re-reads of the zips on its sys.path), and one tiny extract()
+    # warms the tokenizer/entity regex caches — the per-worker one-time costs
     # every later Arrow task would otherwise pay inside its own wall
     from readabilitysax_spark.core.api import extract
 
@@ -107,10 +107,10 @@ def _warm_batches(batches):
 def warm_python_workers(spark: SparkSession) -> None:
     """Start the Python daemon and warm its worker pool: one trivial
     mapInArrow task per core, so the daemon's start (its pyspark imports,
-    from the bytecode cache when ``build_session`` chose the package's
-    daemon), each worker's fork and the extraction stack's imports and
-    regex caches are paid at session init instead of inside the first
-    Arrow-stage query.
+    from the installed packages' bytecode when ``build_session`` chose
+    the package's daemon), each worker's fork and the extraction stack's
+    imports and regex caches are paid at session init instead of inside
+    the first Arrow-stage query.
 
     This is the same steady-state policy the bench's extraction and
     streaming sections already apply with their own pre-timed warm-up

@@ -10,7 +10,11 @@ it again only on the next lookup). A worker that imports pyspark from
 ``$SPARK_HOME/python/lib/pyspark.zip`` (1,328 entries) holds one importer
 per imported pyspark sub-package, so each task re-read that directory
 about 16 times (~11 ms each on a 4-core host) before its UDF saw the
-first row.
+first row. Workers of the package's ``worker_daemon`` import pyspark
+from the install instead when it holds the zip's source, but they still
+hold importers for the zips themselves, which stay on ``sys.path``; a
+package shipped as a zip (``spark-submit --py-files``) keeps the stock
+daemon and the 16 importers.
 
 ``install()`` runs when the package is imported, so every worker that
 unpickles one of the package's UDFs has it from its first task on. On
@@ -18,27 +22,12 @@ unpickles one of the package's UDFs has it from its first task on. On
 again only when its ``(st_mtime_ns, st_size)`` differs from the last
 read, and all importers of one archive share that read. If ``stat``
 fails, the original method runs. On any other version it does nothing.
-
-The same zip costs every Python daemon a second, larger fixed cost:
-it ships no bytecode, so each daemon Spark starts (one per
-SparkContext) compiles the 98 pyspark and py4j modules it imports from
-source, each twice (zipimport compiles a module to name its file, then
-again to run it): 1.1-1.4 s on a 4-core host. ``install_bytecode_cache()``,
-called by the package's daemon entry point ``worker_daemon``, keeps the
-code objects zipimport compiles in a per-user directory and loads them
-from there on the next start; the workers the daemon forks inherit it.
 """
 
 from __future__ import annotations
 
-import contextlib
-import hashlib
-import importlib.util
-import marshal
 import os
-import stat
 import sys
-import tempfile
 import zipimport
 
 # archive path -> ((st_mtime_ns, st_size) taken before the read, directory)
@@ -79,89 +68,3 @@ def install() -> None:
         if isinstance(finder, cls):
             finder.invalidate_caches()
 
-
-def _cache_dir() -> str | None:
-    """The bytecode cache directory, ``readabilitysax-spark-pyc-<uid>``
-    under ``tempfile.gettempdir()``, created if missing. None unless it
-    is a real directory (not a link) owned by this uid with mode 0700:
-    code is loaded from it, so no one else may write there."""
-    path = os.path.join(tempfile.gettempdir(),
-                        f"readabilitysax-spark-pyc-{os.getuid()}")
-    try:
-        os.mkdir(path, 0o700)
-    except FileExistsError:
-        pass
-    except OSError:
-        return None
-    try:
-        st = os.lstat(path)
-    except OSError:
-        return None
-    if (not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid()
-            or stat.S_IMODE(st.st_mode) != 0o700):
-        return None
-    return path
-
-
-def _seal(name: str, payload: bytes) -> bytes:
-    """The 32 bytes an entry starts with: they bind its code to its name."""
-    return hashlib.sha256(name.encode() + payload).digest()
-
-
-def _write_entry(path: str, blob: bytes) -> None:
-    """Write ``blob`` to ``path`` whole or not at all; errors are dropped
-    (the code was compiled, only the next start loses)."""
-    tmp = None
-    try:
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path))
-        with os.fdopen(fd, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, path)
-    except OSError:
-        if tmp is not None:
-            with contextlib.suppress(OSError):
-                os.unlink(tmp)
-
-
-def install_bytecode_cache() -> None:
-    """Wrap ``zipimport._compile_source(pathname, source)`` (once; later
-    calls are no-ops) to load code from, and store code in, ``_cache_dir()``.
-
-    An entry is named by the sha256 of the interpreter's magic number,
-    ``sys.flags.optimize``, ``pathname`` and the source bytes, so a
-    changed source, archive path or interpreter never finds a stale
-    entry. It holds the sha256 of its name and its marshalled code,
-    then that code: an entry that is truncated, corrupt or not its
-    name's is compiled again and rewritten. Without a usable cache
-    directory (or on a Python outside 3.8-3.13) nothing is installed.
-    """
-    if not (3, 8) <= sys.version_info[:2] <= (3, 13):
-        return
-    compile_source = zipimport._compile_source
-    if getattr(compile_source, "_bytecode_cached", False):
-        return
-    directory = _cache_dir()
-    if directory is None:
-        return
-    prefix = importlib.util.MAGIC_NUMBER + str(sys.flags.optimize).encode()
-
-    def cached_compile_source(pathname, source):
-        name = hashlib.sha256(b"\0".join(
-            (prefix, os.fsencode(pathname), source))).hexdigest()
-        path = os.path.join(directory, name)
-        try:
-            with open(path, "rb") as f:
-                blob = f.read()
-        except OSError:
-            blob = b""
-        payload = blob[32:]
-        if blob[:32] == _seal(name, payload):
-            return marshal.loads(payload)  # the bytes this function wrote
-        code = compile_source(pathname, source)
-        payload = marshal.dumps(code)
-        _write_entry(path, _seal(name, payload) + payload)
-        return code
-
-    cached_compile_source.__wrapped__ = compile_source
-    cached_compile_source._bytecode_cached = True
-    zipimport._compile_source = cached_compile_source

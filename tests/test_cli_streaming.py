@@ -68,7 +68,6 @@ def test_passthrough_columns(spark):
 def test_streaming_extraction(spark, tmp_path):
     from readabilitysax_spark.streaming.extract_stream import (
         run_stream_to_parquet,
-        windowed_lang_rollup,
     )
 
     in_dir = str(tmp_path / "in")
@@ -101,47 +100,5 @@ def test_streaming_extraction(spark, tmp_path):
     q2 = run_stream_to_parquet(spark, merged, out_dir, ck_dir)
     q2.awaitTermination(240)
     assert spark.read.parquet(out_dir).count() == n
-
-    # windowed rollup plan is valid on a streaming frame
-    from readabilitysax_spark.streaming.extract_stream import (
-        extract_articles_stream,
-        read_pages_stream,
-    )
-    rollup = windowed_lang_rollup(
-        extract_articles_stream(read_pages_stream(spark, merged)))
-    assert rollup.isStreaming
     pages.unpersist()
 
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Re-delivered pages are dropped exactly once with bounded state."""
-    from readabilitysax_spark.sources.pages import read_pages
-    from readabilitysax_spark.streaming.extract_stream import (
-        dedup_pages_stream,
-        read_pages_stream,
-    )
-
-    from .conftest import SF_TINY
-
-    src = str(tmp_path / "in")
-    pages = read_pages(spark, SF_TINY).limit(60)
-    # deliver the same 60 pages twice (two files, duplicate rows)
-    pages.coalesce(1).write.mode("append").parquet(src)
-    pages.coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    stream = dedup_pages_stream(read_pages_stream(spark, src))
-    q = (
-        stream.select("url", "warc_ts")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() == 60
-    assert got.select("url").distinct().count() == 60

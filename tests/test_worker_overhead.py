@@ -1,32 +1,31 @@
-"""Fixed costs of the Python workers around ``pyspark.zip``, which the
-daemon and its workers import pyspark from. Per task:
+"""Fixed costs of the Python workers around ``pyspark.zip`` and the py4j
+zip, which Spark puts first on the daemon's path. Per task:
 ``importlib.invalidate_caches()`` (run by pyspark at the start of every
-task) must not re-read an unchanged zip archive. Per daemon: modules
-compiled from a zip once are loaded from the bytecode cache the next
-time, and the workers fork from the package's daemon, which installs it.
-See ``readabilitysax_spark/zipimport_cache.py``."""
+task) must not re-read an unchanged zip archive
+(``readabilitysax_spark/zipimport_cache.py``). Per daemon: the workers
+fork from the package's daemon, which moves the zips behind the
+installed pyspark and py4j when those hold the same source, so nothing
+is compiled from a zip (``readabilitysax_spark/worker_daemon.py``)."""
 
 from __future__ import annotations
 
 import importlib
-import json
 import os
-import subprocess
 import sys
-import tempfile
 import zipfile
 import zipimport
 from collections import defaultdict
 
+import py4j
 import pyarrow as pa
+import pyspark
 import pytest
 
 from readabilitysax_spark import zipimport_cache
+from readabilitysax_spark.sources import session
+from readabilitysax_spark.worker_daemon import installed_first
 
 GUARDED = (3, 10) <= sys.version_info[:2] <= (3, 12)
-bytecode_cached = pytest.mark.skipif(
-    not (3, 8) <= sys.version_info[:2] <= (3, 13),
-    reason="no zip bytecode cache on this Python")
 
 
 def _count_reads(batches):
@@ -137,156 +136,90 @@ def test_install_is_a_noop_outside_3_10_to_3_12(monkeypatch):
 
 
 def _probe_daemon(batches):
-    """One row per task: its parent's command line, whether its zipimport
-    compiles through the bytecode cache, zip importers it holds."""
+    """One row per task: its parent's command line, the files its
+    pyspark and py4j come from, its ``sys.path``."""
+    import py4j
+    import pyspark
+
     for _ in batches:
         pass
     with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
         daemon = f.read().replace(b"\0", b" ").decode()
-    zips = sum(isinstance(f, zipimport.zipimporter)
-               for f in sys.path_importer_cache.values())
-    cached = getattr(zipimport._compile_source, "_bytecode_cached", False)
     yield pa.RecordBatch.from_pydict(
-        {"daemon": [daemon], "cached": [cached], "zips": [zips]})
+        {"daemon": [daemon], "pyspark": [pyspark.__file__],
+         "py4j": [py4j.__file__], "path": [sys.path]})
 
 
-@bytecode_cached
 def test_workers_fork_from_the_package_daemon(spark):
-    """The session's workers are forked by ``worker_daemon``, and compile
-    zip modules through the cache it installed: importing the package (as
-    this test process did) does not install it, so the workers inherited
-    it."""
-    assert not getattr(zipimport._compile_source, "_bytecode_cached", False)
+    """The session's workers are forked by ``worker_daemon`` and import
+    pyspark and py4j from the files this process imported, not from
+    Spark's zips, which stay on their path behind the install."""
     n = spark.sparkContext.defaultParallelism
     rows = spark.range(0, n, 1, n).mapInArrow(
-        _probe_daemon, "daemon string, cached boolean, zips long").collect()
-    if not all(r.zips for r in rows):
-        pytest.skip("workers import nothing from a zip archive")
+        _probe_daemon,
+        "daemon string, pyspark string, py4j string, path array<string>",
+    ).collect()
+    installed = os.path.dirname(os.path.dirname(pyspark.__file__))
     for r in rows:
         assert " -m readabilitysax_spark.worker_daemon " in r.daemon, r.daemon
-        assert r.cached
+        assert (r.pyspark, r.py4j) == (pyspark.__file__, py4j.__file__)
+        assert ".zip" not in r.pyspark + r.py4j
+        zips = [i for i, p in enumerate(r.path)
+                if os.path.basename(p) == "pyspark.zip"
+                or os.path.basename(p).startswith("py4j-")
+                and p.endswith("-src.zip")]
+        assert len(zips) == 2, r.path
+        assert r.path.index(installed) < min(zips), r.path
 
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-MODULES = {"bc_a.py": "bc_a", "bc_c.py": "bc_c",
-           "bc_pkg/__init__.py": "bc_pkg", "bc_pkg/b.py": "bc_pkg.b"}
-# counts zipimport's compiles, installs the cache over the counter,
-# imports MODULES from the archive in argv[1]
-_IMPORT = """
-import importlib, json, sys, zipimport
-compiled = []
-def counting(pathname, source, _compile=zipimport._compile_source):
-    compiled.append(pathname)
-    return _compile(pathname, source)
-zipimport._compile_source = counting
-from readabilitysax_spark import zipimport_cache
-zipimport_cache.install_bytecode_cache()
-sys.path.insert(0, sys.argv[1])
-names = [importlib.import_module(m).NAME for m in sys.argv[2:]]
-print(json.dumps({"compiled": len(compiled), "names": names}))
-"""
-
-
-def _import_fresh(archive, tmpdir):
-    """Import MODULES from ``archive`` in a new interpreter whose
-    ``tempfile.gettempdir()`` is ``tmpdir``: (zip compiles, NAMEs)."""
-    env = dict(os.environ, TMPDIR=str(tmpdir), PYTHONPATH=REPO)
-    out = subprocess.run(
-        [sys.executable, "-c", _IMPORT, archive, *MODULES.values()],
-        env=env, capture_output=True, text=True, check=True, cwd=tmpdir)
-    got = json.loads(out.stdout)
-    return got["compiled"], got["names"]
-
-
-def _write_modules(archive, **edits):
-    with zipfile.ZipFile(archive, "w") as zf:
-        for name in MODULES:
-            zf.writestr(name, edits.get(MODULES[name], f"NAME = {name!r}\n"))
+PACKAGE_FILES = {"pyspark/__init__.py": "VERSION = '1'\n",
+                 "pyspark/worker.py": "WORKER = 1\n",
+                 "py4j/__init__.py": "VERSION = '2'\n"}
 
 
 @pytest.fixture
-def modules_zip(tmp_path):
-    """(archive, TMPDIR of the subprocesses, their cache directory)."""
-    archive, tmpdir = str(tmp_path / "mods.zip"), tmp_path / "tmp"
-    tmpdir.mkdir()
-    _write_modules(archive)
-    return archive, tmpdir, tmpdir / f"readabilitysax-spark-pyc-{os.getuid()}"
+def spark_zips(tmp_path):
+    """(zip path, installed directory, the sys.path Spark gives the
+    daemon): a zip holding pyspark and py4j first, then the install."""
+    installed = tmp_path / "site-packages"
+    for name, text in PACKAGE_FILES.items():
+        (installed / name).parent.mkdir(parents=True, exist_ok=True)
+        (installed / name).write_text(text)
+    archive = str(tmp_path / "pyspark.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        for name, text in PACKAGE_FILES.items():
+            zf.writestr(name, text)
+        zf.writestr("pyspark/zip_only.py", "")  # not compared
+    return archive, installed, [archive, str(tmp_path), str(installed)]
 
 
-@bytecode_cached
-def test_bytecode_cache_second_process_compiles_nothing(modules_zip):
-    """zipimport compiles each module twice (its spec asks for the file
-    name, then the module is executed); the cache serves the second
-    compile at once and every compile of the next process."""
-    archive, tmpdir, cache = modules_zip
-    names = list(MODULES)
-    assert _import_fresh(archive, tmpdir) == (len(MODULES), names)
-    assert len(os.listdir(cache)) == len(MODULES)
-    assert _import_fresh(archive, tmpdir) == (0, names)
+def test_installed_first_moves_matching_zips_behind(spark_zips):
+    archive, installed, path = spark_zips
+    assert installed_first(path) == [path[1], str(installed), archive]
 
 
-@bytecode_cached
-def test_bytecode_cache_recompiles_bad_entries(modules_zip):
-    """A truncated entry, one of zeros and two swapped entries (each a
-    valid entry, of the other's name) are compiled again, rewritten and
-    never executed."""
-    archive, tmpdir, cache = modules_zip
-    _import_fresh(archive, tmpdir)
-    paths = sorted(cache.iterdir())
-    blobs = [p.read_bytes() for p in paths]
-    paths[0].write_bytes(blobs[0][:len(blobs[0]) // 2])
-    paths[1].write_bytes(bytes(len(blobs[1])))
-    paths[2].write_bytes(blobs[3])
-    paths[3].write_bytes(blobs[2])
-    assert _import_fresh(archive, tmpdir) == (len(MODULES), list(MODULES))
-    assert [p.read_bytes() for p in paths] == blobs
-    assert _import_fresh(archive, tmpdir) == (0, list(MODULES))
-
-
-@bytecode_cached
-def test_bytecode_cache_serves_edited_source(modules_zip):
-    """An archive rewritten in place with one module's source edited:
-    that module is compiled again and runs its new code."""
-    archive, tmpdir, _ = modules_zip
-    _import_fresh(archive, tmpdir)
-    _write_modules(archive, bc_c="NAME = 'edited'\n")
-    assert _import_fresh(archive, tmpdir) == (
-        1, ["bc_a.py", "edited", "bc_pkg/__init__.py", "bc_pkg/b.py"])
-
-
-@bytecode_cached
-@pytest.mark.parametrize("unsafe", ["group-writable", "world-writable",
-                                    "symlink", "foreign-owner"])
-def test_bytecode_cache_refuses_unsafe_directory(modules_zip, unsafe):
-    """A cache directory others could write to (or a link to one) is not
-    used: nothing is written there or loaded from it, and every process
-    compiles (twice per module) and imports as without the cache."""
-    archive, tmpdir, cache = modules_zip
-    if unsafe == "symlink":
-        target = tmpdir / "elsewhere"
-        target.mkdir(mode=0o700)
-        cache.symlink_to(target)
+@pytest.mark.parametrize("change", ["one byte", "size", "absent package"])
+def test_installed_first_keeps_order_unless_source_matches(spark_zips, change):
+    """A shared file that differs in one byte at the same size, or in
+    size, or an install without py4j: the zip stays first."""
+    archive, installed, path = spark_zips
+    worker = installed / "pyspark/worker.py"
+    if change == "one byte":
+        worker.write_text("WORKER = 2\n")
+    elif change == "size":
+        worker.write_text("WORKER = 10\n")
     else:
-        cache.mkdir(mode=0o700)
-        if unsafe == "foreign-owner":
-            if os.getuid() != 0:
-                pytest.skip("changing a directory's owner needs root")
-            os.chown(cache, os.getuid() + 1, -1)
-        else:
-            cache.chmod(0o720 if unsafe == "group-writable" else 0o702)
-    for _ in range(2):
-        assert _import_fresh(archive, tmpdir) == (2 * len(MODULES), list(MODULES))
-    assert not os.listdir(cache)
+        (installed / "py4j/__init__.py").unlink()
+        (installed / "py4j").rmdir()
+    assert installed_first(path) == path
 
 
-@bytecode_cached
-def test_install_bytecode_cache_wraps_once(tmp_path, monkeypatch):
-    def compile_source(pathname, source):
-        raise AssertionError("not called")
-
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    monkeypatch.setattr(zipimport, "_compile_source", compile_source)
-    zipimport_cache.install_bytecode_cache()
-    zipimport_cache.install_bytecode_cache()
-    assert zipimport._compile_source._bytecode_cached
-    assert zipimport._compile_source.__wrapped__ is compile_source
+def test_python_daemon_module(tmp_path, monkeypatch):
+    """``worker_daemon`` only where a daemon here finds the package."""
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("PYTHONPATH", os.path.dirname(session._PACKAGE_DIR))
+    assert (session._python_daemon_module("local[4]")
+            == "readabilitysax_spark.worker_daemon")
+    assert session._python_daemon_module("spark://h:7077") == "pyspark.daemon"
+    monkeypatch.setenv("PYTHONPATH", str(tmp_path))
+    assert session._python_daemon_module("local[4]") == "pyspark.daemon"
