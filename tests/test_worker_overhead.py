@@ -164,10 +164,8 @@ def test_workers_fork_from_the_package_daemon(spark):
         assert " -m readabilitysax_spark.worker_daemon " in r.daemon, r.daemon
         assert (r.pyspark, r.py4j) == (pyspark.__file__, py4j.__file__)
         assert ".zip" not in r.pyspark + r.py4j
-        zips = [i for i, p in enumerate(r.path)
-                if os.path.basename(p) == "pyspark.zip"
-                or os.path.basename(p).startswith("py4j-")
-                and p.endswith("-src.zip")]
+        zips = [i for i, p in enumerate(r.path) if p.endswith(".zip")
+                and os.path.basename(p).startswith(("pyspark", "py4j"))]
         assert len(zips) == 2, r.path
         assert r.path.index(installed) < min(zips), r.path
 
