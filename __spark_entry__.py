@@ -25,6 +25,7 @@ from readabilitysax_spark.operators import (
     curation,
     dedup,
     multimodal,
+    sessionize,
     similarity,
     textstats,
 )
@@ -144,20 +145,13 @@ def _q_dedup_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup connected components → canonical doc per cluster."""
-    return dedup.near_dup_clusters(
-        read_documents(spark, sf_dir), threshold=0.4
-    ).orderBy("doc_id")
-
-
-_SPAN_WORDS = 3
+    return dedup.near_dup_clusters(read_documents(spark, sf_dir)).orderBy("doc_id")
 
 
 def _q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style span-level corpus dedup: first occurrence of each
     3-word span wins corpus-wide; docs reassembled from survivors."""
-    return dedup.remove_duplicate_spans(
-        read_documents(spark, sf_dir), span_words=_SPAN_WORDS
-    ).orderBy("doc_id")
+    return dedup.remove_duplicate_spans(read_documents(spark, sf_dir)).orderBy("doc_id")
 
 
 def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,37 +165,25 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.incremental_dedup(new_docs, old_docs).orderBy("doc_id")
 
 
-_MIX_RATES = {"en": 1.0, "de": 0.5, "fr": 0.25}
-_MIX_DEFAULT = 0.1
-
-
 def _q_corpus_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified mixture sampling (keep 100% en, 50% de,
     25% fr, 10% rest) — nested/reproducible, filter-only plan."""
     docs = read_documents(spark, sf_dir)
-    return corpus.stratified_sample(
-        docs, _MIX_RATES, default_rate=_MIX_DEFAULT
-    ).select("doc_id", "lang").orderBy("doc_id")
-
-
-_PACK_BUDGET = 512
+    return corpus.stratified_sample(docs).select("doc_id", "lang").orderBy("doc_id")
 
 
 def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style packing layout via scalable two-pass prefix sum."""
-    return corpus.pack_sequences(
-        read_documents(spark, sf_dir), budget=_PACK_BUDGET
-    ).orderBy("doc_id")
+    return corpus.pack_sequences(read_documents(spark, sf_dir)).orderBy("doc_id")
 
 
 def _q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain crawl rollup (domain-level curation aggregation).
-    size_col='text' so the oracle can compute sizes analytically.
     Reads the html-pruned pages projection (read_pages_meta): this
     rollup never touches html, and on a real pages table the scan
     would prune that column — the Python synthesis pass is opaque to
     Catalyst, so the pruning happens in the source helper."""
-    return corpus.domain_stats(read_pages_meta(spark, sf_dir), size_col="text")
+    return corpus.domain_stats(read_pages_meta(spark, sf_dir))
 
 
 def _q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,7 +234,6 @@ def _q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BENCHMARK_EVERY = 25  # every 25th doc doubles as the "eval benchmark"
-_DECON_NGRAM = 8
 
 
 def _q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -261,9 +242,7 @@ def _q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast semi-join, corpus never shuffles."""
     docs = read_documents(spark, sf_dir)
     benchmark = docs.where(F.col("doc_id") % _BENCHMARK_EVERY == 0)
-    return curation.decontaminate(
-        docs, benchmark, n=_DECON_NGRAM
-    ).orderBy("doc_id")
+    return curation.decontaminate(docs, benchmark).orderBy("doc_id")
 
 
 _BLOCKED_SOURCES = ("src0", "src7", "src13")
@@ -351,7 +330,6 @@ def _q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.normalize_text(messy)
 
 
-_VOCAB_TOP_K = 100
 _DOMAIN_CAP = 10
 
 
@@ -365,7 +343,7 @@ def _q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus word-frequency top-k (tokenizer/vocab training pass)."""
-    return corpus.vocab_stats(read_documents(spark, sf_dir), top_k=_VOCAB_TOP_K)
+    return corpus.vocab_stats(read_documents(spark, sf_dir))
 
 
 def _q_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,9 +359,7 @@ def _q_extraction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     at token level, end-to-end through the UDF."""
     docs = read_documents(spark, sf_dir).withColumn("gold_text", F.col("text"))
     arts = extract_articles(docs, passthrough=("gold_text",))
-    return textstats.token_set_prf(
-        arts, "text", "gold_text", id_col="url"
-    ).orderBy("url")
+    return textstats.token_set_prf(arts).orderBy("url")
 
 
 def _q_top_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -625,7 +601,7 @@ def _q_training_corpus_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = textstats.quality_stats(kept)
     dups = dedup.exact_duplicates(kept)
     benchmark = docs.where(F.col("doc_id") % _BENCHMARK_EVERY == 0)
-    contaminated = curation.decontaminate(kept, benchmark, n=_DECON_NGRAM)
+    contaminated = curation.decontaminate(kept, benchmark)
     curated = (
         kept.join(quality, "doc_id")
         .join(dups.select("doc_id", "is_dup"), "doc_id")
@@ -640,7 +616,7 @@ def _q_training_corpus_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep=("lang", "n_words", "quality_score"),
     )
     marked = corpus.sample_exact_k(
-        capped, k=_HOLDOUT_K, stratum_col="lang",
+        capped, k=_HOLDOUT_K,
         keep=("domain", "n_words", "quality_score", "rank_in_domain"),
         mark=True,
     )
@@ -656,11 +632,7 @@ def _q_training_corpus_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_sf_table(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").head()[0])
-    # testdata embeddings are near-orthogonal (max pairwise cosine ≈
-    # 0.51), so the "near-dup" bar is scaled down to produce output
-    return similarity.embedding_near_dup_pairs(emb, threshold=0.35, dim=dim)
+    return similarity.embedding_near_dup_pairs(read_sf_table(spark, sf_dir, "embeddings"))
 
 
 def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -705,10 +677,7 @@ def _q_docs_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (window functions over events)."""
-    from readabilitysax_spark.operators.sessionize import user_session_stats
-
-    ev = read_sf_table(spark, sf_dir, "events")
-    return user_session_stats(ev, gap_minutes=30)
+    return sessionize.user_session_stats(read_sf_table(spark, sf_dir, "events"))
 
 
 def _q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -737,7 +706,7 @@ def _q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytic tests there and by this query's oracle.
     """
     docs = read_documents(spark, sf_dir)
-    return multimodal.media_audit(docs, max_side=32, every_n=100)
+    return multimodal.media_audit(docs)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -874,16 +843,7 @@ def _lang_id_sql() -> str:
     """
 
 
-def _simhash_sql(bits: int = 16) -> str:
-    expr = dedup.simhash_sql_expr("w.word", bits=bits)
-    return f"""
-        SELECT d.doc_id AS doc_id, CAST({expr} AS BIGINT) AS simhash
-        FROM documents d, unnest(string_split(d.text, ' ')) AS w(word)
-        GROUP BY d.doc_id
-    """
-
-
-def _simhash_multi_sql(widths: tuple[int, ...] = (16, 64)) -> str:
+def _simhash_multi_sql(widths: tuple[int, ...]) -> str:
     cols = ", ".join(
         f"CAST({dedup.simhash_sql_expr('w.word', bits=b)} AS BIGINT) AS simhash{b}"
         for b in widths
@@ -1073,7 +1033,7 @@ def oracle_sql() -> dict[str, str]:
         JOIN ssets sa ON sa.doc_id = doc_a
         JOIN ssets sb ON sb.doc_id = doc_b
         WHERE CAST(length(list_intersect(sa.sset, sb.sset)) AS DOUBLE)
-              / length(list_distinct(list_concat(sa.sset, sb.sset))) >= 0.4
+              / length(list_distinct(list_concat(sa.sset, sb.sset))) >= {dedup.CLUSTER_MIN_JACCARD}
     """
     q["dedup_clusters"] = f"""
         WITH RECURSIVE jp AS ({_jp}),
@@ -1097,6 +1057,7 @@ def oracle_sql() -> dict[str, str]:
         FROM lab ORDER BY doc_id
     """
 
+    span = dedup.SPAN_WORDS
     q["dedup_spans"] = f"""
         WITH w AS (
           -- empty text ⇒ no spans (string_split('') is [''], a phantom span)
@@ -1105,8 +1066,8 @@ def oracle_sql() -> dict[str, str]:
         ), spl AS (
           SELECT doc_id, unnest(
             [{{'pos': i, 'span': array_to_string(
-                 w[i * {_SPAN_WORDS} + 1 : i * {_SPAN_WORDS} + {_SPAN_WORDS}], ' ')}}
-             for i in range(0, CAST(ceil(len(w) / {_SPAN_WORDS}.0) AS BIGINT))]
+                 w[i * {span} + 1 : i * {span} + {span}], ' ')}}
+             for i in range(0, CAST(ceil(len(w) / {span}.0) AS BIGINT))]
           ) AS s
           FROM w
         ), sp AS (
@@ -1122,7 +1083,7 @@ def oracle_sql() -> dict[str, str]:
         ), tot AS (
           SELECT doc_id,
                  CAST(CASE WHEN length(text) > 0
-                           THEN ceil(len(string_split(text, ' ')) / {_SPAN_WORDS}.0)
+                           THEN ceil(len(string_split(text, ' ')) / {span}.0)
                            ELSE 0 END AS INT) AS n_spans
           FROM documents
         )
@@ -1182,13 +1143,13 @@ def oracle_sql() -> dict[str, str]:
 
     mix_case = " ".join(
         f"WHEN '{k}' THEN '{corpus.sample_threshold_hex(r)}'"
-        for k, r in sorted(_MIX_RATES.items())
+        for k, r in sorted(corpus.MIX_RATES.items())
     )
     q["corpus_sample_mixture"] = f"""
         SELECT doc_id, lang FROM documents
         WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
               CASE lang {mix_case}
-                   ELSE '{corpus.sample_threshold_hex(_MIX_DEFAULT)}' END
+                   ELSE '{corpus.sample_threshold_hex(corpus.MIX_DEFAULT_RATE)}' END
         ORDER BY doc_id
     """
 
@@ -1205,10 +1166,10 @@ def oracle_sql() -> dict[str, str]:
           FROM t
         ), p AS (
           SELECT doc_id, n_tokens, start_offset,
-                 CAST(start_offset // {_PACK_BUDGET} AS BIGINT) AS first_pack,
+                 CAST(start_offset // {corpus.PACK_BUDGET} AS BIGINT) AS first_pack,
                  CAST(CASE WHEN n_tokens > 0
-                           THEN (start_offset + n_tokens - 1) // {_PACK_BUDGET}
-                           ELSE start_offset // {_PACK_BUDGET}
+                           THEN (start_offset + n_tokens - 1) // {corpus.PACK_BUDGET}
+                           ELSE start_offset // {corpus.PACK_BUDGET}
                       END AS BIGINT) AS last_pack
           FROM c
         )
@@ -1257,9 +1218,9 @@ def oracle_sql() -> dict[str, str]:
           SELECT doc_id, string_split(text, ' ') AS w FROM documents
         ), g AS (
           SELECT doc_id,
-                 unnest(CASE WHEN len(w) >= {_DECON_NGRAM} THEN
-                        [array_to_string(w[i:i+{_DECON_NGRAM - 1}], ' ')
-                         for i in range(1, len(w) - {_DECON_NGRAM - 2})]
+                 unnest(CASE WHEN len(w) >= {curation.DECON_NGRAM} THEN
+                        [array_to_string(w[i:i+{curation.DECON_NGRAM - 1}], ' ')
+                         for i in range(1, len(w) - {curation.DECON_NGRAM - 2})]
                         ELSE []::VARCHAR[] END) AS gram
           FROM w
         ), bg AS (
@@ -1447,7 +1408,7 @@ def oracle_sql() -> dict[str, str]:
                 FROM documents)
           GROUP BY word
           ORDER BY n_occurrences DESC, word
-          LIMIT {_VOCAB_TOP_K}
+          LIMIT {corpus.VOCAB_TOP_K}
         )
         SELECT CAST(row_number() OVER (ORDER BY n_occurrences DESC, word)
                     AS INT) AS rank,
@@ -1568,19 +1529,20 @@ def oracle_sql() -> dict[str, str]:
         FROM r WHERE rnk <= 3 ORDER BY lang, rnk
     """
 
-    q["winnowing_fingerprints"] = """
+    k, window = textstats.WINNOW_K, textstats.WINNOW_WINDOW
+    q["winnowing_fingerprints"] = f"""
         WITH g AS (
           SELECT doc_id,
-                 CASE WHEN length(text) - 7 >= 1 THEN
-                        [md5(substring(text, i, 8))
-                         for i in range(1, length(text) - 7 + 1)]
+                 CASE WHEN length(text) - {k - 1} >= 1 THEN
+                        [md5(substring(text, i, {k}))
+                         for i in range(1, length(text) - {k - 1} + 1)]
                       ELSE []::VARCHAR[] END AS gh
           FROM documents
         ), m AS (
           SELECT doc_id, gh,
-                 CASE WHEN len(gh) >= 4 THEN
-                        [list_aggregate(gh[w:w+3], 'min')
-                         for w in range(1, len(gh) - 3 + 1)]
+                 CASE WHEN len(gh) >= {window} THEN
+                        [list_aggregate(gh[w:w+{window - 1}], 'min')
+                         for w in range(1, len(gh) - {window - 1} + 1)]
                       WHEN len(gh) >= 1 THEN [list_aggregate(gh, 'min')]
                       ELSE []::VARCHAR[] END AS mins
           FROM g
@@ -1703,15 +1665,15 @@ def oracle_sql() -> dict[str, str]:
           FROM s
         ), kg AS (
           SELECT doc_id,
-                 unnest(CASE WHEN len(w) >= {_DECON_NGRAM} THEN
-                        [array_to_string(w[i:i+{_DECON_NGRAM - 1}], ' ')
-                         for i in range(1, len(w) - {_DECON_NGRAM - 2})]
+                 unnest(CASE WHEN len(w) >= {curation.DECON_NGRAM} THEN
+                        [array_to_string(w[i:i+{curation.DECON_NGRAM - 1}], ' ')
+                         for i in range(1, len(w) - {curation.DECON_NGRAM - 2})]
                         ELSE []::VARCHAR[] END) AS gram
           FROM (SELECT doc_id, string_split(text, ' ') AS w FROM kept)
         ), bg AS (
-          SELECT DISTINCT unnest(CASE WHEN len(w) >= {_DECON_NGRAM} THEN
-                        [array_to_string(w[i:i+{_DECON_NGRAM - 1}], ' ')
-                         for i in range(1, len(w) - {_DECON_NGRAM - 2})]
+          SELECT DISTINCT unnest(CASE WHEN len(w) >= {curation.DECON_NGRAM} THEN
+                        [array_to_string(w[i:i+{curation.DECON_NGRAM - 1}], ' ')
+                         for i in range(1, len(w) - {curation.DECON_NGRAM - 2})]
                         ELSE []::VARCHAR[] END) AS gram
           FROM (SELECT string_split(text, ' ') AS w FROM documents
                 WHERE doc_id % {_BENCHMARK_EVERY} = 0)
@@ -1754,10 +1716,10 @@ def oracle_sql() -> dict[str, str]:
         GROUP BY 1, 2 ORDER BY 1, 2
     """
 
-    q["user_sessions"] = """
+    q["user_sessions"] = f"""
         WITH s AS (
           SELECT user_id, ts, event_id,
-                 CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800
+                 CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) > {sessionize.SESSION_GAP_MINUTES * 60}
                       OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
           FROM events
           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1807,17 +1769,18 @@ def oracle_sql() -> dict[str, str]:
         FROM documents
     """
 
-    _media_resize_sql = """
+    max_side = multimodal.RESIZE_MAX_SIDE
+    _media_resize_sql = f"""
         WITH p AS (
           SELECT doc_id, 1 + doc_id % 64 AS w, 1 + doc_id % 48 AS h,
                  greatest(1 + doc_id % 64, 1 + doc_id % 48) AS m
           FROM documents WHERE doc_id % 3 = 0
         ), s AS (
           SELECT doc_id, w, h,
-                 CASE WHEN m <= 32 THEN w
-                      ELSE greatest(1, (w * 32) // m) END AS nw,
-                 CASE WHEN m <= 32 THEN h
-                      ELSE greatest(1, (h * 32) // m) END AS nh
+                 CASE WHEN m <= {max_side} THEN w
+                      ELSE greatest(1, (w * {max_side}) // m) END AS nw,
+                 CASE WHEN m <= {max_side} THEN h
+                      ELSE greatest(1, (h * {max_side}) // m) END AS nh
           FROM p
         )
         SELECT doc_id AS media_id, TRUE AS resize_ok,
@@ -1826,17 +1789,18 @@ def oracle_sql() -> dict[str, str]:
         FROM s
     """
 
-    _media_frames_sql = """
+    every_n = multimodal.FRAME_EVERY_N
+    _media_frames_sql = f"""
         SELECT doc_id AS media_id,
                doc_id % 3 <> 2 AS frames_ok,
                CAST(CASE WHEN doc_id % 3 = 0 THEN 1
                          WHEN doc_id % 3 = 1
-                           THEN (400 + doc_id % 100 + 99) // 100
+                           THEN (400 + doc_id % 100 + {every_n - 1}) // {every_n}
                          ELSE 0 END AS INT) AS n_frames,
                CAST(CASE WHEN doc_id % 3 = 0
                            THEN 68 + (1 + doc_id % 48) * (2 + doc_id % 64)
                          WHEN doc_id % 3 = 1
-                           THEN ((400 + doc_id % 100 + 99) // 100) * 2
+                           THEN ((400 + doc_id % 100 + {every_n - 1}) // {every_n}) * 2
                          ELSE 0 END AS BIGINT) AS frame_bytes
         FROM documents
     """
@@ -1927,7 +1891,7 @@ def oracle_sql() -> dict[str, str]:
                  CAST(round({_cos('a.v', 'c.v')}, 6) AS DOUBLE) AS cosine
           FROM bb a JOIN bb c ON a.bucket = c.bucket AND a.vec_id < c.vec_id
         )
-        SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= 0.35
+        SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= {similarity.NEAR_DUP_MIN_COSINE}
     """
 
     # IVF: seeds = first 8 non-query vectors; n_iter Lloyd steps

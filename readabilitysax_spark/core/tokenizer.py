@@ -96,13 +96,6 @@ _RE_ATTR_NAME = re.compile(r"[^\t\n\f\r =/>]+")
 _RE_ATTR_NAME_EQ = re.compile(r"=[^\t\n\f\r =/>]*")
 _RE_WS = re.compile(r"[\t\n\f\r ]*")
 _RE_UNQUOTED_VALUE = re.compile(r"[^\t\n\f\r >&]*")
-# fast path for the dominant attribute shape: ws name [ws] = [ws] "quoted"
-# (same name class as _RE_ATTR_NAME; falls back to the exact state loop
-# for unquoted values, bare names, '/', '=' quirks, and EOF handling)
-_RE_ATTR_FAST = re.compile(
-    r"[\t\n\f\r ]*([^\t\n\f\r =/>]+)[\t\n\f\r ]*=[\t\n\f\r ]*"
-    r"(\"[^\"]*\"|'[^']*')"
-)
 
 # One search per tag: "<" followed, optionally, by a simple open tag
 # (groups 1-2: name, then ws-separated name="v"/name='v' pairs, then
@@ -263,16 +256,6 @@ def tokenize(html: str) -> list[tuple]:
             self_closing = False
             tag_ok = False  # did we reach '>'
             while p < n:
-                fm = _RE_ATTR_FAST.match(html, p)
-                if fm is not None:
-                    attr_name = fm.group(1).lower()
-                    raw = fm.group(2)[1:-1]
-                    if raw:
-                        value = decode_attribute_value(raw)
-                        if value:
-                            ev_append((ATTR, attr_name, value))
-                    p = fm.end()
-                    continue
                 if html[p] in _WS_SET:
                     p = _RE_WS.match(html, p).end()
                 if p >= n:

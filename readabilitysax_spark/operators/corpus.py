@@ -17,6 +17,12 @@ from .textstats import token_count
 
 _HEX_SPAN = 16 ** 8  # first 8 md5 hex chars ≈ uniform in [0, 16^8)
 
+# the training mixture: per-lang keep-rates, every other lang at the default
+MIX_RATES = {"en": 1.0, "de": 0.5, "fr": 0.25}
+MIX_DEFAULT_RATE = 0.1
+PACK_BUDGET = 512  # tokens per packed training sequence
+VOCAB_TOP_K = 100
+
 
 def sample_threshold_hex(rate: float) -> str:
     """The 8-hex-char cutoff for a keep-rate in [0, 1]: a doc is kept
@@ -27,13 +33,9 @@ def sample_threshold_hex(rate: float) -> str:
     return format(n, "08x") if n < _HEX_SPAN else "g"  # 'g' > 'f' keeps all
 
 
-def stratified_sample(
-    documents: DataFrame,
-    rates: dict[str, float],
-    default_rate: float = 0.0,
-) -> DataFrame:
-    """Deterministic per-``lang`` downsampling (training-mixture
-    control: e.g. keep 100% en, 50% de, 10% everything else).
+def stratified_sample(documents: DataFrame) -> DataFrame:
+    """Deterministic per-``lang`` downsampling to the training mixture:
+    ``MIX_RATES`` per lang, ``MIX_DEFAULT_RATE`` for every other lang.
 
     Keep decision = md5 of the doc id under a per-stratum hex cutoff:
     reproducible across runs/engines/partitionings, no RNG state, and
@@ -42,19 +44,21 @@ def stratified_sample(
     yields a strict subset (nested samples — the property you want for
     scaling-law subsets)."""
     h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
-    cutoff = F.lit(sample_threshold_hex(default_rate))
-    for key, rate in sorted(rates.items()):
+    cutoff = F.lit(sample_threshold_hex(MIX_DEFAULT_RATE))
+    for key, rate in sorted(MIX_RATES.items()):
         cutoff = F.when(
             F.col("lang") == key, F.lit(sample_threshold_hex(rate))
         ).otherwise(cutoff)
     return documents.where(h < cutoff)
 
 
-def domain_stats(pages: DataFrame, size_col: str = "html") -> DataFrame:
+def domain_stats(pages: DataFrame) -> DataFrame:
     """Per-domain crawl rollup over a pages table: (domain, n_pages,
     total_content_bytes, n_langs) — the aggregation behind domain-level
-    curation (blocklists, per-domain caps). One shuffle on domain;
-    `www.` prefix normalized; expression-portable for the oracle."""
+    curation (blocklists, per-domain caps). Content size is the length
+    of ``text``, which the oracle computes analytically. One shuffle on
+    domain; `www.` prefix normalized; expression-portable for the
+    oracle."""
     domain = F.regexp_replace(
         F.regexp_extract("url", "^[a-z]+://([^/]+)", 1), "^www\\.", ""
     )
@@ -62,22 +66,18 @@ def domain_stats(pages: DataFrame, size_col: str = "html") -> DataFrame:
         pages.groupBy(domain.alias("domain"))
         .agg(
             F.count("*").alias("n_pages"),
-            F.sum(F.length(size_col)).cast("bigint").alias("total_content_bytes"),
+            F.sum(F.length("text")).cast("bigint").alias("total_content_bytes"),
             F.countDistinct("lang").cast("bigint").alias("n_langs"),
         )
         .orderBy("domain")
     )
 
 
-def pack_sequences(
-    documents: DataFrame,
-    budget: int = 2048,
-    num_partitions: int = 32,
-) -> DataFrame:
+def pack_sequences(documents: DataFrame, num_partitions: int = 32) -> DataFrame:
     """GPT-style packing layout: documents are concatenated in id order
-    and sliced into fixed ``budget``-token windows; returns per doc
+    and sliced into fixed ``PACK_BUDGET``-token windows; returns per doc
     (doc_id, n_tokens, start_offset, first_pack, last_pack, n_packs)
-    where pack k covers token offsets [k*budget, (k+1)*budget).
+    where pack k covers token offsets [k*PACK_BUDGET, (k+1)*PACK_BUDGET).
 
     The global prefix-sum is the interesting part at 10^12 rows: a
     single ``Window.orderBy(id)`` would funnel the whole table through
@@ -131,12 +131,12 @@ def pack_sequences(
         toks.withColumn("_local", F.sum("n_tokens").over(w) - F.col("n_tokens"))
         .join(F.broadcast(offset_df), "_part")
         .withColumn("start_offset", F.col("_base") + F.col("_local"))
-        .withColumn("first_pack", (F.col("start_offset") / budget).cast("bigint"))
+        .withColumn("first_pack", (F.col("start_offset") / PACK_BUDGET).cast("bigint"))
         .withColumn(
             "last_pack",
             F.when(F.col("n_tokens") > 0,
-                   ((F.col("start_offset") + F.col("n_tokens") - 1) / budget))
-            .otherwise(F.col("start_offset") / budget).cast("bigint"),
+                   ((F.col("start_offset") + F.col("n_tokens") - 1) / PACK_BUDGET))
+            .otherwise(F.col("start_offset") / PACK_BUDGET).cast("bigint"),
         )
         .withColumn(
             "n_packs", (F.col("last_pack") - F.col("first_pack") + 1).cast("int")
@@ -201,10 +201,10 @@ def dedup_by_canonical_url(df: DataFrame) -> DataFrame:
     )
 
 
-def vocab_stats(documents: DataFrame, top_k: int = 100) -> DataFrame:
+def vocab_stats(documents: DataFrame) -> DataFrame:
     """(rank, word, n_occurrences, n_docs) — corpus word-frequency
-    top-k, the first pass of tokenizer/vocabulary training (BPE seeds,
-    frequency cutoffs, coverage curves all start here).
+    top-``VOCAB_TOP_K``, the first pass of tokenizer/vocabulary training
+    (BPE seeds, frequency cutoffs, coverage curves all start here).
 
     Scale shape: explode → ONE hash-shuffle on word with map-side
     partial aggregation (count and the per-word distinct-doc agg both
@@ -223,7 +223,7 @@ def vocab_stats(documents: DataFrame, top_k: int = 100) -> DataFrame:
             F.count_distinct("doc_id").cast("bigint").alias("n_docs"),
         )
         .orderBy(F.col("n_occurrences").desc(), F.col("word"))
-        .limit(top_k)
+        .limit(VOCAB_TOP_K)
     )
     w = Window.orderBy(F.col("n_occurrences").desc(), F.col("word"))
     return counts.select(
@@ -234,7 +234,7 @@ def vocab_stats(documents: DataFrame, top_k: int = 100) -> DataFrame:
 
 def cap_per_domain(
     documents: DataFrame,
-    n: int = 10,
+    n: int,
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per-domain document cap (the FineWeb/Dolma "no domain dominates
@@ -269,13 +269,12 @@ def cap_per_domain(
 def sample_exact_k(
     documents: DataFrame,
     k: int,
-    stratum_col: str = "lang",
     keep: tuple[str, ...] = (),
     mark: bool = False,
 ) -> DataFrame:
-    """Deterministic EXACT-k per-stratum sample (eval/holdout-set
+    """Deterministic EXACT-k per-``lang`` sample (eval/holdout-set
     construction wants "exactly 1000 per language", not a keep-rate):
-    rank docs inside each stratum by md5 of the id and keep the k
+    rank docs inside each language by md5 of the id and keep the k
     smallest hashes. Reproducible across runs/engines/partitionings,
     and adding documents to a stratum only evicts the largest-hash
     members — the sample is stable under corpus growth.
@@ -289,8 +288,8 @@ def sample_exact_k(
     full window then runs without the WindowGroupLimit partial prune,
     which only fires for a filtering top-k)."""
     h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 16)
-    w = Window.partitionBy(stratum_col).orderBy(h, "doc_id")
-    ranked = documents.select("doc_id", stratum_col, *keep).withColumn(
+    w = Window.partitionBy("lang").orderBy(h, "doc_id")
+    ranked = documents.select("doc_id", "lang", *keep).withColumn(
         "sample_rank", F.row_number().over(w)
     )
     if mark:

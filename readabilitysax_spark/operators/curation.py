@@ -31,6 +31,8 @@ RE_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 RE_IPV4 = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 RE_PHONE = r"\+[0-9]{1,3}[ -][0-9]{3}[ -][0-9]{3,4}[ -][0-9]{3,4}"
 
+DECON_NGRAM = 8  # word n-gram length of benchmark decontamination
+
 
 def redact_pii(documents: DataFrame) -> DataFrame:
     """(doc_id, clean_text, n_emails, n_ipv4, n_phones): PII spans
@@ -56,10 +58,10 @@ def redact_pii(documents: DataFrame) -> DataFrame:
     )
 
 
-def benchmark_ngrams(benchmark: DataFrame, n: int = 8) -> DataFrame:
-    """Distinct n-gram hash set of an eval/benchmark suite — the tiny
-    side of the decontamination join (built once per benchmark,
-    broadcast to every executor)."""
+def benchmark_ngrams(benchmark: DataFrame) -> DataFrame:
+    """Distinct ``DECON_NGRAM``-word n-gram hash set of an
+    eval/benchmark suite — the tiny side of the decontamination join
+    (built once per benchmark, broadcast to every executor)."""
     # md5 hashes of the n-grams keep the broadcast set small and the
     # comparison fixed-width. explode_OUTER + null filter, not plain
     # explode: Catalyst's InferFiltersFromGenerate adds `size(grams) > 0
@@ -71,7 +73,7 @@ def benchmark_ngrams(benchmark: DataFrame, n: int = 8) -> DataFrame:
     # at sf0.1). The outer generate admits no such inference; the
     # post-generate null filter is value-identical and cheap.
     return (
-        shingle_table(benchmark, n, keep=(), gram=F.md5)
+        shingle_table(benchmark, DECON_NGRAM, keep=(), gram=F.md5)
         .withColumnRenamed("sh", "grams")
         .select(F.explode_outer("grams").alias("gram"))
         .where(F.col("gram").isNotNull())
@@ -79,22 +81,22 @@ def benchmark_ngrams(benchmark: DataFrame, n: int = 8) -> DataFrame:
     )
 
 
-def decontaminate(documents: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
+def decontaminate(documents: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C / FineWeb
-    procedure shape): flag every training doc sharing ≥1 word n-gram
-    with the benchmark. Returns (doc_id, n_hits) for CONTAMINATED docs
-    only — anti-join these away before training.
+    procedure shape): flag every training doc sharing ≥1 word
+    ``DECON_NGRAM``-gram with the benchmark. Returns (doc_id, n_hits)
+    for CONTAMINATED docs only — anti-join these away before training.
 
     The corpus side stays where it is: docs explode to (doc_id, gram)
     and probe the BROADCAST benchmark set; one partial-agg shuffle of
     (doc_id, count) pairs for contaminated docs only — at 100 TB the
     shuffled volume is proportional to contamination, not corpus size.
     """
-    grams = benchmark_ngrams(benchmark, n)
+    grams = benchmark_ngrams(benchmark)
     # explode_outer + null filter: same InferFiltersFromGenerate
     # pushdown-inlining story as benchmark_ngrams (see comment there)
     doc_grams = (
-        shingle_table(documents, n, gram=F.md5)
+        shingle_table(documents, DECON_NGRAM, gram=F.md5)
         .withColumnRenamed("sh", "grams")
         .select(F.col("doc_id"), F.explode_outer("grams").alias("gram"))
         .where(F.col("gram").isNotNull())

@@ -43,9 +43,11 @@ SHINGLE_WORDS = 3
 SIMHASH_BITS = 64
 SIMHASH_BANDS = 4
 SIMHASH_MAX_HAMMING = 8
-# label-propagation rounds of near_dup_clusters (pointer doubling
-# converges in O(log diameter) rounds)
+# near_dup_clusters: the Jaccard bar of an edge, and the label-propagation
+# rounds (pointer doubling converges in O(log diameter) rounds)
+CLUSTER_MIN_JACCARD = 0.4
 CLUSTER_MAX_ITER = 20
+SPAN_WORDS = 3  # span length of remove_duplicate_spans
 
 
 def shingle_table(
@@ -361,12 +363,12 @@ def ngram_jaccard_pairs(
     )
 
 
-def near_dup_clusters(documents: DataFrame, threshold: float = 0.4) -> DataFrame:
+def near_dup_clusters(documents: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs → canonical doc per
     cluster: (doc_id, cluster_id, cluster_size, is_canonical).
 
-    Edges = ngram-Jaccard pairs ≥ threshold (LSH-bounded, never
-    all-pairs). Components via iterative min-label propagation: each
+    Edges = ngram-Jaccard pairs ≥ ``CLUSTER_MIN_JACCARD`` (LSH-bounded,
+    never all-pairs). Components via iterative min-label propagation: each
     round every node takes min(own label, neighbors' labels); the
     fixpoint assigns every node the minimum doc_id reachable in its
     component — a deterministic result independent of iteration order,
@@ -383,7 +385,7 @@ def near_dup_clusters(documents: DataFrame, threshold: float = 0.4) -> DataFrame
     near-dup subgraph (∝ duplicate mass), not the corpus; singletons
     rejoin via one final left join.
     """
-    pairs = ngram_jaccard_pairs(documents, threshold)
+    pairs = ngram_jaccard_pairs(documents, CLUSTER_MIN_JACCARD)
     # both directions from ONE pass over the pairs subtree: a
     # union(pairs, pairs.reversed) plans the band-join + verify-join
     # chain TWICE (no CSE across union branches); the explode keeps a
@@ -452,9 +454,9 @@ def near_dup_clusters(documents: DataFrame, threshold: float = 0.4) -> DataFrame
     )
 
 
-def remove_duplicate_spans(documents: DataFrame, span_words: int = 3) -> DataFrame:
+def remove_duplicate_spans(documents: DataFrame) -> DataFrame:
     """C4-style span-level corpus dedup: chunk every document into
-    consecutive ``span_words``-word spans, keep only the FIRST
+    consecutive ``SPAN_WORDS``-word spans, keep only the FIRST
     occurrence of each span corpus-wide (first = lowest (doc_id, pos)),
     and reassemble each document from its surviving spans.
 
@@ -481,13 +483,13 @@ def remove_duplicate_spans(documents: DataFrame, span_words: int = 3) -> DataFra
     bound as the document itself, not a corpus-scale aggregate.
     """
     w = F.col("_w")
-    n_spans = F.ceil(F.size(w) / F.lit(span_words)).cast("int")
+    n_spans = F.ceil(F.size(w) / F.lit(SPAN_WORDS)).cast("int")
     span_structs = F.transform(
         F.sequence(F.lit(0), n_spans - 1),
         lambda i: F.struct(
             i.cast("int").alias("pos"),
             F.concat_ws(
-                " ", F.slice(w, i * span_words + 1, span_words)
+                " ", F.slice(w, i * SPAN_WORDS + 1, SPAN_WORDS)
             ).alias("span"),
         ),
     )
@@ -529,7 +531,7 @@ def remove_duplicate_spans(documents: DataFrame, span_words: int = 3) -> DataFra
         "doc_id",
         F.when(
             F.length(F.col("text")) > 0,
-            F.ceil(F.size(F.split(F.col("text"), " ")) / F.lit(span_words)),
+            F.ceil(F.size(F.split(F.col("text"), " ")) / F.lit(SPAN_WORDS)),
         ).otherwise(F.lit(0)).cast("int").alias("n_spans"),
     )
     return (
@@ -593,7 +595,7 @@ def incremental_dedup(new_docs: DataFrame, old_docs: DataFrame) -> DataFrame:
 
 # ---- simhash: shared SQL fragment so Spark and any ANSI oracle agree ----
 
-def simhash_sql_expr(word_expr: str, bits: int = 16) -> str:
+def simhash_sql_expr(word_expr: str, bits: int) -> str:
     """Dialect-portable SQL aggregate expression computing a
     ``bits``-wide simhash over a pre-exploded word column ``word_expr``
     (wrap with the engine's unnest/explode and GROUP BY doc).
@@ -618,9 +620,7 @@ def simhash_sql_expr(word_expr: str, bits: int = 16) -> str:
     return bits_sum  # to be used inside: SELECT doc_id, <this> FROM ... exploded words w
 
 
-def simhash_multi(
-    documents: DataFrame, widths: tuple[int, ...] = (16, 64)
-) -> DataFrame:
+def simhash_multi(documents: DataFrame, widths: tuple[int, ...]) -> DataFrame:
     """Simhash fingerprints at several widths in ONE pass/shuffle:
     (doc_id, simhash16, simhash64, ...). Width 64 is the production
     width (two's-complement MSB, signed BIGINT).

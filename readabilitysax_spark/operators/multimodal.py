@@ -39,6 +39,8 @@ from ..sources.pdfgen import synth_doc_pdf
 from .pdftext import extract_text_from_pdf
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+RESIZE_MAX_SIDE = 32  # media_audit resizes images to fit this box
+FRAME_EVERY_N = 100  # media_audit keeps every n-th audio sample
 _EMPTY = {
     "width": None, "height": None, "bit_depth": None, "color_type": None,
     "sample_rate": None, "n_channels": None, "n_samples": None,
@@ -342,17 +344,17 @@ MEDIA_AUDIT_SCHEMA = pa.schema([
 ])
 
 
-def media_audit(
-    documents: DataFrame, max_side: int = 32, every_n: int = 100
-) -> DataFrame:
-    """documents(doc_id, text, …) → one ``audit_row`` per document, in
-    ONE ``mapInArrow`` pass: each doc's asset is synthesized and run
-    through the feature / resize / frame-sample / PDF-text stages in
-    the same batch loop. Zero-shuffle, zero-join, one Python crossing
+def media_audit(documents: DataFrame) -> DataFrame:
+    """documents(doc_id, text, …) → one ``audit_row`` per document
+    (at ``RESIZE_MAX_SIDE``, ``FRAME_EVERY_N``) in ONE ``mapInArrow``
+    pass: each doc's asset is synthesized and run through the feature /
+    resize / frame-sample / PDF-text stages in the same batch loop. Zero-shuffle, zero-join, one Python crossing
     (guide §4.1/§2.4) — at 100 TB the "every decision is per-asset →
     never shuffle the bytes" layout the module docstring mandates.
     Non-png rows carry NULL resize columns."""
     from pyspark.sql.pandas.types import from_arrow_schema
+
+    max_side, every_n = RESIZE_MAX_SIDE, FRAME_EVERY_N
 
     def audit_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:

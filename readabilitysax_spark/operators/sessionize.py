@@ -15,17 +15,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_GAP_MINUTES = 30
+SESSION_GAP_MINUTES = 30  # a longer pause between events starts a session
 
 
-def sessionize(events: DataFrame, gap_minutes: int = DEFAULT_GAP_MINUTES) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """(event_id, user_id, ts, session_id) — session_id is the running
     count of gap-breaks per user (0-based), deterministic."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # NTZ timestamps need the two-step cast to epoch seconds
     epoch = F.col("ts").cast("timestamp").cast("long")
     gap = epoch - F.lag(epoch).over(w)
-    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    is_new = F.when(gap.isNull() | (gap > SESSION_GAP_MINUTES * 60), 1).otherwise(0)
     return (
         events.withColumn("is_new", is_new)
         .withColumn(
@@ -38,11 +38,9 @@ def sessionize(events: DataFrame, gap_minutes: int = DEFAULT_GAP_MINUTES) -> Dat
     )
 
 
-def user_session_stats(
-    events: DataFrame, gap_minutes: int = DEFAULT_GAP_MINUTES
-) -> DataFrame:
+def user_session_stats(events: DataFrame) -> DataFrame:
     """(user_id, n_sessions, n_events, avg_events_per_session)."""
-    s = sessionize(events, gap_minutes)
+    s = sessionize(events)
     return (
         s.groupBy("user_id")
         .agg(
@@ -57,13 +55,14 @@ def user_session_stats(
     )
 
 
-def sessionize_stream(events_stream: DataFrame, gap_minutes: int = DEFAULT_GAP_MINUTES) -> DataFrame:
+def sessionize_stream(events_stream: DataFrame) -> DataFrame:
     """Streaming sessionization: emits one row per CLOSED session
     (user_id, session_start, session_end, n_events) using
-    applyInPandasWithState with an event-time timeout of ``gap``."""
+    applyInPandasWithState with an event-time timeout of
+    ``SESSION_GAP_MINUTES``."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
 
     def fn(key, pdfs, state: GroupState):
         import pandas as pd
@@ -104,7 +103,7 @@ def sessionize_stream(events_stream: DataFrame, gap_minutes: int = DEFAULT_GAP_M
             yield frame(out_rows)
 
     return (
-        events_stream.withWatermark("ts", f"{gap_minutes * 2} minutes")
+        events_stream.withWatermark("ts", f"{SESSION_GAP_MINUTES * 2} minutes")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,

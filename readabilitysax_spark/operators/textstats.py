@@ -142,14 +142,10 @@ def corpus_profile(documents: DataFrame) -> DataFrame:
     )
 
 
-def token_set_prf(
-    df: DataFrame,
-    pred_col: str,
-    gold_col: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Token-set precision/recall/F1 of a predicted text column against
-    a gold column (CleanEval-style extraction evaluation, set-based).
+def token_set_prf(articles: DataFrame) -> DataFrame:
+    """(url, precision, recall, f1): token-set P/R/F1 of each article's
+    extracted ``text`` against its ``gold_text`` (CleanEval-style
+    extraction evaluation, set-based).
 
     All JVM expressions (split on whitespace runs, array_distinct,
     array_intersect) — one map-only pass, no shuffle, ANSI-portable for
@@ -158,8 +154,8 @@ def token_set_prf(
     would spuriously intersect), so empty prediction/gold genuinely
     yield P=R=F1=0.0 (not null) and the metric aggregates cleanly.
     """
-    pred = F.array_remove(F.array_distinct(F.split(F.col(pred_col), r"\s+")), "")
-    gold = F.array_remove(F.array_distinct(F.split(F.col(gold_col), r"\s+")), "")
+    pred = F.array_remove(F.array_distinct(F.split(F.col("text"), r"\s+")), "")
+    gold = F.array_remove(F.array_distinct(F.split(F.col("gold_text"), r"\s+")), "")
     n_pred = F.size(pred)
     n_gold = F.size(gold)
     n_inter = F.size(F.array_intersect(pred, gold))
@@ -168,8 +164,8 @@ def token_set_prf(
     f1 = F.when(
         precision + recall > 0, 2 * precision * recall / (precision + recall)
     ).otherwise(F.lit(0.0))
-    return df.select(
-        F.col(id_col),
+    return articles.select(
+        F.col("url"),
         F.round(precision, 6).alias("precision"),
         F.round(recall, 6).alias("recall"),
         F.round(f1, 6).alias("f1"),
@@ -223,17 +219,17 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def winnowing_fingerprints(
-    documents: DataFrame,
-    k: int = 8,
-    window: int = 4,
-) -> DataFrame:
+WINNOW_K = 8  # winnowing gram length, in chars
+WINNOW_WINDOW = 4  # winnowing window, in grams
+
+
+def winnowing_fingerprints(documents: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS scheme): hash every k-char gram, slide a
-    window of ``window`` hashes, keep each window's minimum; the
-    distinct selected hashes are the fingerprint set, guaranteeing any
-    shared substring of length ≥ k+window-1 yields a shared
-    fingerprint.
+    SIGMOD'03 — the MOSS scheme): hash every k-char gram
+    (k = ``WINNOW_K``), slide a window of ``WINNOW_WINDOW`` hashes,
+    keep each window's minimum; the distinct selected hashes are the
+    fingerprint set, guaranteeing any shared substring of length
+    ≥ k+window-1 yields a shared fingerprint.
 
     All JVM expressions (transform/slice/array_min over substring
     hashes), map-only, ANSI-portable for the oracle. Texts with fewer
@@ -242,6 +238,7 @@ def winnowing_fingerprints(
     (doc_id, n_grams, n_fingerprints, fp_digest) with fp_digest =
     md5 of the sorted distinct selection.
     """
+    k, window = WINNOW_K, WINNOW_WINDOW
     text = F.col("text")
     empty = F.array().cast("array<string>")
     n_grams_expr = F.length(text) - (k - 1)

@@ -153,8 +153,8 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     output_dir: str,
+    n_buckets: int,
     run_id: str | None = None,
-    n_buckets: int = 8,
     output_type: str = "text",
     num_partitions: int | None = None,
     input_token: str | None = None,

@@ -49,15 +49,12 @@ def _python_daemon_module(master: str) -> str:
 
 
 def build_session(
-    master: str | None = None,
+    master: str,
     app_name: str = "readabilitysax-spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if master is None:
-        master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
+        shuffle_partitions = max(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), 8)
     # AQE coalescing floor (round 6): byte-based coalescing
     # under-parallelizes CPU-DENSE post-shuffle stages — rows carrying
     # array/set payloads (shingle-set verify joins, cosine pair

@@ -53,7 +53,7 @@ def test_decontaminate_finds_planted_overlap(spark):
         "doc_id long, text string",
     )
     bench = spark.createDataFrame([(100, bench_sent)], "doc_id long, text string")
-    hits = {r.doc_id: r.n_hits for r in decontaminate(docs, bench, n=8).collect()}
+    hits = {r.doc_id: r.n_hits for r in decontaminate(docs, bench).collect()}
     assert 1 in hits and 3 in hits and 2 not in hits
     assert hits[3] == 3  # 10-word doc -> three 8-grams, all shared
 

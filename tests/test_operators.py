@@ -446,35 +446,39 @@ def test_ivf_assign_keeps_caller_vnorm_column(spark):
     assert {r._vnorm for r in got} == {"caller"}
 
 
-def test_embedding_near_dup_bucket_cap(spark):
+def test_embedding_near_dup_bucket_cap(spark, monkeypatch):
     """Same cap semantics on the embedding-space near-dup join."""
     from pyspark.sql import functions as F
 
+    from readabilitysax_spark.operators import similarity
     from readabilitysax_spark.operators.similarity import (
         embedding_near_dup_pairs,
         oversize_buckets,
     )
+
+    monkeypatch.setattr(similarity, "NEAR_DUP_MIN_COSINE", 0.9)
 
     vec = [1.0] + [0.0] * 7
     emb = spark.range(200).select(
         F.col("id").alias("vec_id"),
         F.array(*[F.lit(v) for v in vec]).alias("embedding"),
     )
-    capped = embedding_near_dup_pairs(
-        emb, threshold=0.9, dim=8, max_bucket_size=50
-    )
+    capped = embedding_near_dup_pairs(emb, max_bucket_size=50)
     assert capped.count() == 0
-    audit = oversize_buckets(emb, max_bucket_size=50, dim=8).collect()
+    audit = oversize_buckets(emb, max_bucket_size=50).collect()
     assert audit and audit[0]["count"] == 200
-    uncapped = embedding_near_dup_pairs(
-        emb.limit(10), threshold=0.9, dim=8, max_bucket_size=None
-    )
+    uncapped = embedding_near_dup_pairs(emb.limit(10), max_bucket_size=None)
     assert uncapped.count() == 10 * 9 / 2
+    # the width is read from the first row; an empty table has none
+    assert embedding_near_dup_pairs(emb.limit(0)).count() == 0
 
 
-def test_near_dup_clusters_planted(spark):
+def test_near_dup_clusters_planted(spark, monkeypatch):
     """A planted 3-doc near-dup cluster collapses to one canonical id."""
+    from readabilitysax_spark.operators import dedup
     from readabilitysax_spark.operators.dedup import near_dup_clusters
+
+    monkeypatch.setattr(dedup, "CLUSTER_MIN_JACCARD", 0.3)
 
     base = "the quick brown fox jumps over the lazy dog again and again today ok"
     rows = [
@@ -485,7 +489,7 @@ def test_near_dup_clusters_planted(spark):
         (21, "yet another unrelated document mentioning benchmarks and scaling"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in near_dup_clusters(df, threshold=0.3).collect()}
+    out = {r.doc_id: r for r in near_dup_clusters(df).collect()}
     assert out[10].cluster_id == out[11].cluster_id == out[12].cluster_id == 10
     assert out[10].is_canonical and not out[11].is_canonical
     assert out[10].cluster_size == 3
@@ -500,7 +504,7 @@ def test_pack_sequences_matches_naive_global_window(spark):
     from readabilitysax_spark.operators.corpus import pack_sequences, token_count
 
     docs = spark.read.parquet(f"{SF_TINY}/documents.parquet").repartition(13)
-    two_pass = {r.doc_id: r for r in pack_sequences(docs, budget=512).collect()}
+    two_pass = {r.doc_id: r for r in pack_sequences(docs).collect()}
 
     naive = (
         docs.select("doc_id", token_count().cast("bigint").alias("n_tokens"))
@@ -516,15 +520,17 @@ def test_pack_sequences_matches_naive_global_window(spark):
         assert two_pass[r.doc_id].n_tokens == r.n_tokens
 
 
-def test_pack_sequences_above_range_sampling_threshold(spark):
+def test_pack_sequences_above_range_sampling_threshold(spark, monkeypatch):
     """repartitionByRange resamples its range bounds per job, so the
     totals pass and the window pass can disagree on partition contents
     once the input exceeds the exhaustive-sampling threshold
     (~sampleSizePerPartition × num_partitions ≈ 3.2k rows). The staged
     table is checkpointed to pin ONE layout; this 50k-row check is the
     regression guard for the silent-offset-corruption failure mode."""
+    from readabilitysax_spark.operators import corpus
     from readabilitysax_spark.operators.corpus import pack_sequences
 
+    monkeypatch.setattr(corpus, "PACK_BUDGET", 64)
     n = 50_000
     docs = spark.range(n).select(
         F.col("id").alias("doc_id"),
@@ -532,7 +538,7 @@ def test_pack_sequences_above_range_sampling_threshold(spark):
             " ", F.array_repeat(F.lit("w"), (F.col("id") % 7 + 1).cast("int"))
         ).alias("text"),
     )
-    out = pack_sequences(docs, budget=64).orderBy("doc_id").collect()
+    out = pack_sequences(docs).orderBy("doc_id").collect()
     assert len(out) == n
     expect = 0
     for r in out:
@@ -540,16 +546,20 @@ def test_pack_sequences_above_range_sampling_threshold(spark):
         expect += r.n_tokens
 
 
-def test_stratified_sample_nested_and_deterministic(spark):
+def test_stratified_sample_nested_and_deterministic(spark, monkeypatch):
+    from readabilitysax_spark.operators import corpus
     from readabilitysax_spark.operators.corpus import stratified_sample
 
     docs = spark.read.parquet(f"{SF_TINY}/documents.parquet")
-    half = {r.doc_id for r in
-            stratified_sample(docs, {}, default_rate=0.5).collect()}
-    quarter = {r.doc_id for r in
-               stratified_sample(docs, {}, default_rate=0.25).collect()}
-    again = {r.doc_id for r in
-             stratified_sample(docs.repartition(7), {}, default_rate=0.5).collect()}
+
+    def sample(df, rate):
+        monkeypatch.setattr(corpus, "MIX_RATES", {})
+        monkeypatch.setattr(corpus, "MIX_DEFAULT_RATE", rate)
+        return {r.doc_id for r in stratified_sample(df).collect()}
+
+    half = sample(docs, 0.5)
+    quarter = sample(docs, 0.25)
+    again = sample(docs.repartition(7), 0.5)
     assert quarter < half          # nested samples
     assert again == half           # partitioning-independent
     assert 0.4 < len(half) / docs.count() < 0.6
@@ -565,8 +575,8 @@ def test_token_set_prf_math(spark):
          (5, "", ""),                 # empty vs empty -> 0.0 (not 1.0
                                       # via the [""] split artifact)
          (6, "  a  ", "a")],          # padding must not inject "" tokens
-        "doc_id long, pred string, gold string")
-    rows = {r.doc_id: r for r in token_set_prf(df, "pred", "gold").collect()}
+        "url long, text string, gold_text string")
+    rows = {r.url: r for r in token_set_prf(df).collect()}
     assert rows[1].precision == 0.5 and rows[1].recall == 0.5 and rows[1].f1 == 0.5
     assert rows[2].f1 == 1.0
     assert rows[3].f1 == 0.0 and rows[4].f1 == 0.0
@@ -620,7 +630,7 @@ def test_zero_vector_cosine_no_crash(spark):
     assert rows[1] == 0.0 and rows[2] == 1.0 and rows[3] == 0.0
 
 
-def test_all_doc_operators_survive_hostile_docs(spark):
+def test_all_doc_operators_survive_hostile_docs(spark, monkeypatch):
     """Every documents-table operator must be total over hostile rows:
     empty text, whitespace, single word/char, unicode-only, numerals.
     (One crashing row at 10^12 docs kills its task; found the
@@ -645,6 +655,9 @@ def test_all_doc_operators_survive_hostile_docs(spark):
     ]
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long")
+    monkeypatch.setattr(corpus, "MIX_RATES", {"en": 0.5})
+    monkeypatch.setattr(corpus, "PACK_BUDGET", 16)
+    monkeypatch.setattr(corpus, "VOCAB_TOP_K", 5)
     ops = [
         lambda: dedup.exact_duplicates(df),
         lambda: dedup.minhash_signatures(df),
@@ -658,11 +671,11 @@ def test_all_doc_operators_survive_hostile_docs(spark):
         lambda: textstats.fingerprints(df),
         lambda: textstats.corpus_profile(df),
         lambda: textstats.repetition_stats(df),
-        lambda: corpus.stratified_sample(df, {"en": 0.5}, default_rate=0.1),
-        lambda: corpus.pack_sequences(df, budget=16),
+        lambda: corpus.stratified_sample(df),
+        lambda: corpus.pack_sequences(df),
         lambda: corpus.domain_stats(
             df.selectExpr("concat('http://', source, '.example/d/', doc_id) AS url",
-                          "text AS html", "lang"), size_col="html"),
+                          "text", "lang")),
         lambda: multimodal.media_audit(df),
         lambda: curation.redact_pii(df),
         lambda: curation.decontaminate(df, df.limit(2)),
@@ -673,7 +686,7 @@ def test_all_doc_operators_survive_hostile_docs(spark):
         lambda: textstats.gopher_quality_flags(df),
         lambda: textstats.unigram_cross_entropy(df),
         lambda: textstats.quality_classifier(df),
-        lambda: corpus.vocab_stats(df, top_k=5),
+        lambda: corpus.vocab_stats(df),
         lambda: corpus.cap_per_domain(df, n=2),
         lambda: corpus.sample_exact_k(df, k=2),
         lambda: textstats.normalize_text(df),
@@ -708,7 +721,7 @@ def test_empty_documents_table(spark):
     assert corpus.vocab_stats(df).count() == 0
     assert corpus.cap_per_domain(
         df.withColumn("source", df.lang).withColumn(
-            "n_chars", F.length("text"))).count() == 0
+            "n_chars", F.length("text")), n=10).count() == 0
 
 
 def test_url_canonicalization_rules(spark):
@@ -748,6 +761,7 @@ def test_winnowing_guarantee_and_edges(spark):
     degrade gracefully."""
     from pyspark.sql import functions as F
 
+    from readabilitysax_spark.operators import textstats
     from readabilitysax_spark.operators.textstats import winnowing_fingerprints
 
     shared = "a long shared passage of text that is identical in both documents"
@@ -760,6 +774,7 @@ def test_winnowing_guarantee_and_edges(spark):
          ],
         "doc_id long, text string")
     k, w = 8, 4
+    assert (textstats.WINNOW_K, textstats.WINNOW_WINDOW) == (k, w)
 
     # raw selected sets via the same expressions (re-derive to compare)
     text = F.col("text")
@@ -769,7 +784,7 @@ def test_winnowing_guarantee_and_edges(spark):
                     lambda i: F.md5(text.substr(i, F.lit(k)))),
     ).otherwise(F.array().cast("array<string>"))
     sel = spark.createDataFrame([], "x int")  # placeholder not used
-    rows = {r.doc_id: r for r in winnowing_fingerprints(df, k, w).collect()}
+    rows = {r.doc_id: r for r in winnowing_fingerprints(df).collect()}
 
     assert rows[4].n_grams == 0 and rows[4].n_fingerprints == 0
     assert rows[4].fp_digest is None
@@ -847,7 +862,7 @@ def test_remove_duplicate_spans_planted(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in
-           dedup.remove_duplicate_spans(df, span_words=3).collect()}
+           dedup.remove_duplicate_spans(df).collect()}
     assert out[1]["clean_text"] == "a b c d e f"
     assert (out[1]["n_spans"], out[1]["n_kept"], out[1]["n_removed"]) == (2, 2, 0)
     assert out[2]["clean_text"] == "x y z"
@@ -864,7 +879,7 @@ def test_remove_duplicate_spans_within_doc_order(spark):
 
     df = spark.createDataFrame(
         [(7, "a b c m m m a b c z z z")], "doc_id long, text string")
-    row = dedup.remove_duplicate_spans(df, span_words=3).head()
+    row = dedup.remove_duplicate_spans(df).head()
     assert row["clean_text"] == "a b c m m m z z z"
     assert (row["n_spans"], row["n_kept"], row["n_removed"]) == (4, 3, 1)
 
@@ -915,12 +930,13 @@ def test_gopher_flags_per_rule(spark):
     assert out[3]["ok_n_words"] and out[3]["ok_alpha"]
 
 
-def test_vocab_stats_counts_and_rank(spark):
+def test_vocab_stats_counts_and_rank(spark, monkeypatch):
     from readabilitysax_spark.operators import corpus
 
+    monkeypatch.setattr(corpus, "VOCAB_TOP_K", 2)
     df = spark.createDataFrame(
         [(0, "b a a"), (1, "a b c")], "doc_id long, text string")
-    out = corpus.vocab_stats(df, top_k=2).collect()
+    out = corpus.vocab_stats(df).collect()
     assert [(r["rank"], r["word"], r["n_occurrences"], r["n_docs"])
             for r in out] == [(1, "a", 3, 2), (2, "b", 2, 2)]
 
@@ -1110,7 +1126,7 @@ def test_remove_duplicate_spans_empty_text(spark):
         [(0, ""), (1, ""), (2, "a b c")], "doc_id long, text string"
     )
     out = {r["doc_id"]: r for r in
-           dedup.remove_duplicate_spans(df, span_words=3).collect()}
+           dedup.remove_duplicate_spans(df).collect()}
     for i in (0, 1):
         assert out[i]["n_spans"] == 0
         assert out[i]["n_kept"] == 0

@@ -74,13 +74,15 @@ def test_topk_uses_take_ordered(spark):
     assert not _algo_exchanges(plan)
 
 
-def test_stratified_sample_is_filter_only(spark):
+def test_stratified_sample_is_filter_only(spark, monkeypatch):
     """Mixture sampling must compile to a scan+filter — no shuffle, no
     sampling pass (the property that makes it free at 10^12 rows)."""
+    from readabilitysax_spark.operators import corpus
     from readabilitysax_spark.operators.corpus import stratified_sample
 
+    monkeypatch.setattr(corpus, "MIX_RATES", {"en": 1.0})
     docs = spark.read.parquet(f"{SF_TINY}/documents.parquet")
-    plan = _plan(stratified_sample(docs, {"en": 1.0}, default_rate=0.1))
+    plan = _plan(stratified_sample(docs))
     assert "Exchange" not in plan
     assert "Filter" in plan
 
@@ -92,7 +94,7 @@ def test_pack_sequences_no_single_partition_window(spark):
     from readabilitysax_spark.operators.corpus import pack_sequences
 
     docs = spark.read.parquet(f"{SF_TINY}/documents.parquet")
-    plan = _plan(pack_sequences(docs, budget=512))
+    plan = _plan(pack_sequences(docs))
     assert "Exchange SinglePartition" not in plan
     assert "Window" in plan
     assert "BroadcastExchange" in plan  # per-partition base offsets

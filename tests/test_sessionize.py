@@ -34,9 +34,9 @@ def test_batch_sessionize_gap_semantics(spark):
     ]
     df = spark.createDataFrame(rows, "event_id long, ts string, user_id long") \
         .withColumn("ts", F.to_timestamp("ts"))
-    got = {(r.event_id): r.session_id for r in sessionize(df, 30).collect()}
+    got = {(r.event_id): r.session_id for r in sessionize(df).collect()}
     assert got == {1: 0, 2: 0, 3: 1, 4: 0}
-    stats = {r.user_id: r for r in user_session_stats(df, 30).collect()}
+    stats = {r.user_id: r for r in user_session_stats(df).collect()}
     assert stats[7].n_sessions == 2 and stats[7].n_events == 3
 
 
@@ -48,7 +48,7 @@ def test_streaming_matches_batch(spark, events, tmp_path):
     stream = spark.readStream.schema(
         "event_id bigint, ts timestamp, user_id bigint").parquet(in_dir)
     q = (
-        sessionize_stream(stream, 30)
+        sessionize_stream(stream)
         .writeStream.format("parquet").option("path", out_dir)
         .option("checkpointLocation", ck).outputMode("append")
         .trigger(availableNow=True).start()
@@ -57,7 +57,7 @@ def test_streaming_matches_batch(spark, events, tmp_path):
     got = spark.read.parquet(out_dir)
     assert got.count() > 100
 
-    batch = sessionize(events, 30)
+    batch = sessionize(events)
     uid = got.groupBy("user_id").count().orderBy(F.desc("count")).head().user_id
     b = (
         batch.where(F.col("user_id") == uid)
