@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from readabilitysax_spark.functions.pagegen import URL_PREFIX, URL_SUFFIX
 from readabilitysax_spark.operators import (
     corpus,
     curation,
@@ -190,21 +191,15 @@ def _q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-level dedup: three synthesized variants per doc (trailing
     slash + fragment + unsorted params / tracking params / uppercase
     host with default port) must collapse to ONE canonical url."""
-    docs = read_documents(spark, sf_dir)
-    mk = lambda *parts: F.concat(*parts)  # noqa: E731
-    variants = docs.select(
-        F.explode(F.array(
-            mk(F.lit("http://"), "source",
-               F.lit(".example/articles/doc-"), "doc_id",
-               F.lit("/?b=2&a=1#frag")),
-            mk(F.lit("http://"), "source",
-               F.lit(".example/articles/doc-"), "doc_id",
-               F.lit("?a=1&utm_source=feed&b=2")),
-            mk(F.lit("http://"), "source",
-               F.lit(".EXAMPLE:80/articles/doc-"), "doc_id",
-               F.lit("?a=1&b=2")),
-        )).alias("url")
-    )
+    host, path = URL_SUFFIX.split("/", 1)
+    variants = read_documents(spark, sf_dir).select(F.explode(F.array(*[
+        F.concat(F.lit(URL_PREFIX), "source", F.lit(suffix), "doc_id", F.lit(tail))
+        for suffix, tail in (
+            (URL_SUFFIX, "/?b=2&a=1#frag"),
+            (URL_SUFFIX, "?a=1&utm_source=feed&b=2"),
+            (f"{host.upper()}:80/{path}", "?a=1&b=2"),
+        )
+    ])).alias("url"))
     return corpus.dedup_by_canonical_url(variants)
 
 
@@ -417,33 +412,19 @@ def _query_vec(emb: DataFrame) -> list[float]:
 
 def _q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_sf_table(spark, sf_dir, "embeddings")
-    return similarity.brute_force_topk(
-        emb.where(F.col("vec_id") != 0), _query_vec(emb), k=10
-    )
-
-
-_LSH_N_PLANES = 4  # 16 buckets; with radius-1 multi-probe → 5/16 of corpus
-_LSH_PROBE_RADIUS = 1
+    return similarity.brute_force_topk(emb.where(F.col("vec_id") != 0), _query_vec(emb))
 
 
 def _q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_sf_table(spark, sf_dir, "embeddings")
-    qvec = _query_vec(emb)
-    return similarity.lsh_bucket_topk(
-        emb.where(F.col("vec_id") != 0), qvec, dim=len(qvec),
-        k=10, n_planes=_LSH_N_PLANES, probe_radius=_LSH_PROBE_RADIUS,
-    )
+    return similarity.lsh_bucket_topk(emb.where(F.col("vec_id") != 0), _query_vec(emb))
 
 
 def _q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_sf_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(
-        emb.where(F.col("vec_id") != 0), _query_vec(emb),
-        n_lists=8, n_probe=2, k=10,
-    )
+    return similarity.ivf_topk(emb.where(F.col("vec_id") != 0), _query_vec(emb))
 
 
-_IVF_N_ITER = 2
 # prebuilt IVF index, cached per (session, sf_dir): the build (Lloyd
 # training + ONE full-corpus assignment, materialized) runs once; every
 # subsequent search is a probe-filtered scan of the assigned table —
@@ -465,28 +446,22 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
 
         warm_python_workers(spark)
         emb = read_sf_table(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
-        _IVF_INDEX_CACHE[key] = similarity.build_ivf_index(
-            emb, n_lists=8, n_iter=_IVF_N_ITER
-        )
+        _IVF_INDEX_CACHE[key] = similarity.build_ivf_index(emb)
     return _IVF_INDEX_CACHE[key]
 
 
 def _q_similarity_ivf_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec = _query_vec(read_sf_table(spark, sf_dir, "embeddings"))
     centroids, assigned = _ivf_index(spark, sf_dir)
-    return similarity.ivf_search(
-        assigned, centroids, qvec, n_probe=2, k=10
-    )
+    return similarity.ivf_search(assigned, centroids, qvec)
 
 
 _RECALL_QUERY_IDS = (1, 2, 3, 4)
-_RECALL_PROBES = (1, 2, 4)
-_RECALL_K = 10
 
 
 def _q_similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN QUALITY metric (round-3 VERDICT item 3): recall@k of
-    ``ivf_search`` at n_probe ∈ {1,2,4} against exact
+    ``ivf_search`` at n_probe ∈ ``IVF_PROBE_LEVELS`` against exact
     ``brute_force_topk`` over a deterministic in-corpus query panel
     (vec_ids 1-4, the standard self-recall protocol). Returns
     (n_probe, query_id, n_hits, recall) — recall is DATA here, hash-
@@ -532,20 +507,19 @@ def _q_similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     truth = (
         scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= _RECALL_K)
+        .where(F.col("rn") <= similarity.TOP_K)
         .select("query_id", "vec_id")
     )
-    got = similarity.ivf_search_panel(
-        assigned, centroids, qvecs,
-        probe_levels=_RECALL_PROBES, k=_RECALL_K,
-    ).select("query_id", "n_probe", "vec_id")
+    got = similarity.ivf_search_panel(assigned, centroids, qvecs).select(
+        "query_id", "n_probe", "vec_id"
+    )
     hits = (
         got.join(truth, ["query_id", "vec_id"])
         .groupBy("query_id", "n_probe")
         .agg(F.count("*").alias("c"))
     )
     grid = spark.createDataFrame(
-        [(q, p) for q in _RECALL_QUERY_IDS for p in _RECALL_PROBES],
+        [(q, p) for q in _RECALL_QUERY_IDS for p in similarity.IVF_PROBE_LEVELS],
         "query_id bigint, n_probe int",
     )
     return (
@@ -554,7 +528,7 @@ def _q_similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_probe",
             "query_id",
             F.coalesce("c", F.lit(0)).cast("int").alias("n_hits"),
-            F.round(F.coalesce("c", F.lit(0)) / F.lit(_RECALL_K), 6)
+            F.round(F.coalesce("c", F.lit(0)) / F.lit(similarity.TOP_K), 6)
             .cast("double").alias("recall"),
         )
         .orderBy("n_probe", "query_id")
@@ -1601,7 +1575,7 @@ def oracle_sql() -> dict[str, str]:
         FROM documents GROUP BY lang ORDER BY lang
     """
 
-    q["similarity_topk"] = """
+    q["similarity_topk"] = f"""
         WITH q AS (
           SELECT unnest(embedding)::DOUBLE AS qv, generate_subscripts(embedding, 1) AS i
           FROM embeddings WHERE vec_id = 0
@@ -1617,7 +1591,7 @@ def oracle_sql() -> dict[str, str]:
           GROUP BY e.vec_id
         )
         SELECT vec_id, CAST(round(dot / (ne * nq), 6) AS DOUBLE) AS cosine
-        FROM dots ORDER BY cosine DESC, vec_id LIMIT 10
+        FROM dots ORDER BY cosine DESC, vec_id LIMIT {similarity.TOP_K}
     """
 
     q["training_corpus"] = f"""
@@ -1857,8 +1831,9 @@ def oracle_sql() -> dict[str, str]:
     def _cos(a: str, b: str) -> str:
         return _COS.format(a=a, b=b)
 
-    lsh_bucket = similarity.bucket_sql_expr("v", dim=64, n_planes=_LSH_N_PLANES)
-    lsh_qbucket = similarity.bucket_sql_expr("qv", dim=64, n_planes=_LSH_N_PLANES)
+    lsh_bucket, lsh_qbucket = (
+        similarity.bucket_sql_expr(v, dim=64, n_planes=similarity.LSH_N_PLANES)
+        for v in ("v", "qv"))
     q["similarity_lsh_topk"] = f"""
         WITH q AS (
           SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
@@ -1874,8 +1849,8 @@ def oracle_sql() -> dict[str, str]:
         SELECT vec_id,
                CAST(round({_cos('v', 'qv')}, 6) AS DOUBLE) AS cosine
         FROM bb, q, qb
-        WHERE bit_count(CAST(xor(bb.bucket::BIGINT, qb.bucket::BIGINT) AS BIGINT)) <= {_LSH_PROBE_RADIUS}
-        ORDER BY cosine DESC, vec_id LIMIT 10
+        WHERE bit_count(CAST(xor(bb.bucket::BIGINT, qb.bucket::BIGINT) AS BIGINT)) <= {similarity.LSH_PROBE_RADIUS}
+        ORDER BY cosine DESC, vec_id LIMIT {similarity.TOP_K}
     """
 
     nd_bucket = similarity.bucket_sql_expr(
@@ -1894,14 +1869,14 @@ def oracle_sql() -> dict[str, str]:
         SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= {similarity.NEAR_DUP_MIN_COSINE}
     """
 
-    # IVF: seeds = first 8 non-query vectors; n_iter Lloyd steps
-    # (assign to argmax round(cos,9) with larger-list_id tiebreak,
+    # IVF: seeds = first IVF_N_LISTS non-query vectors; n_iter Lloyd
+    # steps (assign to argmax round(cos,9) with larger-list_id tiebreak,
     # matching Spark's array_max over struct(sim, list_id); empty lists
-    # keep the previous round's centroid); probe the 2 centroids
-    # nearest the query; rank within probed lists. The CTE chain is
+    # keep the previous round's centroid); probe the IVF_N_PROBE
+    # centroids nearest the query; rank within probed lists. The CTE chain is
     # generated so the 1-step (ad-hoc ivf_topk) and 2-step (prebuilt
     # index) queries share one verified construction.
-    def _ivf_assigned_ctes(n_iter: int, n_lists: int = 8) -> list[str]:
+    def _ivf_assigned_ctes(n_iter: int) -> list[str]:
         """CTE chain ending in ``af`` = the full-corpus assignment
         against the final (post-``n_iter``-Lloyd-step) centroids — the
         oracle twin of ``build_ivf_index``'s ``assigned`` table, shared
@@ -1914,7 +1889,7 @@ def oracle_sql() -> dict[str, str]:
         ), centroids0 AS (
           SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS list_id,
                  v AS c
-          FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT {n_lists})
+          FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT {similarity.IVF_N_LISTS})
         )"""]
         for r in range(1, n_iter + 1):
             ctes.append(f"""a{r} AS (
@@ -1950,13 +1925,13 @@ def oracle_sql() -> dict[str, str]:
         )""")
         return ctes
 
-    def _ivf_sql(n_iter: int, n_lists: int = 8, n_probe: int = 2) -> str:
-        ctes = _ivf_assigned_ctes(n_iter, n_lists)
+    def _ivf_sql(n_iter: int) -> str:
+        ctes = _ivf_assigned_ctes(n_iter)
         fin = f"centroids{n_iter}"
         ctes.append(f"""probes AS (
           SELECT list_id FROM {fin}, q
           ORDER BY {_cos('c', 'qv')} DESC, list_id
-          LIMIT {n_probe}
+          LIMIT {similarity.IVF_N_PROBE}
         )""")
         return (
             "WITH " + ",\n".join(ctes) + f"""
@@ -1964,21 +1939,21 @@ def oracle_sql() -> dict[str, str]:
                CAST(round({_cos('v', 'qv')}, 6) AS DOUBLE) AS cosine
         FROM af, q
         WHERE list_id IN (SELECT list_id FROM probes)
-        ORDER BY cosine DESC, vec_id LIMIT 10
+        ORDER BY cosine DESC, vec_id LIMIT {similarity.TOP_K}
     """
         )
 
     q["similarity_ivf_topk"] = _ivf_sql(n_iter=1)
-    q["similarity_ivf_prebuilt_topk"] = _ivf_sql(n_iter=_IVF_N_ITER)
+    q["similarity_ivf_prebuilt_topk"] = _ivf_sql(n_iter=similarity.IVF_N_ITER)
 
     # recall@k of ivf_search vs brute force, replicated end-to-end:
     # same Lloyd centroids (af CTE chain), same probe pick (unrounded
     # cosine, list_id tiebreak), same within-list ranking (round-6
     # cosine, vec_id tiebreak) as the Spark operators.
-    _fin = f"centroids{_IVF_N_ITER}"
+    _fin = f"centroids{similarity.IVF_N_ITER}"
     _qids = ", ".join(str(i) for i in _RECALL_QUERY_IDS)
-    _probe_vals = ", ".join(f"({p})" for p in _RECALL_PROBES)
-    _recall_ctes = _ivf_assigned_ctes(_IVF_N_ITER) + [f"""qs AS (
+    _probe_vals = ", ".join(f"({p})" for p in similarity.IVF_PROBE_LEVELS)
+    _recall_ctes = _ivf_assigned_ctes(similarity.IVF_N_ITER) + [f"""qs AS (
           SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id IN ({_qids})
         ), crank AS (
           SELECT qs.query_id, cs.list_id,
@@ -1995,7 +1970,7 @@ def oracle_sql() -> dict[str, str]:
                      ORDER BY round({_cos('e.v', 'qs.qv')}, 6) DESC, e.vec_id
                    ) AS rn
             FROM e CROSS JOIN qs
-          ) WHERE rn <= {_RECALL_K}
+          ) WHERE rn <= {similarity.TOP_K}
         ), pl AS (
           SELECT * FROM (VALUES {_probe_vals}) AS p(n_probe)
         ), got AS (
@@ -2009,7 +1984,7 @@ def oracle_sql() -> dict[str, str]:
             JOIN crank c ON a.list_id = c.list_id
             JOIN pl ON c.rnk <= pl.n_probe
             JOIN qs qs2 ON qs2.query_id = c.query_id
-          ) WHERE rn <= {_RECALL_K}
+          ) WHERE rn <= {similarity.TOP_K}
         ), hits AS (
           SELECT query_id, n_probe, COUNT(*) AS c
           FROM got JOIN truth USING (query_id, vec_id)
@@ -2019,14 +1994,14 @@ def oracle_sql() -> dict[str, str]:
         SELECT CAST(pl.n_probe AS INT) AS n_probe,
                CAST(qs.query_id AS BIGINT) AS query_id,
                CAST(coalesce(h.c, 0) AS INT) AS n_hits,
-               CAST(round(coalesce(h.c, 0) / {_RECALL_K}.0, 6) AS DOUBLE) AS recall
+               CAST(round(coalesce(h.c, 0) / {similarity.TOP_K}.0, 6) AS DOUBLE) AS recall
         FROM qs CROSS JOIN pl
         LEFT JOIN hits h ON h.query_id = qs.query_id AND h.n_probe = pl.n_probe
         ORDER BY n_probe, query_id
     """
 
     q["embedding_clusters"] = (
-        "WITH " + ",\n".join(_ivf_assigned_ctes(_IVF_N_ITER)) + """
+        "WITH " + ",\n".join(_ivf_assigned_ctes(similarity.IVF_N_ITER)) + """
         SELECT list_id,
                CAST(COUNT(*) AS BIGINT) AS n_vecs,
                MIN(vec_id) AS min_vec_id,

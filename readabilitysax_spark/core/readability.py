@@ -116,7 +116,6 @@ _re_three_newlines = re.compile(r"\n+(?=\n{2})")
 _re_br_before_p = re.compile(f"(?:<br/>(?:[{_WS_CLASS}]|&nbsp;?)*)+")
 _re_ws_run = re.compile(f"(?:[{_WS_CLASS}]|&nbsp;?)+")
 _re_double_br = re.compile(r"(?:<br/>){2,}")
-_re_p_open_close = re.compile(r"^</?p")
 
 DEFAULT_SETTINGS = {
     "stripUnlikelyCandidates": True,
@@ -524,9 +523,12 @@ class Readability:
         if node is None:
             node = self._get_candidate_node()
         html = node.get_inner_html()
+        # each <br/> rewrite below is the identity on html without one
+        if "<br/>" not in html:
+            return js_trim(html)
         # Remove <br>s in front of opening & closing <p>s
         html = _re_br_before_p.sub(
-            lambda m: "" if _re_p_open_close.match(m.string[m.end():]) else m.group(),
+            lambda m: "" if m.string.startswith(("<p", "</p"), m.end()) else m.group(),
             html,
         )
         # Remove spaces in front of <br>s

@@ -18,7 +18,8 @@ with the reason it stays a parameter. Converting one into a module
 constant removes it from both; a new one fails here until it is
 converted or given a reason.
 
-Run ``python3 tests/test_census.py`` to print the census.
+Run ``python3 tests/test_census.py`` to print the census (49 defaulted
+parameters, 22 of them with at most one value in use).
 """
 
 from __future__ import annotations
@@ -34,8 +35,6 @@ _DEPLOY = "deployment setting: varies per cluster or input version, not per quer
 _REFERENCE = "the reference's API (lib/process.ts, getArticle, the CLI)"
 _EXTRACT = "extraction input: the reference's settings, or a url column to resolve"
 _INTERNAL = "internal per-document helper of pdfgen/pdftext"
-_LEVER = ("similarity search lever, swept by "
-          "test_ivf_search_panel_matches_per_query_search; left for a later census")
 
 _PKG = "readabilitysax_spark/"
 ALLOWED = {
@@ -61,21 +60,6 @@ ALLOWED = {
     _PKG + "sources/pdfgen.py:_content_stream_two_col(font)": _INTERNAL,
     _PKG + "sources/pdfgen.py:synth_pdf(cid)": _INTERNAL,
     _PKG + "sources/pdfgen.py:synth_pdf(columns)": _INTERNAL,
-    _PKG + "operators/similarity.py:brute_force_topk(k)": _LEVER,
-    _PKG + "operators/similarity.py:build_ivf_index(n_iter)": _LEVER,
-    _PKG + "operators/similarity.py:build_ivf_index(n_lists)": _LEVER,
-    _PKG + "operators/similarity.py:ivf_search(k)": _LEVER,
-    _PKG + "operators/similarity.py:ivf_search(n_probe)": _LEVER,
-    _PKG + "operators/similarity.py:ivf_search_panel(k)": _LEVER,
-    _PKG + "operators/similarity.py:ivf_search_panel(probe_levels)": _LEVER,
-    _PKG + "operators/similarity.py:ivf_topk(k)": _LEVER,
-    _PKG + "operators/similarity.py:ivf_topk(n_lists)": _LEVER,
-    _PKG + "operators/similarity.py:ivf_topk(n_probe)": _LEVER,
-    _PKG + "operators/similarity.py:lsh_bucket_topk(k)": _LEVER,
-    _PKG + "operators/similarity.py:lsh_bucket_topk(n_planes)": _LEVER,
-    _PKG + "operators/similarity.py:lsh_bucket_topk(probe_radius)": _LEVER,
-    _PKG + "operators/similarity.py:probe_buckets(probe_radius)": _LEVER,
-    _PKG + "operators/similarity.py:train_centroids_deterministic(n_lists)": _LEVER,
 }
 
 

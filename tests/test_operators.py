@@ -238,19 +238,23 @@ def test_minhash_near_dup_sensitivity(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_ivf_topk_recall(spark):
+def test_ivf_topk_recall(spark, monkeypatch):
     """IVF with n_probe=4 of 8 lists must recover most of the exact
     top-10 (near-random embeddings: recall won't be 1.0, but the
     plumbing must return true cosines and reasonable recall)."""
     import duckdb
 
+    from readabilitysax_spark.operators import similarity
     from readabilitysax_spark.operators.similarity import brute_force_topk, ivf_topk
 
+    monkeypatch.setattr(similarity, "TOP_K", 10)
+    monkeypatch.setattr(similarity, "IVF_N_LISTS", 8)
+    monkeypatch.setattr(similarity, "IVF_N_PROBE", 4)
     emb = spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
     qvec = [float(v) for v in emb.where("vec_id = 0").head().embedding]
     rest = emb.where("vec_id <> 0")
-    exact = {r.vec_id for r in brute_force_topk(rest, qvec, k=10).collect()}
-    approx = ivf_topk(rest, qvec, n_lists=8, n_probe=4, k=10).collect()
+    exact = {r.vec_id for r in brute_force_topk(rest, qvec).collect()}
+    approx = ivf_topk(rest, qvec).collect()
     got = {r.vec_id for r in approx}
     assert len(got & exact) >= 4  # probing half the lists
     # cosines must be true values
@@ -402,7 +406,7 @@ def test_lsh_bucket_cap_keeps_pairs_below_cap(spark):
     assert all(r["count"] == 60 for r in audit)
 
 
-def test_ivf_prebuilt_full_probe_equals_brute_force(spark):
+def test_ivf_prebuilt_full_probe_equals_brute_force(spark, monkeypatch):
     """Probing every inverted list is an exact search: ivf_search over
     the prebuilt index with n_probe = n_lists must equal brute-force
     top-k row-for-row (the recall knob degrades coverage, never
@@ -413,17 +417,18 @@ def test_ivf_prebuilt_full_probe_equals_brute_force(spark):
     qvec = [float(v) for v in
             emb.where("vec_id = 0").select("embedding").head()[0]]
     corpus_df = emb.where("vec_id <> 0")
-    centroids, assigned = similarity.build_ivf_index(
-        corpus_df, n_lists=4, n_iter=2
-    )
-    exact = similarity.brute_force_topk(corpus_df, qvec, k=10).collect()
-    full_probe = similarity.ivf_search(
-        assigned, centroids, qvec, n_probe=4, k=10
-    ).collect()
+    monkeypatch.setattr(similarity, "TOP_K", 10)
+    monkeypatch.setattr(similarity, "IVF_N_LISTS", 4)
+    monkeypatch.setattr(similarity, "IVF_N_ITER", 2)
+    centroids, assigned = similarity.build_ivf_index(corpus_df)
+    exact = similarity.brute_force_topk(corpus_df, qvec).collect()
+    monkeypatch.setattr(similarity, "IVF_N_PROBE", 4)
+    full_probe = similarity.ivf_search(assigned, centroids, qvec).collect()
     assert [tuple(r) for r in full_probe] == [tuple(r) for r in exact]
     # partial probe returns k rows whose cosines are a subset of plausible
     # candidates and are sorted descending
-    part = similarity.ivf_search(assigned, centroids, qvec, n_probe=2, k=10).collect()
+    monkeypatch.setattr(similarity, "IVF_N_PROBE", 2)
+    part = similarity.ivf_search(assigned, centroids, qvec).collect()
     assert len(part) == 10
     assert [r.cosine for r in part] == sorted((r.cosine for r in part), reverse=True)
 
@@ -626,8 +631,19 @@ def test_zero_vector_cosine_no_crash(spark):
         [(1, [0.0] * 4), (2, [1.0, 0.0, 0.0, 0.0]), (3, [0.0, 1.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>")
     rows = {r.vec_id: r.cosine for r in
-            brute_force_topk(emb, [1.0, 0.0, 0.0, 0.0], k=3).collect()}
+            brute_force_topk(emb, [1.0, 0.0, 0.0, 0.0]).collect()}
     assert rows[1] == 0.0 and rows[2] == 1.0 and rows[3] == 0.0
+
+
+def test_probe_buckets_are_the_radius_one_hamming_ball():
+    """Spark-free: the multi-probe set is the query bucket plus its
+    LSH_N_PLANES one-bit neighbours, ascending."""
+    from readabilitysax_spark.operators.similarity import LSH_N_PLANES, probe_buckets
+
+    assert LSH_N_PLANES == 4
+    for qbucket in range(16):
+        expected = sorted([qbucket] + [qbucket ^ (1 << i) for i in range(LSH_N_PLANES)])
+        assert probe_buckets(qbucket) == expected
 
 
 def test_all_doc_operators_survive_hostile_docs(spark, monkeypatch):
@@ -941,7 +957,7 @@ def test_vocab_stats_counts_and_rank(spark, monkeypatch):
             for r in out] == [(1, "a", 3, 2), (2, "b", 2, 2)]
 
 
-def test_embedding_cluster_stats_partition_the_corpus(spark):
+def test_embedding_cluster_stats_partition_the_corpus(spark, monkeypatch):
     """Cluster occupancies must partition the assigned corpus: sizes
     sum to the row count and every list_id is within range."""
     from readabilitysax_spark.operators import similarity
@@ -949,7 +965,9 @@ def test_embedding_cluster_stats_partition_the_corpus(spark):
 
     emb = spark.read.parquet(f"{SF_TINY}/embeddings.parquet").where(
         F.col("vec_id") != 0)
-    _, assigned = similarity.build_ivf_index(emb, n_lists=4, n_iter=1)
+    monkeypatch.setattr(similarity, "IVF_N_LISTS", 4)
+    monkeypatch.setattr(similarity, "IVF_N_ITER", 1)
+    _, assigned = similarity.build_ivf_index(emb)
     stats = similarity.embedding_cluster_stats(assigned).collect()
     assert sum(r["n_vecs"] for r in stats) == emb.count()
     assert all(0 <= r["list_id"] < 4 for r in stats)

@@ -100,7 +100,7 @@ def test_pack_sequences_no_single_partition_window(spark):
     assert "BroadcastExchange" in plan  # per-partition base offsets
 
 
-def test_ivf_prebuilt_search_no_query_time_assign(spark):
+def test_ivf_prebuilt_search_no_query_time_assign(spark, monkeypatch):
     """The build/search split's whole point: after build_ivf_index, a
     search is a probe filter over the materialized list_id column plus
     a top-k — NO full-corpus centroid assignment (the array_max-over-
@@ -111,10 +111,11 @@ def test_ivf_prebuilt_search_no_query_time_assign(spark):
     emb = spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
     qvec = [float(v) for v in
             emb.where("vec_id = 0").select("embedding").head()[0]]
-    centroids, assigned = similarity.build_ivf_index(
-        emb.where("vec_id <> 0"), n_lists=4, n_iter=2
-    )
-    plan = _plan(similarity.ivf_search(assigned, centroids, qvec, n_probe=2, k=5))
+    monkeypatch.setattr(similarity, "IVF_N_LISTS", 4)
+    monkeypatch.setattr(similarity, "IVF_N_PROBE", 2)
+    monkeypatch.setattr(similarity, "TOP_K", 5)
+    centroids, assigned = similarity.build_ivf_index(emb.where("vec_id <> 0"))
+    plan = _plan(similarity.ivf_search(assigned, centroids, qvec))
     assert "array_max" not in plan
     assert "list_id" in plan  # the probe filter on the prebuilt column
     assert "TakeOrderedAndProject" in plan
@@ -529,31 +530,30 @@ def test_aqe_skew_join_splits_hot_jaccard_bucket(spark):
                 conf.set(k, v)
 
 
-def test_ivf_search_panel_matches_per_query_search(spark):
+def test_ivf_search_panel_matches_per_query_search(spark, monkeypatch):
     """Row-for-row equivalence of the batched panel search against the
     per-(query,probe) ivf_search loop it replaced — same cosines, same
-    top-k membership and tiebreaks."""
+    top-k membership and tiebreaks, with IVF_N_PROBE swept over the
+    panel's probe levels."""
     from readabilitysax_spark.operators import similarity
 
+    monkeypatch.setattr(similarity, "IVF_N_LISTS", 4)
+    monkeypatch.setattr(similarity, "IVF_PROBE_LEVELS", (1, 2))
+    monkeypatch.setattr(similarity, "TOP_K", 5)
     emb = spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
-    centroids, assigned = similarity.build_ivf_index(
-        emb.where("vec_id <> 0"), n_lists=4, n_iter=2
-    )
+    centroids, assigned = similarity.build_ivf_index(emb.where("vec_id <> 0"))
     queries = {
         int(r["vec_id"]): [float(v) for v in r["embedding"]]
         for r in emb.where("vec_id in (1, 2, 3)").collect()
     }
     panel = {
         (r["query_id"], r["n_probe"], r["vec_id"], r["cosine"])
-        for r in similarity.ivf_search_panel(
-            assigned, centroids, queries, probe_levels=(1, 2), k=5
-        ).collect()
+        for r in similarity.ivf_search_panel(assigned, centroids, queries).collect()
     }
     loop = set()
     for qid, qv in queries.items():
         for p in (1, 2):
-            for r in similarity.ivf_search(
-                assigned, centroids, qv, n_probe=p, k=5
-            ).collect():
+            monkeypatch.setattr(similarity, "IVF_N_PROBE", p)
+            for r in similarity.ivf_search(assigned, centroids, qv).collect():
                 loop.add((qid, p, r["vec_id"], r["cosine"]))
     assert panel == loop
