@@ -73,7 +73,7 @@ def domain_stats(pages: DataFrame) -> DataFrame:
     )
 
 
-def pack_sequences(documents: DataFrame, num_partitions: int = 32) -> DataFrame:
+def pack_sequences(documents: DataFrame) -> DataFrame:
     """GPT-style packing layout: documents are concatenated in id order
     and sliced into fixed ``PACK_BUDGET``-token windows; returns per doc
     (doc_id, n_tokens, start_offset, first_pack, last_pack, n_packs)
@@ -92,25 +92,28 @@ def pack_sequences(documents: DataFrame, num_partitions: int = 32) -> DataFrame:
     inline comment — range bounds are resampled per job otherwise) and
     Catalyst re-shuffles the checkpointed rows on ``_part`` for the
     window (it cannot see that spark_partition_id matches the range
-    layout); per-key parallelism equals ``num_partitions`` — size it
-    to cluster width at scale. The invariant that matters (pinned in
+    layout); per-key parallelism equals the session's
+    ``spark.sql.shuffle.partitions``, which ``build_session`` sizes to
+    the cluster width. The invariant that matters (pinned in
     test_plans) is NO ``Exchange SinglePartition`` anywhere.
     """
+    # passed explicitly: AQE may coalesce a range exchange given no count
+    width = int(documents.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     toks = documents.select(
         F.col("doc_id"), token_count().cast("bigint").alias("n_tokens")
-    ).repartitionByRange(num_partitions, "doc_id")
+    ).repartitionByRange(width, "doc_id")
     # Materialize the range layout ONCE: repartitionByRange samples its
     # range bounds per job (seeded by RDD id), so without this the
     # totals-collect job and the window job can land rows in DIFFERENT
     # partitions once the input exceeds the exhaustive-sampling
-    # threshold (~sampleSizePerPartition × num_partitions rows) — the
+    # threshold (~sampleSizePerPartition × width rows) — the
     # _base offsets would then be applied to the wrong partition
     # contents. localCheckpoint pins one physical layout that both
     # consumers read (on a cluster: checkpoint/write the staged table).
     toks = toks.withColumn("_part", F.spark_partition_id()).localCheckpoint()
 
     # per-partition base offsets WITHOUT a driver collect: prefix-sum
-    # the (num_partitions)-row totals table with a triangular self-join
+    # the (width)-row totals table with a triangular self-join
     # (base of partition p = sum of earlier partitions' totals). One
     # row per range partition on both sides, so the non-equi join is
     # trivially small at any corpus size, it folds into the same job

@@ -1,14 +1,30 @@
 """SparkSession builder tuned for the extraction workload.
 
-Scale rationale (100 TB / 1000-executor target, tested on local[N]):
+``build_session`` is the one way this package builds a session: tests,
+benchmarks, the query driver and the spark-submit entry point
+(``scripts/run_pipeline.py``) all call it.
+
+Engine settings, applied on every master (100 TB / 1000-executor
+target, tested on local[N]):
 
 * AQE on: runtime coalescing + skew-join splitting for the relational
-  shell (dedup/metrics aggregations).
+  shell (dedup/metrics aggregations), with a 64k coalescing floor.
 * Arrow batches capped at 256 rows: html payloads are MB-sized on real
   Common-Crawl data; 10k-row default batches would buffer gigabytes in
   the Python worker. Extraction output is re-chunked by byte budget in
   the operator itself as a second guard.
 * maxPartitionBytes 128m keeps scan partitions executor-memory-safe.
+* zstd parquet and dynamic partition overwrite (the resumable pipeline
+  rewrites only the buckets it redoes).
+
+Host settings, applied only when the caller names a master. With
+``master=None`` they are left to spark-submit (or
+``PYSPARK_SUBMIT_ARGS``): the master, driver memory, the UI and console
+progress, the shuffle partition count and the Python daemon (Spark's
+stock one).
+
+* Shuffle partitions: ``max(defaultParallelism, 8)`` of the session's
+  own master unless the caller passes a count.
 * Python daemon: Spark's stock ``pyspark.daemon`` compiles the 98
   pyspark/py4j modules it imports from ``pyspark.zip``, which ships no
   bytecode, on every SparkContext (1.1-1.4 s of the worker warm-up on 4
@@ -25,6 +41,7 @@ import site
 
 from pyspark.sql import SparkSession
 
+APP_NAME = "readabilitysax-spark"
 _PACKAGE_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -49,12 +66,11 @@ def _python_daemon_module(master: str) -> str:
 
 
 def build_session(
-    master: str,
-    app_name: str = "readabilitysax-spark",
+    master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    if shuffle_partitions is None:
-        shuffle_partitions = max(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), 8)
+    """The engine's session on ``master``; ``None`` leaves the master and
+    the host settings, ``shuffle_partitions`` included, to spark-submit."""
     # AQE coalescing floor (round 6): byte-based coalescing
     # under-parallelizes CPU-DENSE post-shuffle stages — rows carrying
     # array/set payloads (shingle-set verify joins, cosine pair
@@ -65,26 +81,32 @@ def build_session(
     # compute-bound stage on 1000 cores would coalesce to 5 tasks).
     # Coalescing itself stays ON (essential against small-partition
     # floods at 100 TB); only the minimum size is lowered.
-    return (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+    builder = (
+        SparkSession.builder.appName(APP_NAME)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    )
+    if master is None:
+        return builder.getOrCreate()
+    spark = (
+        builder.master(master)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.daemon.module", _python_daemon_module(master))
         .getOrCreate()
     )
+    spark.conf.set("spark.sql.shuffle.partitions", str(
+        shuffle_partitions or max(spark.sparkContext.defaultParallelism, 8)))
+    return spark
 
 
 def _warm_batches(batches):

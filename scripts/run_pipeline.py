@@ -6,10 +6,11 @@
         --input /root/testdata/sf0.001 --output /tmp/articles_out \
         --buckets 8 --partitions 64
 
-Reads the documents table under --input (or a real pages parquet with
---pages-table), synthesizes/loads pages, and runs the resumable
-bucketed pipeline. Idempotent: re-running with the same --output
-skips committed buckets.
+Runs on the engine's session (``build_session()``; spark-submit sets the
+master and the host settings). Reads the documents table under --input
+(or a real pages parquet with --pages-table), synthesizes/loads pages,
+and runs the resumable bucketed pipeline. Idempotent: re-running with
+the same --output skips committed buckets.
 """
 
 from __future__ import annotations
@@ -33,12 +34,11 @@ def main() -> int:
                     choices=["text", "html"])
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from readabilitysax_spark.plans.pipeline import run_pipeline
     from readabilitysax_spark.sources.pages import read_pages
+    from readabilitysax_spark.sources.session import build_session
 
-    spark = SparkSession.builder.appName("rsax-extract").getOrCreate()
+    spark = build_session()
     spark.sparkContext.setLogLevel("WARN")
 
     if args.pages_table:

@@ -18,8 +18,8 @@ with the reason it stays a parameter. Converting one into a module
 constant removes it from both; a new one fails here until it is
 converted or given a reason.
 
-Run ``python3 tests/test_census.py`` to print the census (49 defaulted
-parameters, 22 of them with at most one value in use).
+Run ``python3 tests/test_census.py`` to print the census (47 defaulted
+parameters, 19 of them with at most one value in use).
 """
 
 from __future__ import annotations
@@ -41,11 +41,8 @@ ALLOWED = {
     _PKG + "operators/dedup.py:ngram_jaccard_pairs(max_bucket_size)": _CAP,
     _PKG + "operators/dedup.py:simhash_near_dup_pairs(max_bucket_size)": _CAP,
     _PKG + "operators/similarity.py:embedding_near_dup_pairs(max_bucket_size)": _CAP,
-    _PKG + "sources/session.py:build_session(app_name)": _DEPLOY,
-    _PKG + "operators/corpus.py:pack_sequences(num_partitions)": _DEPLOY,
     _PKG + "plans/pipeline.py:run_pipeline(input_token)": _DEPLOY,
     _PKG + "plans/pipeline.py:stage_bucketed_pages(input_token)": _DEPLOY,
-    _PKG + "plans/pipeline.py:load_committed_buckets(articles_dir)": _DEPLOY,
     _PKG + "core/api.py:process(skip_level)": _REFERENCE,
     _PKG + "core/api.py:run_skip_levels(skip_level)": _REFERENCE,
     _PKG + "core/api.py:run_skip_levels(type_)": _REFERENCE,

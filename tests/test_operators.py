@@ -529,9 +529,10 @@ def test_pack_sequences_above_range_sampling_threshold(spark, monkeypatch):
     """repartitionByRange resamples its range bounds per job, so the
     totals pass and the window pass can disagree on partition contents
     once the input exceeds the exhaustive-sampling threshold
-    (~sampleSizePerPartition × num_partitions ≈ 3.2k rows). The staged
-    table is checkpointed to pin ONE layout; this 50k-row check is the
-    regression guard for the silent-offset-corruption failure mode."""
+    (~sampleSizePerPartition × the session's shuffle partitions ≈ 400
+    rows on the 4-partition test session). The staged table is
+    checkpointed to pin ONE layout; this 50k-row check is the regression
+    guard for the silent-offset-corruption failure mode."""
     from readabilitysax_spark.operators import corpus
     from readabilitysax_spark.operators.corpus import pack_sequences
 

@@ -1,13 +1,16 @@
 """Sessionization: batch window-function version (oracle-checked via
-the driver gate) and the applyInPandasWithState streaming version —
-closed stream sessions must exactly match the batch sessions."""
+the driver gate) and the session-window streaming version — closed
+stream sessions must exactly match the batch sessions."""
 
 from __future__ import annotations
+
+from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
 
 from readabilitysax_spark.operators.sessionize import (
+    SESSION_GAP_MINUTES,
     sessionize,
     sessionize_stream,
     user_session_stats,
@@ -40,33 +43,61 @@ def test_batch_sessionize_gap_semantics(spark):
     assert stats[7].n_sessions == 2 and stats[7].n_events == 3
 
 
-def test_streaming_matches_batch(spark, events, tmp_path):
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
+def _run_stream(spark, events, tmp_path):
+    """Closed sessions of ``sessionize_stream`` over ``events`` written
+    as one parquet input, drained with an availableNow trigger."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     events.write.parquet(in_dir)
     stream = spark.readStream.schema(
         "event_id bigint, ts timestamp, user_id bigint").parquet(in_dir)
     q = (
         sessionize_stream(stream)
         .writeStream.format("parquet").option("path", out_dir)
-        .option("checkpointLocation", ck).outputMode("append")
-        .trigger(availableNow=True).start()
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("append").trigger(availableNow=True).start()
     )
     assert q.awaitTermination(240)
-    got = spark.read.parquet(out_dir)
+    return spark.read.parquet(out_dir)
+
+
+def test_streaming_matches_batch(spark, events, tmp_path):
+    """Every closed stream session is a batch session, for every user,
+    and the batch has more only by the sessions the final watermark
+    (2 gaps behind the latest event) leaves open."""
+    got = _run_stream(spark, events, tmp_path)
     assert got.count() > 100
 
-    batch = sessionize(events)
-    uid = got.groupBy("user_id").count().orderBy(F.desc("count")).head().user_id
-    b = (
-        batch.where(F.col("user_id") == uid)
-        .groupBy("session_id")
-        .agg(F.min("ts").alias("st"), F.count("*").alias("n"))
-        .orderBy("st").collect()
+    batch = (
+        sessionize(events).groupBy("user_id", "session_id")
+        .agg(F.min("ts").alias("session_start"),
+             F.max("ts").alias("session_end"),
+             F.count("*").alias("n_events"))
+        .select("user_id", "session_start", "session_end", "n_events")
     )
-    s = got.where(F.col("user_id") == uid).orderBy("session_start").collect()
-    assert len(s) >= len(b) - 1  # the final session may remain open
-    for x, y in zip(s, b):
-        assert abs((x.session_start - y.st).total_seconds()) < 0.001
-        assert x.n_events == y.n
+    assert got.exceptAll(batch).count() == 0
+    latest = events.agg(F.max("ts")).head()[0]
+    cutoff = latest - timedelta(minutes=3 * SESSION_GAP_MINUTES)
+    still_open = batch.exceptAll(got).collect()
+    assert batch.count() - got.count() == len(still_open)
+    assert all(r.session_end >= cutoff for r in still_open), still_open
+
+
+def test_streaming_gap_boundary(spark, tmp_path):
+    """Exactly ``SESSION_GAP_MINUTES`` apart shares a session; 1 µs more
+    splits it. A later event of another user moves the watermark past
+    both sessions so they close."""
+    t0 = datetime(2024, 1, 1)
+    gap = timedelta(minutes=SESSION_GAP_MINUTES)
+    us = timedelta(microseconds=1)
+    rows = [
+        (1, t0, 7),
+        (2, t0 + gap, 7),                   # exactly the gap: same session
+        (3, t0 + 2 * gap + us, 7),          # gap + 1 µs: new session
+        (4, t0 + 20 * gap, 8),              # advances the watermark
+    ]
+    events = spark.createDataFrame(rows, "event_id bigint, ts timestamp, user_id bigint")
+    got = sorted(
+        (r.session_start, r.session_end, r.n_events)
+        for r in _run_stream(spark, events, tmp_path).where("user_id = 7").collect()
+    )
+    assert got == [(t0, t0 + gap, 2), (t0 + 2 * gap + us, t0 + 2 * gap + us, 1)]

@@ -144,7 +144,6 @@ def test_manifestless_checkpoint_commits_nothing(spark, pages, tmp_path):
         [("old", 0, "done"), ("old", 1, "done")],
         "run_id string, bucket int, status string",
     ).write.mode("overwrite").parquet(f"{out}/checkpoints")
-    assert load_committed_buckets(spark, f"{out}/checkpoints") == set()
     assert load_committed_buckets(
         spark, f"{out}/checkpoints", f"{out}/articles"
     ) == set()
@@ -213,7 +212,9 @@ def test_kill_resume_at_scale(spark, tmp_path):
     metrics-table consistency with the articles actually written.
 
     The victim runs scripts/run_pipeline.py in a subprocess (its own
-    JVM); the test polls the checkpoint table and SIGKILLs the process
+    JVM, configured through PYSPARK_SUBMIT_ARGS as spark-submit would;
+    its article files must carry the engine session's zstd codec); the
+    test polls the checkpoint table and SIGKILLs the process
     group after ≥2 buckets commit — so the kill lands mid-bucket with
     partial article/metrics files on disk, exactly the crash the
     dynamic-partition-overwrite resume must absorb."""
@@ -237,6 +238,8 @@ def test_kill_resume_at_scale(spark, tmp_path):
     out = str(tmp_path / "out_kill")
 
     env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p)
     env["PYSPARK_SUBMIT_ARGS"] = (
         "--master local[8] --conf spark.ui.enabled=false "
         "--conf spark.sql.shuffle.partitions=8 pyspark-shell"
@@ -271,6 +274,16 @@ def test_kill_resume_at_scale(spark, tmp_path):
         if proc.poll() is None:
             os.killpg(proc.pid, signal.SIGKILL)
         proc.wait()
+
+    # the victim ran the engine's session under spark-submit settings:
+    # every article file of a bucket it committed is zstd parquet
+    victim = {r.bucket for r in spark.read.parquet(f"{out}/checkpoints")
+              .where("run_id = 'victim' AND status = 'done'").collect()}
+    assert victim
+    for b in victim:
+        files = [f for f in os.listdir(f"{out}/articles/bucket={b}")
+                 if f.endswith(".parquet")]
+        assert files and all(f.endswith(".zstd.parquet") for f in files), files
 
     # resume in-process: committed buckets skipped, the rest (including
     # any half-written bucket) redone via dynamic partition overwrite
