@@ -19,15 +19,15 @@ passthrough columns, ``_OUTLINKS_ARROW_SCHEMA``); the Spark schema
 handed to ``mapInArrow`` is derived from it by ``from_arrow_schema``.
 
 Scale design:
-* **Skew defusal** — page size is heavy-tailed (a 100 MB page among
-  4 KB pages stalls a task). ``salted_repartition`` spreads rows by
-  ``(xxhash64(url), floor(log2(len(html))))`` so each task gets a mix
-  of sizes; at 1000 executors the same call defuses host-level skew
-  from crawl ordering.
-* **Memory** — input Arrow batches are capped by
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session.py);
-  output batches are additionally flushed by byte budget so a run of
-  huge articles cannot blow the Python worker.
+* **Skew** — the extraction is map-only by default. A caller who
+  knows its input is skewed passes ``num_partitions``: a round-robin
+  ``repartition`` that balances row counts exactly. Hashing a key
+  (even with a size bucket mixed in) places pages at random, which
+  balances neither bytes nor work any better.
+* **Memory** — Spark caps every input Arrow batch at 256 rows and
+  64 MiB (``maxRecordsPerBatch``/``maxBytesPerBatch``, session.py);
+  the loop turns each input batch into exactly one output batch, so
+  the input cap is also the bound on what a Python worker holds.
 * **Lineage** — every article row carries ``partition_id`` and the
   partition-cumulative ``wall_ms`` at emit time; the metrics table is
   a cheap groupBy over these (operators/metrics.py) instead of a
@@ -42,7 +42,6 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from ..core.api import extract
@@ -63,10 +62,6 @@ ARTICLES_ARROW_SCHEMA = pa.schema(
         pa.field("wall_ms", pa.int64()),
     ]
 )
-
-# flush output batches beyond this many article-text bytes
-_OUT_BYTE_BUDGET = 32 << 20
-_OUT_ROW_BUDGET = 1024
 
 
 def _source_columns(df: DataFrame) -> list[str]:
@@ -89,29 +84,17 @@ def _make_extract_fn(
     settings: dict | None,
     output_type: str,
     out_schema: pa.Schema,
-    passthrough: tuple[str, ...],
     resolve_url_col: str | None = None,
 ):
-    text_key = "html" if output_type == "html" else "text"
+    """The ``mapInArrow`` function: one ``out_schema`` batch per input
+    batch, the article columns first, then every further field of
+    ``out_schema`` taken whole from the input batch (the passthrough)."""
+    passthrough = list(out_schema)[len(ARTICLES_ARROW_SCHEMA):]
 
     def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         t0 = time.perf_counter()
-
-        cols: dict[str, list] = {name: [] for name in out_schema.names}
-        pending_bytes = 0
-
-        def flush() -> pa.RecordBatch:
-            nonlocal cols, pending_bytes
-            batch = pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in out_schema],
-                schema=out_schema,
-            )
-            cols = {name: [] for name in out_schema.names}
-            pending_bytes = 0
-            return batch
-
         for batch in batches:
             urls, htmls = _batch_pages(batch)
             # redirect semantics (get-url.ts:79-85): when the table
@@ -121,55 +104,26 @@ def _make_extract_fn(
                 batch.column(resolve_url_col).to_pylist()
                 if resolve_url_col else urls
             )
-            extras = {name: batch.column(name).to_pylist() for name in passthrough}
-            for row_idx, (url, html) in enumerate(zip(urls, htmls)):
+            rows = []
+            for url, resolve, html in zip(urls, resolves, htmls):
                 html = html or b""
-                n_bytes = (
-                    len(html) if isinstance(html, bytes)
-                    else len(html.encode("utf-8"))
-                )
                 art = extract(
-                    html, url=resolves[row_idx] or url,
-                    type_=output_type, settings=settings,
+                    html, url=resolve or url, type_=output_type, settings=settings
                 )
-                text = art.get(text_key, "") or ""
-                cols["url"].append(url)
-                cols["title"].append(art.get("title", ""))
-                cols["text"].append(text)
-                cols["text_length"].append(int(art.get("textLength", 0)))
-                cols["score"].append(float(art.get("score", 0)))
-                cols["next_page"].append(art.get("nextPage", ""))
-                cols["skip_level"].append(int(art.get("skipLevel", -1)))
-                cols["error"].append(bool(art.get("error", False)))
-                cols["html_bytes"].append(n_bytes)
-                cols["partition_id"].append(pid)
-                cols["wall_ms"].append(
-                    int((time.perf_counter() - t0) * 1000)
-                )
-                for name in passthrough:
-                    cols[name].append(extras[name][row_idx])
-                pending_bytes += len(text) + n_bytes // 16
-                if (
-                    pending_bytes >= _OUT_BYTE_BUDGET
-                    or len(cols["url"]) >= _OUT_ROW_BUDGET
-                ):
-                    yield flush()
-        if cols["url"]:
-            yield flush()
+                rows.append((
+                    url, art["title"], art[output_type], art["textLength"],
+                    art["score"], art["nextPage"], art["skipLevel"], art["error"],
+                    len(html) if isinstance(html, bytes) else len(html.encode("utf-8")),
+                    pid, int((time.perf_counter() - t0) * 1000),
+                ))
+            cols = list(zip(*rows)) or [()] * len(ARTICLES_ARROW_SCHEMA)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, ARTICLES_ARROW_SCHEMA)]
+                + [batch.column(f.name).cast(f.type) for f in passthrough],
+                schema=out_schema,
+            )
 
     return extract_batches
-
-
-def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Spread by key hash × size bucket to defuse page-size/host skew.
-    A documents table salts on (doc_id, text): its page grows with its
-    text."""
-    key, body = _source_columns(df)[:2]
-    return df.repartition(
-        num_partitions,
-        F.xxhash64(key),
-        F.floor(F.log2(F.length(F.col(body)) + F.lit(2.0))),
-    )
 
 
 def extract_articles(
@@ -202,6 +156,8 @@ def extract_articles(
     updates pageURL on redirects, lib/get-url.ts:79-85) while the
     request ``url`` remains the output key.
     """
+    if output_type not in ("text", "html"):
+        raise ValueError(f"output_type must be 'text' or 'html', not {output_type!r}")
     clash = set(passthrough) & set(ARTICLES_ARROW_SCHEMA.names)
     if clash:
         raise ValueError(
@@ -212,12 +168,10 @@ def extract_articles(
         *dict.fromkeys([*_source_columns(pages), *extra_src, *passthrough])
     )
     if num_partitions:
-        src = salted_repartition(src, num_partitions)
+        src = src.repartition(num_partitions)
     out_schema = _passthrough_schema(pages, passthrough)
     return src.mapInArrow(
-        _make_extract_fn(
-            settings, output_type, out_schema, passthrough, resolve_url_col
-        ),
+        _make_extract_fn(settings, output_type, out_schema, resolve_url_col),
         # to_arrow_type zones a TIMESTAMP passthrough in UTC: only a
         # TIMESTAMP_NTZ one is zone-less, and it maps back to NTZ
         from_arrow_schema(out_schema, prefer_timestamp_ntz=True),

@@ -18,9 +18,9 @@ Every stage is a per-row function of the asset (``synth_asset``,
 stages are testable without Spark and the Spark pass is one loop.
 Spark-side design is the real point at 100 TB: binary payloads stay in
 one Arrow-batched pass, the output prunes the payload column so
-downstream stages never shuffle the heavy bytes, and media blobs being
-large/size-skewed reuse the same salted-repartition story as HTML
-extraction (operators/extract.py).
+downstream stages never shuffle the heavy bytes, and size-skewed media
+blobs take the same Arrow batch caps as HTML extraction
+(operators/extract.py).
 """
 
 from __future__ import annotations

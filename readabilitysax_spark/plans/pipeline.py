@@ -66,6 +66,9 @@ def load_committed_buckets(
     the manifest columns commits no bucket, so every bucket re-runs
     (safe: the article and metrics writes are dynamic-overwrite).
     """
+    fs, checkpoints = hadoop_fs(spark, checkpoint_dir)
+    if not fs.exists(checkpoints):  # a fresh output
+        return set()
     try:
         rows = (
             spark.read.parquet(checkpoint_dir)
@@ -74,10 +77,11 @@ def load_committed_buckets(
             .agg(F.max_by("n_rows", "committed_at").alias("n_rows"))
             .collect()
         )
-    except Exception:  # no checkpoint yet, or one without a manifest
+    except Exception:  # a checkpoint without the manifest columns
         return set()
     manifests = {r["bucket"]: r["n_rows"] for r in rows}
-    if not manifests:
+    fs, articles = hadoop_fs(spark, articles_dir)
+    if not manifests or not fs.exists(articles):
         return set()
     try:
         actual = {
@@ -87,7 +91,7 @@ def load_committed_buckets(
             .agg(F.count("*").alias("n"))
             .collect()
         }
-    except Exception:
+    except Exception:  # an articles dir whose data files are all gone
         actual = {}
     return {b for b, n in manifests.items() if actual.get(b, 0) == n}
 
@@ -193,8 +197,11 @@ def run_pipeline(
         # spark-submit run was SLOWER than 8-core because every bucket
         # job ran single-core). spread_small_scan round-robins the
         # bucket across the executors; at 100 TB a bucket is thousands
-        # of splits and the branch is a structural no-op.
-        subset = spread_small_scan(spark, subset)
+        # of splits and the branch is a structural no-op. A caller's
+        # num_partitions is already a round-robin in extract_articles,
+        # so the html then crosses one exchange, not two.
+        if not num_partitions:
+            subset = spread_small_scan(spark, subset)
         articles = extract_articles(
             subset, output_type=output_type, num_partitions=num_partitions
         ).withColumn("bucket", F.lit(bucket))

@@ -9,10 +9,13 @@ target, tested on local[N]):
 
 * AQE on: runtime coalescing + skew-join splitting for the relational
   shell (dedup/metrics aggregations), with a 64k coalescing floor.
-* Arrow batches capped at 256 rows: html payloads are MB-sized on real
-  Common-Crawl data; 10k-row default batches would buffer gigabytes in
-  the Python worker. Extraction output is re-chunked by byte budget in
-  the operator itself as a second guard.
+* Arrow batches capped at 256 rows and 64 MiB, whichever comes first
+  (``maxRecordsPerBatch``, ``maxBytesPerBatch``): html payloads are
+  MB-sized on real Common-Crawl data; 10k-row default batches would
+  buffer gigabytes in the Python worker. The byte cap is Spark 4.1's
+  own default, set here so the bound is stated where it is relied on:
+  the extraction emits one output batch per input batch, so these caps
+  bound what its worker holds.
 * maxPartitionBytes 128m keeps scan partitions executor-memory-safe.
 * zstd parquet and dynamic partition overwrite (the resumable pipeline
   rewrites only the buckets it redoes).
@@ -90,6 +93,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -29,7 +29,7 @@ def main() -> int:
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--buckets", type=int, default=8)
     ap.add_argument("--partitions", type=int, default=None,
-                    help="salted repartition width (omit = map-only)")
+                    help="round-robin repartition width (omit = map-only)")
     ap.add_argument("--type", dest="output_type", default="text",
                     choices=["text", "html"])
     args = ap.parse_args()

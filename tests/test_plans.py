@@ -22,11 +22,13 @@ def _plan(df) -> str:
 
 def _algo_exchanges(plan: str) -> list[str]:
     """Exchange lines that move data for the ALGORITHM (hash/range/
-    single-partition), excluding the guarded round-robin input spread
-    (`sources.pages.spread_small_scan`): that Exchange only exists when
-    a small corpus scans as fewer splits than cores — a structural
-    no-op at production scale — and must not count against the
-    one-shuffle/map-only pins that model 100 TB behavior."""
+    single-partition), excluding round-robin ones. A round-robin
+    Exchange comes from the guarded input spread
+    (`sources.pages.spread_small_scan`), which only exists when a small
+    corpus scans as fewer splits than cores — a structural no-op at
+    production scale — or from a caller's opt-in
+    ``extract_articles(num_partitions=...)``; neither counts against
+    the one-shuffle/map-only pins that model 100 TB behavior."""
     return [
         ln
         for ln in plan.splitlines()

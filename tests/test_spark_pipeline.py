@@ -6,11 +6,17 @@ from __future__ import annotations
 
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from readabilitysax_spark.core.api import extract
-from readabilitysax_spark.operators.extract import extract_articles
+from readabilitysax_spark.operators.extract import (
+    ARTICLES_ARROW_SCHEMA,
+    _make_extract_fn,
+    extract_articles,
+)
 from readabilitysax_spark.operators.metrics import partition_metrics
 from readabilitysax_spark.plans.pipeline import run_pipeline
 from readabilitysax_spark.sources.pages import read_pages, synthesize_pages
@@ -149,6 +155,50 @@ def test_manifestless_checkpoint_commits_nothing(spark, pages, tmp_path):
     ) == set()
     r = run_pipeline(spark, pages, out, run_id="b", n_buckets=2)
     assert r["buckets_done"] == 2 and r["buckets_skipped"] == 0
+
+
+def test_fresh_output_reads_no_checkpoint(spark, tmp_path, monkeypatch):
+    """A fresh output is found by a FileSystem check, not by letting a
+    parquet read of the missing checkpoint dir fail."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from readabilitysax_spark.plans.pipeline import load_committed_buckets
+
+    reads = []
+    read = DataFrameReader.parquet
+
+    def recorded(self, *paths, **kw):
+        reads.append(paths)
+        return read(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recorded)
+    out = tmp_path / "fresh"
+    assert load_committed_buckets(
+        spark, f"{out}/checkpoints", f"{out}/articles") == set()
+    assert reads == []
+
+
+def test_pipeline_partitions_shuffle_html_once(spark, pages, tmp_path,
+                                              monkeypatch):
+    """With ``num_partitions`` the bucket's html crosses one exchange,
+    the round-robin inside ``extract_articles``: the pipeline adds no
+    small-scan spread in front of it. The input is one partition, so
+    each staged bucket scans as fewer splits than cores (the case where
+    the spread would fire); the run stops at the first bucket's
+    extraction input."""
+    from readabilitysax_spark.plans import pipeline
+
+    class Captured(Exception):
+        pass
+
+    def capture(subset, **kw):
+        raise Captured(subset._jdf.queryExecution().executedPlan().toString())
+
+    monkeypatch.setattr(pipeline, "extract_articles", capture)
+    with pytest.raises(Captured) as plan:
+        run_pipeline(spark, pages.coalesce(1), str(tmp_path / "out"),
+                     run_id="a", n_buckets=16, num_partitions=4)
+    assert "Exchange" not in str(plan.value)
 
 
 def test_resume_on_uri_output_dir(spark, pages, tmp_path):
@@ -325,6 +375,75 @@ def test_skew_giant_page(spark):
     assert sum(r.error for r in out) == 0
     giant = [r for r in out if r.url.endswith("/big")][0]
     assert giant.text_length > 100_000
+
+
+def _pages_batches(sizes):
+    html = (b"<div class='content'><p>"
+            + b"body text, with commas, words. " * 12 + b"</p></div>")
+    return [
+        pa.RecordBatch.from_pydict({
+            "url": [f"http://b.example/{n}-{i}" for i in range(n)],
+            "html": pa.array([html] * n, pa.binary()),
+            "lang": ["en"] * n,
+        })
+        for n in sizes
+    ]
+
+
+def _documents_batches(sizes):
+    docs = pq.read_table(f"{SF_TINY}/documents.parquet",
+                         columns=["doc_id", "text", "source", "lang"])
+    starts = [sum(sizes[:i]) for i in range(len(sizes))]
+    return [docs.slice(a, n).combine_chunks().to_batches()[0]
+            for a, n in zip(starts, sizes)]
+
+
+@pytest.mark.parametrize("output_type, make_batches", [
+    ("text", _pages_batches),
+    ("html", _pages_batches),
+    ("text", _documents_batches),
+])
+def test_extract_fn_one_output_batch_per_input_batch(output_type, make_batches):
+    """Spark-free: the extraction loop turns each input batch into
+    exactly one output batch (Spark's input batch caps are the memory
+    guard), with the passthrough column carried whole."""
+    batches = make_batches([5, 1, 7])
+    schema = pa.schema([*ARTICLES_ARROW_SCHEMA, pa.field("lang", pa.string())])
+    out = list(_make_extract_fn(None, output_type, schema)(iter(batches)))
+    assert [b.num_rows for b in out] == [5, 1, 7]
+    assert all(b.schema == schema for b in out)
+    for got, src in zip(out, batches):
+        assert got.column("lang").equals(src.column("lang"))
+    wall = [w for b in out for w in b.column("wall_ms").to_pylist()]
+    assert wall == sorted(wall)
+    assert {p for b in out for p in b.column("partition_id").to_pylist()} == {-1}
+    assert not any(e for b in out for e in b.column("error").to_pylist())
+
+
+def test_extract_articles_rejects_unknown_output_type(spark, pages):
+    with pytest.raises(ValueError, match="output_type"):
+        extract_articles(pages, output_type="txt")
+
+
+def test_arrow_input_batches_capped_at_64_mib(spark):
+    """The memory guard of the extraction loop: the session caps every
+    Arrow batch that reaches ``mapInArrow`` at 64 MiB (a batch closes
+    on the row that crosses the cap), so ten 8 MB rows in one partition
+    never arrive as one 80 MB batch."""
+    cap = spark._jsparkSession.sessionState().conf().arrowMaxBytesPerBatch()
+    assert cap == 64 << 20
+    row = 8_000_000
+
+    def sizes(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"n": [b.num_rows],
+                                              "bytes": [b.column(0).nbytes]})
+
+    big = spark.range(0, 10, 1, 1).select(
+        F.expr(f"cast(repeat('x', {row}) as binary)").alias("b"))
+    got = big.mapInArrow(sizes, "n long, bytes long").collect()
+    assert sum(r.n for r in got) == 10
+    assert max(r.bytes for r in got) <= cap + row
 
 
 def test_error_quarantine_and_metrics(spark):
