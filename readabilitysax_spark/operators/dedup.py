@@ -595,6 +595,22 @@ def incremental_dedup(new_docs: DataFrame, old_docs: DataFrame) -> DataFrame:
 
 # ---- simhash: shared SQL fragment so Spark and any ANSI oracle agree ----
 
+def _simhash_vote(hex_expr: str, b: int) -> str:
+    """SQL for bit position ``b``'s vote (+1 or -1) of one word: bit
+    ``3 - b % 4`` of hex char ``b // 4 + 1`` of ``hex_expr``, the
+    word's md5 hex digest."""
+    power = 2 ** (3 - b % 4)
+    nib = f"instr('0123456789abcdef', substring({hex_expr}, {b // 4 + 1}, 1)) - 1"
+    return f"CASE WHEN ({nib}) % {power * 2} >= {power} THEN 1 ELSE -1 END"
+
+
+def _simhash_weight(bits: int, b: int) -> int:
+    """The value bit position ``b`` adds to a ``bits``-wide fingerprint
+    when its vote sum is positive. At ``bits=64`` the MSB is the
+    two's-complement -2^63, so the fingerprint stays a signed BIGINT."""
+    return -(2 ** 63) if (bits == 64 and b == 0) else 2 ** (bits - 1 - b)
+
+
 def simhash_sql_expr(word_expr: str, bits: int) -> str:
     """Dialect-portable SQL aggregate expression computing a
     ``bits``-wide simhash over a pre-exploded word column ``word_expr``
@@ -602,22 +618,13 @@ def simhash_sql_expr(word_expr: str, bits: int) -> str:
 
     Uses only md5/substring/instr/%/CASE/SUM — identical semantics
     under Spark SQL and DuckDB, which is what lets the DuckDB oracle
-    verify the Spark operator bit-for-bit. At ``bits=64`` the MSB term
-    is the two's-complement value -2^63 so the fingerprint stays inside
-    signed BIGINT on both engines.
+    verify the Spark operator bit-for-bit.
     """
-    bit_terms = []
-    for b in range(bits):
-        hx = b // 4 + 1
-        power = 2 ** (3 - b % 4)
-        nib = f"instr('0123456789abcdef', substring(md5({word_expr}), {hx}, 1)) - 1"
-        bit = f"CASE WHEN ({nib}) % {power * 2} >= {power} THEN 1 ELSE -1 END"
-        weight = -(2 ** 63) if (bits == 64 and b == 0) else 2 ** (bits - 1 - b)
-        bit_terms.append(
-            f"CASE WHEN SUM({bit}) > 0 THEN CAST({weight} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-        )
-    bits_sum = " + ".join(bit_terms)
-    return bits_sum  # to be used inside: SELECT doc_id, <this> FROM ... exploded words w
+    return " + ".join(
+        f"CASE WHEN SUM({_simhash_vote(f'md5({word_expr})', b)}) > 0 "
+        f"THEN CAST({_simhash_weight(bits, b)} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for b in range(bits)
+    )
 
 
 def simhash_multi(documents: DataFrame, widths: tuple[int, ...]) -> DataFrame:
@@ -625,14 +632,13 @@ def simhash_multi(documents: DataFrame, widths: tuple[int, ...]) -> DataFrame:
     (doc_id, simhash16, simhash64, ...). Width 64 is the production
     width (two's-complement MSB, signed BIGINT).
 
-    Bit position b is the same nibble test at every width (hex char
-    b//4+1 of md5(word)), only the weights differ — so the per-doc
-    vote sums are aggregated once for max(widths) positions and each
-    width's fingerprint is a free post-aggregation projection. One
-    groupBy(doc_id) with map-side partial aggregation, exactly the
-    cost of the widest single-width call.
+    Bit position b is the same vote at every width, only the weights
+    differ — so the per-doc vote sums are aggregated once for
+    max(widths) positions and each width's fingerprint is a free
+    post-aggregation projection. One groupBy(doc_id) with map-side
+    partial aggregation, exactly the cost of the widest single-width
+    call.
     """
-    max_bits = max(widths)
     # Vote extraction stays the per-nibble instr/substring arithmetic
     # of simhash_sql_expr. A conv()-based variant (parse the first 16
     # hex chars into two integer chunks once, then 64 shift/AND bit
@@ -643,23 +649,16 @@ def simhash_multi(documents: DataFrame, widths: tuple[int, ...]) -> DataFrame:
     words = documents.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).withColumn("h", F.md5("word"))
-    aggs = []
-    for b in range(max_bits):
-        hx = b // 4 + 1
-        power = 2 ** (3 - b % 4)
-        nib = F.expr(f"instr('0123456789abcdef', substring(h, {hx}, 1)) - 1")
-        bit = F.when((nib % (power * 2)) >= power, 1).otherwise(-1)
-        aggs.append(F.sum(bit).alias(f"s{b}"))
-    per_doc = words.groupBy("doc_id").agg(*aggs)
+    per_doc = words.groupBy("doc_id").agg(*(
+        F.sum(F.expr(_simhash_vote("h", b))).alias(f"s{b}")
+        for b in range(max(widths))
+    ))
     outs = []
     for bits in widths:
         total = None
         for b in range(bits):
-            weight = -(2 ** 63) if (bits == 64 and b == 0) else 2 ** (bits - 1 - b)
-            term = (
-                F.when(F.col(f"s{b}") > 0, F.lit(weight).cast("bigint"))
-                .otherwise(F.lit(0).cast("bigint"))
-            )
+            weight = F.lit(_simhash_weight(bits, b)).cast("bigint")
+            term = F.when(F.col(f"s{b}") > 0, weight).otherwise(F.lit(0).cast("bigint"))
             total = term if total is None else total + term
         outs.append(total.cast("bigint").alias(f"simhash{bits}"))
     return per_doc.select("doc_id", *outs)

@@ -12,6 +12,11 @@ documents table (doc_id, text, source), and each page is built by
 ``synth_page`` inside the same batch loop that extracts it, so the
 html never crosses the JVM↔Python boundary (one Python runner per
 task instead of a synthesis runner feeding an extraction runner).
+Building the pages with JVM expressions instead gives byte-identical
+html but slower sf0.1 noop query walls (7 reps × 2 rounds at commit
+b2ccd40, 4-core host: extract_articles 0.72-0.92 -> 0.85-1.14 s,
+extract_outlinks 0.47-0.51 -> 0.56-0.64 s): shipping the html across
+the boundary costs more than synthesizing it in the worker.
 
 Each operator declares its output once, as the Arrow schema its
 batches are built with (``ARTICLES_ARROW_SCHEMA`` plus the typed
@@ -81,7 +86,6 @@ def _batch_pages(batch: pa.RecordBatch) -> tuple[list, list]:
 
 
 def _make_extract_fn(
-    settings: dict | None,
     output_type: str,
     out_schema: pa.Schema,
     resolve_url_col: str | None = None,
@@ -107,9 +111,7 @@ def _make_extract_fn(
             rows = []
             for url, resolve, html in zip(urls, resolves, htmls):
                 html = html or b""
-                art = extract(
-                    html, url=resolve or url, type_=output_type, settings=settings
-                )
+                art = extract(html, url=resolve or url, type_=output_type)
                 rows.append((
                     url, art["title"], art[output_type], art["textLength"],
                     art["score"], art["nextPage"], art["skipLevel"], art["error"],
@@ -129,7 +131,6 @@ def _make_extract_fn(
 def extract_articles(
     pages: DataFrame,
     output_type: str = "text",
-    settings: dict | None = None,
     num_partitions: int | None = None,
     passthrough: tuple[str, ...] = (),
     resolve_url_col: str | None = None,
@@ -171,7 +172,7 @@ def extract_articles(
         src = src.repartition(num_partitions)
     out_schema = _passthrough_schema(pages, passthrough)
     return src.mapInArrow(
-        _make_extract_fn(settings, output_type, out_schema, resolve_url_col),
+        _make_extract_fn(output_type, out_schema, resolve_url_col),
         # to_arrow_type zones a TIMESTAMP passthrough in UTC: only a
         # TIMESTAMP_NTZ one is zone-less, and it maps back to NTZ
         from_arrow_schema(out_schema, prefer_timestamp_ntz=True),

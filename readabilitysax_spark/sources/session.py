@@ -2,7 +2,8 @@
 
 ``build_session`` is the one way this package builds a session: tests,
 benchmarks, the query driver and the spark-submit entry point
-(``scripts/run_pipeline.py``) all call it.
+(``scripts/run_pipeline.py``) all call it. Its caller runs
+``warm_python_workers`` next when it times Arrow-stage work.
 
 Engine settings, applied on every master (100 TB / 1000-executor
 target, tested on local[N]):
@@ -15,7 +16,10 @@ target, tested on local[N]):
   buffer gigabytes in the Python worker. The byte cap is Spark 4.1's
   own default, set here so the bound is stated where it is relied on:
   the extraction emits one output batch per input batch, so these caps
-  bound what its worker holds.
+  bound what its worker holds. The 256-row cap stays: dropping it gave
+  mixed perfbench medians (four alternating pairs at commit b2ccd40 on a
+  4-core host: ``extract_uniform`` wall 0.662 -> 0.635 s,
+  ``extract_skewed`` 0.639 -> 0.657 s).
 * maxPartitionBytes 128m keeps scan partitions executor-memory-safe.
 * zstd parquet and dynamic partition overwrite (the resumable pipeline
   rewrites only the buckets it redoes).
@@ -94,7 +98,6 @@ def build_session(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "64m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     )
@@ -114,11 +117,11 @@ def build_session(
 
 
 def _warm_batches(batches):
-    # runs in the Python worker: importing this module pulls in pyspark
-    # + the core extraction stack (the package import also installs
-    # zipimport_cache, which spares every later task of this worker
-    # re-reads of the zips on its sys.path), and one tiny extract()
-    # warms the tokenizer/entity regex caches — the per-worker one-time costs
+    # runs in the Python worker: the import pulls in the core extraction
+    # stack (the package import also installs zipimport_cache, which
+    # spares every later task of this worker re-reads of the zips and
+    # jar on its sys.path), and one tiny extract() warms the
+    # tokenizer/entity regex caches — the per-worker one-time costs
     # every later Arrow task would otherwise pay inside its own wall
     from readabilitysax_spark.core.api import extract
 
@@ -135,11 +138,10 @@ def warm_python_workers(spark: SparkSession) -> None:
     imports and regex caches are paid at session init instead of inside
     the first Arrow-stage query.
 
-    This is the same steady-state policy the bench's extraction and
-    streaming sections already apply with their own pre-timed warm-up
-    passes (bench.py documents the rationale: on a long cluster run
-    worker cold-start amortizes to zero, so per-query walls should
-    measure the query). Reused workers (spark.python.worker.reuse,
+    Nothing calls it implicitly: each harness that times Arrow-stage
+    work calls it right after ``build_session``, because on a long
+    cluster run worker cold-start amortizes to zero and per-query walls
+    should measure the query. Reused workers (spark.python.worker.reuse,
     default on) keep the warmed pool for the whole session.
     """
     n = spark.sparkContext.defaultParallelism

@@ -11,10 +11,12 @@ it again only on the next lookup). A worker that imports pyspark from
 per imported pyspark sub-package, so each task re-read that directory
 about 16 times (~11 ms each on a 4-core host) before its UDF saw the
 first row. Workers of the package's ``worker_daemon`` import pyspark
-from the install instead when it holds the zip's source, but they still
-hold importers for the zips themselves, which stay on ``sys.path``; a
-package shipped as a zip (``spark-submit --py-files``) keeps the stock
-daemon and the 16 importers.
+from the install instead, but still hold 4 importers: the two zips,
+``jars/spark-core_2.13-4.1.2.jar`` (5,359 entries, no ``.py``; 24-38 ms
+per read) and that jar's ``org/`` entry. Unguarded, their re-reads cost
+80-200 ms per task on a 4-core host, mostly the jar's. A package
+shipped as a zip (``spark-submit --py-files``) keeps the stock daemon
+and the 16 importers.
 
 ``install()`` runs when the package is imported, so every worker that
 unpickles one of the package's UDFs has it from its first task on. On

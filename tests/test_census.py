@@ -18,8 +18,8 @@ with the reason it stays a parameter. Converting one into a module
 constant removes it from both; a new one fails here until it is
 converted or given a reason.
 
-Run ``python3 tests/test_census.py`` to print the census (47 defaulted
-parameters, 19 of them with at most one value in use).
+Run ``python3 tests/test_census.py`` to print the census (46 defaulted
+parameters, 18 of them with at most one value in use).
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _CAP = "cap: safety code; None lifts it to audit what it drops"
 _DEPLOY = "deployment setting: varies per cluster or input version, not per query"
 _REFERENCE = "the reference's API (lib/process.ts, getArticle, the CLI)"
-_EXTRACT = "extraction input: the reference's settings, or a url column to resolve"
+_EXTRACT = "extraction input: a post-redirect url column to resolve"
 _INTERNAL = "internal per-document helper of pdfgen/pdftext"
 
 _PKG = "readabilitysax_spark/"
@@ -49,7 +49,6 @@ ALLOWED = {
     _PKG + "core/stream_api.py:extract_from_events(settings)": _REFERENCE,
     _PKG + "core/stream_api.py:extract_from_events(type_)": _REFERENCE,
     _PKG + "cli.py:main(argv)": _REFERENCE,
-    _PKG + "operators/extract.py:extract_articles(settings)": _EXTRACT,
     _PKG + "operators/extract.py:extract_articles(resolve_url_col)": _EXTRACT,
     _PKG + "operators/extract.py:_make_extract_fn(resolve_url_col)": _EXTRACT,
     _PKG + "operators/pdftext.py:_page_fonts(cmap_cache)": _INTERNAL,

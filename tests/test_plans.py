@@ -123,6 +123,23 @@ def test_ivf_prebuilt_search_no_query_time_assign(spark, monkeypatch):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_ivf_index_cache_starts_no_warm_up(spark, monkeypatch):
+    """``_ivf_index`` only builds and memoizes the index: warming the
+    worker pool is the job of whoever builds the session."""
+    from readabilitysax_spark.operators import similarity
+    from readabilitysax_spark.sources import session
+
+    def no_warm_up(_spark):
+        raise AssertionError("_ivf_index warmed the worker pool")
+
+    monkeypatch.setattr(entry, "_IVF_INDEX_CACHE", {})
+    monkeypatch.setattr(session, "warm_python_workers", no_warm_up)
+    centroids, assigned = entry._ivf_index(spark, SF_TINY)
+    assert len(centroids) == similarity.IVF_N_LISTS
+    assert "list_id" in assigned.columns
+    assert entry._ivf_index(spark, SF_TINY)[1] is assigned
+
+
 def test_simhash64_pairs_bounded_plan(spark):
     """Band join, never a cartesian product."""
     plan = _plan(entry.queries()["dedup_simhash64_pairs"](spark, SF_TINY))

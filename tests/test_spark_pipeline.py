@@ -409,7 +409,7 @@ def test_extract_fn_one_output_batch_per_input_batch(output_type, make_batches):
     guard), with the passthrough column carried whole."""
     batches = make_batches([5, 1, 7])
     schema = pa.schema([*ARTICLES_ARROW_SCHEMA, pa.field("lang", pa.string())])
-    out = list(_make_extract_fn(None, output_type, schema)(iter(batches)))
+    out = list(_make_extract_fn(output_type, schema)(iter(batches)))
     assert [b.num_rows for b in out] == [5, 1, 7]
     assert all(b.schema == schema for b in out)
     for got, src in zip(out, batches):
@@ -494,29 +494,27 @@ def test_redirect_final_url_drives_resolution(spark):
     assert r2.next_page == "http://a.example/posts/x-7/page/2"
 
 
-def test_per_bucket_extraction_spreads_small_buckets(spark, pages, tmp_path):
+def test_per_bucket_extraction_spreads_small_buckets(spark, pages, tmp_path,
+                                                    monkeypatch):
     """Round-5 fix: a bucket's staged files are tiny below production
     scale and openCost coalescing packs them into ~1 split, which
     pinned each bucket's CPU-bound extraction job to one core (a
-    32-core deployed run measured slower than 8-core). The per-bucket
-    subset must reach the extraction map at >= defaultParallelism
-    partitions."""
-    from readabilitysax_spark.plans.pipeline import stage_bucketed_pages
-    from readabilitysax_spark.sources.pages import spread_small_scan
+    32-core deployed run measured slower than 8-core). Without
+    ``num_partitions`` the bucket's extraction input is round-robined
+    to ``defaultParallelism``. The input is one partition, so each of
+    16 staged buckets scans as fewer splits than cores; the run stops at
+    the first bucket's extraction input."""
+    from readabilitysax_spark.plans import pipeline
 
-    import inspect
+    class Captured(Exception):
+        pass
 
-    from readabilitysax_spark.plans.pipeline import run_pipeline
+    def capture(subset, **kw):
+        raise Captured(subset._jdf.queryExecution().executedPlan().toString())
 
-    staging = str(tmp_path / "staged_spread")
-    # 16 buckets ensures each bucket's subset has FEWER splits than the
-    # session parallelism even on the local[4] test session (at 32
-    # cores in the deployed run the imbalance is much starker)
-    staged = stage_bucketed_pages(spark, pages, staging, n_buckets=16)
-    subset = staged.where(F.col("bucket") == 1)
-    before = subset.rdd.getNumPartitions()
-    spread = spread_small_scan(spark, subset)
+    monkeypatch.setattr(pipeline, "extract_articles", capture)
+    with pytest.raises(Captured) as plan:
+        run_pipeline(spark, pages.coalesce(1), str(tmp_path / "out"),
+                     run_id="a", n_buckets=16, num_partitions=None)
     par = spark.sparkContext.defaultParallelism
-    assert spread.rdd.getNumPartitions() >= min(par, max(before, par))
-    # and the fix is actually wired into the resume loop
-    assert "spread_small_scan" in inspect.getsource(run_pipeline)
+    assert f"Exchange RoundRobinPartitioning({par})" in str(plan.value)
