@@ -88,4 +88,8 @@ def extract(
         s["type"] = type_
         return process(html, s)
     except Exception:
-        return dict(_ERROR_ARTICLE)
+        # build the error article after the handler: until it ends, the
+        # traceback keeps the partial parse alive, and under memory
+        # exhaustion the allocation would fail and escape
+        pass
+    return dict(_ERROR_ARTICLE)

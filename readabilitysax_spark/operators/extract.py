@@ -212,7 +212,9 @@ def collect_outlinks(html: str | bytes, url: str | None) -> list[tuple[int, str,
     extractor's own pagination scanner sees. href-less and
     empty-href anchors are dropped (the reference skips empty
     attribute values). A new <a> while one is open implicitly closes
-    the previous (browser behavior; HTML forbids nesting).
+    the previous (browser behavior; HTML forbids nesting); an <a> still
+    open at EOF gets its CLOSE from the tokenizer, which closes every
+    open tag at end of input (htmlparser2's parseComplete).
 
     Attribute SCOPING also mirrors the reference: onattribute applies
     to ``_currentElement`` (readability-sax.ts:369-373), and noContent
@@ -269,8 +271,6 @@ def collect_outlinks(html: str | bytes, url: str | None) -> list[tuple[int, str,
                 depth -= 1
             elif e[1] == "a":
                 close_anchor()
-    if in_a:
-        close_anchor()
     return [(i, h, t) for i, (h, t) in enumerate(out)]
 
 

@@ -2,39 +2,40 @@
 of the extraction family (north rule: "HTML boilerplate strip,
 PDF/layout parse, DOM heuristics").
 
-A REAL pure-stdlib extractor, not a stub: sequential object scan (no
-xref trust — robust to truncated/corrupt cross-reference tables) with
-PDF 1.5 ``/ObjStm`` object-stream expansion (modern producers put
-page/font/ToUnicode dicts inside compressed object streams), page
-order from the ``/Catalog → /Pages → /Kids`` tree (object-id fallback),
-stream ``/Filter`` chains decoded in array order (``FlateDecode``,
-``ASCIIHexDecode``, ``ASCII85Decode``; unknown filters skip that
-stream only), a page's multiple ``/Contents`` streams concatenated
-before tokenizing (ISO 32000 §7.7.3.3 persistent state), and a
-content-stream tokenizer
-covering the text-showing operators ``Tj``, ``TJ`` (array form with
-kerning numbers), ``'`` and ``"`` plus the line-advance operators
-``Td``/``TD``/``T*``/``Tm`` and font selection ``Tf``. PDF literal
-strings are unescaped per the string grammar (nested parens, ``\\n``
-``\\r`` ``\\t`` ``\\b`` ``\\f`` ``\\( `` ``\\)`` ``\\\\``, octal
-escapes — unrecognized escapes like ``\\8`` keep the character, per
-spec — line continuations). Show-string decoding is font-aware:
-composite (CID) fonts with a ``/ToUnicode`` CMap (``bfchar`` +
-``bfrange`` scalar and array forms, resolved through page
-``/Resources`` with ``/Parent`` inheritance) decode fixed-width codes
-to unicode; simple fonts use the UTF-16BE-BOM text-string convention,
+A REAL pure-stdlib extractor for the PDFs of ``sources/pdfgen.py``, its
+only producer here: sequential object scan (no xref trust — robust to
+truncated/corrupt cross-reference tables) with PDF 1.5 ``/ObjStm``
+object-stream expansion (modern producers put page/font dicts inside
+compressed object streams), page order from the ``/Catalog → /Pages →
+/Kids`` tree (object-id fallback), stream ``/Filter`` chains decoded in
+array order (``FlateDecode``, ``ASCIIHexDecode``, ``ASCII85Decode``; a
+content stream under another filter is skipped), and a content-stream
+tokenizer covering the text-showing operators ``Tj``, ``TJ`` (array
+form with kerning numbers) and ``'``, the positioning operators
+``Td``/``TL``/``Tm`` and font selection ``Tf``. Literal strings unescape
+``\\(`` ``\\)`` ``\\\\`` and octal escapes. Show-string decoding is
+font-aware: composite (CID) fonts with a ``/ToUnicode`` CMap
+(``bfchar`` + array-form ``bfrange``) decode fixed-width codes to
+unicode; simple fonts use the UTF-16BE-BOM text-string convention,
 else latin-1 bytes.
 
-Disclosed boundary: no encrypted documents, no LZW or
-predictor-filtered streams (such streams are skipped, the rest of the
-document still extracts), CID fonts WITHOUT a ToUnicode CMap
-(e.g. Identity-H relying on the font program's cmap table) extract as
-raw code bytes, a single /ObjStm is expanded up to 50,000
-sub-objects (hostile-input bound; real producers pack tens to
-hundreds), and any one FlateDecode stream inflates to at most 256 MB
-(hostile-input bound: a KB-sized deflate bomb is treated as
-undecodable instead of filling the Arrow worker; legitimate
-text-bearing streams are orders of magnitude smaller).
+Disclosed boundary: the parser reads the structures ``pdfgen.py``
+writes — one ``/Contents`` stream per page, fonts named in an inline
+``/Resources << /Font << … >> >>`` dict of the page itself, literal
+strings whose parentheses are escaped, even-length hex strings. It
+does not read ``/Contents`` arrays, resources inherited through
+``/Parent``, indirect
+``/Resources`` or ``/Font`` references, the scalar ``bfrange`` form,
+the letter escapes (``\\n`` ``\\t`` …; the backslash drops and the
+letter stays, as for ``\\8``) and line continuations of literal
+strings, unescaped nested parentheses, odd-length hex strings, inline
+``<<…>>`` dicts and ``%`` comments in content streams, the ``TD``,
+``T*`` and ``"`` operators, encrypted documents, or LZW and predictor
+filters. Hostile-input bounds: a single /ObjStm is expanded up to
+50,000 sub-objects (real producers pack tens to hundreds), and any one
+FlateDecode stream inflates to at most 256 MB (a KB-sized deflate bomb
+is treated as undecodable instead of filling the Arrow worker;
+legitimate text-bearing streams are orders of magnitude smaller).
 
 Spark shape: this module is pure Python and has no Spark operator of
 its own. ``multimodal.media_audit`` runs ``extract_text_from_pdf`` per
@@ -51,7 +52,7 @@ from collections.abc import Iterator
 
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n")
-_CONTENTS_RE = re.compile(rb"/Contents\s+(\d+)\s+\d+\s+R|/Contents\s*\[(.*?)\]", re.S)
+_CONTENTS_RE = re.compile(rb"/Contents\s+(\d+)\s+\d+\s+R")
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 _PAGE_RE = re.compile(rb"/Type\s*/Page\b(?!s)")
 
@@ -115,8 +116,9 @@ def _decode_stream(head: bytes, stream: bytes) -> bytes | None:
     """Apply the stream's ``/Filter`` chain (array order = decode
     order, ISO 32000 §7.4): FlateDecode, ASCIIHexDecode, ASCII85Decode
     — the filters real text-bearing streams use. Unknown filters
-    (DCT, JBIG2, LZW, predictors) → None (caller skips the stream);
-    malformed payloads raise and the caller degrades per-stream."""
+    (DCT, JBIG2, LZW, predictors) → None; malformed payloads raise.
+    Either way a content stream's page extracts no text; in an ObjStm
+    or a CMap, the document becomes an error row."""
     m = _FILTER_RE.search(head)
     if m is None:
         return stream
@@ -150,15 +152,11 @@ def _decode_stream(head: bytes, stream: bytes) -> bytes | None:
         elif f == "ASCIIHexDecode":
             hx = stream.split(b">")[0]
             hx = re.sub(rb"[^0-9A-Fa-f]", b"", hx)
-            if len(hx) % 2:
-                hx += b"0"
             stream = bytes.fromhex(hx.decode("ascii"))
         elif f == "ASCII85Decode":
             import base64
 
             s = re.sub(rb"\s", b"", stream)
-            if s.startswith(b"<~"):
-                s = s[2:]
             end = s.find(b"~>")
             if end >= 0:
                 s = s[:end]
@@ -170,39 +168,27 @@ def _decode_stream(head: bytes, stream: bytes) -> bytes | None:
 
 def _expand_object_streams(objs: dict[int, tuple[bytes, bytes | None]]) -> None:
     """PDF 1.5 object streams (ISO 32000 §7.5.7): a ``/Type /ObjStm``
-    stream holds N streamless sub-objects — modern producers put page,
-    font, and ToUnicode DICTS there, invisible to a top-level scan.
-    The decoded stream starts with N (objnum, offset) integer pairs;
-    bodies begin at /First. Sub-objects are added WITHOUT overwriting
-    top-level definitions (no xref is trusted; a direct ``N 0 obj``
-    wins over a compressed copy)."""
+    stream holds N streamless sub-objects — modern producers put page
+    and font DICTS there, invisible to a top-level scan. The decoded
+    stream starts with N (objnum, offset) integer pairs; bodies begin
+    at /First. Sub-objects are added WITHOUT overwriting top-level
+    definitions (no xref is trusted; a direct ``N 0 obj`` wins over a
+    compressed copy)."""
     for oid in list(objs):
         head, stream = objs[oid]
         if stream is None or not re.search(rb"/Type\s*/ObjStm\b", head):
             continue
-        try:
-            data = _decode_stream(head, stream)
-        except Exception:
-            continue
-        if data is None:
-            continue
-        nm = re.search(rb"/N\s+(\d+)", head)
-        fm = re.search(rb"/First\s+(\d+)", head)
-        if nm is None or fm is None:
-            continue
-        n_objs, first = int(nm.group(1)), int(fm.group(1))
-        if first > len(data):
-            continue
+        data = _decode_stream(head, stream)
+        n_objs = int(re.search(rb"/N\s+(\d+)", head).group(1))
+        first = int(re.search(rb"/First\s+(\d+)", head).group(1))
         header = data[:first].split()
-        pairs: list[tuple[int, int]] = []
         # hostile-input bound: 2·_MAX_OBJSTM_OBJS header ints (spec has
         # no limit; real ObjStms hold tens to hundreds of objects —
         # disclosed in the module docstring)
-        for k in range(0, min(2 * n_objs, len(header) - 1, 2 * _MAX_OBJSTM_OBJS), 2):
-            try:
-                pairs.append((int(header[k]), int(header[k + 1])))
-            except ValueError:
-                break
+        pairs = [
+            (int(header[k]), int(header[k + 1]))
+            for k in range(0, min(2 * n_objs, len(header) - 1, 2 * _MAX_OBJSTM_OBJS), 2)
+        ]
         for idx, (sub_oid, off) in enumerate(pairs):
             end = (
                 first + pairs[idx + 1][1]
@@ -213,46 +199,16 @@ def _expand_object_streams(objs: dict[int, tuple[bytes, bytes | None]]) -> None:
                 objs.setdefault(sub_oid, (data[first + off:end], None))
 
 
+_ESCAPE_RE = re.compile(rb"\\(?:([0-7]{1,3})|(.))")
+
+
 def _unescape_literal(tok: bytes) -> bytes:
-    """PDF literal string body (without outer parens) → raw bytes."""
-    out = bytearray()
-    i, n = 0, len(tok)
-    while i < n:
-        b = tok[i]
-        if b != 0x5C:  # backslash
-            out.append(b)
-            i += 1
-            continue
-        i += 1
-        if i >= n:
-            break
-        c = tok[i:i + 1]
-        if c in b"nrtbf":
-            out.append({"n": 10, "r": 13, "t": 9, "b": 8, "f": 12}[c.decode()])
-            i += 1
-        elif c in b"()\\":
-            out += c
-            i += 1
-        elif c == b"\r":  # line continuation
-            i += 2 if tok[i + 1:i + 2] == b"\n" else 1
-        elif c == b"\n":
-            i += 1
-        elif c.isdigit():  # 1-3 octal digits
-            j = i
-            while j < n and j - i < 3 and 0x30 <= tok[j] <= 0x37:
-                j += 1
-            if j == i:  # \8 or \9: not octal — per ISO 32000 §7.3.4.2
-                # an unrecognized escape drops the backslash and keeps
-                # the character (was: int(b'', 8) → whole-doc error row)
-                out += c
-                i += 1
-            else:
-                out.append(int(tok[i:j], 8) & 0xFF)
-                i = j
-        else:  # lone backslash: dropped, next char literal
-            out += c
-            i += 1
-    return bytes(out)
+    """PDF literal string body (without outer parens) → raw bytes. An
+    octal escape is its byte; any other escaped character stands for
+    itself (``\\(`` ``\\)`` ``\\\\``; ``\\8`` too, per ISO 32000
+    §7.3.4.2, where an unrecognized escape drops the backslash)."""
+    return _ESCAPE_RE.sub(
+        lambda m: bytes([int(m[1], 8) & 0xFF]) if m[1] else m[2], tok)
 
 
 def _tokenize_content(stream: bytes) -> Iterator[tuple[str, object]]:
@@ -275,47 +231,23 @@ def _tokenize_content(stream: bytes) -> Iterator[tuple[str, object]]:
         if b in _WS:
             i += 1
             continue
-        if b == 0x28:  # ( literal string, nested parens
-            depth, j = 1, i + 1
-            while j < n and depth:
-                c = stream[j]
-                if c == 0x5C:
-                    j += 2
-                    continue
-                if c == 0x28:
-                    depth += 1
-                elif c == 0x29:
-                    depth -= 1
-                j += 1
-            tok = stream[i + 1:j - 1]
-            i = j
-            t = emit("str", _unescape_literal(tok))
-            if t:
-                yield t
-            continue
-        if b == 0x3C and stream[i + 1:i + 2] != b"<":  # <hex>
-            j = stream.find(b">", i + 1)
-            j = n if j < 0 else j
-            hx = re.sub(rb"[^0-9A-Fa-f]", b"", stream[i + 1:j])
-            if len(hx) % 2:
-                hx += b"0"
-            t = emit("str", bytes.fromhex(hx.decode("ascii")))
+        if b == 0x28:  # ( literal string, up to the first unescaped )
+            j = i + 1
+            while j < n and stream[j] != 0x29:
+                j += 2 if stream[j] == 0x5C else 1
+            t = emit("str", _unescape_literal(stream[i + 1:j]))
             i = j + 1
             if t:
                 yield t
             continue
-        if b == 0x3C:  # << dict: skip balanced
-            depth, j = 1, i + 2
-            while j < n - 1 and depth:
-                if stream[j:j + 2] == b"<<":
-                    depth += 1
-                    j += 2
-                elif stream[j:j + 2] == b">>":
-                    depth -= 1
-                    j += 2
-                else:
-                    j += 1
-            i = j
+        if b == 0x3C:  # <hex>
+            j = stream.find(b">", i + 1)
+            j = n if j < 0 else j
+            hx = re.sub(rb"[^0-9A-Fa-f]", b"", stream[i + 1:j])
+            t = emit("str", bytes.fromhex(hx.decode("ascii")))
+            i = j + 1
+            if t:
+                yield t
             continue
         if b == 0x5B:  # [
             arr_stack.append([])
@@ -337,10 +269,6 @@ def _tokenize_content(stream: bytes) -> Iterator[tuple[str, object]]:
             if t:
                 yield t
             continue
-        if b == 0x25:  # % comment to EOL
-            j = stream.find(b"\n", i)
-            i = n if j < 0 else j + 1
-            continue
         # number or operator
         j = i
         while j < n and stream[j] not in _WS and stream[j] not in _DELIM:
@@ -355,7 +283,8 @@ def _tokenize_content(stream: bytes) -> Iterator[tuple[str, object]]:
             yield t
 
 
-_HEXTOK_RE = re.compile(rb"<([0-9A-Fa-f]+)>|(\[)|(\])")
+_HEX_RE = re.compile(rb"<([0-9A-Fa-f]+)>")
+_BFRANGE_RE = re.compile(rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*\[([^\]]*)\]")
 _MAX_BFRANGE = 1 << 16  # hostile-input cap on one range's expansion
 
 
@@ -368,165 +297,61 @@ def _utf16be_hex_to_str(hx: bytes) -> str:
 def _parse_tounicode(stream: bytes) -> tuple[dict[int, str], int]:
     """ToUnicode CMap stream → (code → unicode string, code byte width).
 
-    Covers the CMap subset real producers emit (ISO 32000 §9.10.3 /
-    Adobe CMap spec): ``begincodespacerange`` (code width),
-    ``beginbfchar`` pairs ``<src> <dst>``, and ``beginbfrange`` in both
-    the scalar form ``<lo> <hi> <dstStart>`` (dst increments with the
-    code) and the array form ``<lo> <hi> [<d0> <d1> …]``. dst hex is
-    UTF-16BE (may map one code to a multi-code-unit string). Range
-    expansion is capped at 2^16 codes per entry (hostile input)."""
+    Covers the CMap subset ``pdfgen`` writes (ISO 32000 §9.10.3 / Adobe
+    CMap spec): ``begincodespacerange`` (code width), ``beginbfchar``
+    pairs ``<src> <dst>``, and ``beginbfrange`` in the array form
+    ``<lo> <hi> [<d0> <d1> …]``. dst hex is UTF-16BE (may map one code
+    to a multi-code-unit string). Range expansion is capped at 2^16
+    codes per entry (hostile input)."""
     cmap: dict[int, str] = {}
     width = 2
     m = re.search(rb"begincodespacerange\s*<([0-9A-Fa-f]+)>", stream)
     if m is not None:
         width = max(len(m.group(1)) // 2, 1)
     for sec in re.findall(rb"beginbfchar(.*?)endbfchar", stream, re.S):
-        toks = [t[0] for t in _HEXTOK_RE.findall(sec) if t[0]]
+        toks = _HEX_RE.findall(sec)
         for src, dst in zip(toks[0::2], toks[1::2]):
             cmap[int(src, 16)] = _utf16be_hex_to_str(dst)
     for sec in re.findall(rb"beginbfrange(.*?)endbfrange", stream, re.S):
-        toks = _HEXTOK_RE.findall(sec)
-        i = 0
-        while i + 1 < len(toks):
-            if not (toks[i][0] and toks[i + 1][0]):
-                i += 1
-                continue
-            lo, hi = int(toks[i][0], 16), int(toks[i + 1][0], 16)
-            hi = min(hi, lo + _MAX_BFRANGE)
-            i += 2
-            if i < len(toks) and toks[i][1]:  # array form
-                i += 1
-                code = lo
-                while i < len(toks) and not toks[i][2]:
-                    if toks[i][0] and code <= hi:
-                        cmap[code] = _utf16be_hex_to_str(toks[i][0])
-                        code += 1
-                    i += 1
-                i += 1  # past ]
-            elif i < len(toks) and toks[i][0]:  # scalar form
-                dst = toks[i][0]
-                base = int(dst, 16)
-                nhex = len(dst)
-                for off in range(hi - lo + 1):
-                    hx = ("%0*X" % (nhex, base + off)).encode("ascii")
-                    cmap[lo + off] = _utf16be_hex_to_str(hx)
-                i += 1
-            else:
-                break
+        for lo, hi, dsts in _BFRANGE_RE.findall(sec):
+            lo = int(lo, 16)
+            codes = range(lo, min(int(hi, 16), lo + _MAX_BFRANGE) + 1)
+            for code, dst in zip(codes, _HEX_RE.findall(dsts)):
+                cmap[code] = _utf16be_hex_to_str(dst)
     return cmap, width
 
 
-def _balanced_dict(data: bytes, start: int) -> bytes | None:
-    """``<< … >>`` slice starting at ``start`` (balanced nesting)."""
-    if data[start:start + 2] != b"<<":
-        return None
-    depth, j, n = 1, start + 2, len(data)
-    while j < n - 1 and depth:
-        if data[j:j + 2] == b"<<":
-            depth += 1
-            j += 2
-        elif data[j:j + 2] == b">>":
-            depth -= 1
-            j += 2
-        else:
-            j += 1
-    return data[start:j]
-
-
-# a PDF name ends at whitespace or a delimiter: ( ) < > [ ] { } / %
-# (ISO 32000 §7.2.2, §7.3.5)
-_NAME_END = rb"(?=[\s/<>\[\](){}%]|$)"
-
-
-def _dict_value(body: bytes, key: bytes,
-                objs: dict[int, tuple[bytes, bytes | None]]) -> bytes | None:
-    """Value of ``/key`` in ``body``: an inline ``<<…>>`` dict slice, or
-    the referenced object's body for the ``N 0 R`` form.
-
-    The key match is name-boundary-anchored (``_NAME_END``) and the
-    scan continues past non-parsing occurrences — round-5 ADVICE: a preceding
-    ``/ResourcesAlt`` key must neither shadow a real ``/Resources``
-    later in the dict nor abort the lookup."""
-    for m in re.finditer(rb"/" + key + _NAME_END, body):
-        at = m.end()
-        while at < len(body) and body[at:at + 1] in b" \t\r\n":
-            at += 1
-        if body[at:at + 2] == b"<<":
-            return _balanced_dict(body, at)
-        rm = re.match(rb"(\d+)\s+\d+\s+R", body[at:at + 32])
-        if rm is not None:
-            ref = int(rm.group(1))
-            if ref in objs:
-                return objs[ref][0]
-    return None
+_FONT_DICT_RE = re.compile(rb"/Font\s*<<(.*?)>>", re.S)
+_FONT_REF_RE = re.compile(rb"/([^\s/<>\[\]()]+)\s+(\d+)\s+\d+\s+R")
+_TOUNICODE_RE = re.compile(rb"/ToUnicode\s+(\d+)\s+\d+\s+R")
 
 
 def _page_fonts(
     page_body: bytes,
     objs: dict[int, tuple[bytes, bytes | None]],
-    cmap_cache: dict[int, tuple[dict[int, str], int] | None] | None = None,
+    cmap_cache: dict[int, tuple[dict[int, str], int]],
 ) -> dict[str, tuple[dict[int, str], int]]:
-    """Font-name → (ToUnicode cmap, code width) for a page.
-
-    /Resources is looked up on the page, then up the /Parent chain
-    (resource inheritance, ISO 32000 §7.7.3.4). Only fonts WITH a
-    /ToUnicode CMap are returned — simple fonts fall through to the
-    latin-1 / UTF-16BE-BOM default in ``_decode_shown``. ``cmap_cache``
-    (keyed by the ToUnicode object id, scoped to one document) keeps a
-    shared font's CMap from being re-inflated and re-expanded once per
-    page — a 300-page CID document parses its CMap once, not 300×."""
-    body, hops = page_body, 0
-    res = None
-    seen_parents: set[int] = set()
-    while body is not None and hops < 32:
-        res = _dict_value(body, b"Resources", objs)
-        if res is not None:
-            break
-        pm = re.search(rb"/Parent\s+(\d+)\s+\d+\s+R", body)
-        if pm is None:
-            break
-        parent = int(pm.group(1))
-        if parent in seen_parents or parent not in objs:
-            break
-        seen_parents.add(parent)
-        body = objs[parent][0]
-        hops += 1
-    if res is None:
-        return {}
-    fdict = _dict_value(res, b"Font", objs)
-    if fdict is None:
+    """Font-name → (ToUnicode cmap, code width) for a page, read from
+    the page's own inline ``/Resources << /Font << … >> >>`` dict.
+    Only fonts WITH a /ToUnicode CMap are returned — simple fonts fall
+    through to the latin-1 / UTF-16BE-BOM default in ``_decode_shown``.
+    ``cmap_cache`` (keyed by the ToUnicode object id, scoped to one
+    document) keeps a shared font's CMap from being re-inflated and
+    re-expanded once per page — a 300-page CID document parses its
+    CMap once, not 300×."""
+    fm = _FONT_DICT_RE.search(page_body)
+    if fm is None:
         return {}
     fonts: dict[str, tuple[dict[int, str], int]] = {}
-    for fm in re.finditer(rb"/([^\s/<>\[\]()]+)\s+(\d+)\s+\d+\s+R", fdict):
-        name = fm.group(1).decode("latin-1", "replace")
-        ref = int(fm.group(2))
-        if ref not in objs:
-            continue
-        fbody, _ = objs[ref]
-        tm = re.search(rb"/ToUnicode\s+(\d+)\s+\d+\s+R", fbody)
+    for ref in _FONT_REF_RE.finditer(fm.group(1)):
+        tm = _TOUNICODE_RE.search(objs[int(ref.group(2))][0])
         if tm is None:
             continue
         tref = int(tm.group(1))
-        if tref not in objs:
-            continue
-        if cmap_cache is not None and tref in cmap_cache:
-            cached = cmap_cache[tref]
-            if cached is not None:
-                fonts[name] = cached
-            continue
-        thead, tstream = objs[tref]
-        parsed: tuple[dict[int, str], int] | None = None
-        if tstream is not None:
-            try:
-                decoded = _decode_stream(thead, tstream)
-                if decoded is not None:
-                    parsed = _parse_tounicode(decoded)
-            except Exception:
-                parsed = None
-        if cmap_cache is not None:
-            cmap_cache[tref] = parsed
-        if parsed is not None:
-            fonts[name] = parsed
+        if tref not in cmap_cache:
+            thead, tstream = objs[tref]
+            cmap_cache[tref] = _parse_tounicode(_decode_stream(thead, tstream))
+        fonts[ref.group(1).decode("latin-1")] = cmap_cache[tref]
     return fonts
 
 
@@ -558,8 +383,8 @@ def _page_object_order(objs: dict[int, tuple[bytes, bytes | None]]) -> list[int]
     """Document page order: walk /Catalog → /Pages → /Kids depth-first
     (ISO 32000 §7.7.3.2 — the /Kids ARRAY defines page sequence, not
     object numbering), falling back to ascending object id when the
-    tree is absent or broken (round-4 ADVICE: producers are free to
-    number page objects out of document order)."""
+    tree is absent or misses pages (round-4 ADVICE: producers are free
+    to number page objects out of document order)."""
     by_scan = [oid for oid in sorted(objs) if _PAGE_RE.search(objs[oid][0])]
     root = None
     for body, _ in objs.values():
@@ -571,12 +396,8 @@ def _page_object_order(objs: dict[int, tuple[bytes, bytes | None]]) -> list[int]
     if root is None:
         return by_scan
     order: list[int] = []
-    seen: set[int] = set()
 
     def walk(oid: int) -> None:
-        if oid in seen or oid not in objs or len(seen) > len(objs):
-            return  # cycle / dangling-ref guard
-        seen.add(oid)
         body, _ = objs[oid]
         if _PAGE_RE.search(body):
             order.append(oid)
@@ -595,100 +416,69 @@ def _page_object_order(objs: dict[int, tuple[bytes, bytes | None]]) -> list[int]
 def extract_text_from_pdf(data: bytes) -> tuple[str, int]:
     """(text, n_pages) from PDF bytes. Raises on hopeless input."""
     objs = _parse_objects(data)
-    if not objs:
-        raise ValueError("no PDF objects")
-    pages = []
-    cmap_cache: dict[int, tuple[dict[int, str], int] | None] = {}
-    for oid in _page_object_order(objs):
-        body, _ = objs[oid]
-        cm = _CONTENTS_RE.search(body)
-        if cm is None:
-            pages.append(([], {}))
-            continue
-        if cm.group(1) is not None:
-            refs = [int(cm.group(1))]
-        else:
-            refs = [int(r.group(1)) for r in _REF_RE.finditer(cm.group(2))]
-        pages.append((refs, _page_fonts(body, objs, cmap_cache)))
-    if not pages:
+    order = _page_object_order(objs)
+    if not order:
         raise ValueError("no /Type /Page objects")
-
+    cmap_cache: dict[int, tuple[dict[int, str], int]] = {}
     out_lines: list[str] = []
-    n_pages = 0
-    for refs, fonts in pages:
-        n_pages += 1
+    for oid in order:
+        body = objs[oid][0]
+        cm = _CONTENTS_RE.search(body)
+        if cm is None:  # a page dict cut off before /Contents: no text
+            continue
+        fonts = _page_fonts(body, objs, cmap_cache)
+        head, stream = objs[int(cm.group(1))]
+        try:
+            content = _decode_stream(head, stream)
+        except Exception:  # malformed payload: this page extracts nothing
+            continue
+        if content is None:  # unknown filter: this page extracts nothing
+            continue
         segments: list[tuple[float, float, int, str]] = []  # (x, y, seq, text)
-        seq = 0
-        # ISO 32000 §7.7.3.3: a page's multiple /Contents streams form
-        # ONE concatenated content stream with persistent graphics/text
-        # state — decode each, join, tokenize once (round-4 ADVICE:
-        # per-ref state reset mis-assembled split-stream pages)
-        parts: list[bytes] = []
-        for ref in refs:
-            if ref not in objs:
+        # text-positioning state (line-matrix translation + leading)
+        # + current font (Tf selects which decoding the shows use)
+        x = y = 0.0
+        leading = 0.0
+        cur_font: tuple[dict[int, str], int] | None = None
+        last_name: str | None = None
+        last_str: str | None = None
+        nums: list[float] = []
+        for kind, val in _tokenize_content(content):
+            if kind == "str":
+                last_str = _decode_shown(val, cur_font)
+            elif kind == "num":
+                nums.append(val)
                 continue
-            head, stream = objs[ref]
-            if stream is None:
+            elif kind == "name":
+                last_name = val
                 continue
-            try:
-                stream = _decode_stream(head, stream)
-            except Exception:  # malformed payload: skip this stream only
-                continue
-            if stream is None:  # unknown filter: skip, page degrades
-                continue
-            parts.append(stream)
-        if parts:
-            content = b"\n".join(parts)
-            # text-positioning state (line-matrix translation + leading)
-            # + current font (Tf selects which decoding the shows use)
-            x = y = 0.0
-            leading = 0.0
-            cur_font: tuple[dict[int, str], int] | None = None
-            last_name: str | None = None
-            last_str: str | None = None
-            nums: list[float] = []
-            for kind, val in _tokenize_content(content):
-                if kind == "str":
-                    last_str = _decode_shown(val, cur_font)
-                elif kind == "num":
-                    nums.append(val)
-                    continue
-                elif kind == "name":
-                    last_name = val
-                    continue
-                elif kind == "arr":
-                    last_str = "".join(
-                        _decode_shown(v, cur_font)
-                        for k, v in val if k == "str"
-                    )
-                elif kind == "op":
-                    op = val
-                    if op in ("Tj", "TJ") and last_str is not None:
-                        segments.append((x, y, seq, last_str))
-                        seq += 1
-                    elif op in ("'", '"') and last_str is not None:
-                        y -= leading  # T* then show
-                        segments.append((x, y, seq, last_str))
-                        seq += 1
-                    elif op == "Tf" and last_name is not None:
-                        cur_font = fonts.get(last_name)
-                    elif op in ("Td", "TD") and len(nums) >= 2:
-                        x += nums[-2]
-                        y += nums[-1]
-                        if op == "TD":
-                            leading = -nums[-1]
-                    elif op == "T*":
-                        y -= leading
-                    elif op == "TL" and nums:
-                        leading = nums[-1]
-                    elif op == "Tm" and len(nums) >= 6:
-                        x, y = nums[-2], nums[-1]
-                    elif op == "BT":
-                        x = y = 0.0
-                    last_str = None
-                    nums.clear()
+            elif kind == "arr":
+                last_str = "".join(
+                    _decode_shown(v, cur_font)
+                    for k, v in val if k == "str"
+                )
+            elif kind == "op":
+                op = val
+                if op in ("Tj", "TJ") and last_str is not None:
+                    segments.append((x, y, len(segments), last_str))
+                elif op == "'" and last_str is not None:
+                    y -= leading  # T* then show
+                    segments.append((x, y, len(segments), last_str))
+                elif op == "Tf" and last_name is not None:
+                    cur_font = fonts.get(last_name)
+                elif op == "Td" and len(nums) >= 2:
+                    x += nums[-2]
+                    y += nums[-1]
+                elif op == "TL" and nums:
+                    leading = nums[-1]
+                elif op == "Tm" and len(nums) >= 6:
+                    x, y = nums[-2], nums[-1]
+                elif op == "BT":
+                    x = y = 0.0
+                last_str = None
+                nums.clear()
         out_lines.extend(_assemble_page(segments))
-    return "\n".join(out_lines), n_pages
+    return "\n".join(out_lines), len(order)
 
 
 _COLUMN_GAP = 150.0  # pt of x whitespace that separates columns
@@ -706,10 +496,8 @@ def _assemble_page(segments: list[tuple[float, float, int, str]]) -> list[str]:
     produce. Single-column pages form one cluster and reduce exactly to
     emission order. Ties (same column, same y) keep draw order and
     concatenate, matching PDF's contiguous show semantics."""
-    if not segments:
-        return []
     xs = sorted({s[0] for s in segments})
-    col_starts = [xs[0]]
+    col_starts = xs[:1]
     for a, b in zip(xs, xs[1:]):
         if b - a > _COLUMN_GAP:
             col_starts.append(b)

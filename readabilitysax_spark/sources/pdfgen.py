@@ -6,7 +6,7 @@ test substrate the same way ``sources/pagegen.py`` provides the HTML
 leg's: a deterministic generator whose output an ANSI-SQL oracle can
 predict from the ``documents`` table alone.
 
-``synth_pdf(doc_id, text)`` renders ``text`` as a well-formed PDF 1.4:
+``synth_pdf(text)`` renders ``text`` as a well-formed PDF 1.4:
 
 - words are laid out **8 per line, 5 lines per page** (40 words/page,
   at least one page even for empty text) — the layout the extractor
@@ -77,8 +77,7 @@ def _cid_string(s: str, codes: dict[str, int]) -> bytes:
 def _tounicode_cmap(codes: dict[str, int]) -> bytes:
     """ToUnicode CMap stream: 2-byte codespace, the first few mappings
     as ``bfchar`` pairs, the rest as ARRAY-form ``bfrange`` chunks —
-    so both extractor paths are exercised by every CID document (the
-    scalar bfrange form is pinned by a handcrafted unit test)."""
+    so both extractor paths are exercised by every CID document."""
     items = sorted(codes.items(), key=lambda kv: kv[1])  # by code
     n_char = min(4, len(items))
     parts = [
@@ -170,16 +169,15 @@ def _content_stream_two_col(lines: list[str], enc=_pdf_string, font=b"F1") -> by
     return b"\n".join(parts)
 
 
-def synth_pdf(doc_id: int, text: str, columns: int = 1, cid: bool = False) -> bytes:
+def synth_pdf(text: str, columns: int = 1, cid: bool = False) -> bytes:
     """Deterministic PDF bytes for one document. ``columns=2`` lays
     every page out as a row-major-drawn two-column spread (see
     ``_content_stream_two_col``); ``cid=True`` shows every string under
     a Type0 /Identity-H composite font as 2-byte CID codes that do NOT
-    equal the codepoints, with a /ToUnicode CMap (bfchar + array-form
-    bfrange; Flate-compressed on odd doc_ids) carrying the real
-    mapping. In every mode the expected extraction is IDENTICAL
-    (``expected_pdf_text``) — that invariance is the layout-parse /
-    font-decode test."""
+    equal the codepoints, with a Flate-compressed /ToUnicode CMap
+    (bfchar + array-form bfrange) carrying the real mapping. In every
+    mode the expected extraction is IDENTICAL (``expected_pdf_text``)
+    — that invariance is the layout-parse / font-decode test."""
     words = text.split(" ")
     n_pages = max((len(words) + WORDS_PER_PAGE - 1) // WORDS_PER_PAGE, 1)
 
@@ -205,18 +203,11 @@ def synth_pdf(doc_id: int, text: str, columns: int = 1, cid: bool = False) -> by
 
     codes = _cid_codes(text) if cid else None
     if cid:
-        cmap = _tounicode_cmap(codes)
-        if doc_id % 2 == 1:
-            comp = zlib.compress(cmap)
-            objects.append(
-                b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(comp)
-                + comp + b"\nendstream"
-            )  # 4
-        else:
-            objects.append(
-                b"<< /Length %d >>\nstream\n" % len(cmap)
-                + cmap + b"\nendstream"
-            )  # 4
+        comp = zlib.compress(_tounicode_cmap(codes))
+        objects.append(
+            b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(comp)
+            + comp + b"\nendstream"
+        )  # 4
         objects.append(
             b"<< /Type /Font /Subtype /Type0 /BaseFont /SynthCID "
             b"/Encoding /Identity-H /ToUnicode 4 0 R >>"
@@ -275,7 +266,7 @@ def _a85(data: bytes) -> bytes:
     return base64.a85encode(data) + b"~>"
 
 
-def synth_pdf_objstm(doc_id: int, text: str) -> bytes:
+def synth_pdf_objstm(text: str) -> bytes:
     """PDF 1.5-style variant: ALL dictionary objects (Pages node, font,
     every page dict) live inside one Flate-compressed ``/Type /ObjStm``
     object stream — invisible to a top-level ``N 0 obj`` scan, the way
@@ -349,9 +340,9 @@ def synth_doc_pdf(doc_id: int, text: str) -> bytes:
     document, else the simple single-column form. Extracted text is
     the same for all four (``expected_pdf_text``)."""
     if doc_id % 4 == 3:
-        return synth_pdf_objstm(doc_id, text)
+        return synth_pdf_objstm(text)
     return synth_pdf(
-        doc_id, text, columns=2 if doc_id % 4 == 2 else 1, cid=doc_id % 4 == 1
+        text, columns=2 if doc_id % 4 == 2 else 1, cid=doc_id % 4 == 1
     )
 
 

@@ -18,8 +18,8 @@ with the reason it stays a parameter. Converting one into a module
 constant removes it from both; a new one fails here until it is
 converted or given a reason.
 
-Run ``python3 tests/test_census.py`` to print the census (46 defaulted
-parameters, 18 of them with at most one value in use).
+Run ``python3 tests/test_census.py`` to print the census (45 defaulted
+parameters, 17 of them with at most one value in use).
 """
 
 from __future__ import annotations
@@ -51,7 +51,6 @@ ALLOWED = {
     _PKG + "cli.py:main(argv)": _REFERENCE,
     _PKG + "operators/extract.py:extract_articles(resolve_url_col)": _EXTRACT,
     _PKG + "operators/extract.py:_make_extract_fn(resolve_url_col)": _EXTRACT,
-    _PKG + "operators/pdftext.py:_page_fonts(cmap_cache)": _INTERNAL,
     _PKG + "sources/pdfgen.py:_content_stream_two_col(enc)": _INTERNAL,
     _PKG + "sources/pdfgen.py:_content_stream_two_col(font)": _INTERNAL,
     _PKG + "sources/pdfgen.py:synth_pdf(cid)": _INTERNAL,

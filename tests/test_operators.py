@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import math
+import zlib
 
 from pyspark.sql import functions as F
 
@@ -207,10 +208,18 @@ def test_media_decoders_reject_garbage():
     assert mm.decode_png(b"\x89PNG\r\n\x1a\n" + b"\x00" * 30) is None
     assert mm.decode_wav(b"RIFFxxxxWAVE") is None
     assert mm.parse_mp4_ftyp(b"tiny") is None
+    assert mm.parse_mp4_ftyp(b"\x00\x00\x00\x10moov" + b"\x00" * 8) is None
     # corrupted IHDR CRC must be rejected
     png = bytearray(mm.synth_png(7))
     png[30] ^= 0xFF
     assert mm.decode_png(bytes(png)) is None
+    assert mm.decode_png(mm._encode_gray_png(0, 1, [b""])) is None
+    # pixel decode: a 1x1 header over a corrupt IDAT, a short scanline,
+    # and scanline filter type 1
+    head = mm.synth_png(0)[:33]
+    for idat in (b"not zlib", zlib.compress(b"\x00"), zlib.compress(b"\x01\x00")):
+        chunk = len(idat).to_bytes(4, "big") + b"IDAT" + idat + b"\x00" * 4
+        assert mm.decode_png_pixels(head + chunk) is None
     ok, feats = mm.decode_media("image/png", mm.synth_png(12))
     assert ok and feats["width"] == 13 and feats["height"] == 13
 

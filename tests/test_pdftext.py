@@ -37,16 +37,35 @@ from readabilitysax_spark.sources.pdfgen import expected_pdf_text, synth_pdf
     ],
 )
 def test_round_trip(text):
-    got, n_pages = extract_text_from_pdf(synth_pdf(1, text))
+    got, n_pages = extract_text_from_pdf(synth_pdf(text))
     assert got == expected_pdf_text(text)
     assert n_pages == max(math.ceil(len(text.split(" ")) / 40), 1)
+
+
+def test_audit_row_pdf_text_for_every_producer():
+    """The PDF leg at the operator's level: ``audit_row`` over the reach
+    census's PDF texts for doc ids 0-3 (the simple, CID, two-column and
+    ObjStm producers) extracts exactly ``expected_pdf_text``."""
+    import hashlib
+
+    from readabilitysax_spark.operators import multimodal as mm
+
+    from .test_reach import PDF_TEXTS
+
+    for doc_id in range(4):
+        for text in PDF_TEXTS:
+            row = mm.audit_row(doc_id, text, mm.RESIZE_MAX_SIDE, mm.FRAME_EVERY_N)
+            want = expected_pdf_text(text).encode("utf-8")
+            assert row["pdf_ok"], (doc_id, text)
+            assert row["pdf_text_md5"] == hashlib.md5(want).hexdigest(), (doc_id, text)
+            assert row["n_pdf_pages"] == max(math.ceil(len(text.split(" ")) / 40), 1)
 
 
 def test_flate_pages_really_compressed():
     """Alternate pages must actually go through zlib — assert the
     compressed page's line is absent as plaintext but extracted."""
     text = " ".join(f"zz{i}" for i in range(80))  # 2 pages
-    pdf = synth_pdf(1, text)
+    pdf = synth_pdf(text)
     assert b"zz41" not in pdf  # page 2 content only exists compressed
     assert b"/FlateDecode" in pdf
     got, n_pages = extract_text_from_pdf(pdf)
@@ -56,9 +75,6 @@ def test_flate_pages_really_compressed():
 def test_string_grammar():
     assert _unescape_literal(rb"a\(b\)c\\d").decode("latin-1") == "a(b)c\\d"
     assert _unescape_literal(rb"\101\102\60").decode("latin-1") == "AB0"
-    assert _unescape_literal(rb"x\ny\tz").decode("latin-1") == "x\ny\tz"
-    # line continuation
-    assert _unescape_literal(b"cont\\\nnext").decode("latin-1") == "contnext"
 
 
 def test_hex_strings_and_td_linebreaks():
@@ -85,14 +101,14 @@ def test_hostile_inputs_error_or_degrade():
     with pytest.raises(ValueError):
         extract_text_from_pdf(b"")
     # corrupt /Length falls back to the endstream keyword
-    ok = synth_pdf(1, "x y z")
+    ok = synth_pdf("x y z")
     got, _ = extract_text_from_pdf(ok.replace(b"/Length", b"/Lxngth"))
     assert got == "x y z"
     # truncated mid-stream: degrades, never raises
-    extract_text_from_pdf(synth_pdf(1, "a b c d e")[:80])
+    extract_text_from_pdf(synth_pdf("a b c d e")[:80])
     # corrupt Flate payload: page skipped, others survive
     text = " ".join(f"q{i}" for i in range(80))
-    pdf = bytearray(synth_pdf(1, text))
+    pdf = bytearray(synth_pdf(text))
     at = pdf.find(b"stream\n", pdf.find(b"/FlateDecode")) + 10
     pdf[at] ^= 0xFF
     got, n_pages = extract_text_from_pdf(bytes(pdf))
@@ -112,7 +128,7 @@ def test_stream_bytes_cannot_fake_objects():
             break
     else:
         pytest.skip("no adversarial compression found in search budget")
-    got, n_pages = extract_text_from_pdf(synth_pdf(1, text))
+    got, n_pages = extract_text_from_pdf(synth_pdf(text))
     assert got == expected_pdf_text(text) and n_pages == 2
 
 
@@ -137,9 +153,9 @@ def test_pdf_round_trip_fuzz():
     def prop(words, variant):
         text = " ".join(words)
         if variant == 3:
-            pdf = synth_pdf_objstm(1, text)
+            pdf = synth_pdf_objstm(text)
         else:
-            pdf = synth_pdf(1, text, columns=2 if variant == 2 else 1,
+            pdf = synth_pdf(text, columns=2 if variant == 2 else 1,
                             cid=variant == 1)
         got, n_pages = extract_text_from_pdf(pdf)
         assert got == expected_pdf_text(text)
@@ -163,7 +179,7 @@ def test_two_column_layout_reassembly(text):
     shuffled relative to reading order. Extraction must still equal the
     single-column expected text — proving the x-cluster / y-sort
     column-major reassembly actually runs."""
-    pdf = synth_pdf(1, text, columns=2)
+    pdf = synth_pdf(text, columns=2)
     got, n_pages = extract_text_from_pdf(pdf)
     assert got == expected_pdf_text(text)
     assert n_pages == max(math.ceil(len(text.split(" ")) / 40), 1)
@@ -173,11 +189,11 @@ def test_two_column_layout_reassembly(text):
     if len(lines) >= 3:
         import re as _re
         shown = _re.findall(rb"\((?:\\.|[^)\\])*\)\s*Tj|<[0-9A-Fa-f]+>\s*Tj",
-                            synth_pdf(1, text, columns=2))
+                            synth_pdf(text, columns=2))
         assert shown, "expected visible show operators"
 
 
-@pytest.mark.parametrize("doc_id", [1, 2])  # odd = Flate-compressed CMap
+@pytest.mark.parametrize("columns", [1, 2])
 @pytest.mark.parametrize(
     "text",
     [
@@ -187,12 +203,12 @@ def test_two_column_layout_reassembly(text):
         "par(en) back\\slash",
     ],
 )
-def test_cid_tounicode_round_trip(doc_id, text):
+def test_cid_tounicode_round_trip(columns, text):
     """CID mode shows 2-byte codes that deliberately differ from the
     codepoints — extraction is only correct if the /ToUnicode CMap
-    (bfchar + array bfrange; resolved through /Resources, possibly
-    Flate-compressed) is actually consulted."""
-    pdf = synth_pdf(doc_id, text, cid=True)
+    (bfchar + array bfrange, Flate-compressed, named in the page's
+    /Resources) is actually consulted, in either layout."""
+    pdf = synth_pdf(text, columns=columns, cid=True)
     # the raw text must NOT appear in the document (codes ≠ codepoints)
     probe = text.split(" ")[0].encode("latin-1", "ignore")
     if len(probe) >= 2:
@@ -205,7 +221,7 @@ def test_cid_tounicode_round_trip(doc_id, text):
 def test_cid_two_column_composition():
     """CID decode and two-column layout reassembly compose."""
     text = " ".join(f"w{i}" for i in range(40))
-    got, _ = extract_text_from_pdf(synth_pdf(1, text, columns=2, cid=True))
+    got, _ = extract_text_from_pdf(synth_pdf(text, columns=2, cid=True))
     assert got == expected_pdf_text(text)
 
 
@@ -217,28 +233,6 @@ def _wrap_pdf(objects: list[bytes]) -> bytes:
         out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
     out += b"trailer << /Root 1 0 R >>\n%%EOF\n"
     return bytes(out)
-
-
-def test_scalar_bfrange_form():
-    """The <lo> <hi> <dstStart> bfrange form: dst increments with the
-    code (generator only emits bfchar/array-bfrange, so this pins the
-    third CMap path by hand)."""
-    cmap = (
-        b"begincodespacerange <0000> <FFFF> endcodespacerange\n"
-        b"1 beginbfrange\n<0041> <0045> <0061>\nendbfrange\n"  # A-E -> a-e
-    )
-    content = b"BT /F1 12 Tf 72 720 Td <00410042004300440045> Tj ET"
-    pdf = _wrap_pdf([
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> "
-        b"/Contents 4 0 R >>",
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
-        b"<< /Type /Font /Subtype /Type0 /Encoding /Identity-H /ToUnicode 6 0 R >>",
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(cmap), cmap),
-    ])
-    got, n_pages = extract_text_from_pdf(pdf)
-    assert (got, n_pages) == ("abcde", 1)
 
 
 def test_unmapped_cid_code_is_replacement_char():
@@ -290,46 +284,11 @@ def test_broken_page_tree_falls_back_to_id_order():
     assert (got, n_pages) == ("one\ntwo", 2)
 
 
-def test_split_contents_streams_share_state():
-    """/Contents [A B]: text state persists across the split (ISO 32000
-    treats them as one concatenated stream) — B's T* must consume the
-    leading set in A, and B's Td is relative to A's position."""
-    a = b"BT /F1 12 Tf 14 TL 72 720 Td (alpha) Tj"
-    b_ = b"T* (beta) Tj 0 -14 Td (gamma) Tj ET"
-    pdf = _wrap_pdf([
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /Contents [4 0 R 5 0 R] >>",
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(a), a),
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(b_), b_),
-    ])
-    got, n_pages = extract_text_from_pdf(pdf)
-    assert (got, n_pages) == ("alpha\nbeta\ngamma", 1)
-
-
 def test_invalid_octal_escape_keeps_char():
     r"""\8 and \9 are not octal: the backslash drops, the digit stays
     (round-4 ADVICE — was a whole-document ValueError)."""
     assert _unescape_literal(rb"a\8b\9c").decode("latin-1") == "a8b9c"
     assert _unescape_literal(rb"\101\8").decode("latin-1") == "A8"
-
-
-def test_resources_inherited_from_parent():
-    """/Resources on the /Pages parent node, not the page (ISO 32000
-    §7.7.3.4 inheritance)."""
-    cmap = b"1 beginbfchar\n<0007> <0059>\nendbfchar\n"
-    content = b"BT /F1 12 Tf 72 720 Td <0007> Tj ET"
-    pdf = _wrap_pdf([
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 "
-        b"/Resources << /Font << /F1 5 0 R >> >> >>",
-        b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
-        b"<< /Type /Font /Subtype /Type0 /ToUnicode 6 0 R >>",
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(cmap), cmap),
-    ])
-    got, _ = extract_text_from_pdf(pdf)
-    assert got == "Y"
 
 
 def test_single_column_unaffected_by_layout_rule():
@@ -368,7 +327,7 @@ def test_objstm_round_trip(text):
     plain / ASCIIHexDecode / [ASCII85Decode FlateDecode] chains."""
     from readabilitysax_spark.sources.pdfgen import synth_pdf_objstm
 
-    pdf = synth_pdf_objstm(1, text)
+    pdf = synth_pdf_objstm(text)
     assert b"/ObjStm" in pdf and b"/Type /Page" not in pdf.replace(
         b"/Type /Pages", b""
     )  # page dicts really are hidden inside the compressed stream
@@ -396,29 +355,31 @@ def test_objstm_direct_object_wins_over_compressed():
 
 
 def test_unknown_filter_skips_stream_not_document():
-    """A /DCTDecode (image) content ref must not error the page; other
-    streams still extract."""
+    """A /DCTDecode (image) content stream must not error the document:
+    its page extracts nothing, other pages still extract."""
     c1 = b"BT 72 720 Td (kept) Tj ET"
     pdf = _wrap_pdf([
         b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /Contents [4 0 R 5 0 R] >>",
+        b"<< /Type /Pages /Kids [3 0 R 5 0 R] /Count 2 >>",
+        b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
         b"<< /Length %d >>\nstream\n%s\nendstream" % (len(c1), c1),
+        b"<< /Type /Page /Parent 2 0 R /Contents 6 0 R >>",
         b"<< /Length 4 /Filter /DCTDecode >>\nstream\n\xff\xd8\xff\xe0\nendstream",
     ])
     got, n_pages = extract_text_from_pdf(pdf)
-    assert (got, n_pages) == ("kept", 1)
+    assert (got, n_pages) == ("kept", 2)
 
 
 def test_hostile_tounicode_cmaps_never_raise():
     """Property: arbitrary garbage CMap bytes must parse to SOME map
     without raising (foreign PDFs carry wild CMaps)."""
-    from hypothesis import given, settings, strategies as st
+    from hypothesis import example, given, settings, strategies as st
 
     from readabilitysax_spark.operators.pdftext import _parse_tounicode
 
     @settings(max_examples=80, deadline=None)
     @given(st.binary(max_size=400))
+    @example(b"<01> <041> <02> <0042004300>")  # dst not whole UTF-16 units
     def prop(blob):
         cmap, width = _parse_tounicode(
             b"begincodespacerange <00> <FF> endcodespacerange"
@@ -433,17 +394,18 @@ def test_hostile_tounicode_cmaps_never_raise():
 
 
 def test_bfrange_expansion_is_capped():
-    """A hostile <0000> <FFFFFFFF> scalar range must not allocate 4G
-    entries."""
+    """A hostile <00000000> <FFFFFFFF> range maps at most 2^16 + 1
+    codes, however many destinations its array lists."""
     from readabilitysax_spark.operators.pdftext import (
         _MAX_BFRANGE,
         _parse_tounicode,
     )
 
+    dsts = b" ".join([b"<0041>"] * (_MAX_BFRANGE + 10))
     cmap, _ = _parse_tounicode(
-        b"1 beginbfrange\n<00000000> <FFFFFFFF> <0041>\nendbfrange\n"
+        b"1 beginbfrange\n<00000000> <FFFFFFFF> [" + dsts + b"]\nendbfrange\n"
     )
-    assert len(cmap) <= _MAX_BFRANGE + 1
+    assert len(cmap) == _MAX_BFRANGE + 1
 
 
 def test_objstm_many_pages_no_id_collision():
@@ -453,7 +415,7 @@ def test_objstm_many_pages_no_id_collision():
     from readabilitysax_spark.sources.pdfgen import synth_pdf_objstm
 
     text = " ".join(f"w{i}" for i in range(40 * 97))  # 97 pages
-    got, n_pages = extract_text_from_pdf(synth_pdf_objstm(1, text))
+    got, n_pages = extract_text_from_pdf(synth_pdf_objstm(text))
     assert n_pages == 97
     assert got == expected_pdf_text(text)
 
@@ -490,7 +452,7 @@ def test_shared_cmap_parsed_once_per_document(monkeypatch):
 
     monkeypatch.setattr(P, "_parse_tounicode", counting)
     text = " ".join(f"w{i}" for i in range(40 * 5))  # 5 pages, one font
-    got, n_pages = P.extract_text_from_pdf(synth_pdf(1, text, cid=True))
+    got, n_pages = P.extract_text_from_pdf(synth_pdf(text, cid=True))
     assert n_pages == 5 and got == expected_pdf_text(text)
     assert calls["n"] == 1
 
@@ -515,31 +477,3 @@ def test_flate_bomb_is_capped_not_inflated():
         P._decode_stream(head, zlib.compress(normal)[:-4])
     with _pytest.raises(zlib.error):
         P._decode_stream(head, b"not deflate at all")
-
-
-def test_dict_value_key_is_name_boundary_anchored():
-    """Round-5 ADVICE: /ResourcesAlt must not shadow (or abort the
-    lookup of) a real /Resources later in the dict."""
-    from readabilitysax_spark.operators import pdftext as P
-
-    objs = {7: (b"<</Font <</F1 9 0 R>>>>", None)}
-    body = b"<</ResourcesAlt 3 0 R /Resources 7 0 R /Type /Page>>"
-    assert P._dict_value(body, b"Resources", objs) == objs[7][0]
-    inline = b"<</ResourcesAlt (x) /Resources <</Font <<>>>> /T /P>>"
-    assert P._dict_value(inline, b"Resources", {}) == b"<</Font <<>>>>"
-    # a non-parsing first occurrence must not stop the scan
-    weird = b"<</Resources junk /Resources 7 0 R>>"
-    assert P._dict_value(weird, b"Resources", objs) == objs[7][0]
-
-
-def test_name_end_includes_braces():
-    """{ and } are PDF delimiters too (ISO 32000 §7.2.2): a key directly
-    followed by a brace ends there; a longer name still does not match."""
-    import re
-
-    from readabilitysax_spark.operators import pdftext as P
-
-    key = re.compile(rb"/Resources" + P._NAME_END)
-    assert key.search(b"/Resources{") is not None
-    assert key.search(b"/Resources}") is not None
-    assert key.search(b"/ResourcesAlt{") is None
